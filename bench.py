@@ -204,8 +204,13 @@ def main() -> None:
                 _force(entry.run(spark, sf_dir))
                 dt = min(dt, time.perf_counter() - t0)
                 n += 1
-        except Exception:  # noqa: BLE001 — a failing query counts as missing
+        except Exception as e:  # noqa: BLE001 — a failing query counts as
+            # missing: -1 in the payload (the stdout contract), the cause
+            # on stderr so the failure is not silent
             dt, n = -1.0, 0
+            print(json.dumps({"entry_failed": name,
+                              "error": type(e).__name__,
+                              "message": str(e)[:500]}), file=sys.stderr)
         timings[name] = round(dt, 3)
         repeats[name] = n
         if dt > 0:

@@ -551,7 +551,7 @@ class Matcher:
             return np.ones(n, dtype=bool)
         return None
 
-    def _find_all_fast(self, max_matches: int):
+    def _find_all_fast(self):
         """Closed-form drive for the dominant pattern shapes:
 
         - ``A{m,}[{,M}]`` greedy under SKIP PAST LAST ROW, no WITHIN →
@@ -596,7 +596,7 @@ class Matcher:
             ends = np.concatenate((idx[brk], [idx[-1]]))
             qmin, qmax = pat.min, pat.max
             for s, e in zip(starts.tolist(), ends.tolist()):
-                while s <= e and len(out) < max_matches:
+                while s <= e:
                     ln = e - s + 1
                     if ln < qmin:
                         break
@@ -648,12 +648,15 @@ class Matcher:
         cand = np.flatnonzero(any_mask)
         out = []
         ci = 0
-        while ci < len(cand) and len(out) < max_matches:
+        while ci < len(cand):
             i = int(cand[ci])
             for q, m in zip(seqs, masks):
                 if m is not None and i < len(m) and m[i]:
                     bindings = [(i + j, q[j]) for j in range(len(q))]
                     break
+            else:
+                raise CepError(f"closed-form CEP candidate {i} has no "
+                               "matching sequence")
             self.match_number += 1
             out.append(bindings)
             # _skip_to always advances past the match start; max() is a
@@ -662,39 +665,16 @@ class Matcher:
                                      max(self._skip_to(bindings), i + 1)))
         return out
 
-    def find_all(self, max_matches: int = 100000):
-        """All matches per AFTER MATCH SKIP policy, leftmost-first."""
-        fast = self._find_all_fast(max_matches)
+    def find_all(self):
+        """All matches per AFTER MATCH SKIP policy, leftmost-first: the
+        closed-form sweep when the pattern shape allows it, else the one
+        backtracking drive with end-of-input semantics, tried only at
+        the candidate start rows."""
+        fast = self._find_all_fast()
         if fast is not None:
             return fast
-        out = []
-        n = len(self.rows)
-        cand = self._start_candidates()
-        if cand is not None:
-            import numpy as np
-
-            ci = 0
-            while ci < len(cand) and len(out) < max_matches:
-                m = self.first_match(int(cand[ci]))
-                if m is None:
-                    ci += 1
-                    continue
-                _, bindings = m
-                self.match_number += 1
-                out.append(bindings)
-                ci = int(np.searchsorted(cand, self._skip_to(bindings)))
-            return out
-        start = 0
-        while start < n and len(out) < max_matches:
-            m = self.first_match(start)
-            if m is None:
-                start += 1
-                continue
-            _, bindings = m
-            self.match_number += 1
-            out.append(bindings)
-            start = self._skip_to(bindings)
-        return out
+        return self.find_emittable(flush=True,
+                                   cand=self._start_candidates())[0]
 
     def _expired(self, start: int) -> bool:
         """Event-time WITHIN expiry for a held partial at ``start``: rows
@@ -708,22 +688,32 @@ class Matcher:
             return False
         return (t1 - t0) > self.within
 
-    def find_emittable(self, flush: bool = False, start_at: int = 0):
-        """Incremental drive for streaming: emit only matches that cannot
-        extend with future rows (their preferred end is strictly before the
-        buffer tail), unless ``flush``.  Returns (matches, consumed_upto):
-        the caller may drop buffer rows before ``consumed_upto`` — the
-        Spark-state analog of the reference's emit-on-advance + Stop()
-        flush (cep/engine.go:240-267, 492-552).  ``start_at``: the first
-        MATCHABLE index — rows before it are already-consumed context
-        retained only so PREV() navigation in DEFINE/MEASURES reads the
-        true predecessors (r12 CEP-fuzz find: trimming consumed rows
-        made PREV read nil at the buffer head where the batch paths see
-        the real row)."""
+    def find_emittable(self, flush: bool = False, start_at: int = 0,
+                       cand=None):
+        """The backtracking drive, shared by batch and streaming: emit
+        only matches that cannot extend with future rows (their preferred
+        end is strictly before the buffer tail), unless ``flush``.
+        Returns (matches, consumed_upto): the caller may drop buffer rows
+        before ``consumed_upto`` — the Spark-state analog of the
+        reference's emit-on-advance + Stop() flush (cep/engine.go:240-267,
+        492-552).  ``start_at``: the first MATCHABLE index — rows before
+        it are already-consumed context retained only so PREV()
+        navigation in DEFINE/MEASURES reads the true predecessors (r12
+        CEP-fuzz find: trimming consumed rows made PREV read nil at the
+        buffer head where the batch paths see the real row).  ``cand``:
+        optional sorted array of the only rows a match can start at
+        (:meth:`_start_candidates`); the drive jumps over the rest."""
+        import numpy as np
+
         out = []
         start = start_at
         n = len(self.rows)
         while start < n:
+            if cand is not None:
+                ci = int(np.searchsorted(cand, start))
+                if ci == len(cand):
+                    break
+                start = int(cand[ci])
             m = self.first_match(start)
             if m is None:
                 if self._hit_end and not flush and not self._expired(start):
@@ -755,9 +745,6 @@ class Matcher:
                 # touches the buffer tail (or its measures read past
                 # it): a future row may change the emission
                 return out, start
-            if end >= n and not flush:
-                # WITHIN expired: no future row can extend it — emit now
-                pass
             self.match_number += 1
             out.append(bindings)
             start = self._skip_to(bindings)

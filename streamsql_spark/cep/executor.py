@@ -1,15 +1,16 @@
 """CEP batch executor: MATCH_RECOGNIZE plan → DataFrame.
 
-Partitions shuffle by PARTITION BY keys (one ``applyInPandas`` group
-per key — the Spark analog of the reference's per-partition NFA
-instances, ``stream/cep.go:32-48``), rows sort by ORDER BY inside the
-kernel, the matcher emits measure rows, and the outer SELECT projects
-them (``stream/stream.go:400-409``).
+Rows shuffle by PARTITION BY keys (keyless input into one partition)
+and sort by key then ORDER BY; one ``mapInPandas`` kernel walks the key
+groups — the Spark analog of the reference's per-partition NFA
+instances, ``stream/cep.go:32-48`` — the matcher emits measure rows, and
+the outer SELECT projects them (``stream/stream.go:400-409``).
 
 Scale: state is bounded per key exactly like the reference (whole-key
-row buffers); keys parallelize across executors.  A streaming variant
-holds the tail buffer in ``transformWithStateInPandas`` state with the
-same matcher core.
+row buffers); keys parallelize across executors.  The streaming variant
+(``streaming/stateful.py::cep_stream``) holds the tail buffer in
+``applyInPandasWithState`` state and runs the same backtracking drive,
+``Matcher.find_emittable``, that batch runs with end-of-input semantics.
 """
 
 from __future__ import annotations
@@ -404,6 +405,20 @@ def execute_cep(spark: SparkSession, plan, source_df: DataFrame, executor) -> Da
             F.expr(render(spec.defines[sym])).alias(c)
             for sym, c in pre_cols.items()])
 
+    def key_starts(pdf):
+        """Row indices (row 0 excluded) where the partition key changes
+        — rows arrive sorted by key, so these are the group boundaries
+        (NaN-safe comparison).  Keyless input is one group."""
+        import numpy as np
+
+        change = np.zeros(len(pdf), dtype=bool)
+        for c in part_names:
+            col = pdf[c]
+            same = col.eq(col.shift()) | (col.isna() & col.shift().isna())
+            change |= ~same.to_numpy(dtype=bool)
+        change[:1] = False
+        return np.flatnonzero(change).tolist()
+
     def run_task(pdf):
         """One sorted task frame (groups contiguous) → measure-row dicts.
 
@@ -414,7 +429,6 @@ def execute_cep(spark: SparkSession, plan, source_df: DataFrame, executor) -> Da
         per key, which at ~1M tiny keys would dwarf the matcher itself.
         """
         import numpy as np
-        import pandas as pd
 
         if drop_null_ts and ts_col in pdf.columns:
             # declared MAXOUTOFORDERNESS: NULL event-time rows drop on
@@ -447,22 +461,9 @@ def execute_cep(spark: SparkSession, plan, source_df: DataFrame, executor) -> Da
         # over the whole partition
         rows = _LazyRows(pdf)
 
-        if not part_names or n == 0:
-            bounds = [(0, n)] if n else []
-        else:
-            # rows arrive sorted by the partition key → group boundaries
-            # are key-change points (NaN-safe comparison)
-            change = np.zeros(n, dtype=bool)
-            change[0] = True
-            for c in part_names:
-                col = pdf[c]
-                same = col.eq(col.shift()) | (col.isna() & col.shift().isna())
-                change |= ~same.to_numpy(dtype=bool)
-            starts = np.flatnonzero(change)
-            bounds = list(zip(starts.tolist(), np.append(starts[1:], n).tolist()))
-
+        starts = [0, *key_starts(pdf)] if n else []
         outs = []
-        for lo, hi in bounds:
+        for lo, hi in zip(starts, starts[1:] + [n]):
             pre = ({sym: a[lo:hi] for sym, a in pre_full.items()}
                    if pre_full is not None else None)
             grows = rows[lo:hi]
@@ -474,70 +475,46 @@ def execute_cep(spark: SparkSession, plan, source_df: DataFrame, executor) -> Da
             outs.extend(out)
         return outs
 
-    if part_names:
-        # One shuffle co-locates each key's rows; mapInPandas then walks
-        # MANY keys per Python roundtrip (vs applyInPandas' call-per-key
-        # overhead — at 1M tiny keys that's the difference between a few
-        # hundred pandas invocations and a million).  The buffer flushes
-        # at key boundaries once it exceeds _TASK_CHUNK_ROWS, so Python
-        # memory is bounded by the chunk size (or the largest single
-        # key — whose rows ARE the match domain), not the partition.
-        parted = (df.repartition(*[F.col(c) for c in part_names])
-                    .sortWithinPartitions(*part_names,
-                                          *(order_cols or [ts_col])))
+    # One shuffle co-locates each key's rows; mapInPandas then walks MANY
+    # keys per Python roundtrip (vs applyInPandas' call-per-key overhead
+    # — at 1M tiny keys that's the difference between a few hundred
+    # pandas invocations and a million).  The buffer flushes at key
+    # boundaries once it exceeds _TASK_CHUNK_ROWS, so Python memory is
+    # bounded by the chunk size (or the largest single key — whose rows
+    # ARE the match domain), not the partition.  Keyless input is one
+    # partition and one group.
+    parted = (df.repartition(*[F.col(c) for c in part_names])
+              if part_names else df.repartition(1))
+    parted = parted.sortWithinPartitions(*part_names,
+                                         *(order_cols or [ts_col]))
 
-        def _last_key_change(pdf):
-            """Index of the first row of the final key group (0 if the
-            whole frame is one key)."""
-            import numpy as np
+    def map_groups(batch_iter):
+        import pandas as pd
 
-            change = np.zeros(len(pdf), dtype=bool)
-            for c in part_names:
-                col = pdf[c]
-                same = col.eq(col.shift()) | (col.isna() & col.shift().isna())
-                change |= ~same.to_numpy(dtype=bool)
-            change[0] = False
-            idx = np.flatnonzero(change)
-            return int(idx[-1]) if len(idx) else 0
-
-        def map_groups(batch_iter):
-            import pandas as pd
-
-            pending: list = []
-            n_pending = 0
-            for p in batch_iter:
-                if not len(p):
-                    continue
-                pending.append(p)
-                n_pending += len(p)
-                if n_pending < _TASK_CHUNK_ROWS:
-                    continue
-                pdf = pd.concat(pending, ignore_index=True)
-                cut = _last_key_change(pdf)
-                if cut > 0:
-                    outs = run_task(pdf.iloc[:cut].reset_index(drop=True))
-                    if outs:
-                        yield pd.DataFrame(outs, columns=names)
-                    pdf = pdf.iloc[cut:].reset_index(drop=True)
-                pending = [pdf]
-                n_pending = len(pdf)
-            if n_pending:
-                pdf = pd.concat(pending, ignore_index=True)
-                outs = run_task(pdf)
+        pending: list = []
+        n_pending = 0
+        for p in batch_iter:
+            if not len(p):
+                continue
+            pending.append(p)
+            n_pending += len(p)
+            if not part_names or n_pending < _TASK_CHUNK_ROWS:
+                continue  # keyless input never cuts: skip the re-concat
+            pdf = pd.concat(pending, ignore_index=True)
+            cut = key_starts(pdf)
+            if cut:
+                outs = run_task(pdf.iloc[:cut[-1]].reset_index(drop=True))
                 if outs:
                     yield pd.DataFrame(outs, columns=names)
+                pdf = pdf.iloc[cut[-1]:].reset_index(drop=True)
+            pending = [pdf]
+            n_pending = len(pdf)
+        if n_pending:
+            outs = run_task(pd.concat(pending, ignore_index=True))
+            if outs:
+                yield pd.DataFrame(outs, columns=names)
 
-        matched = parted.mapInPandas(map_groups, schema=out_schema)
-    else:
-        def kernel(pdf):
-            import pandas as pd
-
-            pdf = pdf.sort_values(order_cols or [ts_col], kind="mergesort") \
-                     .reset_index(drop=True)
-            return pd.DataFrame(run_task(pdf), columns=names)
-
-        matched = df.groupBy(F.lit(1).alias("__g__")) \
-                    .applyInPandas(kernel, schema=out_schema)
+    matched = parted.mapInPandas(map_groups, schema=out_schema)
 
     # outer SELECT over measure rows
     out_cols = []

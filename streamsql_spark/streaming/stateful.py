@@ -1297,64 +1297,34 @@ _CEP_MAX_BUFFER = 10_000  # reference maxRunRows default (cep/engine.go:17-23)
 _trigger_code_cache: dict[str, object] = {}
 
 
-def cep_flush_outputs(st: dict, spec, ts_col: str, ts_is_time: bool,
-                      within, ts_ups, part_names, key,
-                      all_rows_mode: bool,
-                      nav_cap: int | None = None) -> list[dict]:
-    """STATETTL reap = this kernel's ``Engine.Flush()``/``Stop()`` analog
-    (cep/engine.go:238-267,321): emit everything the reference's Flush
-    would — completed matches still held inside the reorder horizon AND
-    still-open greedy matches (an unbounded ``A+`` tail) — before the
-    key's state is destroyed.  The reference's own STATETTL is a
-    counting-window-only reap-without-emit (types/config.go:135);
-    applying it to MATCH_RECOGNIZE is this engine's documented
-    end-of-stream flush route (Spark streams have no final-watermark
-    advance), so it carries full Flush semantics: dropping a match the
-    eager pass was still holding would lose output the reference's
-    Stop() delivers.  WITHIN expiry still applies — ``flush`` releases
-    the could-still-extend hold, it does not resurrect expired spans."""
-    from ..cep.engine import Matcher
+def make_cep_step(plan, df: DataFrame):
+    """The streaming MATCH_RECOGNIZE kernel's one state step, built once
+    per query: returns ``(step, parts)`` with ``parts`` from
+    ``build_cep_parts`` and ``step(key, st, new_rows, flush) -> (outs,
+    st')`` over the per-key state ``{"rows", "mn", "ctx", "wm"}``.
 
-    rows, mn = st["rows"], st["mn"]
-    if not rows:
-        return []
-    if ts_is_time:
-        t_end = [r[ts_col].timestamp() if r.get(ts_col) is not None else None
-                 for r in rows]
-        w_end = within
-    else:
-        t_end = [r.get(ts_col) for r in rows]
-        w_end = within * ts_ups if within is not None else None
-    matcher = Matcher(spec, rows, t_end, w_end, nav_cap=nav_cap)
-    matcher.match_number = mn
-    matches, _ = matcher.find_emittable(flush=True,
-                                        start_at=st.get("ctx", 0))
-    outs = []
-    for bindings in matches:
-        mn += 1
-        for m in matcher.measure_rows(bindings, mn):
-            if not all_rows_mode:
-                m = {**dict(zip(part_names, key)), **m}
-            outs.append(m)
-    return outs
-
-
-def cep_stream(spark, plan, df: DataFrame):
-    """Streaming MATCH_RECOGNIZE: per-key row tail buffer in state; the
-    batch matcher runs incrementally, emitting matches that can no longer
-    extend (see Matcher.find_emittable)."""
+    A normal trigger calls it with ``flush=False``: new rows join the
+    buffer, the batch matcher's drive runs incrementally and emits only
+    matches that can no longer extend (Matcher.find_emittable).  The
+    STATETTL reap calls it with no new rows and ``flush=True`` — this
+    kernel's ``Engine.Flush()``/``Stop()`` analog (cep/engine.go:238-267,
+    321): completed matches still held inside the MAXOUTOFORDERNESS
+    horizon AND still-open greedy matches (an unbounded ``A+`` tail)
+    emit before the key's state is destroyed, so no reorder hold and no
+    buffer trim apply.  (The reference's own STATETTL is a counting-
+    window-only reap-without-emit, types/config.go:135; Spark streams
+    have no final-watermark advance, so this is the documented end-of-
+    stream route.)  WITHIN expiry still applies — ``flush`` releases the
+    could-still-extend hold, it does not resurrect expired spans."""
     from ..cep.executor import build_cep_parts
 
-    ttl_ms = state_ttl_ms(plan)
     parts = build_cep_parts(df, plan)
     spec = parts["spec"]
-    out_schema = parts["out_schema"]
     part_names = parts["part_names"]
     ts_col = parts["ts_col"]
     ts_is_time = parts["ts_is_time"]
     within = parts["within"]
     df = parts["df"]
-    measure_names = parts["measure_names"]
     order_cols = parts["order_cols"]
     all_rows_mode = spec.rows_per_match == "all"
     # declared MAXOUTOFORDERNESS: hold a reorder horizon before the
@@ -1415,31 +1385,28 @@ def cep_stream(spark, plan, df: DataFrame):
     # chunk-dependent) — same split-invariance fix as the window
     # kernels' buffer ingestion
     cep_clean_by = _cleaners(df, list(df.columns))
+    if ts_is_time:
+        w, moo = within, moo_s
+    else:
+        # numeric event time: scale per TIMEUNIT, like the pipeline's
+        # watermark (r7 review: assuming ms made the horizon 1000x off
+        # under TIMEUNIT='s')
+        w = within * ts_ups if within is not None else None
+        moo = moo_s * ts_ups
 
-    def kernel(key, pdf_iter, state):
-        import pandas as pd
+    def event_time(r):
+        t = r.get(ts_col)
+        return t.timestamp() if ts_is_time and t is not None else t
 
-        if state.hasTimedOut:
-            # STATETTL idle-key reap = this key's Engine.Flush()
-            st = _load_state(state) or {"rows": [], "mn": 0}
-            outs = cep_flush_outputs(st, spec, ts_col, ts_is_time,
-                                     within, ts_ups, part_names, key,
-                                     all_rows_mode, nav_cap=nav_cap)
-            state.remove()
-            if outs:
-                yield pd.DataFrame(
-                    outs, columns=[f.name for f in out_schema.fields])
-            return
-        pdf = _sorted_batch(pdf_iter, order_cols)
-        st = _load_state(state) or {"rows": [], "mn": 0}
+    def step(key, st, new_rows, flush):
         # split off the navigation-only context prefix: the reorder,
-        # null-drop and held-split below apply to MATCHABLE rows only
+        # null-drop, trim and held-split below apply to MATCHABLE rows
         ctx_n = st.get("ctx", 0)
         ctx_rows = st["rows"][:ctx_n]
-        rows, mn = st["rows"][ctx_n:], st["mn"]
-        if len(pdf):
+        rows, mn, wm = st["rows"][ctx_n:], st["mn"], st.get("wm")
+        if new_rows:
             n_pending = len(rows)
-            for r in pdf.to_dict("records"):
+            for r in new_rows:
                 rows.append({k: cep_clean_by.get(k, _clean)(v)
                              for k, v in r.items()})
             if moo_s:
@@ -1479,25 +1446,13 @@ def cep_stream(spark, plan, df: DataFrame):
                     order = sorted(range(len(rows)),
                                    key=lambda i: key_seq[i])
                     rows = [rows[i] for i in order]
-        if len(rows) > _CEP_MAX_BUFFER:
+        if not flush and len(rows) > _CEP_MAX_BUFFER:
             rows = rows[-_CEP_MAX_BUFFER:]
-        if ts_is_time:
-            ts_vals = [r[ts_col].timestamp() if r[ts_col] is not None else None
-                       for r in rows]
-            w = within
-            moo = moo_s
-        else:
-            ts_vals = [r.get(ts_col) for r in rows]
-            # numeric event time: scale per TIMEUNIT, like the
-            # pipeline's watermark (r7 review: assuming ms made the
-            # horizon 1000x off under TIMEUNIT='s')
-            w = within * ts_ups if within is not None else None
-            moo = moo_s * ts_ups
+        ts_vals = [event_time(r) for r in rows]
 
         held = []
-        if moo:
+        if moo and not flush:
             # monotone per-key watermark over ALL rows ever seen
-            wm = st.get("wm")
             batch_max = max((t for t in ts_vals if t is not None),
                             default=None)
             if batch_max is not None:
@@ -1514,22 +1469,13 @@ def cep_stream(spark, plan, df: DataFrame):
                         k = i
                         break
                 held, rows, ts_vals = rows[k:], rows[:k], ts_vals[:k]
-        else:
-            wm = None
 
-        if ctx_rows:
-            if ts_is_time:
-                ts_ctx = [r[ts_col].timestamp()
-                          if r.get(ts_col) is not None else None
-                          for r in ctx_rows]
-            else:
-                ts_ctx = [r.get(ts_col) for r in ctx_rows]
-            rows = ctx_rows + rows
-            ts_vals = ts_ctx + ts_vals
+        rows = ctx_rows + rows
+        ts_vals = [event_time(r) for r in ctx_rows] + ts_vals
         matcher = Matcher(spec, rows, ts_vals, w, nav_cap=nav_cap)
         matcher.match_number = mn
         matches, consumed = matcher.find_emittable(
-            flush=False, start_at=len(ctx_rows))
+            flush=flush, start_at=len(ctx_rows))
         outs = []
         for bindings in matches:
             mn += 1
@@ -1542,12 +1488,36 @@ def cep_stream(spark, plan, df: DataFrame):
               "ctx": consumed - keep_from}
         if wm is not None:
             st["wm"] = wm
-        _save_state(state, st, ttl_ms)
+        return outs, st
+
+    return step, parts
+
+
+def cep_stream(spark, plan, df: DataFrame):
+    """Streaming MATCH_RECOGNIZE: per-key row tail buffer in state, one
+    :func:`make_cep_step` per trigger and per STATETTL reap."""
+    ttl_ms = state_ttl_ms(plan)
+    step, parts = make_cep_step(plan, df)
+    df, part_names = parts["df"], parts["part_names"]
+    out_schema, order_cols = parts["out_schema"], parts["order_cols"]
+    columns = [f.name for f in out_schema.fields]
+
+    def kernel(key, pdf_iter, state):
+        import pandas as pd
+
+        st = _load_state(state) or {"rows": [], "mn": 0}
+        if state.hasTimedOut:
+            # STATETTL idle-key reap = this key's Engine.Flush()
+            outs, _ = step(key, st, [], flush=True)
+            state.remove()
+        else:
+            pdf = _sorted_batch(pdf_iter, order_cols)
+            outs, st = step(key, st, pdf.to_dict("records"), flush=False)
+            _save_state(state, st, ttl_ms)
         if outs:
-            yield pd.DataFrame(outs, columns=[f.name for f in out_schema.fields])
+            yield pd.DataFrame(outs, columns=columns)
 
     grouped = df.groupBy(*[F.col(c) for c in part_names]) if part_names \
         else df.withColumn("__g__", F.lit(1)).groupBy("__g__")
-    matched = grouped.applyInPandasWithState(
+    return grouped.applyInPandasWithState(
         kernel, out_schema, _STATE_SCHEMA, "append", _timeout_conf(ttl_ms))
-    return matched

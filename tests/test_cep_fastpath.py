@@ -17,7 +17,7 @@ import pytest
 from hypothesis import assume, given, settings
 from hypothesis import strategies as st
 
-from streamsql_spark.cep.engine import Matcher, _expand_seqs
+from streamsql_spark.cep.engine import Matcher, _expand_seqs, run_partition
 from streamsql_spark.dialect import nodes as N
 
 
@@ -34,7 +34,7 @@ def _find_both(pattern, pre_cls, n, skip=("past_last_row",),
                ts=None, within=None):
     rows = [{"i": i} for i in range(n)]
     fast = Matcher(_spec(pattern, skip), rows, ts, within, pre_cls=pre_cls)
-    got_fast = fast._find_all_fast(100000)
+    got_fast = fast._find_all_fast()
     assert got_fast is not None, "fast path unexpectedly not applicable"
     generic = Matcher(_spec(pattern, skip), rows, ts, within,
                       pre_cls=pre_cls)
@@ -182,6 +182,27 @@ def test_expansion_preference_order_examples():
     # unbounded quantifiers are the runs fast path's domain, not this one
     unb = N.PQuant(N.PSym("A"), 1, None)
     assert _expand_seqs(unb) is None
+
+
+def _a_then_b_star():
+    b_star = N.PQuant(N.PSym("B"), 0, None)
+    b_star.greedy = True
+    return N.PSeq([N.PSym("A"), b_star])
+
+
+@pytest.mark.parametrize("pattern, closed_form",
+                         [(N.PSym("A"), True), (_a_then_b_star(), False)],
+                         ids=["closed_form", "backtracking"])
+def test_batch_matches_are_not_capped_per_key(pattern, closed_form):
+    """Every row is one single-row match: batch CEP must return all of
+    them on one key, on the closed-form sweep (``A``) and on the
+    backtracking drive (``A B*``, which expansion rejects) alike — the
+    streaming drive has no cap, so a cap here splits batch from stream."""
+    n = 100_005
+    pre = {"A": np.ones(n, dtype=bool), "B": np.zeros(n, dtype=bool)}
+    assert (_expand_seqs(pattern) is not None) == closed_form
+    out = run_partition(_spec(pattern), [{}] * n, None, None, pre_cls=pre)
+    assert len(out) == n
 
 
 @pytest.mark.slow

@@ -568,8 +568,7 @@ def test_cep_statettl_reap_is_engine_flush(spark):
     (``A+`` that newer data could have extended) emit when the key's
     state is destroyed, exactly matching what the batch path's flush
     (``trigger_window``) emits for the same buffered rows."""
-    from streamsql_spark.cep.executor import build_cep_parts
-    from streamsql_spark.streaming.stateful import cep_flush_outputs
+    from streamsql_spark.streaming.stateful import make_cep_step
 
     sql = ("SELECT deviceId, n, lastv FROM stream MATCH_RECOGNIZE ("
            " PARTITION BY deviceId ORDER BY ts"
@@ -589,11 +588,13 @@ def test_cep_statettl_reap_is_engine_flush(spark):
     s = StreamSQL(spark)
     s.execute(sql)
     df = spark.createDataFrame(rows, EVT)
-    parts = build_cep_parts(df, s.plan)
-    outs = cep_flush_outputs(
-        {"rows": [dict(r) for r in rows], "mn": 0}, parts["spec"],
-        parts["ts_col"], parts["ts_is_time"], parts["within"],
-        parts["ts_ups"], parts["part_names"], ("d1",), False)
+    step, _ = make_cep_step(s.plan, df)
+    # a normal trigger holds every row inside the horizon; the reap then
+    # runs the SAME step over that state with flush=True
+    outs, st = step(("d1",), {"rows": [], "mn": 0},
+                    [dict(r) for r in rows], flush=False)
+    assert outs == [] and len(st["rows"]) == len(rows)
+    outs, _ = step(("d1",), st, [], flush=True)
     got = sorted((r["n"], r["lastv"]) for r in outs)
     assert got == [(2, 28.0), (2, 31.0)]
     # batch-flush parity on the same rows
