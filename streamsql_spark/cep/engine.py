@@ -179,54 +179,16 @@ def _expand_node(pat) -> list | None:
     return None  # unknown node: no expansion
 
 
-def _len_bounds(pat) -> tuple[int, int | None]:
-    """(min_rows, max_rows) a pattern node can consume; max None =
-    unbounded.  Excluded symbols still consume rows (exclusion only
-    hides them from ALL ROWS output), so they count."""
-    if pat is None:
-        return (0, 0)
-    if isinstance(pat, N.PSym):
-        return (1, 1)
-    if isinstance(pat, (N.PSeq, N.PPermute)):
-        lo, hi = 0, 0
-        for it in pat.items:
-            l, h = _len_bounds(it)
-            lo += l
-            hi = None if (hi is None or h is None) else hi + h
-        return (lo, hi)
-    if isinstance(pat, N.PAlt):
-        bounds = [_len_bounds(it) for it in pat.items]
-        hi = None if any(h is None for _, h in bounds) \
-            else max(h for _, h in bounds)
-        return (min(l for l, _ in bounds), hi)
-    if isinstance(pat, N.PQuant):
-        l, h = _len_bounds(pat.item)
-        lo = l * pat.min
-        hi = None if (pat.max is None or h is None) else h * pat.max
-        return (lo, hi)
-    return (0, None)  # unknown node: conservative
-
-
-def _max_next_offset(exprs, floor: int = 1, fname: str = "next") -> int:
-    """Largest literal ``fname``() navigation offset in ``exprs``
-    (each call defaults to 1; non-literal offsets conservatively count
-    as 1).  ``floor`` is the result when no such call appears — 1 for
-    the DEFINE span (a span of at least one is assumed by callers
-    gated on _uses_future_nav), 0 for the MEASURES probe.  Pass
-    ``fname="prev"`` for the backward span (the streaming kernel's
-    consumed-row context retention, r12)."""
+def _nav_calls(exprs, fnames) -> list:
+    """Every call named in ``fnames`` (lower-case PREV/NEXT) inside
+    ``exprs``, in pre-order."""
     import dataclasses
 
-    best = floor
+    out: list = []
 
     def walk(x):
-        nonlocal best
-        if isinstance(x, N.Func) and str(x.name).lower() == fname:
-            n = 1
-            if len(x.args) > 1 and isinstance(x.args[1], N.Lit) \
-                    and isinstance(x.args[1].value, int):
-                n = max(1, int(x.args[1].value))
-            best = max(best, n)
+        if isinstance(x, N.Func) and str(x.name).lower() in fnames:
+            out.append(x)
         if dataclasses.is_dataclass(x) and not isinstance(x, type):
             for f in dataclasses.fields(x):
                 walk(getattr(x, f.name))
@@ -239,7 +201,18 @@ def _max_next_offset(exprs, floor: int = 1, fname: str = "next") -> int:
 
     for e in exprs:
         walk(e)
-    return best
+    return out
+
+
+def _literal_offset(call: N.Func) -> int | None:
+    """A navigation call's row offset: 1 by default, the integer
+    literal when one is given, None for a dynamic offset."""
+    if len(call.args) < 2:
+        return 1
+    arg = call.args[1]
+    if isinstance(arg, N.Lit) and isinstance(arg.value, int):
+        return max(1, int(arg.value))
+    return None
 
 
 def nonliteral_nav_offset(exprs, fnames=("prev", "next")) -> str | None:
@@ -251,91 +224,29 @@ def nonliteral_nav_offset(exprs, fnames=("prev", "next")) -> str | None:
     silently under-retain and diverge across micro-batch splits
     (review find r12), so the kernel refuses it typed unless the query
     declares a retention cap with the MAXNAVOFFSET option (r13)."""
-    import dataclasses
-
-    bad: list[str] = []
-
-    def walk(x):
-        if bad:
-            return
-        if isinstance(x, N.Func) and str(x.name).lower() in fnames:
-            if len(x.args) > 1 and not (
-                    isinstance(x.args[1], N.Lit)
-                    and isinstance(x.args[1].value, int)):
-                bad.append(str(x.name).upper())
-        if dataclasses.is_dataclass(x) and not isinstance(x, type):
-            for f in dataclasses.fields(x):
-                walk(getattr(x, f.name))
-        elif isinstance(x, (list, tuple)):
-            for v in x:
-                walk(v)
-        elif isinstance(x, dict):
-            for v in x.values():
-                walk(v)
-
-    for e in exprs:
-        walk(e)
-    return bad[0] if bad else None
+    return next((str(c.name).upper() for c in _nav_calls(exprs, fnames)
+                 if _literal_offset(c) is None), None)
 
 
-def _uses_future_nav(spec: N.MatchSpec) -> bool:
-    """True if any DEFINE or MEASURE references NEXT() — the result
-    then depends on rows after the current one, so even a fixed-length
-    match touching the buffer tail is not final."""
-    import dataclasses
+class MatchShape:
+    """Per-query analysis of a MATCH_RECOGNIZE spec, shared by every
+    key's :class:`Matcher`: the SUBSET-expanded pattern, the symbol
+    alphabet and the PREV()/NEXT() row spans.  Built once per query
+    (``execute_cep``, ``make_cep_step``): the AST walks behind it cost
+    more than matching a small key's rows."""
 
-    def walk(x) -> bool:
-        if isinstance(x, N.Func) and str(x.name).lower() == "next":
-            return True
-        if dataclasses.is_dataclass(x) and not isinstance(x, type):
-            return any(walk(getattr(x, f.name))
-                       for f in dataclasses.fields(x))
-        if isinstance(x, (list, tuple)):
-            return any(walk(v) for v in x)
-        if isinstance(x, dict):
-            return any(walk(v) for v in x.values())
-        return False
-
-    # MEASURES NEXT(...) also reads past the match tail: a streaming
-    # release at the buffer edge would emit NULL where the batch kernel
-    # (which has the following row) fills the real value
-    return any(walk(e) for e in spec.defines.values()) \
-        or any(walk(m) for m in spec.measures)
-
-
-class Matcher:
-    def __init__(self, spec: N.MatchSpec, rows: list[dict],
-                 ts_values: list | None = None, within: float | None = None,
-                 pre_cls: dict | None = None, nav_cap: int | None = None):
+    def __init__(self, spec: N.MatchSpec, nav_cap: int | None = None):
         self.spec = spec
-        self.rows = rows
-        self.ts = ts_values
-        self.within = within
         # streaming MAXNAVOFFSET: dynamic PREV/NEXT offsets are allowed
         # up to this cap — spans below inflate to it so tail-holds and
         # context retention cover any legal runtime offset
         self.nav_cap = nav_cap
-        self.defines = spec.defines
-        self.subsets = spec.subsets
         self.pattern = _expand_subsets(spec.pattern, spec.subsets) \
             if spec.pattern is not None else None
-        self.match_number = 0
-        # sym -> bool array: DEFINE predicates the executor evaluated
-        # JVM-side over the whole partition (current-row-only conditions)
-        self.pre_cls = pre_cls or {}
-        # Fixed-length patterns (min rows == max rows, no NEXT() in
-        # DEFINE) can never extend once complete: the reference's NFA
-        # emits immediately when the accepting state has no outgoing
-        # transition (cep/engine.go:492-552).  find_emittable uses this
-        # to release tail-touching matches without waiting for the next
-        # micro-batch.
-        lo, hi = _len_bounds(self.pattern)
-        self.fixed_final = (hi is not None and lo == hi
-                            and not _uses_future_nav(spec))
         # the pattern's full symbol alphabet — X.col in MEASURES/DEFINE
         # resolves against it even when X bound zero rows
-        syms: set = set(self.defines or ())
-        for k, members in (self.subsets or {}).items():
+        syms: set = set(spec.defines or ())
+        for k, members in (spec.subsets or {}).items():
             syms.add(k)
             syms.update(members)
 
@@ -351,30 +262,63 @@ class Matcher:
                 walk(item)
         walk(self.pattern)
         self.symbols = frozenset(syms)
-        # NEXT() in DEFINE reads rows AFTER the one being classified: a
-        # failed classification within the SYMBOL's NEXT span of the
-        # buffer tail is INCONCLUSIVE for streaming (a future row could
-        # flip it), so it must hold the position, not consume it.
+        # NEXT() in DEFINE reads rows AFTER the one being classified:
+        # a classification within the SYMBOL's NEXT span of the buffer
+        # tail is INCONCLUSIVE for streaming (Matcher.classify).
         # Per-symbol (r12): a span keyed off ANY define's NEXT made
-        # every tail failure inconclusive — e.g. an A-define without
-        # navigation failing on an end-of-stream closer row held
-        # forever because a C-define elsewhere used NEXT.
-        def _span(exprs) -> int:
-            s = _max_next_offset(exprs, floor=0)
-            if nav_cap is not None and \
-                    nonliteral_nav_offset(exprs, ("next",)) is not None:
-                s = max(s, nav_cap)
-            return s
-
-        self._next_span_by_sym = {
-            s: _span([c]) for s, c in (spec.defines or {}).items()}
+        # every tail classification inconclusive — e.g. an A-define
+        # without navigation failing on an end-of-stream closer row
+        # held forever because a C-define elsewhere used NEXT.
+        self.next_span_by_sym = {
+            s: self._span([c]) for s, c in (spec.defines or {}).items()}
         # NEXT() in MEASURES reads rows after the MATCH: a completed
         # match whose measures may reach past the buffer tail must hold
         # for the next micro-batch (0 = no NEXT in any measure)
-        self._measures_next = _span(spec.measures)
+        self.measures_next = self._span(spec.measures)
+        # PREV() reach: the streaming kernel keeps this many consumed
+        # rows as navigation-only context (0 = no PREV anywhere)
+        self.prev_span = self._span(
+            list((spec.defines or {}).values()) + list(spec.measures),
+            "prev")
+
+    def _span(self, exprs, fname: str = "next") -> int:
+        """Largest ``fname``() row offset in ``exprs`` (0 when absent);
+        a dynamic offset counts as 1, or as the MAXNAVOFFSET cap when
+        one is declared."""
+        offs = [_literal_offset(c) for c in _nav_calls(exprs, (fname,))]
+        span = max((o or 1 for o in offs), default=0)
+        if self.nav_cap is not None and None in offs:
+            span = max(span, self.nav_cap)
+        return span
+
+
+class Matcher:
+    def __init__(self, shape: MatchShape, rows: list[dict],
+                 ts_values: list | None = None, within: float | None = None,
+                 pre_cls: dict | None = None):
+        self.shape = shape
+        self.spec = shape.spec
+        self.rows = rows
+        self.ts = ts_values
+        self.within = within
+        self.nav_cap = shape.nav_cap
+        self.defines = shape.spec.defines
+        self.subsets = shape.spec.subsets
+        self.pattern = shape.pattern
+        self.symbols = shape.symbols
+        self.match_number = 0
+        # sym -> bool array: DEFINE predicates the executor evaluated
+        # JVM-side over the whole partition (current-row-only conditions)
+        self.pre_cls = pre_cls or {}
 
     # ------------------------------------------------------ classification
     def classify(self, pos: int, sym: str, bindings: list) -> bool:
+        """Does row ``pos`` satisfy ``sym``'s DEFINE, given the match's
+        ``bindings`` so far?  When the DEFINE reads NEXT() and row
+        ``pos`` is within its span of the buffer tail, the answer may
+        change once later rows arrive — whether it passed (e.g. ``NEXT(v)
+        IS NULL`` read past the tail) or failed — so it also sets
+        ``_hit_end``, the streaming drive's hold signal."""
         if self.within is not None and bindings:
             first_idx = bindings[0][0]
             if self.ts is not None and self.ts[pos] is not None \
@@ -397,14 +341,11 @@ class Matcher:
             raise  # typed cap breach must not read as "no match"
         except Exception:
             ok = False
-        span = self._next_span_by_sym.get(sym, 0)
-        if not ok and span and pos + span >= len(self.rows):
-            # THIS symbol's DEFINE uses NEXT() and the row is within
-            # its span of the buffer tail: the False may come from
-            # reading past the end — signal the streaming drive to
-            # HOLD, not consume (conservative: also set on genuine
-            # in-buffer failures near the tail; that only delays
-            # emission until the successor arrives)
+        span = self.shape.next_span_by_sym.get(sym, 0)
+        if span and pos + span >= len(self.rows):
+            # conservative: also set when the read stayed inside the
+            # buffer or the verdict does not depend on it; that only
+            # delays emission until the successor arrives
             self._hit_end = True
         return ok
 
@@ -690,9 +631,19 @@ class Matcher:
 
     def find_emittable(self, flush: bool = False, start_at: int = 0,
                        cand=None):
-        """The backtracking drive, shared by batch and streaming: emit
-        only matches that cannot extend with future rows (their preferred
-        end is strictly before the buffer tail), unless ``flush``.
+        """The backtracking drive, shared by batch and streaming.  Unless
+        ``flush``, it stops at the first start row whose search was
+        inconclusive and holds it for the next micro-batch: the search
+        probed past the buffer tail (a greedy extension, or a partial
+        match that wanted more rows) or classified a NEXT()-reading
+        DEFINE within its span of the tail (:meth:`classify`), or the
+        match found has MEASURES NEXT() reaching past the tail.  Any
+        other match emits in this step, also one that ends on the last
+        buffered row: no future row can change it — the reference's NFA
+        likewise emits once the accepting state has no outgoing
+        transition (cep/engine.go:492-552).  A start whose WITHIN span
+        has expired is never held.
+
         Returns (matches, consumed_upto): the caller may drop buffer rows
         before ``consumed_upto`` — the Spark-state analog of the
         reference's emit-on-advance + Stop() flush (cep/engine.go:240-267,
@@ -708,6 +659,7 @@ class Matcher:
         out = []
         start = start_at
         n = len(self.rows)
+        mnext = self.shape.measures_next
         while start < n:
             if cand is not None:
                 ci = int(np.searchsorted(cand, start))
@@ -715,36 +667,17 @@ class Matcher:
                     break
                 start = int(cand[ci])
             m = self.first_match(start)
+            if (self._hit_end or (m is not None and mnext
+                                  and m[0] + mnext - 1 >= n)) \
+                    and not flush and not self._expired(start):
+                # a future row may change this start's match: e.g. C*
+                # with `C AS temperature < NEXT(temperature)` must not
+                # emit the short match that flush extends (r12 find)
+                return out, start
             if m is None:
-                if self._hit_end and not flush and not self._expired(start):
-                    # a partial match wanted rows beyond the buffer —
-                    # hold this position for the next micro-batch
-                    return out, start
                 start += 1
                 continue
-            end, bindings = m
-            if self._hit_end and not flush and not self._expired(start) \
-                    and not self.fixed_final:
-                # a match WAS found, but the search probed past the
-                # buffer tail (or a NEXT()-reading DEFINE failed within
-                # its span of it) while preferring a LONGER candidate:
-                # the failed extension is INCONCLUSIVE — a future row
-                # could flip it and greedy preference would then pick
-                # the longer match (r12 CEP-fuzz find: C* with
-                # `C AS temperature < NEXT(temperature)` emitted the
-                # short match at a micro-batch boundary where flush
-                # extends it).  Hold the position instead.
-                return out, start
-            # rows the emission may read: the match itself (through
-            # end-1) plus any MEASURES NEXT() reach past its last row
-            tail_need = end + self._measures_next - 1 \
-                if self._measures_next else end
-            tail_need = max(tail_need, end)
-            if tail_need >= n and not flush and not self._expired(start) \
-                    and not self.fixed_final:
-                # touches the buffer tail (or its measures read past
-                # it): a future row may change the emission
-                return out, start
+            bindings = m[1]
             self.match_number += 1
             out.append(bindings)
             start = self._skip_to(bindings)
@@ -778,15 +711,14 @@ class Matcher:
         return outs
 
 
-def run_partition(spec: N.MatchSpec, rows: list[dict],
+def run_partition(shape: MatchShape, rows: list[dict],
                   ts_values: list | None, within: float | None,
                   pre_cls: dict | None = None) -> list[dict]:
     """Match one ordered partition; returns measure rows."""
-    if spec.pattern is None:
+    if shape.pattern is None:
         raise CepError("MATCH_RECOGNIZE requires PATTERN")
-    matcher = Matcher(spec, rows, ts_values, within, pre_cls=pre_cls)
+    matcher = Matcher(shape, rows, ts_values, within, pre_cls=pre_cls)
     out = []
-    matcher.match_number = 0
     for no, bindings in enumerate(matcher.find_all(), start=1):
         out.extend(matcher.measure_rows(bindings, no))
     return out

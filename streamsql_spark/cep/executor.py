@@ -25,7 +25,7 @@ from ..dialect import nodes as N
 from ..dialect.render import render
 from ..engine.batch import duration_to_seconds
 from ..plans.plan import TIMEUNIT_PER_SECOND
-from .engine import run_partition
+from .engine import MatchShape, run_partition
 
 # batch-kernel buffer flush threshold (rows): the pandas buffer drains at
 # the next key boundary past this, bounding Python memory per task — the
@@ -385,7 +385,9 @@ def execute_cep(spark: SparkSession, plan, source_df: DataFrame, executor) -> Da
     measure_names = parts["measure_names"]
     order_cols = parts["order_cols"]
     all_rows = spec.rows_per_match == "all"
-    spec_ser = spec  # captured by closure (plain dataclasses — picklable)
+    # the per-query pattern analysis every key group's Matcher shares
+    # (captured by the closure: plain objects, picklable)
+    shape = MatchShape(spec)
 
     names = [f.name for f in out_schema.fields]
 
@@ -467,7 +469,7 @@ def execute_cep(spark: SparkSession, plan, source_df: DataFrame, executor) -> Da
             pre = ({sym: a[lo:hi] for sym, a in pre_full.items()}
                    if pre_full is not None else None)
             grows = rows[lo:hi]
-            out = run_partition(spec_ser, grows, ts_full[lo:hi], within,
+            out = run_partition(shape, grows, ts_full[lo:hi], within,
                                 pre_cls=pre)
             if not all_rows and out:
                 head = {name: grows[0][name] for name in part_names}

@@ -1304,8 +1304,8 @@ def make_cep_step(plan, df: DataFrame):
     st')`` over the per-key state ``{"rows", "mn", "ctx", "wm"}``.
 
     A normal trigger calls it with ``flush=False``: new rows join the
-    buffer, the batch matcher's drive runs incrementally and emits only
-    matches that can no longer extend (Matcher.find_emittable).  The
+    buffer, the batch matcher's drive runs incrementally and emits every
+    match no future row can change (Matcher.find_emittable).  The
     STATETTL reap calls it with no new rows and ``flush=True`` — this
     kernel's ``Engine.Flush()``/``Stop()`` analog (cep/engine.go:238-267,
     321): completed matches still held inside the MAXOUTOFORDERNESS
@@ -1336,8 +1336,7 @@ def make_cep_step(plan, df: DataFrame):
     moo_s = opt_duration_s(plan, "MAXOUTOFORDERNESS", 0.0)
     ts_ups = parts["ts_ups"]  # numeric event-time units per second
 
-    from ..cep.engine import (Matcher, _max_next_offset,
-                              nonliteral_nav_offset)
+    from ..cep.engine import MatchShape, Matcher, nonliteral_nav_offset
 
     # PREV() in DEFINE/MEASURES navigates PHYSICALLY over partition
     # rows — consumed rows must stay readable behind the matchable
@@ -1371,13 +1370,8 @@ def make_cep_step(plan, df: DataFrame):
             "(MAXNAVOFFSET='<max rows any runtime offset can reach>') "
             "— a runtime offset beyond the cap then fails typed — or "
             "run this statement on the batch path")
-    prev_span = max(
-        _max_next_offset(list((spec.defines or {}).values()),
-                         floor=0, fname="prev"),
-        _max_next_offset(spec.measures, floor=0, fname="prev"))
-    if nav_cap is not None and \
-            nonliteral_nav_offset(nav_exprs, ("prev",)) is not None:
-        prev_span = max(prev_span, nav_cap)
+    # the per-query pattern analysis every key's Matcher shares
+    shape = MatchShape(spec, nav_cap)
 
     # typed cleaners: the buffered row dicts feed DEFINE/MEASURES
     # evaluation, so an int column must not arrive as 5 from one
@@ -1472,7 +1466,7 @@ def make_cep_step(plan, df: DataFrame):
 
         rows = ctx_rows + rows
         ts_vals = [event_time(r) for r in ctx_rows] + ts_vals
-        matcher = Matcher(spec, rows, ts_vals, w, nav_cap=nav_cap)
+        matcher = Matcher(shape, rows, ts_vals, w)
         matcher.match_number = mn
         matches, consumed = matcher.find_emittable(
             flush=flush, start_at=len(ctx_rows))
@@ -1483,7 +1477,7 @@ def make_cep_step(plan, df: DataFrame):
                 if not all_rows_mode:
                     m = {**dict(zip(part_names, key)), **m}
                 outs.append(m)
-        keep_from = max(0, consumed - prev_span)
+        keep_from = max(0, consumed - shape.prev_span)
         st = {"rows": rows[keep_from:] + held, "mn": mn,
               "ctx": consumed - keep_from}
         if wm is not None:

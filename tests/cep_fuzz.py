@@ -35,6 +35,13 @@ keeps a per-row range conjunct so the harness's closer rows still
 fail each define regardless of match history.  r13 baseline with the
 axis active: 0 divergences on the same FIVE seeds x 40.
 
+NULL-tolerant NEXT axis: one C variant reads ``NEXT(temperature, k) IS
+NULL OR NEXT(temperature, k) > t`` (k in 1, 2), which PASSES on a read
+past the partition end — a stream must treat that pass as inconclusive
+at the buffer tail, or it emits matches batch never produces.  With the
+axis active and closers three deep: 0 divergences on the same FIVE
+seeds x 40.
+
 Harness lessons (cost a debug round each — keep them):
 - relative skew between two displaced rows is up to 2x the per-row
   displacement; keep 2*d*spacing under the horizon or late rows drop
@@ -42,9 +49,10 @@ Harness lessons (cost a debug round each — keep them):
 - define-failing closer rows do NOT flush matches under a horizon
   (they are themselves held) — watermark pushers beyond closer_ts +
   horizon are required;
-- closers must be TWO deep per key (r12): a NEXT()-reading DEFINE
-  classifying the first closer needs the second as its successor to
-  fail conclusively, else the kernel legitimately holds the tail.
+- closers must be one deeper per key than the largest DEFINE NEXT()
+  offset (three for NEXT(v, 2)): a NEXT()-reading DEFINE classifying
+  the first closer needs its successors in the buffer to classify
+  conclusively, else the kernel legitimately holds the tail.
 
 r12 engine finds from the new axes: the parser rejected `??`
 (reluctant optional — reference consumes the reluctant marker after
@@ -84,13 +92,20 @@ def gen_pattern(rng: random.Random):
     }
     # navigation in DEFINE (~30%): C becomes relative to its
     # neighbours — PREV reads the previous PARTITION row physically,
-    # NEXT the following one (NULL off either end fails the define)
+    # NEXT the following one (NULL off either end fails the define,
+    # except in the NULL-tolerant NEXT variant, which PASSES on a read
+    # past the partition end and keeps C's range conjunct so the
+    # closer rows still fail)
     if n_sym >= 3 and rng.random() < 0.3:
+        k = rng.choice([1, 2])
         defs["C"] = rng.choice([
             f"C AS temperature >= PREV(temperature) - 10",
             f"C AS temperature <= PREV(temperature, 2) + 25",
             f"C AS temperature < NEXT(temperature)",
             f"C AS temperature >= {lo} AND PREV(temperature) IS NOT NULL",
+            f"C AS (temperature >= {lo} AND temperature <= {hi}) AND "
+            f"(NEXT(temperature, {k}) IS NULL OR "
+            f"NEXT(temperature, {k}) > {round(rng.uniform(0, 30), 2)})",
         ])
     # RUNNING aggregates in DEFINE (~25%, r13 — the reference's eval
     # supports them, cep/eval.go:362-380): B's condition reads an
@@ -191,14 +206,15 @@ def gen_rows(rng: random.Random, n: int = 36):
             "humidity": 0.0, "ts": 1000 * (i + 1), "status": "ok",
         })
     # define-failing closers resolve pending matches on every path.
-    # TWO per key (r12): a NEXT()-reading DEFINE classifying the FIRST
-    # closer needs the second as its successor to fail CONCLUSIVELY —
-    # with a single closer the tail classification stays inconclusive
-    # (reads past end) and the streaming kernel legitimately holds it
-    # (README delta row 9: no end-of-stream flush without STATETTL)
+    # THREE per key, one more than the largest DEFINE NEXT() offset: a
+    # NEXT(v, 2)-reading DEFINE classifying the FIRST closer needs two
+    # successors to classify CONCLUSIVELY — with fewer closers the tail
+    # classification stays inconclusive (reads past end) and the
+    # streaming kernel legitimately holds it (README delta row 9: no
+    # end-of-stream flush without STATETTL)
     rows += [{"deviceId": k, "temperature": None, "humidity": 0.0,
               "ts": 1000 * (n + 10 + j), "status": "ok"}
-             for j, k in enumerate(["d1", "d2", "d1", "d2"])]
+             for j, k in enumerate(["d1", "d2"] * 3)]
     return rows
 
 

@@ -55,7 +55,7 @@ def test_cep_adjacent_pair_matches_greedy_scan(vals):
     """PATTERN (A B) + SKIP PAST LAST ROW over any symbol sequence must
     equal a greedy left-to-right scan for adjacent (A,B) pairs — the
     NFA core checked against a 5-line brute-force oracle (no Spark)."""
-    from streamsql_spark.cep.engine import run_partition
+    from streamsql_spark.cep.engine import MatchShape, run_partition
 
     spec = _parse_spec("""
         SELECT * FROM stream MATCH_RECOGNIZE (
@@ -66,8 +66,8 @@ def test_cep_adjacent_pair_matches_greedy_scan(vals):
     """)
     rows = [{"i": i, "s": s} for i, s in enumerate(vals)]
     got = [(m["a_i"], m["b_i"])
-           for m in run_partition(spec, rows, [float(i) for i in range(len(rows))],
-                                  None)]
+           for m in run_partition(MatchShape(spec), rows,
+                                  [float(i) for i in range(len(rows))], None)]
     # brute force: greedy scan, consume both rows on match
     want, i = [], 0
     while i + 1 < len(vals):
@@ -84,7 +84,7 @@ def test_cep_adjacent_pair_matches_greedy_scan(vals):
 def test_cep_greedy_runs_match_islands(vals):
     """PATTERN (A{2,}) + SKIP PAST LAST ROW ≡ maximal runs of 'a' with
     length ≥ 2 (gaps-and-islands oracle)."""
-    from streamsql_spark.cep.engine import run_partition
+    from streamsql_spark.cep.engine import MatchShape, run_partition
 
     spec = _parse_spec("""
         SELECT * FROM stream MATCH_RECOGNIZE (
@@ -95,8 +95,8 @@ def test_cep_greedy_runs_match_islands(vals):
     """)
     rows = [{"i": i, "s": s} for i, s in enumerate(vals)]
     got = [(m["lo"], m["hi"], m["n"])
-           for m in run_partition(spec, rows, [float(i) for i in range(len(rows))],
-                                  None)]
+           for m in run_partition(MatchShape(spec), rows,
+                                  [float(i) for i in range(len(rows))], None)]
     want, run = [], []
     for i, s in enumerate(vals + ["x"]):
         if s == "a":
@@ -116,7 +116,7 @@ def test_cep_within_bound_matches_scan(steps):
     """PATTERN (A B) WITHIN bound: a match requires the pair's time
     span ≤ bound — greedy scan oracle over random symbol/gap sequences
     (cep/engine.go:690-696 expiry)."""
-    from streamsql_spark.cep.engine import run_partition
+    from streamsql_spark.cep.engine import MatchShape, run_partition
 
     spec = _parse_spec("""
         SELECT * FROM stream MATCH_RECOGNIZE (
@@ -134,7 +134,7 @@ def test_cep_within_bound_matches_scan(steps):
     # run_partition takes the bound explicitly (the executor parses the
     # spec's WITHIN into seconds and passes it through, cep/executor.py)
     got = [(m["a_i"], m["b_i"])
-           for m in run_partition(spec, rows, ts, 2.0)]
+           for m in run_partition(MatchShape(spec), rows, ts, 2.0)]
     want, i = [], 0
     while i + 1 < len(steps):
         if steps[i][0] == "a" and steps[i + 1][0] == "b" \
@@ -210,7 +210,7 @@ def test_frontend_never_crashes_untyped(sql):
 def test_cep_alternation_matches_scan(vals):
     """PATTERN (A (B | C)) + SKIP PAST LAST ROW: greedy scan oracle over
     disjoint symbol classes, including the branch CLASSIFIER."""
-    from streamsql_spark.cep.engine import run_partition
+    from streamsql_spark.cep.engine import MatchShape, run_partition
 
     spec = _parse_spec("""
         SELECT * FROM stream MATCH_RECOGNIZE (
@@ -221,7 +221,7 @@ def test_cep_alternation_matches_scan(vals):
     """)
     rows = [{"i": i, "s": s} for i, s in enumerate(vals)]
     got = [(m["a_i"], m["b_i"], m["cls"])
-           for m in run_partition(spec, rows,
+           for m in run_partition(MatchShape(spec), rows,
                                   [float(i) for i in range(len(rows))], None)]
     want, i = [], 0
     while i + 1 < len(vals):

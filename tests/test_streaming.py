@@ -606,6 +606,93 @@ def test_cep_statettl_reap_is_engine_flush(spark):
     assert batch == got
 
 
+def _cep_step(spark, sql, rows):
+    """make_cep_step's state step for ``sql`` over EVT rows."""
+    from streamsql_spark.streaming.stateful import make_cep_step
+
+    s = StreamSQL(spark)
+    s.execute(sql)
+    return make_cep_step(s.plan, spark.createDataFrame(rows, EVT))[0]
+
+
+def _cep_query(spark, sql, rows):
+    s = StreamSQL(spark)
+    s.execute(sql)
+    return [r.asDict() for r in
+            s.query(spark.createDataFrame(rows, EVT)).collect()]
+
+
+def test_cep_stream_define_next_null_is_split_invariant(spark):
+    """A NEXT()-reading DEFINE that PASSES on a NULL read past the buffer
+    tail is inconclusive, like one that fails there: B below passes on
+    every row whose second successor has not arrived yet, so a stream
+    that trusted it emitted (1,2)+(3,4) or (2,3)+(4,5) where batch gives
+    only (3,4).  Every split of the key's rows into two triggers, then the
+    STATETTL reap's flush, must deliver what query() gives."""
+    sql = ("SELECT a, b FROM stream MATCH_RECOGNIZE ("
+           " PARTITION BY deviceId ORDER BY ts"
+           " MEASURES FIRST(A.temperature) AS a, LAST(B.temperature) AS b"
+           " ONE ROW PER MATCH PATTERN (A B)"
+           " DEFINE A AS temperature > 0,"
+           " B AS NEXT(temperature, 2) IS NULL)")
+    rows = _rows(*[("d1", float(v), 0.0, v, "ok") for v in range(1, 6)])
+    want = sorted((r["a"], r["b"]) for r in _cep_query(spark, sql, rows))
+    assert want == [(3.0, 4.0)]
+    step = _cep_step(spark, sql, rows)
+    for cut in range(len(rows) + 1):
+        st, got = {"rows": [], "mn": 0}, []
+        for part in (rows[:cut], rows[cut:]):
+            outs, st = step(("d1",), st, [dict(r) for r in part],
+                            flush=False)
+            got += outs
+        got += step(("d1",), st, [], flush=True)[0]
+        assert sorted((r["a"], r["b"]) for r in got) == want, cut
+
+
+_RELEASE_DEFINES = (" DEFINE A AS temperature > 30,"
+                    " B AS temperature > 10 AND temperature <= 30,"
+                    " C AS temperature <= 10)")
+
+
+@pytest.mark.parametrize("pattern,measures,temps,emits_now", [
+    # C closes the match: no row can extend or change it
+    ("A B+ C", "", [35.0, 20.0, 25.0, 5.0], True),
+    # fixed length: nothing can follow the last symbol
+    ("A B C", "", [35.0, 20.0, 5.0], True),
+    # B+ may still take the next row
+    ("A B+", "", [35.0, 20.0, 25.0], False),
+    # the measure reads the row after the match
+    ("A B C", ", NEXT(temperature) AS nx", [35.0, 20.0, 5.0], False),
+], ids=["complete_at_tail_emits", "fixed_length_at_tail_emits",
+        "open_greedy_tail_holds", "measures_next_at_tail_holds"])
+def test_cep_stream_release_rule(spark, pattern, measures, temps,
+                                 emits_now):
+    """A match that ends on the last buffered row emits in the trigger
+    that completes it unless the search was inconclusive: it probed past
+    the tail (open greedy quantifier) or its MEASURES read past it.  A
+    held match emits at the key's next row; both routes deliver what
+    query() gives."""
+    sql = ("SELECT * FROM stream MATCH_RECOGNIZE ("
+           " PARTITION BY deviceId ORDER BY ts"
+           f" MEASURES FIRST(A.ts) AS a_ts, COUNT(*) AS n{measures}"
+           f" ONE ROW PER MATCH PATTERN ({pattern})" + _RELEASE_DEFINES)
+    rows = _rows(*[("d1", t, 0.0, 1000 * (i + 1), "ok")
+                   for i, t in enumerate(temps)])
+    closer = _rows(("d1", None, 0.0, 1000 * (len(temps) + 1), "ok"))
+    want = _cep_query(spark, sql, rows + closer)
+    assert len(want) == 1
+    step = _cep_step(spark, sql, rows)
+    outs, st = step(("d1",), {"rows": [], "mn": 0},
+                    [dict(r) for r in rows], flush=False)
+    if emits_now:
+        assert outs == want
+        assert st["rows"] == []
+    else:
+        assert outs == [] and len(st["rows"]) == len(rows)
+        outs, _ = step(("d1",), st, [dict(r) for r in closer], flush=False)
+        assert outs == want
+
+
 # ------------------------------------------- custom stateful analytic UDF
 
 
