@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..dialect import nodes as N
 from ..dialect.parser import parse
+from ..dialect.pyeval import _I64_MAX, _I64_MIN, Fallback, _bool3
 from ..dialect.planner import PlanError, plan as make_plan
 from ..engine.batch import BatchExecutor, ExecError
 from ..functions.registry import register_function as _register_function
@@ -92,6 +93,28 @@ def _an_value_ok(v) -> bool:
         return all(x is not None and isinstance(x, (int, float, str, bool))
                    for x in v)
     return False
+
+
+# exact types _an_value_ok admits without a closer look
+_AN_SCALARS = frozenset((str, float, int, bool, type(None)))
+
+
+def _key_fn(parts):
+    """Partition-key tuple of a row from the compiled PARTITION BY
+    expressions."""
+    if len(parts) == 1:
+        p0 = parts[0]
+        return lambda row: (p0(row),)
+    return lambda row: tuple(pf(row) for pf in parts)
+
+
+def _argv_fn(args):
+    """Argument list of a row from ``('lit', value)`` constants and
+    ``('fn', closure)`` expressions."""
+    if len(args) == 1 and args[0][0] == "fn":
+        a0 = args[0][1]
+        return lambda row: [a0(row)]
+    return lambda row: [x(row) if k == "fn" else x for k, x in args]
 
 
 class StreamSQL:
@@ -1361,6 +1384,12 @@ class StreamSQL:
         fn, Fallback = cached
         if fn is None or not row:
             return _NOT_APPLICABLE
+        for v in row.values():
+            if type(v) is int and not _I64_MIN <= v <= _I64_MAX:
+                # no Spark path ingests a field past BIGINT, so the
+                # python path answers no such event either — also when
+                # the statement never reads that field
+                return _NOT_APPLICABLE
         try:
             return fn(row)
         except Fallback:
@@ -1718,7 +1747,9 @@ class StreamSQL:
                 return None
 
         from ..functions.registry import custom_analytic
-        specs = []
+        from ..streaming.stateful import (analytic_copier_for,
+                                          analytic_step_for)
+        specs = []  # (ph, key fn, WHEN gate, argv fn, copier, step, p)
         for s in plan.analytics:
             over = s.func.over
             parts = [pyeval.compile_expr(p)
@@ -1758,20 +1789,15 @@ class StreamSQL:
                         return None
                     args.append(("fn", af))
                     arg_marks.append("x")
-            from ..streaming.stateful import copy_builtin_state, copy_state
             p = {"name": s.func.name.lower(), "ph": s.placeholder,
-                 "args": arg_marks, "custom": custom_analytic(s.func.name),
-                 # per-spec state copier: C-speed one-level copy for the
-                 # flat built-in shapes, generic deep copy for custom
-                 # state objects
-                 "copy": (copy_state if custom_analytic(s.func.name)
-                          else copy_builtin_state)}
+                 "args": arg_marks, "custom": custom_analytic(s.func.name)}
             if p["custom"] is None and p["name"] not in (
                     "lag", "latest", "had_changed", "changed_col",
                     "acc_sum", "acc_count", "acc_min", "acc_max",
                     "acc_avg"):
                 return None  # fan-out/renderer-special fns: Spark path
-            specs.append((p, parts, when_f, args))
+            specs.append((p["ph"], _key_fn(parts), when_f, _argv_fn(args),
+                          analytic_copier_for(p), analytic_step_for(p), p))
         # reference omitEmpty (stream/stream.go:698-703): a SELECT of
         # solely bare change-detection fields suppresses the row when
         # none changed (state still advances, like a WHERE filter)
@@ -1779,64 +1805,55 @@ class StreamSQL:
             isinstance(f.expr, N.Func)
             and f.expr.name.lower() == "changed_col"
             for f in self._stmt.fields)
-        # cache the hot-loop runtime references at compile time — four
-        # `from x import y` statements per event cost ~2-3 µs
-        from ..dialect.pyeval import Fallback, _bool3, _truthy
-        from ..streaming.stateful import analytic_step
         from ..plans.plan import where_filters_first
-        where_first = where_filters_first(plan)
         return {"outs": outs, "where": where_f, "specs": specs,
-                "omit_empty": omit_empty, "where_first": where_first,
-                "rt": (Fallback, _bool3, _truthy, analytic_step)}
+                "omit_empty": omit_empty,
+                "where_first": where_filters_first(plan)}
 
     def _emit_sync_analytic_python(self, row: dict):
-        """In-process analytic per-event path: the SAME analytic_step
-        kernel over python-evaluated keys/gates/args — zero JVM round
-        trips.  _NOT_APPLICABLE when the query or this event's value
-        types are outside the subset; state lives in the SAME
-        ``_an_states`` store the Spark route uses, so a per-event
-        fallback keeps one continuous history."""
+        """In-process analytic per-event path: the SAME analytic steps
+        (streaming/stateful.ANALYTIC_STEPS) over python-evaluated keys/
+        gates/args — zero JVM round trips.  _NOT_APPLICABLE when the
+        query or this event's value types are outside the subset; state
+        lives in the SAME ``_an_states`` store the Spark route uses, so
+        a per-event fallback keeps one continuous history."""
         if not hasattr(self, "_an_py"):
             self._an_py = self._compile_analytic_python()
-        if self._an_py is None or not row:
-            return _NOT_APPLICABLE
-        if not all(_an_value_ok(v) for v in row.values()):
-            return _NOT_APPLICABLE
-        if not hasattr(self, "_an_states"):
-            self._an_states = {}
         cp = self._an_py
-        Fallback, _bool3, _truthy, analytic_step = cp["rt"]
-
+        if cp is None or not row:
+            return _NOT_APPLICABLE
+        for v in row.values():
+            if type(v) not in _AN_SCALARS and not _an_value_ok(v):
+                return _NOT_APPLICABLE
+        states = getattr(self, "_an_states", None)
+        if states is None:
+            states = self._an_states = {}
+        where = cp["where"]
         try:
             # step state on COPIES, commit only after the whole event
             # evaluates: a Fallback anywhere hands the UNTOUCHED state
             # to the Spark route, which then performs the one true step
-            if cp["where_first"] and cp["where"] is not None:
+            if cp["where_first"] and where is not None:
                 # standard-SQL mode: the filter sees only raw columns;
                 # a rejected row never touches analytic state
-                if not _truthy(_bool3(cp["where"](dict(row)))):
+                if _bool3(where(dict(row))) is not True:
                     return None
             staged = []
             ext = dict(row)
-            for p, parts, when_f, args in cp["specs"]:
-                key = tuple(pf(row) for pf in parts)
-                gate = True
-                if when_f is not None:
-                    # ext, not row: the gate may reference an earlier
-                    # spec's placeholder (lifted WHEN had_changed(...))
-                    gate = _bool3(when_f(ext)) is True
-                argv = [x(row) if k == "fn" else x for k, x in args]
-                st = p["copy"](
-                    self._an_states.get((p["ph"], key)) or {})
-                ext[p["ph"]] = analytic_step(p, st, argv, gate)
-                staged.append(((p["ph"], key), st))
-            if cp["where"] is not None and not cp["where_first"]:
+            for ph, key_of, when_f, argv_of, copier, step, p in cp["specs"]:
+                slot = (ph, key_of(row))
+                # ext, not row: the gate may reference an earlier
+                # spec's placeholder (lifted WHEN had_changed(...))
+                gate = when_f is None or _bool3(when_f(ext)) is True
+                argv = argv_of(row)
+                st = copier(states.get(slot) or {})
+                ext[ph] = step(p, st, argv, gate)
+                staged.append((slot, st))
+            if where is not None and not cp["where_first"]:
                 # CDC mode (WHERE reads an analytic): state advanced
                 # BEFORE the filter, and stays advanced on rejection
-                if not _truthy(_bool3(cp["where"](ext))):
-                    for slot, st in staged:
-                        self._touch_analytic_partition(*slot)
-                        self._an_states[slot] = st
+                if _bool3(where(ext)) is not True:
+                    self._commit_analytic(staged)
                     return None
             out = {name: fn(ext) for name, fn in cp["outs"]}
         except Fallback:
@@ -1846,12 +1863,16 @@ class StreamSQL:
             # stay on the Spark route for this query's events
             self._an_py = None
             return _NOT_APPLICABLE
+        self._commit_analytic(staged)
+        if cp["omit_empty"] and all(v is None for v in out.values()):
+            return None  # omitEmpty suppression — state already advanced
+        return out
+
+    def _commit_analytic(self, staged: list) -> None:
+        """Store an event's stepped states."""
         for slot, st in staged:
             self._touch_analytic_partition(*slot)
             self._an_states[slot] = st
-        if cp.get("omit_empty") and all(v is None for v in out.values()):
-            return None  # omitEmpty suppression — state already advanced
-        return out
 
     def _emit_sync_analytic(self, row: dict) -> dict | None:
         """Per-event analytic evaluation in O(1) state (the reference's

@@ -121,7 +121,7 @@ def _concat_str(x):
 def _round_half_up(x, n=0):
     """Spark/reference rounding is HALF_UP (Go math.Round half-away,
     functions_math.go:556; Spark Round), NOT Python's banker's round —
-    keep this in lockstep with pyeval._round_half_up."""
+    keep this in lockstep with pyeval._round_to."""
     xf = float(x)
     if math.isinf(xf) or math.isnan(xf):
         # Spark round(Infinity) is Infinity, round(NaN) is NaN —

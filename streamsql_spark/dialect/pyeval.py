@@ -34,6 +34,19 @@ type combinations raise :class:`Fallback` at RUNTIME (that one event
 re-runs through the Spark path, which remains the semantics oracle).
 A differential fuzz test pins python-path == spark-path on the
 supported grammar.
+
+Every decision that depends only on the statement is taken once, at
+compile time, so an event pays only for its own values:
+
+- an operator is looked up once in ``_ARITH`` / ``_CMP`` (one guarded
+  function per operator, each with an exact-``type()`` fast path for
+  operands that provably pass its guards);
+- a literal operand is bound as a constant and validated once; a valid
+  numeric (or string) literal lets a float (or string) operand go
+  straight to the raw Python operator;
+- a CASE whose THEN/ELSE values are all literals checks their type
+  class once and evaluates only its conditions per event;
+- ``round(x, d)`` builds its Decimal quantizer once.
 """
 
 from __future__ import annotations
@@ -43,9 +56,10 @@ import calendar
 import datetime as _dt
 import json as _json
 import math
+import operator as _operator
 import re
 import time as _time
-from decimal import ROUND_HALF_UP, Decimal
+from decimal import ROUND_HALF_UP, Decimal, InvalidOperation
 
 from . import nodes as N
 
@@ -56,7 +70,9 @@ class Fallback(Exception):
 
 
 _NUM = (int, float)
+_isfinite = math.isfinite
 _I64_MIN, _I64_MAX = -(2 ** 63), 2 ** 63 - 1
+_F53 = 2 ** 53  # every int within ±2^53 is exactly a double
 
 
 def _num(v):
@@ -90,78 +106,155 @@ def _finite(v):
     return v
 
 
-def _arith(op: str, a, b):
+# ---- binary operators: one function per operator, bound at compile
+# time (compile_expr looks the operator up once, never per event).
+# Each starts with an exact-type() fast path whose operands provably
+# pass the guards below it, so it answers exactly what they would.
+
+def _null_arith(a, b):
+    """The NULL an arithmetic operator with a NULL operand returns, once
+    the other operand is one Spark's arithmetic takes: a boolean there
+    is an analysis error, a string an ANSI cast error."""
+    if a is not None:
+        _num(a)
+    if b is not None:
+        _num(b)
+    return None
+
+
+def _add(a, b):
+    if type(a) is float and type(b) is float:
+        return a + b
     if a is None or b is None:
-        return None
-    a, b = _num(a), _num(b)
-    if op == "+":
-        return _i64(a + b)
-    if op == "-":
-        return _i64(a - b)
-    if op == "*":
-        return _i64(a * b)
-    if op == "/":
-        # Spark `/` is double division; x/0 handling is mode-dependent
-        if b == 0:
-            raise Fallback()
+        return _null_arith(a, b)
+    return _i64(_num(a) + _num(b))
+
+
+def _sub(a, b):
+    if type(a) is float and type(b) is float:
+        return a - b
+    if a is None or b is None:
+        return _null_arith(a, b)
+    return _i64(_num(a) - _num(b))
+
+
+def _mul(a, b):
+    if type(a) is float and type(b) is float:
+        return a * b
+    if a is None or b is None:
+        return _null_arith(a, b)
+    return _i64(_num(a) * _num(b))
+
+
+def _div(a, b):
+    # Spark `/` is double division; x/0 handling is mode-dependent
+    if type(a) is float and type(b) is float and b != 0.0:
         return a / b
-    if op == "%":
-        # Spark mod takes the DIVIDEND's sign (Java %), unlike Python %
-        if b == 0:
-            raise Fallback()
-        if isinstance(a, int) and isinstance(b, int):
-            # exact integer truncated-division remainder — fmod would
-            # lose precision past 2^53
-            q = a // b
-            if a % b != 0 and (a < 0) != (b < 0):
-                q += 1
-            return a - q * b
-        a, b = _finite(a), _finite(b)
-        return math.fmod(a, b)
-    if op == "^":
-        # exponentiation in the reference dialect (render.py:115);
-        # 0^negative and negative^fractional have Java-specific
-        # Infinity/NaN results — Spark path owns them
-        try:
-            r = float(_finite(a)) ** float(_finite(b))
-        except (ZeroDivisionError, OverflowError):
-            raise Fallback()
-        if isinstance(r, complex) or not math.isfinite(r):
-            raise Fallback()
-        return r
-    raise Fallback()
-
-
-def _cmp(op: str, a, b):
     if a is None or b is None:
-        return None
+        return _null_arith(a, b)
+    a, b = _num(a), _num(b)
+    if b == 0:
+        raise Fallback()
+    # Spark casts both operands to DOUBLE first; Python's exact int/int
+    # quotient rounds differently past 2^53
+    return float(a) / float(b)
+
+
+def _mod(a, b):
+    # Spark mod takes the DIVIDEND's sign (Java %), unlike Python %
+    if a is None or b is None:
+        return _null_arith(a, b)
+    a, b = _num(a), _num(b)
+    if b == 0:
+        raise Fallback()
+    if isinstance(a, int) and isinstance(b, int):
+        # exact integer truncated-division remainder — fmod would
+        # lose precision past 2^53
+        q = a // b
+        if a % b != 0 and (a < 0) != (b < 0):
+            q += 1
+        return a - q * b
+    return math.fmod(_finite(a), _finite(b))
+
+
+def _pow(a, b):
+    # exponentiation in the reference dialect (render.py:115).  Spark's
+    # power is StrictMath.pow (fdlibm), which can differ from the C pow
+    # behind Python's ** in the last place; both must return an integer
+    # power exactly when a double holds it, and only that case is
+    # answered here — every other power takes the Spark path
+    if a is None or b is None:
+        return _null_arith(a, b)
+    a, b = _finite(a), _finite(b)
+    if a != int(a) or b != int(b) or not 0 <= b <= 64 \
+            or not -_F53 <= a <= _F53:
+        raise Fallback()
+    r = int(a) ** int(b)
+    if not -_F53 <= r <= _F53:
+        raise Fallback()
+    return float(r)
+
+
+_ARITH = {"+": _add, "-": _sub, "*": _mul, "/": _div, "%": _mod,
+          "^": _pow}
+
+
+def _cmp_ok(a, b, eq: bool) -> bool:
+    """The guard every comparison shares; False = a NULL operand (the
+    comparison is UNKNOWN).  ``eq``: the operator is = / != — the only
+    ones defined on booleans here."""
+    t = type(a)
+    if t is type(b) and (t is str or (t is float and _isfinite(a)
+                                      and _isfinite(b))):
+        return True
+    if a is None or b is None:
+        return False
     bools = isinstance(a, bool), isinstance(b, bool)
     if any(bools):
-        if not all(bools) or op not in ("=", "==", "!=", "<>"):
+        if not all(bools) or not eq:
             raise Fallback()
     elif isinstance(a, _NUM) and isinstance(b, _NUM):
         # Spark orders NaN above everything and NaN = NaN is true —
         # IEEE Python disagrees, so NaN comparisons take the Spark path
         _finite(a), _finite(b)
-    elif isinstance(a, str) and isinstance(b, str):
-        pass
-    else:
+        if type(a) is not type(b) and not -_F53 <= (
+                b if type(a) is float else a) <= _F53:
+            # Spark casts the BIGINT to DOUBLE first, where Python
+            # compares exactly: past 2^53 the two can disagree
+            raise Fallback()
+    elif not (isinstance(a, str) and isinstance(b, str)):
         # mixed numeric/string comparison: Spark's implicit-cast rules
         # are subtle — not our problem to reimplement
         raise Fallback()
-    if op in ("=", "=="):
-        return a == b
-    if op in ("!=", "<>"):
-        return a != b
-    if op == "<":
-        return a < b
-    if op == "<=":
-        return a <= b
-    if op == ">":
-        return a > b
-    if op == ">=":
-        return a >= b
-    raise Fallback()
+    return True
+
+
+def _eq(a, b):
+    return a == b if _cmp_ok(a, b, True) else None
+
+
+def _ne(a, b):
+    return a != b if _cmp_ok(a, b, True) else None
+
+
+def _lt(a, b):
+    return a < b if _cmp_ok(a, b, False) else None
+
+
+def _le(a, b):
+    return a <= b if _cmp_ok(a, b, False) else None
+
+
+def _gt(a, b):
+    return a > b if _cmp_ok(a, b, False) else None
+
+
+def _ge(a, b):
+    return a >= b if _cmp_ok(a, b, False) else None
+
+
+_CMP = {"=": _eq, "==": _eq, "!=": _ne, "<>": _ne, "<": _lt, "<=": _le,
+        ">": _gt, ">=": _ge}
 
 
 def _and(a, b):
@@ -202,24 +295,38 @@ def _like_regex(pattern: str) -> "re.Pattern | None":
     return re.compile("^" + "".join(out) + r"\Z", re.DOTALL)
 
 
-def _round_half_up(x, d=0):
-    # compile_expr only admits round when the scale is an int LITERAL
-    # (Spark rejects a non-foldable scale at analysis time), so d is
-    # always a Python int here; x is the only runtime value.
-    if x is None or d is None:
-        return None
-    if isinstance(d, bool) or not isinstance(d, int):
-        raise Fallback()
-    x = _finite(x)
-    q = Decimal(1).scaleb(-int(d))
-    r = float(Decimal(repr(float(x))).quantize(q, rounding=ROUND_HALF_UP))
-    if isinstance(x, int):
-        # Spark's Round keeps the integral type for ANY scale: a
-        # positive scale is a no-op on an int (round(5, 2) -> 5, an
-        # int, not 5.0) — returning float here would diverge from the
-        # oracle path's type
-        return _i64(int(r))
-    return r
+def _round_to(d: int):
+    """``round(x, d)`` HALF_UP for an int-literal scale ``d`` (Spark's
+    Round requires a foldable scale, so compile_expr only admits an int
+    literal), with the Decimal quantizer built once, here."""
+    q = Decimal(1).scaleb(-d)
+
+    def rnd(x):
+        if type(x) is not float or not _isfinite(x):
+            if x is None:
+                return None
+            x = _finite(x)
+            if isinstance(x, int):
+                # Spark's Round keeps the integral type for ANY scale: a
+                # non-negative scale is a no-op on an int (round(5, 2)
+                # -> 5, not 5.0); a negative one rounds the exact
+                # integer — a float detour loses digits past 2^53
+                if d >= 0:
+                    return x
+                try:
+                    return _i64(int(Decimal(x).quantize(
+                        q, rounding=ROUND_HALF_UP)))
+                except InvalidOperation:
+                    raise Fallback()
+            x = float(x)
+        try:
+            return float(Decimal(repr(x)).quantize(
+                q, rounding=ROUND_HALF_UP))
+        except InvalidOperation:
+            # |x| >~ 1e26: the quantized coefficient exceeds the 28-digit
+            # context — the Spark path owns the answer
+            raise Fallback()
+    return rnd
 
 
 def _str_arg(v):
@@ -257,6 +364,12 @@ def _same_class(vs):
     if all(isinstance(v, bool) for v in vals):
         return
     if all(isinstance(v, _NUM) and not isinstance(v, bool) for v in vals):
+        if any(isinstance(v, float) for v in vals) and any(
+                isinstance(v, int) and not -_F53 <= v <= _F53
+                for v in vals):
+            # Spark types int-with-double branches DOUBLE: an int past
+            # 2^53 would come back rounded
+            raise Fallback()
         return
     if all(isinstance(v, str) for v in vals):
         return
@@ -330,6 +443,7 @@ def _fn_extreme(biggest: bool, *vs):
         # argument-order-dependent with NaN — Spark path owns it
         for v in vals:
             _finite(v)
+        _same_class(vals)  # an int past 2^53 beside a double: rounded
         return max(vals) if biggest else min(vals)
     if all(isinstance(v, str) for v in vals):
         return max(vals) if biggest else min(vals)
@@ -1375,9 +1489,9 @@ def _same_elem_class(ca, cb):
 
 
 def _arr_first_index(arr, val):
-    """1-based first match by Spark equality (_cmp); 0 when absent."""
+    """1-based first match by Spark equality (_eq); 0 when absent."""
     for i, x in enumerate(arr):
-        if x is not None and _cmp("=", x, val) is True:
+        if x is not None and _eq(x, val) is True:
             return i + 1
     return 0
 
@@ -1454,7 +1568,7 @@ def _compile_array_fn(lname: str, e: "N.Func"):
             return _arr_first_index(arr, vb)
         # array_remove: drop every element equal to vb; nulls keep
         return [x for x in arr
-                if x is None or _cmp("=", x, vb) is not True]
+                if x is None or _eq(x, vb) is not True]
 
     return f
 
@@ -1567,7 +1681,7 @@ _FNS: dict[str, object] = {
     "sign": lambda v: None if v is None
     else (0.0 if _finite(v) == 0 else (1.0 if _finite(v) > 0 else -1.0)),
     "nullif": lambda a, b: None
-    if (a is not None and b is not None and _cmp("=", a, b) is True)
+    if (a is not None and b is not None and _eq(a, b) is True)
     else a,
     "ifnull": lambda a, b: _fn_coalesce(a, b),
     "nvl": lambda a, b: _fn_coalesce(a, b),
@@ -1586,10 +1700,11 @@ _FNS: dict[str, object] = {
     # Spark sqrt(-x) is NaN (Java Math.sqrt), not NULL
     "sqrt": lambda v: None if v is None
     else (math.sqrt(_finite(v)) if _finite(v) >= 0 else float("nan")),
-    "floor": lambda v: None if v is None else int(math.floor(_finite(v))),
-    "ceil": lambda v: None if v is None else int(math.ceil(_finite(v))),
-    "ceiling": lambda v: None if v is None else int(math.ceil(_finite(v))),
-    "round": _round_half_up,
+    # Spark floor/ceil(double) is a BIGINT that saturates past its
+    # range, where Python's int is unbounded — the Spark path owns those
+    "floor": lambda v: None if v is None else _i64(math.floor(_finite(v))),
+    "ceil": lambda v: None if v is None else _i64(math.ceil(_finite(v))),
+    "ceiling": lambda v: None if v is None else _i64(math.ceil(_finite(v))),
     "concat": _fn_concat,
     "coalesce": _fn_coalesce,
     "startswith": lambda s, p: None if s is None or p is None
@@ -1601,9 +1716,9 @@ _FNS: dict[str, object] = {
     "sha256": lambda v: _fn_hash("sha256", v),
     "sha512": lambda v: _fn_hash("sha512", v),
     # mod/power render to the same Spark ops as % / ^ (registry.py)
-    "mod": lambda a, b: _arith("%", a, b),
-    "power": lambda a, b: _arith("^", a, b),
-    "pow": lambda a, b: _arith("^", a, b),
+    "mod": _mod,
+    "power": _pow,
+    "pow": _pow,
     # bit ops (int64 two's-complement exact)
     "bitand": lambda a, b: _fn_bit("&", a, b),
     "bitor": lambda a, b: _fn_bit("|", a, b),
@@ -1681,9 +1796,12 @@ def raw_col(name: str):
     apply.  The int64 range guard is kept: the Spark oracle encodes
     ints as BIGINT and raises beyond the range."""
     def col(row, name=name):
-        if name not in row:
+        v = row.get(name, _ABSENT)
+        t = type(v)
+        if t is float or t is str or v is None:
+            return v
+        if v is _ABSENT:
             raise Fallback()
-        v = row[name]
         if isinstance(v, int) and not isinstance(v, bool) \
                 and not _I64_MIN <= v <= _I64_MAX:
             raise Fallback()
@@ -1864,6 +1982,161 @@ def _compile_json_extract(e: N.Func):
     return jx
 
 
+def _compile_round(e: N.Func):
+    """``round(x[, d])``: Spark's Round requires a foldable int scale and
+    rejects a column scale at ANALYSIS time; pyeval must not answer
+    queries the semantics oracle would error on — admit only an int
+    literal (NULL/float/column scales → Spark path)."""
+    d = e.args[1] if len(e.args) == 2 else N.Lit(0)
+    if not (isinstance(d, N.Lit) and isinstance(d.value, int)
+            and not isinstance(d.value, bool)):
+        return None
+    x = compile_expr(e.args[0])
+    if x is None:
+        return None
+    rnd = _round_to(d.value)
+    return lambda row: rnd(x(row))
+
+
+def _compile_literal_case(op_f, conds, values):
+    """CASE whose THEN/ELSE values are all literals (``values``: one per
+    WHEN, then the ELSE — None when absent): the branch-class guard runs
+    once, here, and each event evaluates only the conditions."""
+    try:
+        _same_class(values)
+    except Fallback:
+        def mixed(row):
+            raise Fallback()  # Spark coerces mixed branches at analysis
+        return mixed
+    whens = list(zip(conds, values))
+    else_val = values[-1]
+    if op_f is not None:
+        def simple_case(row):
+            base = op_f(row)
+            for cf, bv in whens:
+                if base is not None and _eq(base, cf(row)) is True:
+                    return bv
+            return else_val
+        return simple_case
+
+    def searched_case(row):
+        for cf, bv in whens:
+            if _bool3(cf(row)) is True:
+                return bv
+        return else_val
+    return searched_case
+
+
+# operators whose operands may swap sides: a literal on the left binds
+# on the right of the mirrored operator (both guards are symmetric)
+_MIRROR = {"+": "+", "*": "*", "=": "=", "==": "==", "!=": "!=",
+           "<>": "<>", "<": ">", "<=": ">=", ">": "<", ">=": "<="}
+_RAW = {"+": _operator.add, "-": _operator.sub, "*": _operator.mul,
+        "/": _operator.truediv, "=": _operator.eq, "==": _operator.eq,
+        "!=": _operator.ne, "<>": _operator.ne, "<": _operator.lt,
+        "<=": _operator.le, ">": _operator.gt, ">=": _operator.ge}
+
+
+# the operators Spark evaluates in DECIMAL when one side is (`^` casts
+# both to DOUBLE)
+_DECIMAL_ARITH = frozenset(("+", "-", "*", "/", "%"))
+
+
+def _valid_num(v) -> bool:
+    """A literal every numeric guard admits: non-bool int in BIGINT
+    range or finite float."""
+    try:
+        _finite(v)
+    except Fallback:
+        return False
+    return True
+
+
+def _spark_decimal(e: N.Expr) -> bool:
+    """A literal Spark types DECIMAL: a fraction in plain notation (1.5;
+    1e19 is a DOUBLE), or -2^63 — the negation of a DECIMAL."""
+    if not isinstance(e, N.Lit) or e.is_string:
+        return False
+    v = e.value
+    if isinstance(v, float):
+        return math.isfinite(v) and "e" not in repr(v)
+    return isinstance(v, int) and not isinstance(v, bool) \
+        and not _I64_MIN < v <= _I64_MAX
+
+
+def _no_int_operand(fn):
+    """Arithmetic against a DECIMAL literal: Spark computes an integer
+    operand in exact decimal (a DECIMAL result; a 6-digit quotient
+    scale), which double arithmetic does not reproduce."""
+    def op(a, b):
+        if a is not None and b is not None \
+                and (isinstance(a, int) or isinstance(b, int)):
+            raise Fallback()
+        return fn(a, b)
+    return op
+
+
+def _compile_binop(op: str, left: N.Expr, right: N.Expr):
+    """An arithmetic or comparison operator, bound at compile time: the
+    operator's function is looked up once, and a literal operand becomes
+    a constant.  A literal validated here also earns a fast path: a
+    float (or, against a string literal, str) operand goes straight to
+    the raw Python operator — exactly what the guarded function would
+    compute for those operand types."""
+    if op in ("=", "==", "!=", "<>") and (
+            isinstance(left, N.Lit) and left.value is None
+            or isinstance(right, N.Lit) and right.value is None):
+        # `x = NULL` means IS NULL in the reference, and renders so
+        # (render.render_bin) — not SQL UNKNOWN
+        side = right if isinstance(left, N.Lit) and left.value is None \
+            else left
+        return compile_expr(N.IsNull(operand=side,
+                                     negated=op in ("!=", "<>")))
+    if isinstance(left, N.Lit) and not isinstance(right, N.Lit) \
+            and op in _MIRROR:
+        left, right, op = right, left, _MIRROR[op]
+    fn = _ARITH.get(op) or _CMP[op]
+    if op in _DECIMAL_ARITH and (_spark_decimal(left)
+                                 or _spark_decimal(right)):
+        fn = _no_int_operand(fn)
+    lf, rf = compile_expr(left), compile_expr(right)
+    if lf is None or rf is None:
+        return None
+    if isinstance(left, N.Lit):
+        lv = left.value
+        if isinstance(right, N.Lit):
+            rv = right.value
+            return lambda row: fn(lv, rv)
+        return lambda row: fn(lv, rf(row))
+    if not isinstance(right, N.Lit):
+        return lambda row: fn(lf(row), rf(row))
+    lit = right.value
+    raw = _RAW.get(op)
+    if op in _CMP and type(lit) is str:
+        def cmp_str(row):
+            a = lf(row)
+            return raw(a, lit) if type(a) is str else fn(a, lit)
+        return cmp_str
+    if raw is None or not _valid_num(lit) or op == "/" and lit == 0:
+        return lambda row: fn(lf(row), lit)
+    if op in _CMP:
+        if type(lit) is int and not -_F53 <= lit <= _F53:
+            # a float operand falls back against this int (_cmp_ok)
+            return lambda row: fn(lf(row), lit)
+
+        def cmp_num(row):
+            a = lf(row)
+            if type(a) is float and _isfinite(a):
+                return raw(a, lit)
+            return fn(a, lit)
+        return cmp_num
+
+    def arith(row):
+        a = lf(row)
+        return raw(a, lit) if type(a) is float else fn(a, lit)
+    return arith
+
+
 def compile_expr(e: N.Expr):
     """AST → ``fn(row) -> value``; None when the node kind (or any
     child) is outside the supported subset."""
@@ -1876,12 +2149,15 @@ def compile_expr(e: N.Expr):
         name = e.parts[0]
 
         def col(row, name=name):
-            if name not in row:
+            v = row.get(name, _ABSENT)
+            if v is _ABSENT:
                 # Spark raises unresolved-column for a missing event
                 # field; a silent NULL would flip behavior vs fallback
                 raise Fallback()
-            v = row[name]
-            if v is not None and not isinstance(v, (int, float, str, bool)):
+            t = type(v)
+            if t is float or t is str or v is None:
+                return v
+            if not isinstance(v, (int, float, str, bool)):
                 raise Fallback()  # nested/array value: Spark path
             if isinstance(v, int) and not isinstance(v, bool) \
                     and not _I64_MIN <= v <= _I64_MAX:
@@ -1892,14 +2168,12 @@ def compile_expr(e: N.Expr):
             return v
         return col
     if isinstance(e, N.Bin):
+        op = e.op.upper()
+        if op in _ARITH or op in _CMP:
+            return _compile_binop(op, e.left, e.right)
         lf, rf = compile_expr(e.left), compile_expr(e.right)
         if lf is None or rf is None:
             return None
-        op = e.op.upper()
-        if op in ("+", "-", "*", "/", "%", "^"):
-            return lambda row: _arith(op, lf(row), rf(row))
-        if op in ("=", "==", "!=", "<>", "<", "<=", ">", ">="):
-            return lambda row: _cmp(op, lf(row), rf(row))
         if op == "AND":
             return lambda row: _and(_bool3(lf(row)), _bool3(rf(row)))
         if op == "OR":
@@ -1954,11 +2228,13 @@ def compile_expr(e: N.Expr):
 
         def inlist(row):
             v = f(row)
+            vals = [i(row) for i in items]
+            # Spark resolves the operand and the list to one type: a
+            # class mix is an analysis error or an implicit cast
+            _same_class([v] + vals)
             if v is None:
                 return None
-            vals = [i(row) for i in items]
-            hit = any(v is not None and _cmp("=", v, w) is True
-                      for w in vals if w is not None)
+            hit = any(_eq(v, w) is True for w in vals if w is not None)
             if not hit and any(w is None for w in vals):
                 return None  # SQL: x IN (..., NULL) is UNKNOWN unless hit
             return (not hit) if neg else hit
@@ -1971,8 +2247,8 @@ def compile_expr(e: N.Expr):
         neg = e.negated
 
         def between(row):
-            v = _and(_bool3(_cmp(">=", f(row), lo(row))),
-                     _bool3(_cmp("<=", f(row), hi(row))))
+            v = _and(_bool3(_ge(f(row), lo(row))),
+                     _bool3(_le(f(row), hi(row))))
             if v is None:
                 return None
             return (not v) if neg else v
@@ -1990,6 +2266,11 @@ def compile_expr(e: N.Expr):
         else_f = compile_expr(e.else_) if e.else_ is not None else None
         if e.else_ is not None and else_f is None:
             return None
+        values = [v for _, v in e.whens] + [e.else_]
+        if all(v is None or isinstance(v, N.Lit) for v in values):
+            return _compile_literal_case(
+                op_f, [cf for cf, _ in whens],
+                [None if v is None else v.value for v in values])
 
         def case(row):
             # evaluate EVERY branch (closures are pure) to apply the
@@ -2000,7 +2281,7 @@ def compile_expr(e: N.Expr):
             if op_f is not None:
                 base = op_f(row)
                 for (cf, _), bv in zip(whens, branch_vals):
-                    if base is not None and _cmp("=", base, cf(row)) is True:
+                    if base is not None and _eq(base, cf(row)) is True:
                         return bv
             else:
                 for (cf, _), bv in zip(whens, branch_vals):
@@ -2082,24 +2363,23 @@ def compile_expr(e: N.Expr):
             if arr is not None:
                 return None if arr is _NO_COMPILE else arr
             # not the array branch: string length via _FNS below
+        arity = _FN_ARITY.get(lname)
+        if arity is not None and not (arity[0] <= len(e.args) <= arity[1]):
+            return None
+        if lname == "round":
+            return _compile_round(e)
         fn = _FNS.get(lname)
         if fn is None:
             return None
-        arity = _FN_ARITY.get(e.name.lower())
-        if arity is not None and not (arity[0] <= len(e.args) <= arity[1]):
-            return None
-        if lname == "round" and len(e.args) == 2:
-            # Spark's Round requires a foldable int scale and rejects a
-            # column scale at ANALYSIS time; pyeval must not answer
-            # queries the semantics oracle would error on — admit only
-            # an int literal (NULL/float/column scales → Spark path)
-            d = e.args[1]
-            if not (isinstance(d, N.Lit) and isinstance(d.value, int)
-                    and not isinstance(d.value, bool)):
-                return None
         args = [compile_expr(a) for a in e.args]
         if any(a is None for a in args):
             return None
+        if len(args) == 1:
+            a0 = args[0]
+            return lambda row: fn(a0(row))
+        if len(args) == 2:
+            a0, a1 = args
+            return lambda row: fn(a0(row), a1(row))
         return lambda row: fn(*[a(row) for a in args])
     return None
 

@@ -1011,141 +1011,221 @@ def copy_builtin_state(st: dict) -> dict:
     return out
 
 
-def analytic_step(p, s, argv, gate):
-    nm = p["name"]
-    if nm == "lag":
-        # WHEN-gated rows don't update state; every row reads the
-        # last gated values (stream/analytic.go WHEN semantics).
-        # 4th arg ignoreNull defaults TRUE: nil never enters the
-        # history (functions_analytical.go lagState)
-        n = int(argv[1]) if len(argv) > 1 and argv[1] is not None else 1
-        default = argv[2] if len(argv) > 2 else None
-        ignore_null = bool(argv[3]) if len(argv) > 3 \
-            and argv[3] is not None else True
-        buf = s.setdefault("buf", [])
-        out = buf[-n] if len(buf) >= n else default
-        if gate and not (ignore_null and argv[0] is None):
-            buf.append(argv[0])
-            # ring sized to the LARGEST offset this state has ever
-            # been asked for: a fixed cap below n would answer the
-            # default forever, and trimming to the CURRENT row's n
-            # would let a small-offset row starve a larger one when
-            # the offset is a per-row expression
-            cap = max(_LAG_CAP, n, s.get("cap", 0))
-            s["cap"] = cap
-            del buf[:-cap]
-        return out  # default covers missing history only (lagState)
-    if nm == "latest":
-        default = argv[1] if len(argv) > 1 else None
-        if gate and argv[0] is not None:
-            s["v"] = argv[0]
-        return s.get("v", default)
-    if nm == "had_changed":
-        # hadChangedState (functions_analytical.go:170-207):
-        # first row always true; ignoreNull+nil neither triggers
-        # nor overwrites the per-column baseline
-        ignore_null = bool(argv[0]) if argv else False
-        values = list(argv[1:]) if len(argv) > 1 else list(argv[:1])
-        prev = s.get("prev")
-        if prev is None:
-            s["prev"] = values
-            return True
-        changed = False
-        new_prev = list(prev) + [None] * max(0, len(values) - len(prev))
-        for i, v in enumerate(values):
-            if ignore_null and v is None:
-                continue
-            new_prev[i] = v
-            if i >= len(prev) or prev[i] != v:
-                changed = True
-        s["prev"] = new_prev
-        return changed
-    if nm == "changed_col":
-        # changedColState (functions/analytic_acc.go:125-154):
-        # new value on change (first row counts), None otherwise;
-        # ignoreNull skips nulls without touching state
-        ignore_null = bool(argv[0]) if argv else False
-        val = argv[1] if len(argv) > 1 else None
-        if ignore_null and val is None:
+# ---- analytic steps: one function per analytic name, shared by every
+# route (the streaming kernel, the per-event python path and its Spark
+# route).  ``step(p, s, argv, gate) -> value`` advances the per-key
+# state dict ``s`` in place; ``argv`` holds one value per ``p["args"]``
+# entry.  Only lag mutates a container it stored earlier (its ring
+# buffer) — every other step rebinds its state keys, which is what
+# analytic_copier_for relies on: keep the two in step.
+
+def _step_lag(p, s, argv, gate):
+    # WHEN-gated rows don't update state; every row reads the
+    # last gated values (stream/analytic.go WHEN semantics).
+    # 4th arg ignoreNull defaults TRUE: nil never enters the
+    # history (functions_analytical.go lagState)
+    n = int(argv[1]) if len(argv) > 1 and argv[1] is not None else 1
+    default = argv[2] if len(argv) > 2 else None
+    ignore_null = bool(argv[3]) if len(argv) > 3 \
+        and argv[3] is not None else True
+    buf = s.setdefault("buf", [])
+    out = buf[-n] if len(buf) >= n else default
+    if gate and not (ignore_null and argv[0] is None):
+        buf.append(argv[0])
+        # ring sized to the LARGEST offset this state has ever
+        # been asked for: a fixed cap below n would answer the
+        # default forever, and trimming to the CURRENT row's n
+        # would let a small-offset row starve a larger one when
+        # the offset is a per-row expression
+        cap = max(_LAG_CAP, n, s.get("cap", 0))
+        s["cap"] = cap
+        del buf[:-cap]
+    return out  # default covers missing history only (lagState)
+
+
+def _step_latest(p, s, argv, gate):
+    default = argv[1] if len(argv) > 1 else None
+    if gate and argv[0] is not None:
+        s["v"] = argv[0]
+    return s.get("v", default)
+
+
+def _step_had_changed(p, s, argv, gate):
+    # hadChangedState (functions_analytical.go:170-207):
+    # first row always true; ignoreNull+nil neither triggers
+    # nor overwrites the per-column baseline
+    ignore_null = bool(argv[0]) if argv else False
+    values = list(argv[1:]) if len(argv) > 1 else list(argv[:1])
+    prev = s.get("prev")
+    if prev is None:
+        s["prev"] = values
+        return True
+    changed = False
+    new_prev = list(prev) + [None] * max(0, len(values) - len(prev))
+    for i, v in enumerate(values):
+        if ignore_null and v is None:
+            continue
+        new_prev[i] = v
+        if i >= len(prev) or prev[i] != v:
+            changed = True
+    s["prev"] = new_prev
+    return changed
+
+
+def _step_changed_col(p, s, argv, gate):
+    # changedColState (functions/analytic_acc.go:125-154):
+    # new value on change (first row counts), None otherwise;
+    # ignoreNull skips nulls without touching state
+    ignore_null = bool(argv[0]) if argv else False
+    val = argv[1] if len(argv) > 1 else None
+    if ignore_null and val is None:
+        return None
+    had = s.get("has", False)
+    prev = s.get("prev")
+    s["prev"] = val
+    s["has"] = True
+    return val if (not had or prev != val) else None
+
+
+def _step_changed_value(p, s, argv, gate):
+    # ignoreNull+nil: no emit, baseline kept (analytic_acc.go:168-185)
+    if len(argv) > 1 and bool(argv[1]) and argv[0] is None:
+        return None
+    prev = s.get("prev", ...)
+    s["prev"] = argv[0]
+    return argv[0] if (prev is ... or prev != argv[0]) else None
+
+
+def _acc_input(p, s, argv, gate, any_value=False):
+    """The value an acc_x(expr[, startCond, resetCond]) step folds in
+    this row, or None.  Conditions are pre-evaluated into argv[1] /
+    argv[2]; a literal start arg is ignored, matching the batch path
+    (analytic_acc.go:8-122).  A WHEN-gated-out row touches no state at
+    all (not even reset); a reset row zeroes state WITHOUT accumulating
+    its own value and clears the start latch (accState.Apply)."""
+    if not gate:
+        return None
+    if len(argv) > 2 and argv[2]:
+        s.pop("acc", None)
+        s.pop("started", None)
+        return None
+    if len(p["args"]) > 1 and p["args"][1] is not None:
+        if not s.get("started") and argv[1]:
+            s["started"] = True
+        if not s.get("started", False):
             return None
-        had = s.get("has", False)
-        prev = s.get("prev")
-        s["prev"] = val
-        s["has"] = True
-        return val if (not had or prev != val) else None
-    if nm == "__changed_value__":
-        # ignoreNull+nil: no emit, baseline kept (analytic_acc.go:168-185)
-        if len(argv) > 1 and bool(argv[1]) and argv[0] is None:
-            return None
-        prev = s.get("prev", ...)
-        s["prev"] = argv[0]
-        return argv[0] if (prev is ... or prev != argv[0]) else None
-    if nm.startswith("acc_"):
-        # acc_x(expr[, startCond, resetCond]) — conditions are
-        # pre-evaluated into argv[1]/argv[2]; a literal start arg is
-        # ignored, matching the batch path (analytic_acc.go:8-122).
-        # A WHEN-gated-out row touches no state at all (not even
-        # reset); a reset row zeroes state WITHOUT accumulating its
-        # own value and clears the start latch (accState.Apply).
-        if gate and len(argv) > 2 and argv[2]:
-            s.pop("acc", None)
-            s.pop("started", None)
-        elif gate:
-            has_start = len(p["args"]) > 1 and p["args"][1] is not None
-            if has_start:
-                if not s.get("started") and argv[1]:
-                    s["started"] = True
-                started = s.get("started", False)
-            else:
-                started = True
-            v = argv[0]
-            # numeric-TYPE gate (analytic_state.go:80-92
-            # toFloat64Generic: int/float only — strings never convert,
-            # bools/datetimes skip): a non-numeric value is NOT
-            # accumulated and must not crash the step; acc_count alone
-            # counts any non-nil value (analytic_acc.go acc_count
-            # branch).  Spark DECIMAL columns are numeric (a type the
-            # reference lacks): accumulate as float like the batch path.
-            if isinstance(v, _Decimal):
-                v = float(v)
-            numeric = isinstance(v, (int, float)) \
-                and not isinstance(v, bool)
-            if started and v is not None \
-                    and (numeric or nm == "acc_count"):
-                acc = s.get("acc")
-                if nm == "acc_sum":
-                    s["acc"] = (acc or 0) + v
-                elif nm == "acc_count":
-                    s["acc"] = (acc or 0) + 1
-                elif nm == "acc_min":
-                    s["acc"] = v if acc is None else min(acc, v)
-                elif nm == "acc_max":
-                    s["acc"] = v if acc is None else max(acc, v)
-                elif nm == "acc_avg":
-                    tot, cnt = acc or (0.0, 0)
-                    s["acc"] = (tot + v, cnt + 1)
-        acc = s.get("acc")
-        if nm == "acc_avg":
-            if acc is None:
-                return None
-            tot, cnt = acc
-            return tot / cnt if cnt else None
+    v = argv[0]
+    # numeric-TYPE gate (analytic_state.go:80-92 toFloat64Generic:
+    # int/float only — strings never convert, bools/datetimes skip): a
+    # non-numeric value is NOT accumulated and must not crash the step;
+    # acc_count alone counts any non-nil value (analytic_acc.go
+    # acc_count branch).  Spark DECIMAL columns are numeric (a type the
+    # reference lacks): accumulate as float like the batch path.
+    if isinstance(v, _Decimal):
+        v = float(v)
+    if v is None or not (any_value or isinstance(v, (int, float))
+                         and not isinstance(v, bool)):
+        return None
+    return v
+
+
+def _step_acc_sum(p, s, argv, gate):
+    if gate and len(argv) == 1 and type(argv[0]) is float:
+        # no start/reset condition and a float: _acc_input returns it
+        acc = s["acc"] = (s.get("acc") or 0) + argv[0]
         return acc
+    v = _acc_input(p, s, argv, gate)
+    if v is not None:
+        s["acc"] = (s.get("acc") or 0) + v
+    return s.get("acc")
 
-    custom = p.get("custom")
-    if custom is not None:
-        # custom AnalyticState surface (functions/analytic_state.go):
-        # the state OBJECT itself lives in the pickled per-key state,
-        # so it survives micro-batch boundaries; WHEN-gated-out rows
-        # don't touch it and re-emit the last value
-        obj = s.get("obj")
-        if obj is None:
-            obj = s["obj"] = custom[0]()
-        if gate:
-            s["last"] = obj.apply(argv)
-        return s.get("last")
 
-    raise ValueError(f"unsupported streaming analytic: {nm}")
+def _step_acc_count(p, s, argv, gate):
+    if _acc_input(p, s, argv, gate, any_value=True) is not None:
+        s["acc"] = (s.get("acc") or 0) + 1
+    return s.get("acc")
+
+
+def _step_acc_min(p, s, argv, gate):
+    v = _acc_input(p, s, argv, gate)
+    if v is not None:
+        acc = s.get("acc")
+        s["acc"] = v if acc is None else min(acc, v)
+    return s.get("acc")
+
+
+def _step_acc_max(p, s, argv, gate):
+    v = _acc_input(p, s, argv, gate)
+    if v is not None:
+        acc = s.get("acc")
+        s["acc"] = v if acc is None else max(acc, v)
+    return s.get("acc")
+
+
+def _step_acc_avg(p, s, argv, gate):
+    v = _acc_input(p, s, argv, gate)
+    if v is not None:
+        tot, cnt = s.get("acc") or (0.0, 0)
+        s["acc"] = (tot + v, cnt + 1)
+    acc = s.get("acc")
+    if acc is None:
+        return None
+    tot, cnt = acc
+    return tot / cnt if cnt else None
+
+
+def _step_custom(p, s, argv, gate):
+    # custom AnalyticState surface (functions/analytic_state.go):
+    # the state OBJECT itself lives in the pickled per-key state,
+    # so it survives micro-batch boundaries; WHEN-gated-out rows
+    # don't touch it and re-emit the last value
+    obj = s.get("obj")
+    if obj is None:
+        obj = s["obj"] = p["custom"][0]()
+    if gate:
+        s["last"] = obj.apply(argv)
+    return s.get("last")
+
+
+ANALYTIC_STEPS = {
+    "lag": _step_lag, "latest": _step_latest,
+    "had_changed": _step_had_changed, "changed_col": _step_changed_col,
+    "__changed_value__": _step_changed_value,
+    "acc_sum": _step_acc_sum, "acc_count": _step_acc_count,
+    "acc_min": _step_acc_min, "acc_max": _step_acc_max,
+    "acc_avg": _step_acc_avg,
+}
+
+
+def analytic_step_for(p):
+    """The step function for analytic spec ``p`` (a built-in name wins
+    over a custom registration of the same name)."""
+    step = ANALYTIC_STEPS.get(p["name"])
+    if step is not None:
+        return step
+    if p.get("custom") is not None:
+        return _step_custom
+    raise ValueError(f"unsupported streaming analytic: {p['name']}")
+
+
+def analytic_copier_for(p):
+    """The copier that snapshots spec ``p``'s state before a step on a
+    copy (the per-event python path commits the copy only once the
+    whole event evaluates).  lag appends to its stored ring buffer, so
+    it needs a one-level copy; a custom state object may hold anything
+    (generic deep copy); every other built-in step only rebinds keys,
+    so a dict copy isolates it."""
+    name = p["name"]
+    if name == "lag":
+        return copy_builtin_state
+    if name in ANALYTIC_STEPS:
+        return dict.copy
+    return copy_state
+
+
+def analytic_step(p, s, argv, gate):
+    """One state step of analytic spec ``p`` (see ANALYTIC_STEPS)."""
+    return analytic_step_for(p)(p, s, argv, gate)
 
 
 def analytic_stream(df: DataFrame, plan, ts_col: str | None) -> DataFrame:
@@ -1257,9 +1337,10 @@ def analytic_stream(df: DataFrame, plan, ts_col: str | None) -> DataFrame:
             # only the columns the step functions read — converting the
             # whole frame costs one list per column PER KEY GROUP
             vals = {c: pdf[c].tolist() for c in need_cols}
+            steps = [analytic_step_for(p) for p in prep]
             for i in range(len(pdf)):
-                for p in prep:
-                    nm, ph = p["name"], p["ph"]
+                for p, step in zip(prep, steps):
+                    ph = p["ph"]
                     s = st.setdefault(ph, {})
                     gate = True
                     if p["when"] is not None:
@@ -1270,7 +1351,7 @@ def analytic_stream(df: DataFrame, plan, ts_col: str | None) -> DataFrame:
                         gate = bool(_clean(outs[p["when_ph"]][i]))
                     argv = [clean_by[c](vals[c][i]) if c else p["lits"][j]
                             for j, c in enumerate(p["args"])]
-                    outs[ph].append(analytic_step(p, s, argv, gate))
+                    outs[ph].append(step(p, s, argv, gate))
         _save_state(state, st, ttl_ms)
         if len(pdf):
             for ph, col in outs.items():

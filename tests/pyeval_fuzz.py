@@ -4,20 +4,25 @@ The CI suites pin per-family seeded subsets (tests/test_engine.py);
 this script is the WIDE sweep — thousands of py-vs-Spark comparisons
 over random JSON documents (unicode, duplicate keys, big numbers),
 timestamps across years 1200-9999 (invalid dates, fractions),
-doubles to ±1e30, CRLF strings, and null-bearing arrays.  Run it
-manually after whitelist changes; the bar is ZERO divergences —
-a fallback (the event re-routes to the Spark oracle) is fine, a
-differing answer is a wrong-answer bug.
+doubles to ±1e30, CRLF strings, null-bearing arrays, and the numeric
+operators (arithmetic, comparisons, CASE, round, floor/ceil) over
+NULL, booleans, BIGINT edges, doubles past BIGINT and past DECIMAL's
+28 digits, NaN/infinities and strings.  Run it manually after
+whitelist or pyeval changes; the bar is ZERO divergences — a fallback
+(the event re-routes to the Spark oracle) is fine; a differing answer,
+an answer where the Spark path raises, or an exception out of the
+python path is a divergence.
 
     python3 tests/pyeval_fuzz.py [seed]
 
-r10 baseline: ~1,200 comparisons per seed, 0 divergences
-(seeds 20260816 and 7).
+Baseline: ~1,500 comparisons per seed, 0 divergences (seeds 20260816
+and 7).
 """
 
 from __future__ import annotations
 
 import calendar
+import math
 import os
 import random
 import string
@@ -69,7 +74,36 @@ def build_queries(rng: random.Random):
             string.ascii_letters + string.digits + " .-+e",
             k=rng.randint(0, 12)))
 
+    extremes = [None, True, False, 0, 1, -1, 2 ** 63 - 1, -(2 ** 63 - 1),
+                2 ** 63, -(2 ** 63), 2 ** 53 + 1, 1.5, 2.0 ** 53,
+                2.0 ** 63, float("nan"), float("inf"), float("-inf"),
+                1e19, -1e19, 1e27, -1e27, 1e300, -1e300, "a", "b"]
+
+    def rnd_num():
+        r = rng.random()
+        if r < 0.4:
+            return rng.choice(extremes)
+        if r < 0.7:
+            return rng.randint(-1000, 1000)
+        return rng.uniform(-1, 1) * 10.0 ** rng.randint(-3, 30)
+
+    def num_pair():
+        return {"x": rnd_num(), "y": rnd_num()}
+
     return [
+        ("SELECT x + y AS a, x - y AS b, x * y AS c, x / y AS d, "
+         "x % y AS e, x ^ y AS f FROM stream", num_pair),
+        ("SELECT x = y AS a, x != y AS b, x < y AS c, x <= y AS d, "
+         "x > y AS e, x >= y AS f FROM stream", num_pair),
+        ("SELECT x + 1.5 AS a, 32 - x AS b, x * 1e+19 AS c, "
+         "x / 1.5 AS d, 7 % x AS e, x > 21 AS f, 0.5 <= x AS g, "
+         "x = NULL AS h FROM stream", num_pair),
+        ("SELECT CASE WHEN x > y THEN 'gt' WHEN x < y THEN 'lt' "
+         "ELSE 'eq' END AS a, CASE WHEN x > 0 THEN x ELSE y END AS b, "
+         "CASE x WHEN 1 THEN 'one' ELSE 'other' END AS c FROM stream",
+         num_pair),
+        ("SELECT round(x, 2) AS a, round(x, -1) AS b, round(x) AS c, "
+         "floor(x) AS d, ceil(y) AS e FROM stream", num_pair),
         ("SELECT json_valid(j) AS a, json_type(j) AS b, "
          "json_length(j) AS c, from_json(j) AS d FROM stream",
          lambda: {"j": rnd_json() if rng.random() < 0.9
@@ -108,6 +142,25 @@ def build_queries(rng: random.Random):
     ]
 
 
+def _same(py, sp) -> bool:
+    """python-path row vs Spark-path row, value by value and exactly (a
+    python float equals a Spark DECIMAL only at the same exact value) —
+    with NaN equal to NaN, as Spark has it, and a boolean never equal
+    to a number."""
+    if py is None or sp is None:
+        return py is sp
+    if py.keys() != sp.keys():
+        return False
+    for k, a in py.items():
+        b = sp[k]
+        if isinstance(a, float) and isinstance(b, float) \
+                and math.isnan(a) and math.isnan(b):
+            continue
+        if a != b or isinstance(a, bool) != isinstance(b, bool):
+            return False
+    return True
+
+
 def main() -> int:
     seed = int(sys.argv[1]) if len(sys.argv) > 1 else 20260816
     rng = random.Random(seed)
@@ -118,13 +171,24 @@ def main() -> int:
         e.execute(sql)
         for _ in range(150):
             row = gen()
-            py = e._emit_sync_python(dict(row))
+            try:
+                py = e._emit_sync_python(dict(row))
+            except Exception as ex:
+                n_diff += 1
+                print("PYTHON PATH RAISED:", sql[:70], row, repr(ex))
+                continue
             if py is _NOT_APPLICABLE:
                 n_fb += 1
                 continue
-            sp = e._emit_sync_fast(dict(row))
             n_py += 1
-            if py != sp:
+            try:
+                sp = e._emit_sync_fast(dict(row))
+            except Exception as ex:
+                n_diff += 1
+                print("SPARK PATH RAISED:", sql[:70], row, py,
+                      type(ex).__name__)
+                continue
+            if not _same(py, sp):
                 n_diff += 1
                 print("DIVERGED:", sql[:70], row, py, sp)
     print(f"fuzz(seed={seed}): {n_py} compared, {n_fb} fell back, "
