@@ -21,6 +21,7 @@ from __future__ import annotations
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as _T
 
 from ..dialect import nodes as N
 from ..dialect.parser import parse
@@ -73,8 +74,8 @@ import datetime as _dt_mod  # noqa: E402 — hot-path: imported once
 
 
 def _an_value_ok(v) -> bool:
-    """Event-value whitelist for the in-process analytic path.  The
-    analytic_step kernel is the SAME function the streaming kernel runs
+    """Event-value whitelist for the in-process analytic path.  Its
+    ANALYTIC_STEPS steps are the SAME functions the streaming kernel runs
     (which, post-cleaning, sees exactly these python types: scalars,
     datetime, list-of-scalars), so parity holds by construction —
     differentially fuzzed by tests/test_crosspath_parity.py's rich-type
@@ -93,6 +94,56 @@ def _an_value_ok(v) -> bool:
         return all(x is not None and isinstance(x, (int, float, str, bool))
                    for x in v)
     return False
+
+
+def _merged_type(types):
+    """One type, StringType for 'indeterminate' (no non-null evidence),
+    or None for a genuine disagreement."""
+    if any(t is None for t in types):
+        return None
+    uniq = {t.simpleString(): t for t in types}
+    if len(uniq) == 1:
+        return next(iter(uniq.values()))
+    return _T.StringType() if not uniq else None
+
+
+def _value_type(v):
+    """The Spark type inference gives a python value (containers of
+    indeterminate element type widen to string); None when it has none."""
+    if isinstance(v, bool):
+        return _T.BooleanType()
+    if isinstance(v, int):
+        return _T.LongType()
+    if isinstance(v, float):
+        return _T.DoubleType()
+    if isinstance(v, str):
+        return _T.StringType()
+    if isinstance(v, _dt_mod.datetime):
+        return _T.TimestampType()
+    if isinstance(v, _dt_mod.date):
+        return _T.DateType()
+    if isinstance(v, (bytes, bytearray)):
+        return _T.BinaryType()
+    if isinstance(v, dict):
+        vt = _merged_type([_value_type(x) for x in v.values()
+                           if x is not None])
+        return None if vt is None else _T.MapType(_T.StringType(), vt)
+    if isinstance(v, (list, tuple)):
+        et = _merged_type([_value_type(x) for x in v if x is not None])
+        return None if et is None else _T.ArrayType(et)
+    return None
+
+
+# the Spark types that return each scalar python type as itself
+_HOLDS = {bool: _T.BooleanType, int: _T.IntegralType,
+          float: (_T.DoubleType, _T.FloatType), str: _T.StringType}
+
+
+def _fits(dt, v) -> bool:
+    """Whether a column of Spark type ``dt`` returns ``v`` as itself (an
+    int column an int, not a double one)."""
+    cls = _HOLDS.get(type(v))
+    return cls is None or isinstance(dt, cls)
 
 
 # exact types _an_value_ok admits without a closer look
@@ -1232,45 +1283,7 @@ class StreamSQL:
         None when rows disagree on keys or hold kinds this table can't
         express (schema verification then re-raises the original
         inference error for genuinely mixed containers)."""
-        import datetime as _dt
-
-        from pyspark.sql.types import (ArrayType, BinaryType, BooleanType,
-                                       DateType, DoubleType, LongType,
-                                       MapType, StringType, StructField,
-                                       StructType, TimestampType)
-
-        def merged(types):
-            """One type, StringType for 'indeterminate' (no non-null
-            evidence), or None for a genuine disagreement."""
-            if any(t is None for t in types):
-                return None
-            uniq = {t.simpleString(): t for t in types}
-            if len(uniq) == 1:
-                return next(iter(uniq.values()))
-            return StringType() if not uniq else None
-
-        def typ(v):
-            if isinstance(v, bool):
-                return BooleanType()
-            if isinstance(v, int):
-                return LongType()
-            if isinstance(v, float):
-                return DoubleType()
-            if isinstance(v, str):
-                return StringType()
-            if isinstance(v, _dt.datetime):
-                return TimestampType()
-            if isinstance(v, _dt.date):
-                return DateType()
-            if isinstance(v, (bytes, bytearray)):
-                return BinaryType()
-            if isinstance(v, dict):
-                vt = merged([typ(x) for x in v.values() if x is not None])
-                return None if vt is None else MapType(StringType(), vt)
-            if isinstance(v, (list, tuple)):
-                et = merged([typ(x) for x in v if x is not None])
-                return None if et is None else ArrayType(et)
-            return None
+        from pyspark.sql.types import StructField, StructType
 
         if not rows:
             return None
@@ -1279,7 +1292,8 @@ class StreamSQL:
             return None
         fields = []
         for k in keys:
-            t = merged([typ(r[k]) for r in rows if r[k] is not None])
+            t = _merged_type([_value_type(r[k]) for r in rows
+                              if r[k] is not None])
             if t is None:
                 return None  # rows disagree on a field's kind
             fields.append(StructField(k, t))
@@ -1768,7 +1782,7 @@ class StreamSQL:
                 if when_f is None:
                     return None
             args = []   # ('lit', v) | ('fn', closure)
-            arg_marks = []  # analytic_step's has_start probe shape
+            arg_marks = []  # the steps' has_start probe shape
             for a in s.func.args:
                 if isinstance(a, N.Star) or \
                         (isinstance(a, N.Lit) and a.value == "*"):
@@ -1778,7 +1792,7 @@ class StreamSQL:
                     arg_marks.append(None)
                 elif isinstance(a, N.Col) and len(a.parts) == 1 \
                         and isinstance(a.parts[0], str):
-                    # bare-column arg feeds analytic_step directly —
+                    # bare-column arg feeds the step directly —
                     # the SAME kernel the streaming route runs on the
                     # same post-cleaning types, so containers pass
                     args.append(("fn", pyeval.raw_col(a.parts[0])))
@@ -1877,10 +1891,12 @@ class StreamSQL:
     def _emit_sync_analytic(self, row: dict) -> dict | None:
         """Per-event analytic evaluation in O(1) state (the reference's
         streamTransform direct path, stream/analytic.go:125-234): the
-        SAME state-machine step function as the streaming kernel runs
-        locally, keyed by the OVER(PARTITION BY ...) values; Spark
-        evaluates only the single-row expressions.  (Replaces a full
-        history replay per event — O(n²) over the stream.)"""
+        in-process pyeval route, else the streaming kernel's core
+        (``analytic_inputs`` + ``step_analytic_rows``) run locally —
+        Spark evaluates the single row's keys, gates and arguments, the
+        SAME steps advance the state kept per (placeholder,
+        OVER(PARTITION BY ...) values).  (Replaces a full history replay
+        per event — O(n²) over the stream.)"""
         py = self._emit_sync_analytic_python(row)
         if py is not _NOT_APPLICABLE:
             if py is None:
@@ -1889,9 +1905,11 @@ class StreamSQL:
         from dataclasses import replace
 
         from pyspark.sql import functions as F
+        from pyspark.sql.types import StructField, StructType
 
-        from ..streaming.stateful import (_dedupe_columns, analytic_step,
-                                          flatten_join_refs)
+        from ..streaming.stateful import (_dedupe_columns, analytic_inputs,
+                                          flatten_join_refs,
+                                          step_analytic_rows)
 
         src = self._local_row_df(row)
         if src is None:
@@ -1925,98 +1943,20 @@ class StreamSQL:
         if where_first:
             df = df.filter(F.expr(plan_flat.where_sql))
 
-        # prep caches star expansion + placeholder dtypes against THIS
-        # row's column set; undeclared-schema streams may widen/shrink
-        # the key set between events, so the cache is keyed on
+        # the kernel inputs (injected columns, specs) are built against
+        # THIS row's column set; undeclared-schema streams may widen or
+        # shrink the key set between events, so they are keyed on
         # df.columns and rebuilt on change (analytic STATE persists
         # across rebuilds — only the compiled expressions refresh)
         prep_key = tuple(df.columns)
         if getattr(self, "_an_prep_key", None) != prep_key:
-            from ..dialect import nodes as N
-            from ..dialect.render import render
-            from ..functions.registry import custom_analytic
-
-            prep = []
-            exprs: dict[str, str] = {}  # alias -> sql
-
-            def want(sql: str) -> str:
-                alias = f"__ev_{len(exprs)}__"
-                exprs[alias] = sql
-                return alias
-
-            earlier_phs: set[str] = set()
-            for spec in plan_flat.analytics:
-                f = spec.func
-                # a gate that IS an earlier spec's placeholder (lifted
-                # WHEN had_changed(...)) reads the value stepped this
-                # event, not a Spark expression over the input row
-                when_ph = (spec.when_sql
-                           if spec.when_sql in earlier_phs else None)
-                info = {"name": f.name.lower(), "ph": spec.placeholder,
-                        "args": [], "lits": [],
-                        "custom": custom_analytic(f.name),
-                        "when": (want(spec.when_sql)
-                                 if spec.when_sql and when_ph is None
-                                 else None),
-                        "when_ph": when_ph,
-                        "parts": [want(p) for p in spec.partition_by]}
-                earlier_phs.add(spec.placeholder)
-                for a in f.args:
-                    if isinstance(a, N.Star) or \
-                            (isinstance(a, N.Lit) and a.value == "*"):
-                        # star sees data columns only — exclude the
-                        # resolved event-time column, same as the batch
-                        # and streaming star expansions
-                        from ..engine.batch import event_time_name
-                        ts_name = event_time_name(df.columns, plan_flat)
-                        for c in df.columns:
-                            if not c.startswith("__") and c != ts_name:
-                                info["args"].append(want(c))
-                                info["lits"].append(None)
-                    elif isinstance(a, N.Lit):
-                        info["args"].append(None)
-                        info["lits"].append(a.value)
-                    else:
-                        from ..streaming.stateful import apply_qref_map
-                        info["args"].append(
-                            want(apply_qref_map(render(a), plan_flat)))
-                        info["lits"].append(None)
-                # output type for the placeholder literal
-                nm = info["name"]
-                if nm == "had_changed":
-                    dt = "boolean"
-                elif nm == "acc_count":
-                    dt = "bigint"
-                elif nm in ("acc_sum", "acc_avg"):
-                    dt = "double"
-                elif info["custom"] is not None:
-                    dt = info["custom"][1]
-                else:
-                    first = next((c for c in info["args"] if c), None)
-                    dt = (df.select(F.expr(exprs[first]).alias("x"))
-                          .schema[0].dataType.simpleString()
-                          if first else "double")
-                    if dt in ("tinyint", "smallint", "int", "bigint"):
-                        # schemaless streams mix int and float freely
-                        # (the reference's rows are float64-typed); a
-                        # placeholder pinned integral from the first
-                        # event would fail to encode later float state
-                        dt = "double"
-                info["dtype"] = dt
-                prep.append(info)
-            self._an_prep = prep
-            self._an_exprs = exprs
-            if not hasattr(self, "_an_states"):
-                self._an_states: dict = {}
-            # a NULL first argument infers a void placeholder; don't pin
-            # that — re-infer on the next event until a real type lands
-            if not any(str(p["dtype"]).lower() in ("void", "null")
-                       for p in prep):
-                self._an_prep_key = prep_key
-
-        sel = [F.expr(sql).alias(alias)
-               for alias, sql in self._an_exprs.items()]
-        collected = df.select("*", *sel).collect()
+            _, self._an_prep, self._an_inject, clean = analytic_inputs(
+                df, plan_flat.analytics, plan_flat)
+            self._an_read = list(clean)  # the columns the steps read
+            self._an_prep_key = prep_key
+        prep = self._an_prep
+        collected = (df.withColumns(self._an_inject) if self._an_inject
+                     else df).collect()
         if not collected:
             # the join dropped the event (no dim match): it never
             # reaches the analytics — state untouched, no output
@@ -2024,33 +1964,38 @@ class StreamSQL:
             # stream/processor_data.go:84-110)
             return None
 
-        # one state step per surviving (possibly join-fanned-out) row
-        ev_aliases = set(self._an_exprs)
-        rows2 = []
-        for r in collected:
-            d = row_to_dict(r)
-            for p in self._an_prep:
-                key = tuple(d[a] for a in p["parts"])
+        # one state step per surviving (possibly join-fanned-out) row,
+        # over the collected python values
+        if not hasattr(self, "_an_states"):
+            self._an_states: dict = {}
+        rows2 = [row_to_dict(r) for r in collected]
+        states = []
+        for d in rows2:
+            st = {}
+            for p in prep:
+                key = tuple(d[c] for c in p["keys"])
                 self._touch_analytic_partition(p["ph"], key)
-                st = self._an_states.setdefault((p["ph"], key), {})
-                if p["when"] is not None:
-                    gate = bool(d[p["when"]])
-                elif p.get("when_ph") is not None:
-                    gate = bool(d[p["when_ph"]])  # earlier spec, this event
-                else:
-                    gate = True
-                argv = [d[a] if a else p["lits"][j]
-                        for j, a in enumerate(p["args"])]
-                d[p["ph"]] = analytic_step(p, st, argv, gate)
-            rows2.append({k: v for k, v in d.items() if k not in ev_aliases})
-
-        from pyspark.sql.types import StructField, StructType, _parse_datatype_string
+                st[p["ph"]] = self._an_states.setdefault((p["ph"], key), {})
+            states.append(st)
+        outs = step_analytic_rows(
+            prep, {c: [d[c] for d in rows2] for c in self._an_read}, states)
+        for i, d in enumerate(rows2):
+            for c in self._an_inject:
+                del d[c]
+            for ph, vals in outs.items():
+                d[ph] = vals[i]
 
         ph_fields = []
-        for p in self._an_prep:
-            dt = p["dtype"]
-            if isinstance(dt, str):
-                dt = _parse_datatype_string(dt)
+        for p in prep:
+            dt = p["type"]
+            if self.schema is None and p["custom"] is None:
+                # a schemaless event types its columns itself: a value
+                # stepped from earlier events may not fit this one's
+                # (an int lag over a double-typed event, or a void one)
+                bad = next((v for v in outs[p["ph"]] if not _fits(dt, v)),
+                           None)
+                if bad is not None:
+                    dt = _value_type(bad)
             ph_fields.append(StructField(p["ph"], dt))
         schema2 = StructType(list(df.schema.fields) + ph_fields)
         # VALUES-literal rebuild keeps the whole sync hop foldable

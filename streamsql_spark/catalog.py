@@ -24,7 +24,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from .api.facade import StreamSQL
-from .session import load_tables
+from .session import load_tables, table_stamp
 
 
 @dataclass
@@ -1478,17 +1478,18 @@ def _drop_staging(cache: dict[str, str], sf_dir: str) -> None:
 
 
 # distinct state-key counts of the replay inputs, memoized per
-# (sf_dir, key exprs) — a TABLE STATISTIC in the filesourcePartition-
-# cache sense (guide §6), never a query result: every replay still
-# computes from the parquet input; this only sizes its state
-# partitioning.  First bench rep of an entry pays the one count job.
+# (sf_dir, key exprs, events file stamp) — a TABLE STATISTIC in the
+# filesourcePartition-cache sense (guide §6), never a query result: every
+# replay still computes from the parquet input; this only sizes its state
+# partitioning.  First bench rep of an entry pays the one count job; an
+# events table regenerated in place is counted again.
 _REPLAY_KEYS: dict[tuple, int] = {}
 
 
 def _replay_key_count(spark, sf_dir: str, exprs: tuple[str, ...]) -> int:
     import os as _os
 
-    key = (_os.path.abspath(sf_dir), exprs)
+    key = (_os.path.abspath(sf_dir), exprs, table_stamp(sf_dir, ("events",)))
     n = _REPLAY_KEYS.get(key)
     if n is None:
         ev = load_tables(spark, sf_dir)["events"]

@@ -120,19 +120,38 @@ def _concat_str(x):
 
 def _round_half_up(x, n=0):
     """Spark/reference rounding is HALF_UP (Go math.Round half-away,
-    functions_math.go:556; Spark Round), NOT Python's banker's round —
-    keep this in lockstep with pyeval._round_to."""
+    functions_math.go:556; Spark Round), NOT Python's banker's round.
+    Like Spark's Round, an int keeps its integral type at any scale and
+    rounds exactly (a float detour loses digits past 2^53), overflowing
+    BIGINT as Spark's ANSI mode does; a double rounds its shortest repr.
+    pyeval._round_to answers the same values, but hands the ones it
+    cannot reach (past ~1e26) to the Spark path — this evaluator has
+    none, so it must answer every double."""
+    n = int(n)
+    if isinstance(x, int) and not isinstance(x, bool):
+        if n >= 0:
+            return x
+        q = 10 ** -n
+        r = (abs(x) + q // 2) // q * q  # half away from zero
+        r = r if x >= 0 else -r
+        if not -2 ** 63 <= r < 2 ** 63:
+            raise CepEvalError(f"ARITHMETIC_OVERFLOW: round({x}, {n}) "
+                               "is out of the BIGINT range")
+        return r
     xf = float(x)
     if math.isinf(xf) or math.isnan(xf):
         # Spark round(Infinity) is Infinity, round(NaN) is NaN —
         # Decimal.quantize would raise InvalidOperation and kill the
         # whole Spark task
         return xf
-    q = Decimal(1).scaleb(-int(n))
-    r = float(Decimal(repr(xf)).quantize(q, rounding=ROUND_HALF_UP))
-    if isinstance(x, int) and not isinstance(x, bool):
-        return int(r)
-    return r
+    d = Decimal(repr(xf))
+    if d.as_tuple().exponent >= -n:
+        # no digit below the scale: nothing to round (and quantizing
+        # 1e27 to 2 places would overflow the 28-digit context)
+        return xf
+    # the quantized coefficient has no more digits than the repr's 17:
+    # the default context holds it
+    return float(d.quantize(Decimal(1).scaleb(-n), rounding=ROUND_HALF_UP))
 
 
 _SCALARS = {

@@ -18,8 +18,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (ArrayType, BooleanType, DataType, DoubleType,
-                               LongType, MapType, StringType, StructField,
-                               StructType, TimestampNTZType, TimestampType)
+                               IntegralType, LongType, MapType, StringType,
+                               StructField, StructType, TimestampNTZType,
+                               TimestampType)
 
 from ..dialect import nodes as N
 from ..dialect.render import render
@@ -142,6 +143,9 @@ def _measure_type(e: N.Expr, schema: dict[str, DataType]) -> DataType:
             return LongType()
         if name == "classifier":
             return StringType()
+        if name == "round" and e.args and isinstance(
+                _measure_type(e.args[0], schema), IntegralType):
+            return LongType()  # Spark's Round keeps an integral type
         if name in ("avg", "sum", "round", "sqrt", "power", "pow"):
             return DoubleType()
         if name in ("min", "max", "first", "last", "prev", "next", "coalesce") and e.args:

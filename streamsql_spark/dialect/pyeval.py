@@ -1789,8 +1789,9 @@ _FN_ARITY: dict[str, tuple[int, int] | None] = {
 
 def raw_col(name: str):
     """Bare-column PASSTHROUGH for the analytic per-event path: the
-    value feeds ``analytic_step`` (the same kernel the streaming route
-    runs, which sees exactly these post-cleaning python types) or lands
+    value feeds an ``ANALYTIC_STEPS`` step (streaming/stateful.py — the
+    same steps the streaming kernel runs, which see exactly these
+    post-cleaning python types) or lands
     in the output row verbatim — no pyeval function ever evaluates it,
     so the container refusal in ``compile_expr``'s col() does not
     apply.  The int64 range guard is kept: the Spark oracle encodes

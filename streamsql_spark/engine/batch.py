@@ -441,7 +441,7 @@ def _analytic_column(spec: AnalyticSpec, order_cols: list[Column],
             return F.coalesce(res, default_col) if has_default else res
         # lagState stores iff gate is true AND (ignoreNull=false OR the
         # value is non-null) — mirrored by the streaming kernel
-        # (streaming/stateful.py analytic_step).  The stored value is
+        # (streaming/stateful.py _step_lag).  The stored value is
         # wrapped in a struct so a NULL stored under a true gate
         # (ignoreNull=false) stays distinguishable from "no history":
         # last/max/collect_list skip only the null STRUCTS of
@@ -602,7 +602,7 @@ def _analytic_column(spec: AnalyticSpec, order_cols: list[Column],
     raise ExecError(f"unsupported analytic function: {name}")
 
 
-def _apply_custom_analytics(df: DataFrame, group: list,
+def _apply_custom_analytics(df: DataFrame, specs: list, plan: QueryPlan,
                             order_names: list[str],
                             keep: set | None = None) -> DataFrame:
     """Custom stateful analytics (register_analytic_function) in batch:
@@ -610,61 +610,26 @@ def _apply_custom_analytics(df: DataFrame, group: list,
     called per row in event-time order — the Spark realization of the
     reference's per-partition ``AnalyticState`` machine
     (functions/analytic_state.go:11-37).  All specs sharing a PARTITION
-    BY evaluate in ONE ``applyInPandas`` pass (one shuffle, one Python
-    walk); argument expressions and WHEN gates are pre-evaluated
-    JVM-side, so only the state-machine steps run in Python
-    (Arrow-batched)."""
-    import math
-
+    BY evaluate in ONE ``mapInPandas`` pass (one shuffle, one Python
+    walk) through the streaming kernel's core
+    (``streaming/stateful.py`` ``analytic_inputs`` +
+    ``step_analytic_rows``): argument expressions and WHEN gates are
+    pre-evaluated JVM-side, so only the state-machine steps run in
+    Python (Arrow-batched)."""
     from pyspark.sql.types import StructField, StructType
 
-    from ..dialect.render import render as _render
+    from ..streaming.stateful import (_clean, analytic_inputs,
+                                      read_analytic_columns,
+                                      step_analytic_rows)
 
-    partition_by = group[0][0].partition_by
-    key_cols: list[str] = []
-    # every injected column (partition keys, WHEN gates, pre-evaluated
-    # args) references only source columns, so they all batch into ONE
-    # withColumns — one eager re-analysis instead of one per spec/arg
-    inject: dict[str, Column] = {}
-    for i, psql in enumerate(partition_by):
-        nm = psql if psql in df.columns else f"__cak_{i}__"
-        if nm not in df.columns:
-            inject[nm] = F.expr(psql)
-        key_cols.append(nm)
-
-    tasks = []  # (placeholder, factory, when_col|None, arg_cols, lits)
-    fields = []
-    for spec, (factory, dtype) in group:
-        tag = spec.placeholder.strip("_")
-        when_col = None
-        if spec.when_sql:
-            when_col = f"__caw_{tag}__"
-            inject[when_col] = F.expr(spec.when_sql)
-        arg_cols: list[str | None] = []
-        lits: list[object] = []
-        for j, a in enumerate(spec.func.args):
-            if isinstance(a, N.Lit):
-                arg_cols.append(None)
-                lits.append(a.value)
-            else:
-                c = f"__caa_{tag}_{j}__"
-                inject[c] = F.expr(_render(a))
-                arg_cols.append(c)
-                lits.append(None)
-        tasks.append((spec.placeholder, factory, when_col, arg_cols, lits))
-        fields.append(StructField(spec.placeholder, dtype))
-    if inject:
-        df = df.withColumns(inject)
-
-    hidden = [c for c in df.columns if c.startswith("__ca")]
-    out_schema = StructType(list(df.schema.fields) + fields)
+    src_cols = set(df.columns)
+    df, prep, _, clean = analytic_inputs(df, specs, plan)
+    key_cols = prep[0]["keys"]
+    hidden = [c for c in df.columns if c not in src_cols]
+    out_schema = StructType(list(df.schema.fields) + [
+        StructField(p["ph"], p["type"]) for p in prep])
     order = [n for n in order_names if n]
     out_names = [f.name for f in out_schema.fields]
-
-    def _clean(v):
-        if v is None or (isinstance(v, float) and math.isnan(v)):
-            return None
-        return v
 
     # Execution shape: repartition on the key + sortWithinPartitions
     # (key, event-time) + ONE mapInPandas walk.  Within a sorted
@@ -680,36 +645,23 @@ def _apply_custom_analytics(df: DataFrame, group: list,
     # pandas as float NaN, and NaN != NaN would otherwise split every
     # NULL-keyed row into its own "group".
     def walk(batches):
-        prev_key = None
-        slot = None
-        need = {c for _, _, w, acs, _ in tasks
-                for c in ([w] if w else []) + [a for a in acs if a]}
+        prev_key = st = None
         for pdf in batches:
             n = len(pdf)
             if n == 0:
                 continue
-            keys = [tuple(_clean(v) for v in row) for row in
-                    zip(*(pdf[c].tolist() for c in key_cols))] \
-                if key_cols else [()] * n
-            vals = {c: pdf[c].tolist() for c in need}
-            outs = [[None] * n for _ in tasks]
-            for i in range(n):
-                if slot is None or keys[i] != prev_key:
-                    # [state, last_emitted] per registered spec
-                    slot = [[factory(), None]
-                            for _, factory, _, _, _ in tasks]
-                    prev_key = keys[i]
-                for t, (ph, factory, when_col, arg_cols, lits) \
-                        in enumerate(tasks):
-                    gate = bool(_clean(vals[when_col][i])) \
-                        if when_col else True
-                    if gate:
-                        argv = [_clean(vals[c][i]) if c else lits[j]
-                                for j, c in enumerate(arg_cols)]
-                        slot[t][1] = slot[t][0].apply(argv)
-                    outs[t][i] = slot[t][1]
-            for t, (ph, *_rest) in enumerate(tasks):
-                pdf[ph] = outs[t]
+            keys = zip(*(pdf[c].tolist() for c in key_cols)) if key_cols \
+                else [()] * n
+            states = []
+            for k in keys:
+                k = tuple(map(_clean, k))
+                if st is None or k != prev_key:
+                    st, prev_key = {}, k  # {ph: state} of the new key
+                states.append(st)
+            outs = step_analytic_rows(
+                prep, read_analytic_columns(pdf, clean), states)
+            for ph, col in outs.items():
+                pdf[ph] = col
             yield pdf[out_names]
 
     if keep is not None:
@@ -724,10 +676,10 @@ def _apply_custom_analytics(df: DataFrame, group: list,
         if len(need) < len(df.columns):
             df = df.select(*need)
             hidden = [c for c in hidden if c in need]
+            phs = {p["ph"] for p in prep}
             out_schema = StructType(
                 [f for f in out_schema.fields
-                 if f.name in set(need) or any(
-                     f.name == ph for ph, *_ in tasks)])
+                 if f.name in set(need) or f.name in phs])
             out_names = [f.name for f in out_schema.fields]
 
     sort_cols = key_cols + order
@@ -884,12 +836,9 @@ class BatchExecutor:
         # loop the partition once per call)
         customs: dict[tuple, list] = {}
         for spec in plan.analytics:
-            if spec.window_output:
-                continue
-            custom = _registry.custom_analytic(spec.func.name)
-            if custom is not None:
-                customs.setdefault(tuple(spec.partition_by), []).append(
-                    (spec, custom))
+            if not spec.window_output \
+                    and _registry.custom_analytic(spec.func.name) is not None:
+                customs.setdefault(tuple(spec.partition_by), []).append(spec)
         keep: set | None = None
         if customs and plan.mode == "direct" \
                 and not any(o.star for o in plan.outputs):
@@ -911,7 +860,7 @@ class BatchExecutor:
                                  + r"(?![A-Za-z0-9_])", blob,
                                  re.IGNORECASE)}
         for group in customs.values():
-            df = _apply_custom_analytics(df, group, order_names, keep)
+            df = _apply_custom_analytics(df, group, plan, order_names, keep)
 
         # the built-in specs land in a few BATCHED transformations
         # (preps, placeholders, drop) instead of two per spec: every

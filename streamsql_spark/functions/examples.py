@@ -48,3 +48,12 @@ class RunningRangeState:
     def reset(self):
         self.lo = None
         self.hi = None
+
+
+class ArgTypesState:
+    """Comma-separated Python type names of each call's arguments — shows
+    which value types an engine path hands a custom analytic (a BIGINT
+    value arrives as ``int``, a NULL as ``NoneType``)."""
+
+    def apply(self, args):
+        return ",".join(type(a).__name__ for a in args)

@@ -99,8 +99,25 @@ def get_spark(app_name: str = "streamsql-spark",
 # driver-side work (file listing, footer schema reads) per call, and the
 # catalog calls load_tables once per query.  DataFrames are immutable
 # lazy plans, so sharing the handles across queries is safe; the data
-# itself is never cached — every query still scans parquet.
+# itself is never cached — every query still scans parquet.  The key
+# carries each table's table_stamp, so a table regenerated in place is
+# listed again instead of read through a stale file index.
 _TABLE_MEMO: dict[tuple, dict] = {}
+
+
+def table_stamp(sf_dir: str, names) -> tuple:
+    """Freshness token of the ``<name>.parquet`` files or directories
+    under ``sf_dir``: their modification times in ns (None when absent).
+    Rewriting a file, or adding/removing a directory's part files,
+    changes it."""
+    out = []
+    for name in names:
+        try:
+            out.append(os.stat(os.path.join(sf_dir, f"{name}.parquet"))
+                       .st_mtime_ns)
+        except FileNotFoundError:
+            out.append(None)
+    return tuple(out)
 
 
 def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = (
@@ -121,7 +138,8 @@ def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = (
     # to the dead JVM plans and silently skip re-registering temp views
     sc = spark.sparkContext
     session_key = (sc.applicationId, sc.startTime)
-    key = (session_key, os.path.abspath(sf_dir), tuple(names))
+    key = (session_key, os.path.abspath(sf_dir), tuple(names),
+           table_stamp(sf_dir, names))
     hit = _TABLE_MEMO.get(key)
     if hit is not None:
         return hit

@@ -27,8 +27,8 @@ import pickle
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (ArrayType, BinaryType, BooleanType, DataType,
-                               DoubleType, LongType, StringType, StructField,
-                               StructType, TimestampType)
+                               DoubleType, IntegralType, LongType, StringType,
+                               StructField, StructType, TimestampType)
 
 from ..dialect import nodes as N
 from ..dialect.render import render
@@ -94,6 +94,11 @@ def _clean(v):
     hands an array<...> column to the kernel as np.ndarray cells, which
     (a) blow up the generic `.item()` scalar unwrap for size>1 and
     (b) would silently UNWRAP a size-1 array to its scalar)."""
+    t = type(v)
+    if t is str or t is int or t is bool:
+        return v  # what ``Series.tolist()`` hands back for most cells
+    if t is float:
+        return None if v != v else v
     import numpy as np
     import pandas as pd
 
@@ -1012,8 +1017,8 @@ def copy_builtin_state(st: dict) -> dict:
 
 
 # ---- analytic steps: one function per analytic name, shared by every
-# route (the streaming kernel, the per-event python path and its Spark
-# route).  ``step(p, s, argv, gate) -> value`` advances the per-key
+# route (the streaming kernel, batch custom analytics, the per-event
+# python path and its Spark route).  ``step(p, s, argv, gate) -> value`` advances the per-key
 # state dict ``s`` in place; ``argv`` holds one value per ``p["args"]``
 # entry.  Only lag mutates a container it stored earlier (its ring
 # buffer) — every other step rebinds its state keys, which is what
@@ -1223,9 +1228,126 @@ def analytic_copier_for(p):
     return copy_state
 
 
-def analytic_step(p, s, argv, gate):
-    """One state step of analytic spec ``p`` (see ANALYTIC_STEPS)."""
-    return analytic_step_for(p)(p, s, argv, gate)
+def analytic_inputs(df: DataFrame, specs, plan) -> tuple:
+    """The one input stage of the Spark-fed analytic routes (the
+    streaming kernel, batch custom analytics, emit_sync's Spark route):
+    each spec's partition-key, WHEN and argument columns are injected in
+    ONE ``withColumns`` and evaluated JVM-side, so only the state steps
+    run in Python.  Returns ``(df, prep, inject, clean)``: the frame with
+    the injected columns, one dict per spec, the injected columns by
+    name, and a cleaner per column the row loop reads.  Per spec the
+    dict holds ``name``, ``ph``, ``keys``
+    (key columns), ``when`` (gate column) or ``when_ph`` (an earlier
+    spec's placeholder: a lifted ``WHEN had_changed(...)`` reads the value
+    stepped for the same row), ``args`` (column or None per argument) with
+    ``lits`` (the literal where the column is None), ``custom`` (factory,
+    type; None for a built-in) — a snapshot of the driver-side registry,
+    shipped inside the kernel closure — ``step`` and ``type`` (the
+    placeholder's Spark type)."""
+    from ..engine.batch import event_time_name
+
+    inject: dict = {}
+    key_cols: dict[str, str] = {}  # partition SQL -> column
+    # star expansion sees data columns only — the event-time column is
+    # ordering metadata, not part of the row map (stream/analytic.go:
+    # 155-156 hadChangedState.ApplyNamed)
+    ts_name = event_time_name(df.columns, plan)
+    star = [c for c in df.columns if not c.startswith("__") and c != ts_name]
+    out = []
+    for i, s in enumerate(specs):
+        for psql in s.partition_by:
+            if psql not in key_cols:
+                name = psql if psql in df.columns else f"__ak_{len(key_cols)}__"
+                if name != psql:
+                    inject[name] = F.expr(psql)
+                key_cols[psql] = name
+        name = s.func.name.lower()
+        p = {"name": name, "ph": s.placeholder,
+             "keys": [key_cols[k] for k in s.partition_by],
+             "when": None, "when_ph": None, "args": [], "lits": [],
+             # a built-in name wins over a custom registration
+             "custom": None if name in ANALYTIC_STEPS
+             else registry.custom_analytic(name)}
+        if s.when_sql and s.when_sql in {q["ph"] for q in out}:
+            p["when_ph"] = s.when_sql
+        elif s.when_sql:
+            p["when"] = f"__aw_{i}__"
+            inject[p["when"]] = F.expr(s.when_sql)
+        for j, a in enumerate(s.func.args):
+            if isinstance(a, N.Star) or (isinstance(a, N.Lit) and a.value == "*"):
+                p["args"] += star
+                p["lits"] += [None] * len(star)
+            elif isinstance(a, N.Lit):
+                p["args"].append(None)
+                p["lits"].append(a.value)
+            else:
+                c = f"__aarg_{i}_{j}__"
+                inject[c] = F.expr(apply_qref_map(render(a), plan))
+                p["args"].append(c)
+                p["lits"].append(None)
+        p["step"] = analytic_step_for(p)
+        out.append(p)
+    if inject:
+        df = df.withColumns(inject)
+    schema = df.schema
+    for p in out:
+        p["type"] = _analytic_type(p, schema)
+    # dtype-aware cleaners: integral columns restore ints, map cells
+    # arrive as (k, v) tuple lists (see _cleaners)
+    need = sorted({c for p in out for c in [p["when"], *p["args"]] if c})
+    return df, out, inject, _cleaners(df, need)
+
+
+def _analytic_type(p, schema: StructType) -> DataType:
+    """Spark type of spec ``p``'s placeholder: the custom registration's,
+    the fixed type of a boolean/count/average step, else its first
+    argument's (acc_sum of an integral argument stays BIGINT, as
+    Catalyst's sum)."""
+    if p["custom"] is not None:
+        return p["custom"][1]
+    name = p["name"]
+    if name == "had_changed":
+        return BooleanType()
+    if name == "acc_count":
+        return LongType()
+    first = next((c for c in p["args"] if c), None)
+    at = schema[first].dataType if first else None
+    if name == "acc_sum":
+        return LongType() if isinstance(at, IntegralType) else DoubleType()
+    if name == "acc_avg":
+        return DoubleType()
+    return at or DoubleType()
+
+
+def read_analytic_columns(pdf, clean: dict) -> dict:
+    """The columns the row loop reads, from an Arrow-fed pandas frame,
+    each through its cleaner (NaN -> None, integral/map restoration)."""
+    return {c: list(map(f, pdf[c].tolist())) for c, f in clean.items()}
+
+
+def step_analytic_rows(specs, cols: dict, states: list) -> dict:
+    """The one row-step loop of the Spark-fed analytic routes: row ``i``
+    steps every spec, in order, against ``states[i]`` (a ``{ph: state}``
+    dict; the rows of one key share one) over the argument and gate
+    values in ``cols`` (column -> value per row).  Returns ``{ph: value
+    per row}``."""
+    n = len(states)
+    outs = {p["ph"]: [None] * n for p in specs}
+    bound = []
+    for p in specs:
+        gate = cols[p["when"]] if p["when"] else \
+            outs[p["when_ph"]] if p["when_ph"] else None
+        argv = [(cols[c], None) if c else (None, lit)
+                for c, lit in zip(p["args"], p["lits"])]
+        bound.append((p["ph"], p["step"], p, gate, argv, outs[p["ph"]]))
+    for i, st in enumerate(states):
+        for ph, step, p, gate, argv, out in bound:
+            s = st.get(ph)
+            if s is None:
+                s = st[ph] = {}
+            out[i] = step(p, s, [lit if c is None else c[i] for c, lit in argv],
+                          gate is None or bool(gate[i]))
+    return outs
 
 
 def analytic_stream(df: DataFrame, plan, ts_col: str | None) -> DataFrame:
@@ -1249,117 +1371,27 @@ def analytic_stream(df: DataFrame, plan, ts_col: str | None) -> DataFrame:
                 "analytic kernel per streaming query; split the query, "
                 "or use the batch/emit paths (which support mixed "
                 "partition keys)")
-
-    # materialize partition key / WHEN / argument columns JVM-side
-    key_cols = []
-    for i, psql in enumerate(part_sqls):
-        name = psql if psql in df.columns else f"__ak_{i}__"
-        if name not in df.columns:
-            df = df.withColumn(name, F.expr(psql))
-        key_cols.append(name)
-
-    prep = []  # per spec: dict describing kernel work
-    for i, s in enumerate(specs):
-        f = s.func
-        name = f.name.lower()
-        info = {"name": name, "ph": s.placeholder, "args": [], "lits": [],
-                # custom-analytic factory snapshot: the registry is
-                # driver-side module state — capture here so it ships
-                # inside the pickled kernel closure to the workers
-                "custom": registry.custom_analytic(name)}
-        when_col = None
-        earlier = {p.placeholder for p in specs[:i]}
-        if s.when_sql and s.when_sql in earlier:
-            # lifted WHEN had_changed(...): the gate IS an earlier
-            # spec's placeholder, stepped per-row inside the kernel —
-            # not a pre-computable column expression
-            info["when_ph"] = s.when_sql
-        elif s.when_sql:
-            when_col = f"__aw_{i}__"
-            df = df.withColumn(when_col, F.expr(s.when_sql))
-        info["when"] = when_col
-        for j, a in enumerate(f.args):
-            if isinstance(a, N.Star) or (isinstance(a, N.Lit) and a.value == "*"):
-                # had_changed(true, *): whole row by name
-                # (hadChangedState.ApplyNamed, stream/analytic.go:155-156);
-                # the event-time column is ordering metadata, not data
-                from ..engine.batch import event_time_name
-                ts_name = event_time_name(df.columns, plan)
-                for c in list(df.columns):
-                    if not c.startswith("__") and c != ts_name:
-                        info["args"].append(c)
-                        info["lits"].append(None)
-            elif isinstance(a, N.Lit):
-                info["lits"].append(a.value)
-                info["args"].append(None)
-            else:
-                c = f"__aarg_{i}_{j}__"
-                df = df.withColumn(c, F.expr(apply_qref_map(render(a), plan)))
-                info["args"].append(c)
-                info["lits"].append(None)
-        prep.append(info)
-
-    def ph_type(info) -> DataType:
-        nm = info["name"]
-        custom = registry.custom_analytic(nm)
-        if custom is not None:
-            return custom[1]
-        if nm == "had_changed":
-            return BooleanType()
-        if nm == "acc_count":
-            return LongType()
-        if nm in ("acc_sum", "acc_avg"):
-            return DoubleType()
-        first_arg = next((c for c in info["args"] if c), None)
-        return _field_type(df, first_arg) if first_arg else DoubleType()
-
+    df, prep, _, clean = analytic_inputs(df, specs, plan)
+    key_cols = prep[0]["keys"] if prep else []
     out_schema = StructType(list(df.schema.fields)
-                            + [StructField(p["ph"], ph_type(p)) for p in prep])
+                            + [StructField(p["ph"], p["type"]) for p in prep])
+    out_names = [f.name for f in out_schema.fields]
     order = [ts_col] if ts_col and ts_col in df.columns else []
-    all_cols = df.columns
-    # dtype-aware cleaners: map cells arrive as (k, v) tuple lists and
-    # must compare order-insensitively (see _map_cleaner)
-    need_cols = sorted({c for p in prep
-                        for c in ([p["when"]] if p["when"] else [])
-                        + [a for a in p["args"] if a]})
-    clean_by = _cleaners(df, need_cols)
 
     def kernel(key, pdf_iter, state):
-        import pandas as pd
-
         if state.hasTimedOut:
             state.remove()  # STATETTL idle-key reap
             return
         pdf = _sorted_batch(pdf_iter, order)
         st = _load_state(state) or {}
-        outs = {p["ph"]: [] for p in prep}
         if len(pdf):
-            # only the columns the step functions read — converting the
-            # whole frame costs one list per column PER KEY GROUP
-            vals = {c: pdf[c].tolist() for c in need_cols}
-            steps = [analytic_step_for(p) for p in prep]
-            for i in range(len(pdf)):
-                for p, step in zip(prep, steps):
-                    ph = p["ph"]
-                    s = st.setdefault(ph, {})
-                    gate = True
-                    if p["when"] is not None:
-                        gate = bool(_clean(vals[p["when"]][i]))
-                    elif p.get("when_ph") is not None:
-                        # earlier spec's value for THIS row (prep order
-                        # puts the lifted inner analytic first)
-                        gate = bool(_clean(outs[p["when_ph"]][i]))
-                    argv = [clean_by[c](vals[c][i]) if c else p["lits"][j]
-                            for j, c in enumerate(p["args"])]
-                    outs[ph].append(step(p, s, argv, gate))
+            outs = step_analytic_rows(prep, read_analytic_columns(pdf, clean),
+                                      [st] * len(pdf))
         _save_state(state, st, ttl_ms)
         if len(pdf):
             for ph, col in outs.items():
                 pdf[ph] = col
-            yield pdf[[f.name for f in out_schema.fields]]
-
-
-    kernel._step = analytic_step  # noqa — exposed for unit tests
+            yield pdf[out_names]
 
     # keyless → a synthetic constant key; the output schema need not
     # (and does not) include grouping columns

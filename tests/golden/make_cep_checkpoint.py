@@ -18,7 +18,7 @@ The input leaves, at the end of the second batch, a complete ``A B+ C``
 match on the last buffered row of ``d1`` and ``d2`` and an open partial on
 ``d3``; ``d1`` also delivered one match before it.
 ``tests/test_golden_checkpoint.py`` resumes the checkpoint with the current
-code.
+code.  ``write_golden`` is shared with ``make_analytic_checkpoint.py``.
 """
 
 import glob
@@ -63,7 +63,10 @@ def _write(path, rows):
             f.write(json.dumps(r) + "\n")
 
 
-def main(out_dir: str) -> None:
+def write_golden(out_dir: str, app: str, sql: str, batches, next_rows) -> None:
+    """Run ``sql`` as a file-source stream over ``batches`` (one file and
+    one micro-batch each) and write the golden layout described in the
+    module docstring to ``out_dir``."""
     import streamsql_spark as ss
     from pyspark.sql.types import (DoubleType, LongType, StringType,
                                    StructField, StructType)
@@ -71,24 +74,23 @@ def main(out_dir: str) -> None:
     from streamsql_spark.streaming.executor import StreamingExecutor
 
     print("writing with", ss.__file__)
-    spark = get_spark("golden-cep-checkpoint", shuffle_partitions=2,
-                      rocksdb_state=False)
+    spark = get_spark(app, shuffle_partitions=2, rocksdb_state=False)
     spark.sparkContext.setLogLevel("ERROR")
     schema = StructType([StructField("deviceId", StringType()),
                          StructField("temperature", DoubleType()),
                          StructField("humidity", DoubleType()),
                          StructField("ts", LongType()),
                          StructField("status", StringType())])
-    work = tempfile.mkdtemp(prefix="golden_cep_")
+    work = tempfile.mkdtemp(prefix=app.replace("-", "_") + "_")
     try:
         input_dir = os.path.join(work, "input")
         os.makedirs(input_dir)
-        for i, rows in enumerate(BATCHES):
+        for i, rows in enumerate(batches):
             path = os.path.join(input_dir, f"batch-{i:05d}.json")
             _write(path, rows)
             os.utime(path, (1_000_000 + i, 1_000_000 + i))
         s = ss.StreamSQL(spark)
-        s.execute(SQL)
+        s.execute(sql)
         got: list = []
         stream = (spark.readStream.schema(schema)
                   .option("maxFilesPerTrigger", 1).json(input_dir))
@@ -105,9 +107,9 @@ def main(out_dir: str) -> None:
             os.remove(crc)
         os.makedirs(os.path.join(out_dir, "next"))
         _write(os.path.join(out_dir, "next",
-                            f"batch-{len(BATCHES):05d}.json"), NEXT)
+                            f"batch-{len(batches):05d}.json"), next_rows)
         with open(os.path.join(out_dir, "query.sql"), "w") as f:
-            f.write(SQL + "\n")
+            f.write(sql + "\n")
         with open(os.path.join(out_dir, "delivered.json"), "w") as f:
             json.dump(got, f, indent=1, sort_keys=True)
             f.write("\n")
@@ -117,4 +119,4 @@ def main(out_dir: str) -> None:
 
 
 if __name__ == "__main__":
-    main(sys.argv[1])
+    write_golden(sys.argv[1], "golden-cep-checkpoint", SQL, BATCHES, NEXT)

@@ -1331,6 +1331,38 @@ def test_measures_round_infinity_and_concat_java_floats(spark):
                         "tiny": 0.0001})["c"] == "1.2345678E7|1.0E-4"
 
 
+@pytest.mark.parametrize("v,d", [
+    (2 ** 53 + 1, 0), (2 ** 53 + 1, -1), (-(2 ** 53 + 1), -1),
+    (2 ** 53 + 1, 2), (2 ** 63 - 1, -2), (2 ** 63 - 1, -20),
+    (2 ** 63 - 1, -1), (-2 ** 63, -1), (-(2 ** 63 - 1), -3),
+    (1e27, 2), (-1e27, 2), (float(2 ** 53 + 1), 0), (1.005, 2), (2.5, 0),
+])
+def test_measures_round_matches_spark_at_extremes(spark, v, d):
+    """MEASURES round() against Spark's round on the same value: a BIGINT
+    rounds exactly past 2^53 and keeps its type, overflows near ±BIGINT
+    where Spark does (an error, not a wrapped value), and a double past
+    the 28-digit Decimal context (1e27 at two places) is answered, not
+    an InvalidOperation inside the task."""
+    lit = f"CAST({v} AS BIGINT)" if isinstance(v, int) \
+        else f"CAST('{v!r}' AS DOUBLE)"
+    sql = f"""SELECT * FROM stream MATCH_RECOGNIZE (
+        ORDER BY ts
+        MEASURES round(A.v, {d}) AS r
+        ONE ROW PER MATCH
+        PATTERN (A)
+        DEFINE A AS ts > 0
+    )"""
+    try:
+        want = spark.sql(f"SELECT round({lit}, {d}) AS r").collect()[0]["r"]
+    except Exception as e:
+        assert "ARITHMETIC_OVERFLOW" in str(e)
+        with pytest.raises(Exception, match="ARITHMETIC_OVERFLOW"):
+            run_cep(spark, sql, [{"ts": 1, "v": v}])
+        return
+    (got,) = run_cep(spark, sql, [{"ts": 1, "v": v}])
+    assert (type(got["r"]), got["r"]) == (type(want), want)
+
+
 def test_java_double_str_matches_jvm_cast(spark):
     """Pin `_java_double_str` against the REAL JVM's
     CAST(double AS STRING) over a hard corpus: random bit patterns,

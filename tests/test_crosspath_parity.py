@@ -1,22 +1,28 @@
 """Cross-path differential harness for the stateful-analytic grid.
 
-The dialect's analytics execute on THREE independent paths:
+The dialect's analytics execute on FOUR paths:
 
-1. **batch**  — ``engine/batch.py`` compiles each call to Catalyst
-   window functions over the full DataFrame;
-2. **stream** — ``streaming/stateful.py``'s ``analytic_step`` kernel,
-   replayed through Structured Streaming micro-batches;
+1. **batch**  — ``engine/batch.py`` compiles each built-in call to
+   Catalyst window functions over the full DataFrame (custom analytics
+   run the shared kernel core of ``streaming/stateful.py``);
+2. **stream** — ``streaming/stateful.py``'s analytic kernel, replayed
+   through Structured Streaming micro-batches;
 3. **pyeval** — the per-event ``emit_sync`` in-process path
-   (``api/facade.py _emit_sync_analytic_python`` — same kernel, but
-   args/gates evaluated by ``dialect/pyeval``).
+   (``api/facade.py _emit_sync_analytic_python`` — the same steps, but
+   args/gates evaluated by ``dialect/pyeval``);
+4. **emit Spark route** — ``emit_sync`` on a declared-schema engine,
+   which skips pyeval: Spark evaluates each event's keys/gates/args and
+   the shared kernel core steps them.
 
 Both r6 defects lived exactly where only one path was audited (the
 batch WHEN-gated ``lag`` ignored ``ignoreNull=false``; the CEP measure
 ``concat`` NULL-propagated).  This suite runs the full gated-analytic
 argument grid — lag offset 1..3 × literal/expression default ×
 ignoreNull × WHEN gate (incl. a NULL-valued gate) × partitioning —
-over seeded random event streams WITH NULLS through all three paths
-and asserts identical outputs row-for-row.
+plus a NULL-bearing BIGINT column and a custom analytic that reports
+the Python types it was handed, over seeded random event streams WITH
+NULLS through all four paths, and asserts identical outputs row-for-row,
+value and type (an int never equals a float, a bool never an int).
 
 Reference semantics: ``functions_analytical.go`` lagState /
 hadChangedState / changedColState / accState; WHEN gating
@@ -74,7 +80,28 @@ ANALYTIC_GRID = [
     ("astart", "acc_sum(temperature, status = 'ok')"),
     ("asr", "acc_sum(temperature, status = 'ok', status = 'err')"),
     ("arst", "acc_count(temperature, true, status = 'err')"),
+    # a NULL-bearing BIGINT column: integral results stay integral
+    ("nlag", "lag(n)"),
+    ("nlat", "latest(n)"),
+    ("nmax", "acc_max(n)"),
+    ("nsum", "acc_sum(n)"),
+    # a custom analytic handed an int, a double and a boolean argument
+    ("tn", "xp_typenames(n, temperature, status = 'ok')"),
 ]
+
+# the grid's event schema: EVT plus the BIGINT column
+EVT_N = StructType(EVT.fields + [StructField("n", LongType())])
+
+
+@pytest.fixture(scope="module", autouse=True)
+def _xp_typenames():
+    from streamsql_spark.functions.examples import ArgTypesState
+    from streamsql_spark.functions.registry import (
+        _CUSTOM_ANALYTICS, register_analytic_function)
+
+    register_analytic_function("xp_typenames", ArgTypesState, "string")
+    yield
+    _CUSTOM_ANALYTICS.pop("xp_typenames", None)
 
 # gate axis: ungated, always-boolean gate, and a gate that is NULL on
 # NULL temperature (three-valued logic: NULL gate must behave as false
@@ -109,8 +136,16 @@ def _mk_rows(seed: int, n: int = 36):
     return rows, rng
 
 
+def _with_bigint(rows, seed: int):
+    """``rows`` with EVT_N's NULL-bearing BIGINT column ``n`` added."""
+    rng = random.Random(seed)
+    return [{**r, "n": None if rng.random() < 0.25
+             else rng.choice([3, 7, 7, 40])} for r in rows]
+
+
 def _norm(r: dict) -> dict:
-    return {k: (round(v, 6) if isinstance(v, float) else v)
+    """Exact comparison form: each value tagged with its type."""
+    return {k: (type(v).__name__, round(v, 6) if isinstance(v, float) else v)
             for k, v in r.items()}
 
 
@@ -125,7 +160,7 @@ def _run_batch(spark, sql, rows, schema=EVT):
     return [r.asDict() for r in s.query(df).collect()]
 
 
-def _run_stream(spark, sql, rows, rng):
+def _run_stream(spark, sql, rows, rng, schema=EVT):
     batches, i = [], 0
     while i < len(rows):
         k = rng.randint(1, 7)
@@ -133,7 +168,7 @@ def _run_stream(spark, sql, rows, rng):
         i += k
     s = StreamSQL(spark)
     s.execute(sql)
-    return run_streaming_collect(spark, s, batches, EVT, tables=s._tables)
+    return run_streaming_collect(spark, s, batches, schema, tables=s._tables)
 
 
 def _run_pyeval(spark, sql, rows):
@@ -144,6 +179,15 @@ def _run_pyeval(spark, sql, rows):
     # fallback to the Spark route would make this test vacuous)
     assert getattr(s, "_an_py", None) is not None, \
         "pyeval analytic path fell back — grid no longer covered"
+    return [o for o in out if o is not None]
+
+
+def _run_emit_spark(spark, sql, rows, schema):
+    """emit_sync on a declared-schema engine: the Spark route."""
+    s = StreamSQL(spark, schema=schema)
+    s.execute(sql)
+    out = [s.emit_sync(dict(r)) for r in rows]
+    assert s._an_py is None, "declared-schema emit_sync took pyeval"
     return [o for o in out if o is not None]
 
 
@@ -166,12 +210,17 @@ def test_analytic_grid_three_path_parity(spark, gate, part):
     # unreproducible differential failure can't be bisected
     seed = zlib.crc32(f"{gate}|{part}".encode()) % 1000
     rows, rng = _mk_rows(seed)
+    rows = _with_bigint(rows, seed)
 
-    got_batch = _keyed(_run_batch(spark, sql, rows))
+    got_batch = _keyed(_run_batch(spark, sql, rows, schema=EVT_N))
     got_py = _keyed(_run_pyeval(spark, sql, rows))
     assert got_py == got_batch, f"pyeval vs batch diverged ({gate},{part})"
 
-    got_stream = _keyed(_run_stream(spark, sql, rows, rng))
+    got_emit = _keyed(_run_emit_spark(spark, sql, rows, EVT_N))
+    assert got_emit == got_batch, \
+        f"emit Spark route vs batch diverged ({gate},{part})"
+
+    got_stream = _keyed(_run_stream(spark, sql, rows, rng, schema=EVT_N))
     assert got_stream == got_batch, \
         f"stream vs batch diverged ({gate},{part})"
 

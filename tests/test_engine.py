@@ -2830,6 +2830,12 @@ def test_pyeval_latency_is_in_process(spark):
 
 
 @pytest.mark.slow
+def _typed(row):
+    """An emit_sync result with every value tagged by its type."""
+    return None if row is None else \
+        {k: (type(v).__name__, v) for k, v in row.items()}
+
+
 def test_pyeval_analytic_differential_vs_spark_route(spark):
     """The in-process analytic path must produce the same per-event
     outputs AND the same state evolution as the Spark route: two
@@ -2872,7 +2878,9 @@ def test_pyeval_analytic_differential_vs_spark_route(spark):
                                     rng.randint(0, 30)])}
             got = py_e.emit_sync(dict(row))
             want = sp_e.emit_sync(dict(row))
-            assert got == want, (sql, i, row, got, want)
+            # value AND type: 5 == 5.0 would hide an int the Spark route
+            # widened to a double
+            assert _typed(got) == _typed(want), (sql, i, row, got, want)
 
 
 def test_pyeval_analytic_latency_is_in_process(spark):
@@ -3990,3 +3998,26 @@ def test_mixed_distinct_buffer_agg_splits_and_matches(spark):
         " FROM stream GROUP BY k")
     out3 = q3.query(src)
     assert "Join" not in out3._jdf.queryExecution().executedPlan().toString()
+
+
+def test_replay_key_count_sees_events_regenerated_in_place(spark, tmp_path):
+    """The replay entries' state-key count memo (catalog._REPLAY_KEYS)
+    and the table-handle memo it reads through (session.load_tables)
+    key on the events table's modification time: regenerating the
+    events parquet in place must give a new count, not the memoized one
+    (nor a read through the stale file index)."""
+    from streamsql_spark.catalog import _replay_key_count
+
+    sf = str(tmp_path)
+    path = tmp_path / "events.parquet"
+
+    def write(n_users):
+        spark.createDataFrame([(u % n_users, float(u)) for u in range(40)],
+                              "user_id bigint, value double") \
+            .write.mode("overwrite").parquet(str(path))
+
+    write(3)
+    assert _replay_key_count(spark, sf, ("user_id",)) == 3
+    assert _replay_key_count(spark, sf, ("user_id",)) == 3
+    write(7)
+    assert _replay_key_count(spark, sf, ("user_id",)) == 7

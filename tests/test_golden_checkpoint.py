@@ -2,9 +2,11 @@
 resume with the current code.
 
 ``tests/golden/cep_checkpoint/`` is a streaming MATCH_RECOGNIZE checkpoint
-on the default (HDFS-backed) state store, written by an older revision with
-``tests/golden/make_cep_checkpoint.py`` (its docstring says what the state
-holds).  The checkpoint's source log names the input files by absolute
+and ``tests/golden/analytic_checkpoint/`` a streaming analytic one, both on
+the default (HDFS-backed) state store, written by an older revision with
+``tests/golden/make_cep_checkpoint.py`` and
+``tests/golden/make_analytic_checkpoint.py`` (their docstrings say what the
+state holds).  The checkpoint's source log names the input files by absolute
 path, so the test copies everything to a temp dir and points the log at the
 copies before it resumes the query.
 """
@@ -18,7 +20,7 @@ from pathlib import Path
 from pyspark.sql.types import (DoubleType, LongType, StringType, StructField,
                                StructType)
 
-GOLDEN = Path(__file__).parent / "golden" / "cep_checkpoint"
+GOLDEN = Path(__file__).parent / "golden"
 
 EVT = StructType([
     StructField("deviceId", StringType()),
@@ -38,19 +40,15 @@ def _multiset(rows) -> Counter:
     return Counter(json.dumps(r, sort_keys=True) for r in rows)
 
 
-def test_cep_golden_checkpoint_resumes(spark, tmp_path):
-    """The checkpoint holds complete ``A B+ C`` matches on the last
-    buffered row of two keys (an older release rule held them for the
-    key's next row) and an open partial on a third.  Resumed with the
-    current code and fed one more file, the rows delivered before and
-    after the restart must together equal ``query()`` over all the input:
-    every held match emits exactly once, and MATCH_NUMBER continues from
-    the saved state."""
+def _resume(spark, tmp_path, golden: Path):
+    """Resume ``golden``'s checkpoint with the current code over one more
+    input file; return (rows delivered before the restart, rows
+    delivered after it, ``query()`` over all the input as a multiset)."""
     from streamsql_spark.api.facade import StreamSQL
     from streamsql_spark.streaming.executor import StreamingExecutor
 
     ckpt = tmp_path / "checkpoint"
-    shutil.copytree(GOLDEN / "checkpoint", ckpt)
+    shutil.copytree(golden / "checkpoint", ckpt)
     input_dir = tmp_path / "input"
     input_dir.mkdir()
     for log in sorted((ckpt / "sources" / "0").iterdir()):
@@ -60,15 +58,15 @@ def test_cep_golden_checkpoint_resumes(spark, tmp_path):
             e = json.loads(line)
             name = Path(e["path"]).name
             copy = input_dir / name
-            shutil.copy(GOLDEN / "input" / name, copy)
+            shutil.copy(golden / "input" / name, copy)
             os.utime(copy, (e["timestamp"] / 1000, e["timestamp"] / 1000))
             e["path"] = copy.as_uri()
             moved.append(json.dumps(e))
         log.write_text("\n".join([head, *moved]))
-    (nxt,) = (GOLDEN / "next").iterdir()
+    (nxt,) = (golden / "next").iterdir()
     shutil.copy(nxt, input_dir / nxt.name)
 
-    sql = (GOLDEN / "query.sql").read_text()
+    sql = (golden / "query.sql").read_text()
     s = StreamSQL(spark)
     s.execute(sql)
     resumed: list[dict] = []
@@ -82,16 +80,46 @@ def test_cep_golden_checkpoint_resumes(spark, tmp_path):
         raise AssertionError("resumed query did not drain in time")
     assert q.exception() is None, q.exception()
 
-    before = json.loads((GOLDEN / "delivered.json").read_text())
-    all_rows = [r for f in sorted((GOLDEN / "input").iterdir())
+    before = json.loads((golden / "delivered.json").read_text())
+    all_rows = [r for f in sorted((golden / "input").iterdir())
                 for r in _read_rows(f)] + _read_rows(nxt)
     s2 = StreamSQL(spark)
     s2.execute(sql)
     want = _multiset(r.asDict() for r in
                      s2.query(spark.createDataFrame(all_rows, EVT)).collect())
+    return before, resumed, want
+
+
+def test_cep_golden_checkpoint_resumes(spark, tmp_path):
+    """The checkpoint holds complete ``A B+ C`` matches on the last
+    buffered row of two keys (an older release rule held them for the
+    key's next row) and an open partial on a third.  Resumed with the
+    current code and fed one more file, the rows delivered before and
+    after the restart must together equal ``query()`` over all the input:
+    every held match emits exactly once, and MATCH_NUMBER continues from
+    the saved state."""
+    before, resumed, want = _resume(spark, tmp_path, GOLDEN / "cep_checkpoint")
     got = _multiset(before + resumed)
     assert got == want, (sorted(got.elements()), sorted(want.elements()))
     assert set(want.values()) == {1}
     # the matches held in the checkpoint emit after the restart
     assert {(r["deviceId"], r["mn"], r["a_ts"]) for r in resumed} == {
         ("d1", 2, 5000), ("d2", 1, 1500), ("d3", 1, 5500)}
+
+
+def test_analytic_golden_checkpoint_resumes(spark, tmp_path):
+    """The checkpoint holds, per key, a lag history, a running
+    ``acc_sum`` and a WHEN-gated ``had_changed`` baseline (pickled
+    ``{placeholder: state}`` per key).  Resumed with the current code and
+    fed one more file, the rows delivered before and after the restart
+    must together equal ``query()`` over all the input: the resumed rows
+    read the saved state, not a fresh one."""
+    before, resumed, want = _resume(spark, tmp_path,
+                                    GOLDEN / "analytic_checkpoint")
+    got = _multiset(before + resumed)
+    assert got == want, (sorted(got.elements()), sorted(want.elements()))
+    assert len(resumed) == 5
+    # d1's and d2's first resumed rows continue their saved state
+    first = {r["deviceId"]: r for r in sorted(resumed, key=lambda r: -r["ts"])}
+    assert (first["d1"]["prev"], first["d1"]["total"]) == (18.0, 99.5)
+    assert (first["d2"]["prev"], first["d2"]["total"]) == (35.0, 165.5)
