@@ -1,11 +1,14 @@
 """Golden checkpoints: stream state written by an older revision must
 resume with the current code.
 
-``tests/golden/cep_checkpoint/`` is a streaming MATCH_RECOGNIZE checkpoint
-and ``tests/golden/analytic_checkpoint/`` a streaming analytic one, both on
-the default (HDFS-backed) state store, written by an older revision with
-``tests/golden/make_cep_checkpoint.py`` and
-``tests/golden/make_analytic_checkpoint.py`` (their docstrings say what the
+``tests/golden/cep_checkpoint/`` is a streaming MATCH_RECOGNIZE checkpoint,
+``tests/golden/analytic_checkpoint/`` a streaming analytic one, and the
+``counting``, ``lateness``, ``global_algebraic`` and ``global_holistic``
+checkpoints cover the window kernels, all on the default (HDFS-backed)
+state store, written by an older revision with
+``tests/golden/make_cep_checkpoint.py``,
+``tests/golden/make_analytic_checkpoint.py`` and
+``tests/golden/make_window_checkpoints.py`` (their docstrings say what the
 state holds).  The checkpoint's source log names the input files by absolute
 path, so the test copies everything to a temp dir and points the log at the
 copies before it resumes the query.
@@ -40,12 +43,33 @@ def _multiset(rows) -> Counter:
     return Counter(json.dumps(r, sort_keys=True) for r in rows)
 
 
+def _run_stream(spark, sql: str, input_dir: Path, ckpt: Path) -> list[dict]:
+    """Run ``sql`` as a file-source stream over ``input_dir`` (one file per
+    micro-batch) with checkpoint ``ckpt`` until it drains; return the rows
+    it delivered."""
+    from streamsql_spark.api.facade import StreamSQL
+    from streamsql_spark.streaming.executor import StreamingExecutor
+
+    s = StreamSQL(spark)
+    s.execute(sql)
+    got: list[dict] = []
+    stream = (spark.readStream.schema(EVT)
+              .option("maxFilesPerTrigger", 1).json(str(input_dir)))
+    q = StreamingExecutor(spark, {}).start(
+        s.plan, stream, sink=got.extend, checkpoint=str(ckpt))
+    q.awaitTermination(240)
+    if q.isActive:
+        q.stop()
+        raise AssertionError("query did not drain in time")
+    assert q.exception() is None, q.exception()
+    return got
+
+
 def _resume(spark, tmp_path, golden: Path):
     """Resume ``golden``'s checkpoint with the current code over one more
     input file; return (rows delivered before the restart, rows
     delivered after it, ``query()`` over all the input as a multiset)."""
     from streamsql_spark.api.facade import StreamSQL
-    from streamsql_spark.streaming.executor import StreamingExecutor
 
     ckpt = tmp_path / "checkpoint"
     shutil.copytree(golden / "checkpoint", ckpt)
@@ -67,19 +91,7 @@ def _resume(spark, tmp_path, golden: Path):
     shutil.copy(nxt, input_dir / nxt.name)
 
     sql = (golden / "query.sql").read_text()
-    s = StreamSQL(spark)
-    s.execute(sql)
-    resumed: list[dict] = []
-    stream = (spark.readStream.schema(EVT)
-              .option("maxFilesPerTrigger", 1).json(str(input_dir)))
-    q = StreamingExecutor(spark, {}).start(
-        s.plan, stream, sink=resumed.extend, checkpoint=str(ckpt))
-    q.awaitTermination(240)
-    if q.isActive:
-        q.stop()
-        raise AssertionError("resumed query did not drain in time")
-    assert q.exception() is None, q.exception()
-
+    resumed = _run_stream(spark, sql, input_dir, ckpt)
     before = json.loads((golden / "delivered.json").read_text())
     all_rows = [r for f in sorted((golden / "input").iterdir())
                 for r in _read_rows(f)] + _read_rows(nxt)
@@ -123,3 +135,63 @@ def test_analytic_golden_checkpoint_resumes(spark, tmp_path):
     first = {r["deviceId"]: r for r in sorted(resumed, key=lambda r: -r["ts"])}
     assert (first["d1"]["prev"], first["d1"]["total"]) == (18.0, 99.5)
     assert (first["d2"]["prev"], first["d2"]["total"]) == (35.0, 165.5)
+
+
+def test_counting_golden_checkpoint_resumes(spark, tmp_path):
+    """The checkpoint holds a partial ``CountingWindow(3)`` chunk per key
+    (one row for ``d1``; two for ``d2``, one with a NULL argument).  The
+    resuming file completes both: each fired chunk spans the restart."""
+    before, resumed, want = _resume(spark, tmp_path,
+                                    GOLDEN / "counting_checkpoint")
+    got = _multiset(before + resumed)
+    assert got == want, (sorted(got.elements()), sorted(want.elements()))
+    assert sorted((r["deviceId"], r["n"], r["s"], r["last_ts"])
+                  for r in resumed) == [("d1", 3, 56.0, 6000),
+                                        ("d2", 3, 240.0, 6500)]
+
+
+def test_lateness_golden_checkpoint_resumes(spark, tmp_path):
+    """The checkpoint holds ``d1``'s fired [20 s, 30 s) window inside the
+    ALLOWEDLATENESS horizon and its pending [40 s, 50 s) window.  The
+    resuming file's late row at 28 s must re-emit the fired window from
+    the saved accumulators with the same ``window_id``.
+
+    ``query()`` has no re-emission and never sees a stream's unfired
+    windows, so the rows delivered before and after the restart are
+    compared with an uninterrupted run of the current code over the same
+    files instead."""
+    golden = GOLDEN / "lateness_checkpoint"
+    before, resumed, _ = _resume(spark, tmp_path, golden)
+    fresh = _run_stream(spark, (golden / "query.sql").read_text(),
+                        tmp_path / "input", tmp_path / "fresh_checkpoint")
+    got, want = _multiset(before + resumed), _multiset(fresh)
+    assert got == want, (sorted(got.elements()), sorted(want.elements()))
+    assert {"deviceId": "d1", "s": 11.0, "n": 3,
+            "window_id": "20000000000_30000000000"} in resumed, resumed
+
+
+def _global_resume(spark, tmp_path, name):
+    before, resumed, want = _resume(spark, tmp_path, GOLDEN / name)
+    got = _multiset(before + resumed)
+    assert got == want, (sorted(got.elements()), sorted(want.elements()))
+    return resumed
+
+
+def test_global_algebraic_golden_checkpoint_resumes(spark, tmp_path):
+    """The checkpoint holds partial TRIGGER WHEN accumulators (count and
+    sum) and partial running output accumulators for both keys; the
+    resuming file fires each key with totals that span the restart."""
+    resumed = _global_resume(spark, tmp_path, "global_algebraic_checkpoint")
+    assert sorted((r["deviceId"], r["cnt"], r["total"]) for r in resumed) \
+        == [("d1", 4, 7.0), ("d2", 4, 180.0)]
+
+
+def test_global_holistic_golden_checkpoint_resumes(spark, tmp_path):
+    """Same trigger as the algebraic checkpoint, with ``median`` and
+    ``collect`` outputs: the state buffers argument tuples, which the
+    resuming fire must read back."""
+    resumed = _global_resume(spark, tmp_path, "global_holistic_checkpoint")
+    assert sorted((r["deviceId"], r["cnt"], r["med"], r["statuses"])
+                  for r in resumed) == [
+        ("d1", 4, 2.0, ["ok", "ok", "ok", "warn"]),
+        ("d2", 4, 45.0, ["ok", "ok", "warn", "ok"])]
