@@ -121,6 +121,51 @@ def _cal_stream(spark) -> float:
         shutil.rmtree(in_dir, ignore_errors=True)
 
 
+def time_entries(spark, sf_dir: str, catalog) -> tuple[dict, dict, float]:
+    """Time every ``catalog`` entry at ``sf_dir``; return (best warm
+    seconds per entry, runs per entry, total of the passing entries).
+
+    Each entry runs three times; the best WARM run is reported.  The
+    first run pays one-time Catalyst analysis + codegen JIT (~1-4 s
+    per query shape) — constant cost, irrelevant at scale where a
+    query runs for minutes; the warm minimum measures pipeline
+    throughput (what scales with data volume) with GC noise damped.
+    Sub-half-second entries are startup-jitter-bound at sf0.1 (best-
+    of-3 has shown phantom 2× cross-round swings on unchanged code),
+    so they get extra repeats until the floor stabilizes.  Long
+    (>1.5 s) pipeline-bound entries get best-of-5: their best-of-3
+    floor still swung 20-31% round-to-round on byte-identical code
+    (r8 text_quality_pii/dedup_minhash_lsh) — two more samples tighten
+    the min-statistic at a bounded wall cost.
+
+    A failing entry times as -1 with 0 runs, and one
+    ``{"entry_failed", "error", "message"}`` JSON line on stderr says
+    why; nothing is written to stdout."""
+    timings: dict[str, float] = {}
+    repeats: dict[str, int] = {}
+    total = 0.0
+    for name, entry in catalog.items():
+        try:
+            dt, n = float("inf"), 0
+            while n < 3 or (dt < 0.5 and n < 7) or (dt > 1.5 and n < 5):
+                t0 = time.perf_counter()
+                _force(entry.run(spark, sf_dir))
+                dt = min(dt, time.perf_counter() - t0)
+                n += 1
+        except Exception as e:  # noqa: BLE001 — a failing query counts as
+            # missing: -1 in the payload (the stdout contract), the cause
+            # on stderr so the failure is not silent
+            dt, n = -1.0, 0
+            print(json.dumps({"entry_failed": name,
+                              "error": type(e).__name__,
+                              "message": str(e)[:500]}), file=sys.stderr)
+        timings[name] = round(dt, 3)
+        repeats[name] = n
+        if dt > 0:
+            total += dt
+    return timings, repeats, total
+
+
 def main() -> None:
     _wait_for_idle()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -181,40 +226,7 @@ def main() -> None:
                                       if cal_stream else None}}),
           file=sys.stderr)
 
-    # Each entry runs three times; the best WARM run is reported.  The
-    # first run pays one-time Catalyst analysis + codegen JIT (~1-4 s
-    # per query shape) — constant cost, irrelevant at scale where a
-    # query runs for minutes; the warm minimum measures pipeline
-    # throughput (what scales with data volume) with GC noise damped.
-    # Sub-half-second entries are startup-jitter-bound at sf0.1 (best-
-    # of-3 has shown phantom 2× cross-round swings on unchanged code),
-    # so they get extra repeats until the floor stabilizes.  Long
-    # (>1.5 s) pipeline-bound entries get best-of-5: their best-of-3
-    # floor still swung 20-31% round-to-round on byte-identical code
-    # (r8 text_quality_pii/dedup_minhash_lsh) — two more samples tighten
-    # the min-statistic at a bounded wall cost.
-    timings: dict[str, float] = {}
-    repeats: dict[str, int] = {}
-    total = 0.0
-    for name, entry in CATALOG.items():
-        try:
-            dt, n = float("inf"), 0
-            while n < 3 or (dt < 0.5 and n < 7) or (dt > 1.5 and n < 5):
-                t0 = time.perf_counter()
-                _force(entry.run(spark, sf_dir))
-                dt = min(dt, time.perf_counter() - t0)
-                n += 1
-        except Exception as e:  # noqa: BLE001 — a failing query counts as
-            # missing: -1 in the payload (the stdout contract), the cause
-            # on stderr so the failure is not silent
-            dt, n = -1.0, 0
-            print(json.dumps({"entry_failed": name,
-                              "error": type(e).__name__,
-                              "message": str(e)[:500]}), file=sys.stderr)
-        timings[name] = round(dt, 3)
-        repeats[name] = n
-        if dt > 0:
-            total += dt
+    timings, repeats, total = time_entries(spark, sf_dir, CATALOG)
 
     # Repeat counts go to stderr: the driver parses the single stdout
     # JSON line from a bounded tail buffer, so that line must stay

@@ -619,8 +619,7 @@ def _apply_custom_analytics(df: DataFrame, specs: list, plan: QueryPlan,
     from pyspark.sql.types import StructField, StructType
 
     from ..streaming.stateful import (_clean, analytic_inputs,
-                                      read_analytic_columns,
-                                      step_analytic_rows)
+                                      read_columns, step_analytic_rows)
 
     src_cols = set(df.columns)
     df, prep, _, clean = analytic_inputs(df, specs, plan)
@@ -659,7 +658,7 @@ def _apply_custom_analytics(df: DataFrame, specs: list, plan: QueryPlan,
                     st, prev_key = {}, k  # {ph: state} of the new key
                 states.append(st)
             outs = step_analytic_rows(
-                prep, read_analytic_columns(pdf, clean), states)
+                prep, read_columns([pdf], clean)[1], states)
             for ph, col in outs.items():
                 pdf[ph] = col
             yield pdf[out_names]

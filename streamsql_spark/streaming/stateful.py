@@ -1,9 +1,14 @@
 """Custom stateful streaming operators on ``applyInPandasWithState``.
 
-The four reference operators Spark has no built-in for (SURVEY §4):
+Five per-key kernels Spark has no built-in for: four reference operators
+(SURVEY §4) and this engine's ALLOWEDLATENESS re-emission.
 
 - **counting window** (window/counting_window.go): per-key chunks of N
   rows, emit on the Nth row; partial chunks stay pending in state.
+- **lateness window** (window/tumbling_window.go:596-674): time windows
+  that fire at the reference watermark and re-emit the accumulated
+  window, with a stable ``window_id``, for a row late within
+  ALLOWEDLATENESS.
 - **global window TRIGGER WHEN** (window/global_window.go): per-key
   running aggregates + predicate, FIRE_AND_PURGE on hit.
 - **analytic state machine** (stream/analytic.go): lag/latest/
@@ -11,6 +16,13 @@ The four reference operators Spark has no built-in for (SURVEY §4):
 - **CEP MATCH_RECOGNIZE** (cep/engine.go): per-key tail buffer driving
   the batch matcher incrementally; matches that can no longer extend
   emit, the rest stay pending.
+
+The kernels share one ingest, one egress and one grouping, and keep only
+their per-key state step.  :func:`read_columns` reads a key group's
+Arrow-fed chunks as column lists in ORDER BY order, every value through
+the kernel's :func:`_cleaners` map (one cleaning policy for every column
+a kernel reads); :func:`_egress` builds the output frame and
+:func:`_apply_per_key` the ``groupBy`` + ``applyInPandasWithState`` call.
 
 State is a single pickled blob per key (BinaryType) — schema-free, like
 the reference's per-key Go structs.  Keys parallelize across executors;
@@ -22,6 +34,7 @@ are pre-projected JVM-side so kernels never evaluate SQL expressions.
 from __future__ import annotations
 
 import math
+import operator
 import pickle
 
 from pyspark.sql import DataFrame
@@ -75,17 +88,58 @@ def _timeout_conf(ttl_ms: int | None) -> str:
     return "ProcessingTimeTimeout" if ttl_ms is not None else "NoTimeout"
 
 
-def _sorted_batch(pdf_iter, order_cols: list[str]):
+def read_columns(chunks, clean: dict, order=()) -> tuple[int, dict]:
+    """The one ingest of the Spark-fed kernels: read Arrow-fed pandas
+    chunks (a key group's, or one ``mapInPandas`` batch) as ``(row
+    count, {column: values})`` for the columns of ``clean``, each value
+    through its cleaner (see :func:`_cleaners`).
+
+    The chunks' column lists are extended, never concatenated as frames.
+    The rows are reordered by the ``order`` columns (which ``clean``
+    must hold) only when those are not already non-decreasing; the
+    reorder is stable with NULL last, as pandas'
+    ``sort_values(kind="mergesort")``."""
+    n = 0
+    cols = {c: [] for c in clean}
+    for pdf in chunks:
+        n += len(pdf)
+        for c, f in clean.items():
+            s = pdf[c]
+            # an integer or boolean pandas column holds no NULL, and its
+            # tolist() values are plain ints/bools every cleaner keeps
+            cols[c] += s.tolist() if s.dtype.kind in "iub" \
+                else map(f, s.tolist())
+    if n > 1 and order:
+        seqs = [cols[c] for c in order]
+        if any(None in s for s in seqs):
+            seqs = [[(v is None, v) for v in s] for s in seqs]
+        keys = seqs[0] if len(seqs) == 1 else list(zip(*seqs))
+        if not all(map(operator.le, keys, keys[1:])):
+            idx = sorted(range(n), key=keys.__getitem__)
+            cols = {c: [v[i] for i in idx] for c, v in cols.items()}
+    return n, cols
+
+
+def _egress(names: list[str], rows: list):
+    """The one output frame of every kernel: ``rows`` (dicts, where a
+    missing name is NULL, or tuples in ``names`` order) as a frame with
+    columns ``names``."""
     import pandas as pd
 
-    parts = [p for p in pdf_iter if len(p)]
-    if not parts:
-        return pd.DataFrame()
-    pdf = pd.concat(parts, ignore_index=True)
-    cols = [c for c in order_cols if c in pdf.columns]
-    if cols:
-        pdf = pdf.sort_values(cols, kind="mergesort")
-    return pdf
+    return pd.DataFrame.from_records(rows, columns=names)
+
+
+def _apply_per_key(df: DataFrame, keys: list[str], kernel,
+                   out_schema: StructType, mode: str,
+                   timeout: str) -> DataFrame:
+    """The one grouping of every kernel: ``kernel`` runs per ``keys``
+    group under ``applyInPandasWithState``.  Keyless input groups on a
+    synthetic constant key; the output schema need not (and does not)
+    include it."""
+    grouped = df.groupBy(*[F.col(k) for k in keys]) if keys \
+        else df.withColumn("__k__", F.lit(1)).groupBy("__k__")
+    return grouped.applyInPandasWithState(
+        kernel, out_schema, _STATE_SCHEMA, mode, timeout)
 
 
 def _clean(v):
@@ -235,9 +289,9 @@ def _container_map_cleaner(dt):
 
 
 def _cleaners(df, cols) -> dict:
-    """Per-column cleaner map for kernel buffer ingestion: _clean, plus
-    integral-type restoration.  pandas coerces a nullable int64 column
-    chunk to float64 CHUNK-DEPENDENTLY (a chunk without NaN stays
+    """Per-column cleaner map for kernel ingestion (:func:`read_columns`):
+    _clean, plus integral-type restoration.  pandas coerces a nullable
+    int64 column chunk to float64 CHUNK-DEPENDENTLY (a chunk without NaN stays
     int64), so the same long column buffers as 5 from one micro-batch
     and 5.0 from another — repr-keyed ``deduplicate`` then splits them
     and ``merge_agg`` stringifies '5.0' where the batch path's CAST
@@ -296,8 +350,7 @@ def _agg_out_type(kernel_name: str, arg_type: DataType | None) -> DataType:
         # integer sums stay integer — the ALLOWEDLATENESS=0 path uses
         # Catalyst's native sum (LongType for integral columns), and the
         # same query must not flip output types when the option toggles
-        from pyspark.sql.types import ByteType, IntegerType, ShortType
-        if isinstance(arg_type, (LongType, IntegerType, ShortType, ByteType)):
+        if isinstance(arg_type, IntegralType):
             return LongType()
         return DoubleType()
     if kernel_name in ("avg", "stddev", "stddevs", "var", "vars",
@@ -309,24 +362,6 @@ def _agg_out_type(kernel_name: str, arg_type: DataType | None) -> DataType:
         return StringType()
     # min/max/first_value/last_value/nth_value keep the arg type
     return arg_type or DoubleType()
-
-
-def _int_out_phs(out_schema: StructType) -> set[str]:
-    """Placeholder columns declared integral in the kernel's output."""
-    from pyspark.sql.types import ByteType, IntegerType, ShortType
-    return {f.name for f in out_schema.fields
-            if isinstance(f.dataType, (LongType, IntegerType, ShortType,
-                                       ByteType))}
-
-
-def _coerce_ints(out: dict, int_phs: set[str]) -> None:
-    """pandas materializes nullable integer columns as float64, so an
-    integer-typed aggregate can compute 9.0 — coerce to int so the
-    Arrow cast back to the declared LongType is exact."""
-    for k in int_phs:
-        v = out.get(k)
-        if isinstance(v, float) and not math.isnan(v):
-            out[k] = int(v)
 
 
 def _prep_agg_columns(df: DataFrame, plan):
@@ -358,8 +393,45 @@ def _key_columns(df: DataFrame, plan) -> tuple[DataFrame, list[str]]:
     return df, names
 
 
-def _field_type(df: DataFrame, col: str) -> DataType:
-    return df.schema[col].dataType
+def _agg_output(df: DataFrame, names, agg_specs, extra):
+    """An aggregate kernel's output: ``(schema, row)``.  The schema holds
+    the ``names`` columns, one field per aggregate placeholder, then the
+    ``extra`` fields.  ``row(head, buf=None, accs=None)`` builds one
+    output row: the ``head`` values (keys, carried columns) plus every
+    spec's value, from ``buf`` — argument tuples, one element per
+    argument column (``py_aggregate``) — or from ``accs``, one
+    accumulator per spec (``acc_result``).  An integral column's float
+    becomes int: pandas materializes nullable integer columns as
+    float64, so an integer-typed aggregate can compute 9.0, and the
+    Arrow cast back to the declared type must be exact."""
+    fields = [StructField(nm, df.schema[nm].dataType) for nm in names]
+    for ph, kname, arg_col, _ in agg_specs:
+        at = df.schema[arg_col].dataType if arg_col else None
+        fields.append(StructField(ph, _agg_out_type(kname, at)))
+    out_schema = StructType(fields + list(extra))
+    ints = [f.name for f in out_schema.fields
+            if isinstance(f.dataType, IntegralType)]
+    arg_cols = [c for _, _, c, _ in agg_specs if c is not None]
+    idx = [arg_cols.index(c) if c else None for _, _, c, _ in agg_specs]
+
+    def row(head, buf=None, accs=None) -> dict:
+        out = dict(head)
+        for k, (ph, kname, _, extra) in enumerate(agg_specs):
+            if accs is not None:
+                out[ph] = acc_result(kname, accs[k])
+            elif kname == "count_star":
+                out[ph] = len(buf)
+            else:
+                j = idx[k]
+                out[ph] = py_aggregate(
+                    kname, [None if j is None else t[j] for t in buf], extra)
+        for c in ints:
+            v = out.get(c)
+            if isinstance(v, float) and not math.isnan(v):
+                out[c] = int(v)
+        return out
+
+    return out_schema, row
 
 
 _QREF = __import__("re").compile(
@@ -518,7 +590,7 @@ def counting_window_stream(df: DataFrame, plan, ts_col: str | None) -> DataFrame
     stream/processor_data.go:383-418)."""
     from ..engine.batch import counting_key_sqls
 
-    n = plan.window.count
+    n_chunk = plan.window.count
     ttl_ms = state_ttl_ms(plan)
     src_cols = list(df.columns)
     df, names = _key_columns(df, plan)
@@ -529,79 +601,58 @@ def counting_window_stream(df: DataFrame, plan, ts_col: str | None) -> DataFrame
     df, agg_specs = _prep_agg_columns(df, plan)
     df = _prune_kernel_input(df, names, plan, ts_col)
 
-    fields = [StructField(nm, _field_type(df, nm)) for nm in names]
-    for ph, kname, arg_col, _ in agg_specs:
-        at = _field_type(df, arg_col) if arg_col else None
-        fields.append(StructField(ph, _agg_out_type(kname, at)))
     # opaque per-fire id (unique within a micro-batch): a chunk fire is
     # ONE reference sink batch — the per-emission tail (DISTINCT/ORDER
     # BY/LIMIT) partitions on it so two fires of the same key in one
     # trigger are never merged.  Deterministic (key + in-batch chunk
     # counter), dropped before the sink.
-    fields.append(StructField("__fire_id__", StringType()))
-    out_schema = StructType(fields)
-    int_phs = _int_out_phs(out_schema)
+    out_schema, agg_row = _agg_output(
+        df, names, agg_specs, [StructField("__fire_id__", StringType())])
+    out_names = out_schema.names
 
     arg_cols = [c for _, _, c, _ in agg_specs if c is not None]
     order = [ts_col] if ts_col and ts_col in df.columns else []
-    key_names = list(keys)
-    carry_names = list(carries)
-    ncarry = len(carry_names)
-    clean_by = _cleaners(df, carry_names + arg_cols)
+    read = carries + arg_cols
+    ncarry = len(carries)
+    clean_by = _cleaners(df, read + order)
 
     def kernel(key, pdf_iter, state):
-        import pandas as pd
-
         if state.hasTimedOut:
             state.remove()  # STATETTL idle-key reap
             return
-        pdf = _sorted_batch(pdf_iter, order)
+        n, cols = read_columns(pdf_iter, clean_by, order)
         buf = _load_state(state) or []
         rows_out = []
         fire_no = 0
-        if len(pdf):
-            vals = {c: pdf[c].tolist() for c in carry_names + arg_cols}
-            for i in range(len(pdf)):
-                buf.append(tuple(clean_by[c](vals[c][i])
-                                 for c in carry_names + arg_cols))
-                if len(buf) >= n:
-                    chunk = buf[:n]
-                    buf = buf[n:]
-                    # repr() is collision-free across composite string
-                    # keys (a plain '|'.join would merge ("x|y","z")
-                    # with ("x","y|z") into one fire); zero-padded seq
-                    # so the carrier's LEXICOGRAPHIC order matches fire
-                    # order past 10 fires/key/micro-batch
-                    fid = repr(tuple(key)) + f"#{fire_no:09d}"
-                    fire_no += 1
-                    # sub-group the fired chunk by the carried group
-                    # values (first-seen order, like the hash aggregator)
-                    groups: dict[tuple, list[tuple]] = {}
-                    for t in chunk:
-                        groups.setdefault(tuple(t[:ncarry]), []).append(t[ncarry:])
-                    for cvals, rows in groups.items():
-                        out = dict(zip(key_names, key))
-                        out.update(zip(carry_names, cvals))
-                        for ph, kname, arg_col, extra in agg_specs:
-                            if kname == "count_star":
-                                out[ph] = len(rows)
-                            else:
-                                idx = arg_cols.index(arg_col)
-                                out[ph] = py_aggregate(
-                                    kname, [t[idx] for t in rows], extra)
-                        _coerce_ints(out, int_phs)
-                        out["__fire_id__"] = fid
-                        rows_out.append(out)
+        vals = [cols[c] for c in read]
+        for t in zip(*vals) if vals else [()] * n:
+            buf.append(t)
+            if len(buf) >= n_chunk:
+                chunk = buf[:n_chunk]
+                buf = buf[n_chunk:]
+                # repr() is collision-free across composite string
+                # keys (a plain '|'.join would merge ("x|y","z")
+                # with ("x","y|z") into one fire); zero-padded seq
+                # so the carrier's LEXICOGRAPHIC order matches fire
+                # order past 10 fires/key/micro-batch
+                fid = repr(tuple(key)) + f"#{fire_no:09d}"
+                fire_no += 1
+                # sub-group the fired chunk by the carried group
+                # values (first-seen order, like the hash aggregator)
+                groups: dict[tuple, list[tuple]] = {}
+                for r in chunk:
+                    groups.setdefault(r[:ncarry], []).append(r[ncarry:])
+                for cvals, rows in groups.items():
+                    out = agg_row({**dict(zip(keys, key)),
+                                   **dict(zip(carries, cvals))}, buf=rows)
+                    out["__fire_id__"] = fid
+                    rows_out.append(out)
         _save_state(state, buf, ttl_ms)
         if rows_out:
-            yield pd.DataFrame(rows_out, columns=[f.name for f in out_schema.fields])
+            yield _egress(out_names, rows_out)
 
-    # keyless → a synthetic constant key; the output schema need not
-    # (and does not) include grouping columns
-    grouped = df.groupBy(*[F.col(k) for k in keys]) if keys \
-        else df.withColumn("__k__", F.lit(1)).groupBy("__k__")
-    return grouped.applyInPandasWithState(
-        kernel, out_schema, _STATE_SCHEMA, "append", _timeout_conf(ttl_ms))
+    return _apply_per_key(df, keys, kernel, out_schema, "append",
+                          _timeout_conf(ttl_ms))
 
 
 # --------------------------------------------------------------- lateness
@@ -670,25 +721,19 @@ def lateness_window_stream(df: DataFrame, plan, ts_col: str) -> DataFrame:
     df = _prune_kernel_input(df, names, plan, ts_col,
                              extra=("__slot__", ts_ms_col))
 
-    fields = [StructField(nm, _field_type(df, nm)) for nm in names]
-    for ph, kname, arg_col, _ in agg_specs:
-        at = _field_type(df, arg_col) if arg_col else None
-        fields.append(StructField(ph, _agg_out_type(kname, at)))
-    fields.append(StructField(WINDOW_START_COL, TimestampType()))
-    fields.append(StructField(WINDOW_END_COL, TimestampType()))
-    fields.append(StructField("window_id", StringType()))
-    out_schema = StructType(fields)
-    int_phs = _int_out_phs(out_schema)
+    out_schema, agg_row = _agg_output(
+        df, names, agg_specs,
+        [StructField(WINDOW_START_COL, TimestampType()),
+         StructField(WINDOW_END_COL, TimestampType()),
+         StructField("window_id", StringType())])
+    out_names = out_schema.names
 
     arg_cols = [c for _, _, c, _ in agg_specs if c is not None]
-    key_names = list(names)
     algebraic = all(kname in ALGEBRAIC_AGGS for _, kname, _, _ in agg_specs)
-    clean_by = _cleaners(df, arg_cols)
+    clean_by = _cleaners(df, [*arg_cols, "__slot__", ts_ms_col])
 
     def kernel(key, pdf_iter, state):
         from datetime import datetime, timezone
-
-        import pandas as pd
 
         # Spark watermark = max_ts − (MOO + lateness) = the reference's
         # lateness drop horizon; the reference watermark (max_ts − MOO)
@@ -715,59 +760,48 @@ def lateness_window_stream(df: DataFrame, plan, ts_col: str) -> DataFrame:
         # snapshotData (tumbling_window.go:617-674).
         slots = blob
         touched = set()
-        # the kernel is only invoked for keys present in the batch — an
-        # event-time timeout at the next fire/purge point wakes idle
-        # keys when the watermark alone advances past it
-        pdf = pd.DataFrame() if state.hasTimedOut \
-            else _sorted_batch(pdf_iter, [ts_ms_col])
-        if len(pdf):
-            vals = {c: pdf[c].tolist()
-                    for c in arg_cols + ["__slot__", ts_ms_col]}
-            for i in range(len(pdf)):
-                ts_v = _clean(vals[ts_ms_col][i])
-                if ts_v is None:
-                    # NULL event time can't be windowed: drop, never
-                    # int(NaN)-crash the query (the same null-row drop
-                    # every time-window path applies)
-                    continue
-                if wm > 0 and int(ts_v) < wm:
-                    # beyond the lateness horizon (IsEventTimeLate,
-                    # window/watermark.go:199-213): dropped, no
-                    # re-emission — arbitrary stateful ops don't get
-                    # Spark's automatic late-row filter, so enforce it
-                    continue
-                slot = int(vals["__slot__"][i])
-                if algebraic:
-                    ent = slots.setdefault(
-                        slot, [False, [acc_new() for _ in agg_specs]])
-                    for k, (ph, kname, arg_col, extra) in enumerate(agg_specs):
-                        v = _clean(vals[arg_col][i]) if arg_col else None
-                        acc_update(ent[1][k], v)
-                else:
-                    ent = slots.setdefault(slot, [False, []])
-                    ent[1].append(tuple(clean_by[c](vals[c][i])
-                                        for c in arg_cols))
-                touched.add(slot)
+        # the kernel is only invoked for keys present in the batch (a
+        # timed-out call gets no rows) — an event-time timeout at the
+        # next fire/purge point wakes idle keys when the watermark alone
+        # advances past it
+        n, cols = read_columns(pdf_iter, clean_by, [ts_ms_col])
+        ts_l, slot_l = cols[ts_ms_col], cols["__slot__"]
+        args = [cols[c] for c in arg_cols]
+        for i in range(n):
+            ts_v = ts_l[i]
+            if ts_v is None:
+                # NULL event time can't be windowed: drop, never
+                # int(NaN)-crash the query (the same null-row drop
+                # every time-window path applies)
+                continue
+            if wm > 0 and ts_v < wm:
+                # beyond the lateness horizon (IsEventTimeLate,
+                # window/watermark.go:199-213): dropped, no
+                # re-emission — arbitrary stateful ops don't get
+                # Spark's automatic late-row filter, so enforce it
+                continue
+            slot = slot_l[i]
+            if algebraic:
+                ent = slots.setdefault(
+                    slot, [False, [acc_new() for _ in agg_specs]])
+                for k, (_, _, arg_col, _) in enumerate(agg_specs):
+                    acc_update(ent[1][k], cols[arg_col][i] if arg_col else None)
+            else:
+                ent = slots.setdefault(slot, [False, []])
+                ent[1].append(tuple(a[i] for a in args))
+            touched.add(slot)
         rows_out = []
 
         def emit(slot, ent):
-            out = dict(zip(key_names, key))
-            for k, (ph, kname, arg_col, extra) in enumerate(agg_specs):
-                if algebraic:
-                    out[ph] = acc_result(kname, ent[1][k])
-                elif kname == "count_star":
-                    out[ph] = len(ent[1])
-                else:
-                    idx = arg_cols.index(arg_col)
-                    out[ph] = py_aggregate(
-                        kname, [t[idx] for t in ent[1]], extra)
+            head = zip(names, key)
+            out = agg_row(head, accs=ent[1]) if algebraic \
+                else agg_row(head, buf=ent[1])
             end = slot + size_ms
             out[WINDOW_START_COL] = datetime.fromtimestamp(
                 slot / 1000, tz=timezone.utc).replace(tzinfo=None)
             out[WINDOW_END_COL] = datetime.fromtimestamp(
                 end / 1000, tz=timezone.utc).replace(tzinfo=None)
             out["window_id"] = f"{slot * 1_000_000}_{end * 1_000_000}"
-            _coerce_ints(out, int_phs)
             rows_out.append(out)
 
         for slot in sorted(slots):
@@ -800,13 +834,10 @@ def lateness_window_stream(df: DataFrame, plan, ts_col: str) -> DataFrame:
         else:
             state.remove()
         if rows_out:
-            yield pd.DataFrame(rows_out,
-                               columns=[f.name for f in out_schema.fields])
+            yield _egress(out_names, rows_out)
 
-    grouped = df.groupBy(*[F.col(k) for k in key_names]) if key_names \
-        else df.withColumn("__k__", F.lit(1)).groupBy("__k__")
-    return grouped.applyInPandasWithState(
-        kernel, out_schema, _STATE_SCHEMA, "update",
+    return _apply_per_key(
+        df, names, kernel, out_schema, "update",
         "ProcessingTimeTimeout" if idle_ms is not None else "EventTimeTimeout")
 
 
@@ -833,36 +864,29 @@ def global_window_stream(df: DataFrame, plan, ts_col: str | None) -> DataFrame:
     df = _prune_kernel_input(df, keys, plan, ts_col,
                              extra=[c for _, _, c in trig_cols if c])
 
-    fields = [StructField(k, _field_type(df, k)) for k in keys]
-    for ph, kname, arg_col, _ in agg_specs:
-        at = _field_type(df, arg_col) if arg_col else None
-        fields.append(StructField(ph, _agg_out_type(kname, at)))
     # per-fire id: each trigger hit is one reference sink batch (see
     # counting kernel) — two fires of one key in a micro-batch must
     # stay distinct through the per-emission DISTINCT/LIMIT tail
-    fields.append(StructField("__fire_id__", StringType()))
-    out_schema = StructType(fields)
-    int_phs = _int_out_phs(out_schema)
+    out_schema, agg_row = _agg_output(
+        df, keys, agg_specs, [StructField("__fire_id__", StringType())])
+    out_names = out_schema.names
 
     arg_cols = [c for _, _, c, _ in agg_specs if c is not None]
     read_cols = sorted({*arg_cols, *[c for _, _, c in trig_cols if c]})
     order = [ts_col] if ts_col and ts_col in df.columns else []
-    key_names = list(keys)
     # all-algebraic output aggregates → O(1) partials per key instead of
     # buffering every row until the trigger fires (a global window is
     # unbounded by definition — constant state is the scale-safe shape);
     # holistic aggregates keep the buffer, like the reference's window
     # data (window/global_window.go:49-731)
     algebraic = all(kname in ALGEBRAIC_AGGS for _, kname, _, _ in agg_specs)
-    clean_by = _cleaners(df, arg_cols)
+    clean_by = _cleaners(df, read_cols + order)
 
     def kernel(key, pdf_iter, state):
-        import pandas as pd
-
         if state.hasTimedOut:
             state.remove()  # STATETTL idle-key reap
             return
-        pdf = _sorted_batch(pdf_iter, order)
+        n, cols = read_columns(pdf_iter, clean_by, order)
         if algebraic:
             st = _load_state(state) or {
                 "accs": [acc_new() for _ in agg_specs],
@@ -882,73 +906,59 @@ def global_window_stream(df: DataFrame, plan, ts_col: str | None) -> DataFrame:
             _trigger_code_cache[code_src] = code
         rows_out = []
         fire_no = 0
-        if len(pdf):
-            vals = {c: pdf[c].tolist() for c in read_cols}
-            for i in range(len(pdf)):
-                if algebraic:
-                    for k, (ph, kname, arg_col, extra) in enumerate(agg_specs):
-                        v = _clean(vals[arg_col][i]) if arg_col else None
-                        acc_update(accs[k], v)
-                else:
-                    buf.append(tuple(clean_by[c](vals[c][i]) if c else None
-                                     for c in arg_cols))
-                env = {}
-                for var, fname, argc in trig_cols:
-                    v = _clean(vals[argc][i]) if argc else None
-                    if fname == "count":
-                        counts[var] = counts.get(var, 0) + (
-                            1 if argc is None or v is not None else 0)
-                        env[var] = counts[var]
-                        continue
-                    if v is not None:
-                        if fname == "sum":
-                            tstate[var] = (tstate.get(var) or 0) + v
-                        elif fname == "min":
-                            tstate[var] = v if var not in tstate else min(tstate[var], v)
-                        elif fname == "max":
-                            tstate[var] = v if var not in tstate else max(tstate[var], v)
-                        elif fname == "avg":
-                            s, c = tstate.get(var, (0.0, 0))
-                            tstate[var] = (s + v, c + 1)
-                    if fname == "avg":
+        args = [cols[c] for c in arg_cols]
+        for i in range(n):
+            if algebraic:
+                for k, (_, _, arg_col, _) in enumerate(agg_specs):
+                    acc_update(accs[k], cols[arg_col][i] if arg_col else None)
+            else:
+                buf.append(tuple(a[i] for a in args))
+            env = {}
+            for var, fname, argc in trig_cols:
+                v = cols[argc][i] if argc else None
+                if fname == "count":
+                    counts[var] = counts.get(var, 0) + (
+                        1 if argc is None or v is not None else 0)
+                    env[var] = counts[var]
+                    continue
+                if v is not None:
+                    if fname == "sum":
+                        tstate[var] = (tstate.get(var) or 0) + v
+                    elif fname == "min":
+                        tstate[var] = v if var not in tstate else min(tstate[var], v)
+                    elif fname == "max":
+                        tstate[var] = v if var not in tstate else max(tstate[var], v)
+                    elif fname == "avg":
                         s, c = tstate.get(var, (0.0, 0))
-                        env[var] = (s / c) if c else None
-                    else:
-                        env[var] = tstate.get(var)
-                try:
-                    fired = bool(eval(code, {"__builtins__": {}}, env))
-                except (TypeError, ZeroDivisionError):
-                    # None in comparison / div-by-zero aggregate state:
-                    # the trigger is simply not fired — a predicate
-                    # arithmetic error must never kill the query
-                    fired = False
-                if fired:
-                    out = dict(zip(key_names, key))
-                    if algebraic:
-                        for k, (ph, kname, arg_col, extra) in enumerate(agg_specs):
-                            out[ph] = acc_result(kname, accs[k])
-                        for k in range(len(accs)):
-                            accs[k] = acc_new()
-                    else:
-                        for ph, kname, arg_col, extra in agg_specs:
-                            if arg_col is None:
-                                out[ph] = len(buf) if kname == "count_star" \
-                                    else py_aggregate(
-                                        kname, [None] * len(buf), extra)
-                            else:
-                                idx = arg_cols.index(arg_col)
-                                out[ph] = py_aggregate(
-                                    kname, [t[idx] for t in buf], extra)
-                        buf.clear()
-                    _coerce_ints(out, int_phs)
-                    # repr(): collision-free across composite keys;
-                    # zero-padded seq keeps lexicographic = fire order
-                    out["__fire_id__"] = \
-                        repr(tuple(key)) + f"#{fire_no:09d}"
-                    fire_no += 1
-                    rows_out.append(out)
-                    tstate.clear()
-                    counts.clear()
+                        tstate[var] = (s + v, c + 1)
+                if fname == "avg":
+                    s, c = tstate.get(var, (0.0, 0))
+                    env[var] = (s / c) if c else None
+                else:
+                    env[var] = tstate.get(var)
+            try:
+                fired = bool(eval(code, {"__builtins__": {}}, env))
+            except (TypeError, ZeroDivisionError):
+                # None in comparison / div-by-zero aggregate state:
+                # the trigger is simply not fired — a predicate
+                # arithmetic error must never kill the query
+                fired = False
+            if fired:
+                head = zip(keys, key)
+                if algebraic:
+                    out = agg_row(head, accs=accs)
+                    for k in range(len(accs)):
+                        accs[k] = acc_new()
+                else:
+                    out = agg_row(head, buf=buf)
+                    buf.clear()
+                # repr(): collision-free across composite keys;
+                # zero-padded seq keeps lexicographic = fire order
+                out["__fire_id__"] = repr(tuple(key)) + f"#{fire_no:09d}"
+                fire_no += 1
+                rows_out.append(out)
+                tstate.clear()
+                counts.clear()
         if algebraic:
             _save_state(state, {"accs": accs, "trig": tstate,
                                 "counts": counts}, ttl_ms)
@@ -956,14 +966,10 @@ def global_window_stream(df: DataFrame, plan, ts_col: str | None) -> DataFrame:
             _save_state(state, {"buf": buf, "trig": tstate,
                                 "counts": counts}, ttl_ms)
         if rows_out:
-            yield pd.DataFrame(rows_out, columns=[f.name for f in out_schema.fields])
+            yield _egress(out_names, rows_out)
 
-    # keyless → a synthetic constant key; the output schema need not
-    # (and does not) include grouping columns
-    grouped = df.groupBy(*[F.col(k) for k in keys]) if keys \
-        else df.withColumn("__k__", F.lit(1)).groupBy("__k__")
-    return grouped.applyInPandasWithState(
-        kernel, out_schema, _STATE_SCHEMA, "append", _timeout_conf(ttl_ms))
+    return _apply_per_key(df, keys, kernel, out_schema, "append",
+                          _timeout_conf(ttl_ms))
 
 
 # -------------------------------------------------------------- analytics
@@ -1319,12 +1325,6 @@ def _analytic_type(p, schema: StructType) -> DataType:
     return at or DoubleType()
 
 
-def read_analytic_columns(pdf, clean: dict) -> dict:
-    """The columns the row loop reads, from an Arrow-fed pandas frame,
-    each through its cleaner (NaN -> None, integral/map restoration)."""
-    return {c: list(map(f, pdf[c].tolist())) for c, f in clean.items()}
-
-
 def step_analytic_rows(specs, cols: dict, states: list) -> dict:
     """The one row-step loop of the Spark-fed analytic routes: row ``i``
     steps every spec, in order, against ``states[i]`` (a ``{ph: state}``
@@ -1371,34 +1371,30 @@ def analytic_stream(df: DataFrame, plan, ts_col: str | None) -> DataFrame:
                 "analytic kernel per streaming query; split the query, "
                 "or use the batch/emit paths (which support mixed "
                 "partition keys)")
-    df, prep, _, clean = analytic_inputs(df, specs, plan)
+    df, prep, _, _ = analytic_inputs(df, specs, plan)
     key_cols = prep[0]["keys"] if prep else []
     out_schema = StructType(list(df.schema.fields)
                             + [StructField(p["ph"], p["type"]) for p in prep])
-    out_names = [f.name for f in out_schema.fields]
+    out_names = out_schema.names
     order = [ts_col] if ts_col and ts_col in df.columns else []
+    # every input column passes through to the output
+    clean_by = _cleaners(df, df.columns)
 
     def kernel(key, pdf_iter, state):
         if state.hasTimedOut:
             state.remove()  # STATETTL idle-key reap
             return
-        pdf = _sorted_batch(pdf_iter, order)
+        n, cols = read_columns(pdf_iter, clean_by, order)
         st = _load_state(state) or {}
-        if len(pdf):
-            outs = step_analytic_rows(prep, read_analytic_columns(pdf, clean),
-                                      [st] * len(pdf))
+        if n:
+            cols.update(step_analytic_rows(prep, cols, [st] * n))
         _save_state(state, st, ttl_ms)
-        if len(pdf):
-            for ph, col in outs.items():
-                pdf[ph] = col
-            yield pdf[out_names]
+        if n:
+            yield _egress(out_names,
+                          list(zip(*(cols[c] for c in out_names))))
 
-    # keyless → a synthetic constant key; the output schema need not
-    # (and does not) include grouping columns
-    grouped = df.groupBy(*[F.col(c) for c in key_cols]) if key_cols \
-        else df.withColumn("__k__", F.lit(1)).groupBy("__k__")
-    return grouped.applyInPandasWithState(
-        kernel, out_schema, _STATE_SCHEMA, "append", _timeout_conf(ttl_ms))
+    return _apply_per_key(df, key_cols, kernel, out_schema, "append",
+                          _timeout_conf(ttl_ms))
 
 
 # -------------------------------------------------------------------- CEP
@@ -1414,7 +1410,9 @@ def make_cep_step(plan, df: DataFrame):
     """The streaming MATCH_RECOGNIZE kernel's one state step, built once
     per query: returns ``(step, parts)`` with ``parts`` from
     ``build_cep_parts`` and ``step(key, st, new_rows, flush) -> (outs,
-    st')`` over the per-key state ``{"rows", "mn", "ctx", "wm"}``.
+    st')`` over the per-key state ``{"rows", "mn", "ctx", "wm"}``;
+    ``new_rows`` are row dicts of plain Python values in ORDER BY order
+    (:func:`read_columns` output in the streaming kernel).
 
     A normal trigger calls it with ``flush=False``: new rows join the
     buffer, the batch matcher's drive runs incrementally and emits every
@@ -1486,12 +1484,6 @@ def make_cep_step(plan, df: DataFrame):
     # the per-query pattern analysis every key's Matcher shares
     shape = MatchShape(spec, nav_cap)
 
-    # typed cleaners: the buffered row dicts feed DEFINE/MEASURES
-    # evaluation, so an int column must not arrive as 5 from one
-    # micro-batch and 5.0 from another (pandas null-coercion is
-    # chunk-dependent) — same split-invariance fix as the window
-    # kernels' buffer ingestion
-    cep_clean_by = _cleaners(df, list(df.columns))
     if ts_is_time:
         w, moo = within, moo_s
     else:
@@ -1513,9 +1505,7 @@ def make_cep_step(plan, df: DataFrame):
         rows, mn, wm = st["rows"][ctx_n:], st["mn"], st.get("wm")
         if new_rows:
             n_pending = len(rows)
-            for r in new_rows:
-                rows.append({k: cep_clean_by.get(k, _clean)(v)
-                             for k, v in r.items()})
+            rows += new_rows
             if moo_s:
                 # a NULL event time cannot be ordered against the
                 # horizon — drop BEFORE the reorder (a null inside the
@@ -1606,25 +1596,28 @@ def cep_stream(spark, plan, df: DataFrame):
     ttl_ms = state_ttl_ms(plan)
     step, parts = make_cep_step(plan, df)
     df, part_names = parts["df"], parts["part_names"]
-    out_schema, order_cols = parts["out_schema"], parts["order_cols"]
-    columns = [f.name for f in out_schema.fields]
+    out_schema = parts["out_schema"]
+    columns = out_schema.names
+    # typed cleaners: the buffered row dicts feed DEFINE/MEASURES
+    # evaluation, so an int column must not arrive as 5 from one
+    # micro-batch and 5.0 from another (pandas null-coercion is
+    # chunk-dependent)
+    clean_by = _cleaners(df, df.columns)
+    order = [c for c in parts["order_cols"] if c in clean_by]
 
     def kernel(key, pdf_iter, state):
-        import pandas as pd
-
         st = _load_state(state) or {"rows": [], "mn": 0}
         if state.hasTimedOut:
             # STATETTL idle-key reap = this key's Engine.Flush()
             outs, _ = step(key, st, [], flush=True)
             state.remove()
         else:
-            pdf = _sorted_batch(pdf_iter, order_cols)
-            outs, st = step(key, st, pdf.to_dict("records"), flush=False)
+            _, cols = read_columns(pdf_iter, clean_by, order)
+            rows = [dict(zip(cols, t)) for t in zip(*cols.values())]
+            outs, st = step(key, st, rows, flush=False)
             _save_state(state, st, ttl_ms)
         if outs:
-            yield pd.DataFrame(outs, columns=columns)
+            yield _egress(columns, outs)
 
-    grouped = df.groupBy(*[F.col(c) for c in part_names]) if part_names \
-        else df.withColumn("__g__", F.lit(1)).groupBy("__g__")
-    return grouped.applyInPandasWithState(
-        kernel, out_schema, _STATE_SCHEMA, "append", _timeout_conf(ttl_ms))
+    return _apply_per_key(df, part_names, kernel, out_schema, "append",
+                          _timeout_conf(ttl_ms))

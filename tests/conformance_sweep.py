@@ -144,7 +144,11 @@ def _split_statements(text: str):
 
 
 def extract_corpus(ref: str = REF):
-    """-> list[(file, statement)] — deduplicated, order-stable."""
+    """-> list[(file, statement)] — deduplicated, order-stable.  A
+    missing ``ref`` raises FileNotFoundError: walking it would yield an
+    empty corpus that reads as a vacuous pass."""
+    if not os.path.isdir(ref):
+        raise FileNotFoundError(f"reference corpus not found: {ref}")
     seen, out = set(), []
     for root, dirs, files in os.walk(ref):
         dirs[:] = [d for d in dirs if not d.startswith(".")]

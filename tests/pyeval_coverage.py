@@ -141,7 +141,10 @@ def _is_error_shaped(stmt) -> bool:
 
 def main() -> None:
     _register_reference_fixture_udfs()
-    planned, _, _ = run_sweep()
+    try:
+        planned, _, _ = run_sweep()
+    except FileNotFoundError as e:
+        sys.exit(f"pyeval coverage: the corpus is missing ({e})")
     shape = Counter()
     miss = Counter()
     compiled = direct = error_shaped = 0

@@ -145,6 +145,16 @@ def test_full_reference_corpus_sweep():
         f"plan rate regressed: {len(planned)} < 732")
 
 
+def test_extract_corpus_raises_on_missing_directory(tmp_path):
+    """A missing corpus is an error, not an empty corpus: the coverage
+    report printed a vacuous ``0/0`` from one."""
+    from conformance_sweep import extract_corpus
+
+    missing = tmp_path / "no-such-corpus"
+    with pytest.raises(FileNotFoundError, match=str(missing)):
+        extract_corpus(str(missing))
+
+
 # --------------------------------------------- whitelist anti-drift (r8)
 # run_sweep() asserts every non-planning statement matches a whitelisted
 # class, but nothing stopped a grammar WIDENING from silently accepting
