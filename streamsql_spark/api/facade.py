@@ -25,7 +25,7 @@ from pyspark.sql import types as _T
 
 from ..dialect import nodes as N
 from ..dialect.parser import parse
-from ..dialect.pyeval import _I64_MAX, _I64_MIN, Fallback, _bool3
+from ..dialect.pyeval import Fallback, _bool3
 from ..dialect.planner import PlanError, plan as make_plan
 from ..engine.batch import BatchExecutor, ExecError
 from ..functions.registry import register_function as _register_function
@@ -153,6 +153,8 @@ _AN_SCALARS = frozenset((str, float, int, bool, type(None)))
 def _key_fn(parts):
     """Partition-key tuple of a row from the compiled PARTITION BY
     expressions."""
+    if not parts:
+        return lambda row: ()
     if len(parts) == 1:
         p0 = parts[0]
         return lambda row: (p0(row),)
@@ -161,10 +163,16 @@ def _key_fn(parts):
 
 def _argv_fn(args):
     """Argument list of a row from ``('lit', value)`` constants and
-    ``('fn', closure)`` expressions."""
+    ``('fn', closure)`` expressions, specialised for the one-column and
+    (literal, column) shapes (``lag(x)``, ``had_changed(true, x)``).
+    Every call builds a new list: a custom state's ``apply`` may keep
+    the one it is handed."""
     if len(args) == 1 and args[0][0] == "fn":
         a0 = args[0][1]
         return lambda row: [a0(row)]
+    if len(args) == 2 and args[0][0] == "lit" and args[1][0] == "fn":
+        (_, x0), (_, x1) = args
+        return lambda row: [x0, x1(row)]
     return lambda row: [x(row) if k == "fn" else x for k, x in args]
 
 
@@ -250,6 +258,12 @@ class StreamSQL:
         self._metrics = {"input": 0, "input_dropped": 0, "output": 0,
                          "schema_dropped": 0, "stream_out_exact": 0}
         self._queries: list = []  # StreamingQueries started by start_stream
+        # emit_sync's per-statement route (_bind_sync) and the per-event
+        # analytic state both of its analytic routes step, keyed
+        # (placeholder, partition key)
+        self._sync_bound = False
+        self._sync_py = None
+        self._an_states: dict = {}
 
     # ------------------------------------------------------------ compile
     def execute(self, sql: str) -> "StreamSQL":
@@ -1372,12 +1386,23 @@ class StreamSQL:
         (dialect/pyeval.py); _NOT_APPLICABLE when the query shape or
         this event's value types fall outside it (the Spark paths
         remain the semantics oracle and take over)."""
+        fn = self._direct_py()
+        if fn is None or not row:
+            return _NOT_APPLICABLE
+        try:
+            return fn(row)
+        except Fallback:
+            return _NOT_APPLICABLE
+
+    def _direct_py(self):
+        """The statement's compiled pyeval evaluator
+        (``pyeval.compile_direct``), or None when the plain direct path
+        is outside pyeval's subset."""
         cached = getattr(self, "_pyeval_ready", None)
         if cached is None:
             # the gate is a pure function of the compiled plan + the
             # declared schema — decide ONCE, not per event
-            from ..dialect.pyeval import (Fallback, compile_direct,
-                                          set_session_tz)
+            from ..dialect.pyeval import compile_direct, set_session_tz
             try:
                 set_session_tz(self.spark.conf.get(
                     "spark.sql.session.timeZone"))
@@ -1395,19 +1420,7 @@ class StreamSQL:
                 fn = (compile_direct(self._stmt)
                       if self._stmt is not None else None)
             cached = self._pyeval_ready = (fn, Fallback)
-        fn, Fallback = cached
-        if fn is None or not row:
-            return _NOT_APPLICABLE
-        for v in row.values():
-            if type(v) is int and not _I64_MIN <= v <= _I64_MAX:
-                # no Spark path ingests a field past BIGINT, so the
-                # python path answers no such event either — also when
-                # the statement never reads that field
-                return _NOT_APPLICABLE
-        try:
-            return fn(row)
-        except Fallback:
-            return _NOT_APPLICABLE
+        return cached[0]
 
     def _emit_sync_fast(self, row: dict):
         """One-shot templated evaluation of the plain direct path:
@@ -1608,8 +1621,37 @@ class StreamSQL:
         """Synchronous direct-path execution (streamsql.go:262-282).
 
         Returns the projected row, or None when filtered out.  Analytic
-        state persists across calls via history replay.
+        state persists across calls.  The first event binds the
+        statement's route (:meth:`_bind_sync`); from then on an event
+        with a bound evaluator goes straight to :meth:`_emit_sync_bound`,
+        and before the binding, or with no evaluator,
+        :meth:`_emit_sync_routed` checks it first.
         """
+        if self._sync_py is None or not row:
+            return self._emit_sync_routed(row)
+        # bound only with no declared schema (_bind_sync): no schema gate
+        self._metrics["input"] += 1
+        return self._emit_sync_bound(row)
+
+    def _bind_sync(self) -> None:
+        """Bind, once per statement, what emit_sync would otherwise
+        decide per event: with a compiled pyeval route (analytic or
+        direct), ``_sync_py`` is that route's evaluator — ``row -> dict
+        | None``, raising Fallback for an event the Spark route must
+        answer.  Both compilers refuse a statement with a declared
+        schema (its typed CASTs and its schema gate belong to Spark), so
+        the bound route never skips a schema check."""
+        self._sync_bound = True
+        if self._plan.analytics:
+            if not hasattr(self, "_an_py"):
+                self._an_py = self._compile_analytic_python()
+            self._sync_py = self._an_py
+        else:
+            self._sync_py = self._direct_py()
+
+    def _emit_sync_routed(self, row: dict) -> dict | None:
+        """emit_sync before the route is bound, or for an event the
+        bound route does not take (None or empty)."""
         if getattr(self, "_star_pending", False):
             if row is None:
                 raise ValueError("emit_sync expects a dict event, got None")
@@ -1630,13 +1672,29 @@ class StreamSQL:
             # the row in SchemaDropped (streamsql.go:275-280)
             self._metrics["schema_dropped"] += 1
             raise ValueError(f"schema validation failed: {viol}")
+        if not self._sync_bound:
+            self._bind_sync()
+        return self._emit_sync_bound(row)
+
+    def _emit_sync_bound(self, row: dict) -> dict | None:
+        """One checked event (``input`` counted): the bound pyeval
+        evaluator, else — no evaluator, an empty event, or a Fallback —
+        the Spark routes."""
+        py = self._sync_py
+        if py is None or not row:
+            return self._emit_sync_spark(row)
+        try:
+            out = py(row)
+        except Fallback:
+            return self._emit_sync_spark(row)
+        return None if out is None else self._deliver_sync(out)
+
+    def _emit_sync_spark(self, row: dict) -> dict | None:
+        """The Spark routes of an event pyeval does not answer (its
+        ``input`` already counted): the analytic kernel core, else the
+        templated VALUES evaluation, else a generic ``query()``."""
         if self._plan.analytics:
-            return self._emit_sync_analytic(row)
-        py = self._emit_sync_python(row)
-        if py is not _NOT_APPLICABLE:
-            if py is None:
-                return None
-            return self._deliver_sync(py)
+            return self._emit_sync_analytic_spark(row)
         fast = self._emit_sync_fast(row)
         if fast is not _NOT_APPLICABLE:
             if fast is None:
@@ -1675,12 +1733,17 @@ class StreamSQL:
             self._an_states.pop((ph, old), None)
 
     def _compile_analytic_python(self):
-        """One-time compilation of the analytic direct path into Python
-        closures (dialect/pyeval.py): per-spec partition keys, WHEN
-        gates, and argument expressions, plus the final projection with
-        analytic calls substituted by placeholder lookups.  Returns
-        None when anything falls outside the proven subset — the Spark
-        route then stays in charge."""
+        """One-time compilation of the analytic direct path into one
+        evaluator, ``row -> dict | None``, raising Fallback for an event
+        outside the proven subset: the SAME analytic steps
+        (streaming/stateful.ANALYTIC_STEPS) over keys, WHEN gates and
+        arguments compiled by dialect/pyeval.py — one key function per
+        distinct PARTITION BY — plus the final projection with analytic
+        calls substituted by placeholder lookups.  State lives in the
+        SAME ``_an_states`` store the Spark route uses, so a per-event
+        fallback keeps one continuous history.  Returns None when the
+        statement falls outside the subset — the Spark route then stays
+        in charge."""
         from ..dialect import nodes as N
         from ..dialect import pyeval
         from ..dialect.planner import _default_name
@@ -1688,7 +1751,7 @@ class StreamSQL:
         # every pyeval compile entry point must see the real session
         # zone BEFORE compiling: the _TZ_GATED gate and the _strict_ts
         # runtime tripwires key off it (the direct path sets it in
-        # _emit_sync_python; analytic plans never reach that code)
+        # _direct_py; analytic plans never reach that code)
         try:
             pyeval.set_session_tz(self.spark.conf.get(
                 "spark.sql.session.timeZone"))
@@ -1763,13 +1826,19 @@ class StreamSQL:
         from ..functions.registry import custom_analytic
         from ..streaming.stateful import (analytic_copier_for,
                                           analytic_step_for)
-        specs = []  # (ph, key fn, WHEN gate, argv fn, copier, step, p)
+        specs = []  # (ph, key index, WHEN gate, argv fn, copier, step, p)
+        key_fns = []  # one per distinct PARTITION BY, in first-use order
+        key_at: dict[str, int] = {}
         for s in plan.analytics:
             over = s.func.over
-            parts = [pyeval.compile_expr(p)
-                     for p in (over.partition_by if over else [])]
-            if any(p is None for p in parts):
-                return None
+            by = over.partition_by if over else []
+            ki = key_at.get(repr(by))
+            if ki is None:
+                parts = [pyeval.compile_expr(p) for p in by]
+                if any(p is None for p in parts):
+                    return None
+                ki = key_at[repr(by)] = len(key_fns)
+                key_fns.append(_key_fn(parts))
             when_f = None
             if over is not None and over.when is not None:
                 # when_ast has nested analytic calls pre-lifted to
@@ -1810,7 +1879,7 @@ class StreamSQL:
                     "acc_sum", "acc_count", "acc_min", "acc_max",
                     "acc_avg"):
                 return None  # fan-out/renderer-special fns: Spark path
-            specs.append((p["ph"], _key_fn(parts), when_f, _argv_fn(args),
+            specs.append((p["ph"], ki, when_f, _argv_fn(args),
                           analytic_copier_for(p), analytic_step_for(p), p))
         # reference omitEmpty (stream/stream.go:698-703): a SELECT of
         # solely bare change-detection fields suppresses the row when
@@ -1820,88 +1889,71 @@ class StreamSQL:
             and f.expr.name.lower() == "changed_col"
             for f in self._stmt.fields)
         from ..plans.plan import where_filters_first
-        return {"outs": outs, "where": where_f, "specs": specs,
-                "omit_empty": omit_empty,
-                "where_first": where_filters_first(plan)}
+        where_first = where_filters_first(plan)
+        states = self._an_states
+        # the LRU cap is the only reason to visit each slot on commit
+        touch = (None if self.analytic_max_partitions is None
+                 else self._touch_analytic_partition)
 
-    def _emit_sync_analytic_python(self, row: dict):
-        """In-process analytic per-event path: the SAME analytic steps
-        (streaming/stateful.ANALYTIC_STEPS) over python-evaluated keys/
-        gates/args — zero JVM round trips.  _NOT_APPLICABLE when the
-        query or this event's value types are outside the subset; state
-        lives in the SAME ``_an_states`` store the Spark route uses, so
-        a per-event fallback keeps one continuous history."""
-        if not hasattr(self, "_an_py"):
-            self._an_py = self._compile_analytic_python()
-        cp = self._an_py
-        if cp is None or not row:
-            return _NOT_APPLICABLE
-        for v in row.values():
-            if type(v) not in _AN_SCALARS and not _an_value_ok(v):
-                return _NOT_APPLICABLE
-        states = getattr(self, "_an_states", None)
-        if states is None:
-            states = self._an_states = {}
-        where = cp["where"]
-        try:
-            # step state on COPIES, commit only after the whole event
-            # evaluates: a Fallback anywhere hands the UNTOUCHED state
-            # to the Spark route, which then performs the one true step
-            if cp["where_first"] and where is not None:
-                # standard-SQL mode: the filter sees only raw columns;
-                # a rejected row never touches analytic state
-                if _bool3(where(dict(row))) is not True:
+        def run(row: dict):
+            for v in row.values():
+                if type(v) not in _AN_SCALARS and not _an_value_ok(v):
+                    raise Fallback()
+            try:
+                # step state on COPIES, commit only after the whole
+                # event evaluates: a Fallback anywhere hands the
+                # UNTOUCHED state to the Spark route, which then
+                # performs the one true step
+                if where_first and where_f is not None \
+                        and _bool3(where_f(dict(row))) is not True:
+                    # standard-SQL mode: the filter sees only raw
+                    # columns; a rejected row never touches state
                     return None
-            staged = []
-            ext = dict(row)
-            for ph, key_of, when_f, argv_of, copier, step, p in cp["specs"]:
-                slot = (ph, key_of(row))
-                # ext, not row: the gate may reference an earlier
-                # spec's placeholder (lifted WHEN had_changed(...))
-                gate = when_f is None or _bool3(when_f(ext)) is True
-                argv = argv_of(row)
-                st = copier(states.get(slot) or {})
-                ext[ph] = step(p, st, argv, gate)
-                staged.append((slot, st))
-            if where is not None and not cp["where_first"]:
-                # CDC mode (WHERE reads an analytic): state advanced
-                # BEFORE the filter, and stays advanced on rejection
-                if _bool3(where(ext)) is not True:
-                    self._commit_analytic(staged)
-                    return None
-            out = {name: fn(ext) for name, fn in cp["outs"]}
-        except Fallback:
-            return _NOT_APPLICABLE
-        except Exception:
-            # deepcopy of an exotic custom state (or a kernel surprise):
-            # stay on the Spark route for this query's events
-            self._an_py = None
-            return _NOT_APPLICABLE
-        self._commit_analytic(staged)
-        if cp["omit_empty"] and all(v is None for v in out.values()):
-            return None  # omitEmpty suppression — state already advanced
-        return out
+                keys = [key_of(row) for key_of in key_fns]
+                staged = {}
+                ext = dict(row)
+                for ph, ki, when_f, argv_of, copier, step, p in specs:
+                    slot = (ph, keys[ki])
+                    # ext, not row: the gate may reference an earlier
+                    # spec's placeholder (lifted WHEN had_changed(...))
+                    gate = when_f is None or _bool3(when_f(ext)) is True
+                    argv = argv_of(row)
+                    st = copier(states.get(slot) or {})
+                    ext[ph] = step(p, st, argv, gate)
+                    staged[slot] = st
+                if where_f is not None and not where_first \
+                        and _bool3(where_f(ext)) is not True:
+                    # CDC mode (WHERE reads an analytic): state advanced
+                    # BEFORE the filter, and stays advanced on rejection
+                    out = None
+                else:
+                    out = {name: fn(ext) for name, fn in outs}
+            except Fallback:
+                raise
+            except Exception:
+                # deepcopy of an exotic custom state (or a kernel
+                # surprise): stay on the Spark route for this query's
+                # events
+                self._an_py = self._sync_py = None
+                raise Fallback()
+            if touch is not None:
+                for slot in staged:
+                    touch(*slot)
+            states.update(staged)
+            if out is not None and omit_empty \
+                    and all(v is None for v in out.values()):
+                return None  # omitEmpty suppression — state advanced
+            return out
+        return run
 
-    def _commit_analytic(self, staged: list) -> None:
-        """Store an event's stepped states."""
-        for slot, st in staged:
-            self._touch_analytic_partition(*slot)
-            self._an_states[slot] = st
-
-    def _emit_sync_analytic(self, row: dict) -> dict | None:
+    def _emit_sync_analytic_spark(self, row: dict) -> dict | None:
         """Per-event analytic evaluation in O(1) state (the reference's
-        streamTransform direct path, stream/analytic.go:125-234): the
-        in-process pyeval route, else the streaming kernel's core
+        streamTransform direct path, stream/analytic.go:125-234) when
+        pyeval does not answer the event: the streaming kernel's core
         (``analytic_inputs`` + ``step_analytic_rows``) run locally —
         Spark evaluates the single row's keys, gates and arguments, the
         SAME steps advance the state kept per (placeholder,
-        OVER(PARTITION BY ...) values).  (Replaces a full history replay
-        per event — O(n²) over the stream.)"""
-        py = self._emit_sync_analytic_python(row)
-        if py is not _NOT_APPLICABLE:
-            if py is None:
-                return None
-            return self._deliver_sync(py)
+        OVER(PARTITION BY ...) values)."""
         from dataclasses import replace
 
         from pyspark.sql import functions as F
@@ -1966,8 +2018,6 @@ class StreamSQL:
 
         # one state step per surviving (possibly join-fanned-out) row,
         # over the collected python values
-        if not hasattr(self, "_an_states"):
-            self._an_states: dict = {}
         rows2 = [row_to_dict(r) for r in collected]
         states = []
         for d in rows2:

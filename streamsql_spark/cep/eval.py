@@ -20,6 +20,7 @@ import math
 from decimal import ROUND_HALF_UP, Decimal
 
 from ..dialect import nodes as N
+from ..dialect.pyeval import POW10_EXACT, half_up_double
 
 _NAV_FUNCS = {"prev", "next", "first", "last"}
 _AGG_FUNCS = {"sum", "avg", "count", "min", "max"}
@@ -124,9 +125,10 @@ def _round_half_up(x, n=0):
     Like Spark's Round, an int keeps its integral type at any scale and
     rounds exactly (a float detour loses digits past 2^53), overflowing
     BIGINT as Spark's ANSI mode does; a double rounds its shortest repr.
-    pyeval._round_to answers the same values, but hands the ones it
-    cannot reach (past ~1e26) to the Spark path — this evaluator has
-    none, so it must answer every double."""
+    The double fast path is pyeval's :func:`half_up_double`;
+    pyeval._round_to hands what Decimal cannot reach (past ~1e26) to
+    the Spark path — this evaluator has none, so it must answer every
+    double."""
     n = int(n)
     if isinstance(x, int) and not isinstance(x, bool):
         if n >= 0:
@@ -144,6 +146,10 @@ def _round_half_up(x, n=0):
         # Decimal.quantize would raise InvalidOperation and kill the
         # whole Spark task
         return xf
+    if 0 <= n < len(POW10_EXACT):
+        r = half_up_double(xf, POW10_EXACT[n])
+        if r is not None:
+            return r
     d = Decimal(repr(xf))
     if d.as_tuple().exponent >= -n:
         # no digit below the scale: nothing to round (and quantizing

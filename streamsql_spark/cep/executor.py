@@ -443,7 +443,10 @@ def execute_cep(spark: SparkSession, plan, source_df: DataFrame, executor) -> Da
         n = len(pdf)
         pre_full = None
         if pre_cols:
-            pre_full = {sym: pdf[c].fillna(False).to_numpy(dtype=bool)
+            # NULL classifies as False; na_value maps it without the
+            # object-dtype downcast fillna(False) does (deprecated in
+            # pandas 2.2)
+            pre_full = {sym: pdf[c].to_numpy(dtype=bool, na_value=False)
                         for sym, c in pre_cols.items()}
             pdf = pdf.drop(columns=list(pre_cols.values()))
         if ts_is_time:

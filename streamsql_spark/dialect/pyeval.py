@@ -46,7 +46,12 @@ compile time, so an event pays only for its own values:
   straight to the raw Python operator;
 - a CASE whose THEN/ELSE values are all literals checks their type
   class once and evaluates only its conditions per event;
-- ``round(x, d)`` builds its Decimal quantizer once.
+- ``round(x, d)`` binds its scale once and rounds a double exactly in
+  float arithmetic (:func:`half_up_double`); only near-ties (a fraction
+  within 1e-15·|x·10^d| of .5, so every |x·10^d| >= 5e14) and negative
+  scales build a Decimal;
+- ``compile_direct``'s evaluator is the whole per-event work of a plain
+  statement: ``StreamSQL.emit_sync`` binds it once and calls it directly.
 """
 
 from __future__ import annotations
@@ -295,11 +300,43 @@ def _like_regex(pattern: str) -> "re.Pattern | None":
     return re.compile("^" + "".join(out) + r"\Z", re.DOTALL)
 
 
+# 10**d for the scales half_up_double answers: every one is an exact
+# double (5**22 < 2**53)
+POW10_EXACT = tuple(float(10 ** d) for d in range(23))
+
+
+def half_up_double(x: float, p: float, _modf=math.modf,
+                   _copysign=math.copysign):
+    """HALF_UP of the finite double ``x`` at scale ``d``, where
+    ``p = POW10_EXACT[d]``: exactly
+    ``float(Decimal(repr(x)).quantize(Decimal(1).scaleb(-d),
+    ROUND_HALF_UP))``, sign of zero included, without building a
+    Decimal — or None when that cannot be decided this cheaply.
+
+    ``repr(x)`` is within half an ulp of ``x`` (<= 2^-53·|x|) and the
+    product ``y = |x|·p`` is rounded once more (<= 2^-53·y), so y lies
+    within 2^-52·y (< 2.3e-16·y) of ``|repr(x)|·10^d``.  Unless y's
+    fraction lies within 1e-15·y of .5, both therefore round HALF_UP to
+    the same integer n.  The guard can only hold while y < 5e14 (the
+    fraction is at most .5 from .5), so n < 2^52 and p are exact and
+    ``n / p`` is one correctly rounded division: the same double
+    ``float()`` makes of the decimal n·10^-d.  Near-ties, and with them
+    every |x·p| >= 5e14 (NaN and ±inf never reach here), answer None:
+    the caller's Decimal path decides."""
+    y = abs(x) * p
+    f, n = _modf(y)
+    if abs(f - 0.5) > 1e-15 * y:
+        return _copysign((n + (f > 0.5)) / p, x)
+    return None
+
+
 def _round_to(d: int):
     """``round(x, d)`` HALF_UP for an int-literal scale ``d`` (Spark's
     Round requires a foldable scale, so compile_expr only admits an int
-    literal), with the Decimal quantizer built once, here."""
+    literal).  A double takes :func:`half_up_double` when the scale
+    allows; the Decimal quantizer, built once here, decides the rest."""
     q = Decimal(1).scaleb(-d)
+    p = POW10_EXACT[d] if 0 <= d < len(POW10_EXACT) else None
 
     def rnd(x):
         if type(x) is not float or not _isfinite(x):
@@ -319,6 +356,10 @@ def _round_to(d: int):
                 except InvalidOperation:
                     raise Fallback()
             x = float(x)
+        if p is not None:
+            r = half_up_double(x, p)
+            if r is not None:
+                return r
         try:
             return float(Decimal(repr(x)).quantize(
                 q, rounding=ROUND_HALF_UP))
@@ -2418,6 +2459,12 @@ def compile_direct(stmt: "N.SelectStmt"):
         outs.append((name, fn))
 
     def run(row: dict):
+        for v in row.values():
+            if type(v) is int and not _I64_MIN <= v <= _I64_MAX:
+                # no Spark path ingests a field past BIGINT, so pyeval
+                # answers no such event either — also when the
+                # statement never reads that field
+                raise Fallback()
         if where_f is not None and not _truthy(_bool3(where_f(row))):
             return None
         out: dict = {}

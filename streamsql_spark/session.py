@@ -13,6 +13,8 @@ coalescer makes the initial shuffle-partition number mostly irrelevant.
 from __future__ import annotations
 
 import os
+import sys
+from zipimport import zipimporter
 
 from pyspark.sql import SparkSession
 
@@ -176,6 +178,27 @@ def ensure_parallelism(df, min_ratio: float = 1.0):
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
+
+
+def drop_zip_importers() -> None:
+    """Drop the ``zipimporter`` entries from ``sys.path_importer_cache``.
+
+    A PySpark Python worker calls ``importlib.invalidate_caches()`` at
+    the start of every task, and on CPython 3.10+ that re-reads the
+    central directory of every cached ``zipimporter`` — pyspark.zip,
+    the py4j zip and Spark's jars on the worker's PYTHONPATH, 150-380 ms
+    a task, between the task header and its first key group.  Deleting
+    cache entries is safe: a later import from the archive builds a new
+    importer from zipimport's directory cache without reading the file.
+
+    The stateful streaming kernels call it at the entry of their
+    ``applyInPandasWithState`` function (``stateful._apply_per_key``):
+    it runs once per key group, and when there is nothing to drop it
+    costs one scan of the cache's few dozen entries (a few
+    microseconds)."""
+    cache = sys.path_importer_cache
+    for k in [k for k, v in cache.items() if type(v) is zipimporter]:
+        cache.pop(k, None)
 
 
 def _nanos_timestamp_columns(path: str) -> list[str]:

@@ -1467,3 +1467,35 @@ def test_measure_type_descends_nested_and_survives_name_shadow():
     assert isinstance(_measure_type(N.Col(("nums", 0)), schema), LongType)
     assert isinstance(_measure_type(N.Col(("meta", "site")), schema),
                       StringType)
+
+
+def test_batch_null_define_prefilter_is_future_warning_free(spark,
+                                                            monkeypatch):
+    """A DEFINE that evaluates to NULL reaches the batch kernel's
+    vectorized prefilter as an object column of True/None/False.  Mapping
+    its NULL to False must not take pandas' object-dtype downcast on
+    ``fillna`` (a FutureWarning in pandas 2.2, a behaviour change
+    later), so the kernel runs here with FutureWarning as an error."""
+    df = spark.createDataFrame([(1, 60), (2, None), (3, 70), (4, 10)],
+                               "ts long, v long")
+    cls = type(df)  # the classic DataFrame, which defines mapInPandas
+    real = cls.mapInPandas
+
+    def strict_map(self, func, schema, *args, **kwargs):
+        def strict(batches):
+            import warnings
+
+            with warnings.catch_warnings():
+                warnings.simplefilter("error", FutureWarning)
+                yield from func(batches)
+        return real(self, strict, schema, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "mapInPandas", strict_map)
+    sql = """SELECT * FROM stream MATCH_RECOGNIZE (
+        ORDER BY ts
+        MEASURES A.v AS a, B.v AS b
+        PATTERN (A B)
+        DEFINE A AS v > 50, B AS v <= 50
+    )"""
+    out = StreamSQL(spark).execute(sql).query(df).collect()
+    assert [(r["a"], r["b"]) for r in out] == [(70, 10)]

@@ -8,7 +8,7 @@ The dialect's analytics execute on FOUR paths:
 2. **stream** — ``streaming/stateful.py``'s analytic kernel, replayed
    through Structured Streaming micro-batches;
 3. **pyeval** — the per-event ``emit_sync`` in-process path
-   (``api/facade.py _emit_sync_analytic_python`` — the same steps, but
+   (``api/facade.py _compile_analytic_python`` — the same steps, but
    args/gates evaluated by ``dialect/pyeval``);
 4. **emit Spark route** — ``emit_sync`` on a declared-schema engine,
    which skips pyeval: Spark evaluates each event's keys/gates/args and
@@ -289,6 +289,64 @@ def test_cdc_state_duration_idiom_three_paths(spark):
     assert got_py == got_batch
     got_stream = _keyed(_run_stream(spark, sql, rows, rng))
     assert got_stream == got_batch
+
+
+# the per-event analytic plan's shapes in one statement: two distinct
+# PARTITION BYs (one of them shared by two specs), an unpartitioned spec,
+# a WHEN gate and a lifted WHEN had_changed(...) placeholder gate
+PLAN_SQL = ("SELECT deviceId, status, ts, "
+            "acc_sum(temperature) OVER (PARTITION BY deviceId) AS s_dev, "
+            "lag(temperature) OVER (PARTITION BY status) AS lag_st, "
+            "acc_max(temperature) OVER (PARTITION BY deviceId "
+            "WHEN temperature > 10) AS mx_dev, "
+            "acc_count(temperature) OVER () AS n_all, "
+            "ts - lag(ts, 1, ts, true) OVER (WHEN had_changed(true, status)) "
+            "AS dur FROM stream WITH (TIMESTAMP='ts', TIMEUNIT='ms')")
+
+
+def _emit_all(e, rows):
+    return [e.emit_sync(dict(r)) for r in rows]
+
+
+def test_analytic_plan_matches_query_and_spark_route(spark):
+    """emit_sync's compiled analytic plan (one key per distinct
+    PARTITION BY, arity-specialised arguments, the commit) answers every
+    event in-process, equal to ``query()`` over the same events and,
+    event by event and typed, to the Spark route."""
+    rows, _ = _mk_rows(seed=11, n=36)
+    py_e = StreamSQL(spark).execute(PLAN_SQL)
+    got = _emit_all(py_e, rows)
+    assert py_e._sync_py is not None and py_e._sync_py is py_e._an_py, \
+        "the analytic plan was not bound"
+    assert _keyed(o for o in got if o) == _keyed(_run_batch(spark, PLAN_SQL,
+                                                            rows))
+    sp_e = StreamSQL(spark).execute(PLAN_SQL)
+    sp_e._an_py = None  # force the Spark route
+    want = _emit_all(sp_e, rows)
+    assert sp_e._sync_py is None
+    assert [_norm(o) for o in got] == [_norm(o) for o in want]
+
+
+def test_analytic_plan_cap_evicts_per_spec(spark):
+    """With ``analytic_max_partitions=1`` the plan's commit keeps one
+    partition per spec: the deviceId specs restart whenever the device
+    changes, the status spec keeps its history, the unpartitioned ones
+    never restart — as on the Spark route under the same cap."""
+    rows = [{"deviceId": d, "temperature": t, "humidity": 0.0,
+             "ts": 1000 * (i + 1), "status": "ok"}
+            for i, (d, t) in enumerate([("d1", 11.0), ("d2", 12.0),
+                                        ("d1", 13.0), ("d1", 14.0)])]
+    py_e = StreamSQL(spark, analytic_max_partitions=1).execute(PLAN_SQL)
+    got = _emit_all(py_e, rows)
+    assert py_e._sync_py is not None
+    assert [o["s_dev"] for o in got] == [11.0, 12.0, 13.0, 27.0]
+    assert [o["lag_st"] for o in got] == [None, 11.0, 12.0, 13.0]
+    assert [o["n_all"] for o in got] == [1, 2, 3, 4]
+    assert all(len(lru) == 1 for lru in py_e._an_lru.values())
+    sp_e = StreamSQL(spark, analytic_max_partitions=1).execute(PLAN_SQL)
+    sp_e._an_py = None  # force the Spark route
+    assert [_norm(o) for o in got] == \
+        [_norm(o) for o in _emit_all(sp_e, rows)]
 
 
 # ----------------------- windowed-aggregation batch/stream parity grid
