@@ -25,7 +25,7 @@ from pyspark.sql import types as _T
 
 from ..dialect import nodes as N
 from ..dialect.parser import parse
-from ..dialect.pyeval import Fallback, _bool3
+from ..dialect.pyeval import Fallback
 from ..dialect.planner import PlanError, plan as make_plan
 from ..engine.batch import BatchExecutor, ExecError
 from ..functions.registry import register_function as _register_function
@@ -148,32 +148,6 @@ def _fits(dt, v) -> bool:
 
 # exact types _an_value_ok admits without a closer look
 _AN_SCALARS = frozenset((str, float, int, bool, type(None)))
-
-
-def _key_fn(parts):
-    """Partition-key tuple of a row from the compiled PARTITION BY
-    expressions."""
-    if not parts:
-        return lambda row: ()
-    if len(parts) == 1:
-        p0 = parts[0]
-        return lambda row: (p0(row),)
-    return lambda row: tuple(pf(row) for pf in parts)
-
-
-def _argv_fn(args):
-    """Argument list of a row from ``('lit', value)`` constants and
-    ``('fn', closure)`` expressions, specialised for the one-column and
-    (literal, column) shapes (``lag(x)``, ``had_changed(true, x)``).
-    Every call builds a new list: a custom state's ``apply`` may keep
-    the one it is handed."""
-    if len(args) == 1 and args[0][0] == "fn":
-        a0 = args[0][1]
-        return lambda row: [a0(row)]
-    if len(args) == 2 and args[0][0] == "lit" and args[1][0] == "fn":
-        (_, x0), (_, x1) = args
-        return lambda row: [x0, x1(row)]
-    return lambda row: [x(row) if k == "fn" else x for k, x in args]
 
 
 class StreamSQL:
@@ -1319,9 +1293,11 @@ class StreamSQL:
                   "timestamp": "TIMESTAMP", "date": "DATE"}
 
     @staticmethod
-    def _sql_literal(v, sqlt: str | None) -> str | None:
-        """Encode one Python value as a Spark SQL literal (optionally
-        CAST to ``sqlt``); None when not literal-encodable."""
+    def _sql_literal(v, sqlt: str | None, name: str) -> str | None:
+        """Encode field ``name``'s Python value as a Spark SQL literal
+        (optionally CAST to ``sqlt``); None when not literal-encodable.
+        An int past BIGINT raises a ValueError naming the field: no
+        Spark type holds it, and its CAST would fail to parse."""
         import datetime as _dt
         import math
 
@@ -1335,6 +1311,9 @@ class StreamSQL:
         if isinstance(v, bool):
             return "TRUE" if v else "FALSE"
         if isinstance(v, int):
+            if not -(2 ** 63) <= v < 2 ** 63:
+                raise ValueError(f"field {name!r} holds {v}, outside the "
+                                 f"BIGINT range")
             return f"CAST({v} AS {sqlt or 'BIGINT'})"
         if isinstance(v, float):
             if math.isnan(v) or math.isinf(v):
@@ -1369,7 +1348,7 @@ class StreamSQL:
         for row in rows:
             lits = []
             for name, sqlt in fields:
-                lit = self._sql_literal(row.get(name), sqlt)
+                lit = self._sql_literal(row.get(name), sqlt, name)
                 if lit is None:
                     return None
                 lits.append(lit)
@@ -1448,7 +1427,7 @@ class StreamSQL:
             fields = [(k, None) for k in sorted(row)]
         lits = []
         for name, sqlt in fields:
-            lit = self._sql_literal(row[name], sqlt)
+            lit = self._sql_literal(row[name], sqlt, name)
             if lit is None:
                 return _NOT_APPLICABLE
             lits.append(lit)
@@ -1734,12 +1713,13 @@ class StreamSQL:
 
     def _compile_analytic_python(self):
         """One-time compilation of the analytic direct path into one
-        evaluator, ``row -> dict | None``, raising Fallback for an event
-        outside the proven subset: the SAME analytic steps
-        (streaming/stateful.ANALYTIC_STEPS) over keys, WHEN gates and
-        arguments compiled by dialect/pyeval.py — one key function per
-        distinct PARTITION BY — plus the final projection with analytic
-        calls substituted by placeholder lookups.  State lives in the
+        function emitted by ``pyeval.Emitter``, ``row -> dict | None``,
+        raising Fallback for an event outside the proven subset: the
+        SAME analytic steps (streaming/stateful.ANALYTIC_STEPS) over
+        keys, WHEN gates and arguments written by the emitter — one key
+        tuple per distinct PARTITION BY, each call's arguments as a list
+        display — plus the final projection with analytic calls
+        substituted by placeholder lookups.  State lives in the
         SAME ``_an_states`` store the Spark route uses, so a per-event
         fallback keeps one continuous history.  Returns None when the
         statement falls outside the subset — the Spark route then stays
@@ -1788,24 +1768,28 @@ class StreamSQL:
                 return N.Col((ph,))
             return node
 
-        outs = []
+        em = pyeval.Emitter()
+
+        def expr(e, row):
+            # a bare-column (or placeholder) value lands in the output,
+            # or feeds a step, verbatim: container-typed analytics incl.
+            if isinstance(e, N.Col) and len(e.parts) == 1 \
+                    and isinstance(e.parts[0], str):
+                return em.col(e.parts[0], row, raw=True)
+            return em.expr(e, row)
+
+        outs = []  # (name constant, source over ext)
         for i, f in enumerate(self._stmt.fields):
             if isinstance(f.expr, N.Star):
                 return None  # star + analytics: Spark path
             e2 = N.transform(f.expr, subst)
-            if bad:
+            src = None if bad else expr(e2, "ext")
+            if src is None:
                 return None
-            if isinstance(e2, N.Col) and len(e2.parts) == 1 \
-                    and isinstance(e2.parts[0], str):
-                # bare column/placeholder projection: the value lands in
-                # the output verbatim (container-typed analytics incl.)
-                fn = pyeval.raw_col(e2.parts[0])
-            else:
-                fn = pyeval.compile_expr(e2)
-            if fn is None:
-                return None
-            outs.append((f.alias or _default_name(f.expr, i), fn))
-        where_f = None
+            outs.append((em.const(f.alias or _default_name(f.expr, i)), src))
+        from ..plans.plan import where_filters_first
+        where_first = where_filters_first(plan)
+        where = None  # the WHERE condition's source
         if self._stmt.where is not None:
             w = self._stmt.where
             from ..functions.registry import is_analytic as _is_an
@@ -1819,59 +1803,60 @@ class StreamSQL:
                 return None
             if bare_value:
                 w = N.IsNull(operand=w, negated=True)
-            where_f = pyeval.compile_expr(w)
-            if where_f is None:
+            src = em.expr(w, "row" if where_first else "ext")
+            if src is None:
                 return None
+            where = em.truth(w, src)
 
         from ..functions.registry import custom_analytic
         from ..streaming.stateful import (analytic_copier_for,
                                           analytic_step_for)
-        specs = []  # (ph, key index, WHEN gate, argv fn, copier, step, p)
-        key_fns = []  # one per distinct PARTITION BY, in first-use order
-        key_at: dict[str, int] = {}
-        for s in plan.analytics:
+        em.define("_states", self._an_states)
+        em.define("_an_value_ok", _an_value_ok)
+        em.define("_AN_SCALARS", _AN_SCALARS)
+        em.define("_disable", self._disable_analytic_python)
+        # the LRU cap is the only reason to visit each slot on commit
+        if self.analytic_max_partitions is not None:
+            em.define("_touch", self._touch_analytic_partition)
+        keys = []  # one key tuple per distinct PARTITION BY, first use
+        key_at: dict[str, str] = {}
+        steps, touches, commits = [], [], []  # statements per spec
+        for n, s in enumerate(plan.analytics):
             over = s.func.over
             by = over.partition_by if over else []
-            ki = key_at.get(repr(by))
-            if ki is None:
-                parts = [pyeval.compile_expr(p) for p in by]
-                if any(p is None for p in parts):
+            key = key_at.get(repr(by))
+            if key is None:
+                parts = [em.expr(p, "row") for p in by]
+                if None in parts:
                     return None
-                ki = key_at[repr(by)] = len(key_fns)
-                key_fns.append(_key_fn(parts))
-            when_f = None
+                key = key_at[repr(by)] = f"_k{len(keys)}"
+                keys.append(f"{key} = ({''.join(p + ', ' for p in parts)})")
+            gate = "True"
             if over is not None and over.when is not None:
                 # when_ast has nested analytic calls pre-lifted to
                 # placeholder refs (planner); over.when still holds the
-                # raw call, which compile_expr can't evaluate.  The gate
-                # runs against ``ext`` (row + already-stepped
-                # placeholders), so an inner analytic's value is visible
-                when_f = pyeval.compile_expr(
-                    s.when_ast if s.when_ast is not None else over.when)
-                if when_f is None:
+                # raw call, which pyeval can't evaluate.  The gate runs
+                # against ``ext`` (row + already-stepped placeholders),
+                # so an inner analytic's value is visible
+                w = s.when_ast if s.when_ast is not None else over.when
+                src = em.expr(w, "ext")
+                if src is None:
                     return None
-            args = []   # ('lit', v) | ('fn', closure)
+                gate = f"{em.truth(w, src)} is True"
+            args = []
             arg_marks = []  # the steps' has_start probe shape
             for a in s.func.args:
                 if isinstance(a, N.Star) or \
                         (isinstance(a, N.Lit) and a.value == "*"):
                     return None
                 if isinstance(a, N.Lit):
-                    args.append(("lit", a.value))
+                    args.append(em.const(a.value))
                     arg_marks.append(None)
-                elif isinstance(a, N.Col) and len(a.parts) == 1 \
-                        and isinstance(a.parts[0], str):
-                    # bare-column arg feeds the step directly —
-                    # the SAME kernel the streaming route runs on the
-                    # same post-cleaning types, so containers pass
-                    args.append(("fn", pyeval.raw_col(a.parts[0])))
-                    arg_marks.append("x")
                 else:
-                    af = pyeval.compile_expr(a)
-                    if af is None:
-                        return None
-                    args.append(("fn", af))
+                    args.append(expr(a, "row"))
                     arg_marks.append("x")
+            if None in args:
+                return None
             p = {"name": s.func.name.lower(), "ph": s.placeholder,
                  "args": arg_marks, "custom": custom_analytic(s.func.name)}
             if p["custom"] is None and p["name"] not in (
@@ -1879,8 +1864,21 @@ class StreamSQL:
                     "acc_sum", "acc_count", "acc_min", "acc_max",
                     "acc_avg"):
                 return None  # fan-out/renderer-special fns: Spark path
-            specs.append((p["ph"], ki, when_f, _argv_fn(args),
-                          analytic_copier_for(p), analytic_step_for(p), p))
+            ph = em.const(p["ph"])
+            steps += [
+                f"_s{n} = ({ph}, {key})",
+                # ext, not row: the gate may reference an earlier
+                # spec's placeholder (lifted WHEN had_changed(...))
+                f"_g{n} = {gate}",
+                # a new list per event: a custom state may keep it
+                f"_a{n} = [{', '.join(args)}]",
+                f"_st{n} = {em.const(analytic_copier_for(p))}"
+                f"(_states.get(_s{n}) or {{}})",
+                f"ext[{ph}] = {em.const(analytic_step_for(p))}"
+                f"({em.const(p)}, _st{n}, _a{n}, _g{n})"]
+            if self.analytic_max_partitions is not None:
+                touches.append(f"_touch({ph}, {key})")
+            commits.append(f"_states[_s{n}] = _st{n}")
         # reference omitEmpty (stream/stream.go:698-703): a SELECT of
         # solely bare change-detection fields suppresses the row when
         # none changed (state still advances, like a WHERE filter)
@@ -1888,63 +1886,47 @@ class StreamSQL:
             isinstance(f.expr, N.Func)
             and f.expr.name.lower() == "changed_col"
             for f in self._stmt.fields)
-        from ..plans.plan import where_filters_first
-        where_first = where_filters_first(plan)
-        states = self._an_states
-        # the LRU cap is the only reason to visit each slot on commit
-        touch = (None if self.analytic_max_partitions is None
-                 else self._touch_analytic_partition)
+        out = ["out = {", *(f"    {k}: {v}," for k, v in outs), "}"]
+        body = [
+            "for _v in row.values():",
+            "    if (_k := type(_v)) is int:",
+            # no Spark route ingests a field past BIGINT: such an
+            # event goes to the Spark route's typed error, also when
+            # the statement never reads that field
+            "        if not _I64_MIN <= _v <= _I64_MAX:",
+            "            raise Fallback()",
+            "    elif _k not in _AN_SCALARS and not _an_value_ok(_v):",
+            "        raise Fallback()",
+            # step state on COPIES, commit only after the whole event
+            # evaluates: a Fallback anywhere hands the UNTOUCHED state
+            # to the Spark route, which then performs the one true step
+            "try:"]
+        if where is not None and where_first:
+            # standard-SQL mode: the filter sees only raw columns; a
+            # rejected row never touches state
+            body += [f"    if {where} is not True:", "        return None"]
+        body += ["    " + ln for ln in keys + ["ext = dict(row)"] + steps]
+        if where is not None and not where_first:
+            # CDC mode (WHERE reads an analytic): state advanced BEFORE
+            # the filter, and stays advanced on rejection
+            body += [f"    if {where} is not True:", "        out = None",
+                     "    else:", *("        " + ln for ln in out)]
+        else:
+            body += ["    " + ln for ln in out]
+        body += ["except Fallback:", "    raise", "except Exception:",
+                 "    _disable()", "    raise Fallback()", *touches,
+                 *commits]
+        if omit_empty:  # the state advanced all the same
+            body += ["if out is not None and all(v is None for v in "
+                     "out.values()):", "    return None"]
+        body.append("return out")
+        return em.build(body)
 
-        def run(row: dict):
-            for v in row.values():
-                if type(v) not in _AN_SCALARS and not _an_value_ok(v):
-                    raise Fallback()
-            try:
-                # step state on COPIES, commit only after the whole
-                # event evaluates: a Fallback anywhere hands the
-                # UNTOUCHED state to the Spark route, which then
-                # performs the one true step
-                if where_first and where_f is not None \
-                        and _bool3(where_f(dict(row))) is not True:
-                    # standard-SQL mode: the filter sees only raw
-                    # columns; a rejected row never touches state
-                    return None
-                keys = [key_of(row) for key_of in key_fns]
-                staged = {}
-                ext = dict(row)
-                for ph, ki, when_f, argv_of, copier, step, p in specs:
-                    slot = (ph, keys[ki])
-                    # ext, not row: the gate may reference an earlier
-                    # spec's placeholder (lifted WHEN had_changed(...))
-                    gate = when_f is None or _bool3(when_f(ext)) is True
-                    argv = argv_of(row)
-                    st = copier(states.get(slot) or {})
-                    ext[ph] = step(p, st, argv, gate)
-                    staged[slot] = st
-                if where_f is not None and not where_first \
-                        and _bool3(where_f(ext)) is not True:
-                    # CDC mode (WHERE reads an analytic): state advanced
-                    # BEFORE the filter, and stays advanced on rejection
-                    out = None
-                else:
-                    out = {name: fn(ext) for name, fn in outs}
-            except Fallback:
-                raise
-            except Exception:
-                # deepcopy of an exotic custom state (or a kernel
-                # surprise): stay on the Spark route for this query's
-                # events
-                self._an_py = self._sync_py = None
-                raise Fallback()
-            if touch is not None:
-                for slot in staged:
-                    touch(*slot)
-            states.update(staged)
-            if out is not None and omit_empty \
-                    and all(v is None for v in out.values()):
-                return None  # omitEmpty suppression — state advanced
-            return out
-        return run
+    def _disable_analytic_python(self) -> None:
+        """After a deepcopy of an exotic custom state (or a kernel
+        surprise) failed: the Spark route answers this statement's
+        events from now on."""
+        self._an_py = self._sync_py = None
 
     def _emit_sync_analytic_spark(self, row: dict) -> dict | None:
         """Per-event analytic evaluation in O(1) state (the reference's

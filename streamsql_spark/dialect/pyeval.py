@@ -7,9 +7,10 @@ full `spark.sql` parse+analyze+fold round trip per event (~5-10 ms) —
 three orders of magnitude off the per-event gateway latency class.
 
 This module compiles the typed dialect AST of a plain
-filter/projection query into Python closures evaluated directly on the
-event dict — tens of microseconds per event — for a STRICT subset of
-the dialect with byte-identical Spark semantics:
+filter/projection query into ONE Python function per statement,
+generated from source (:class:`Emitter`) and evaluated directly on the
+event dict — a few microseconds per event — for a STRICT subset of the
+dialect with byte-identical Spark semantics:
 
 - literals, bare single-part columns, arithmetic (+ - * / % ^), string
   concat (||), comparisons with SQL three-valued logic, AND/OR/NOT,
@@ -36,22 +37,33 @@ A differential fuzz test pins python-path == spark-path on the
 supported grammar.
 
 Every decision that depends only on the statement is taken once, at
-compile time, so an event pays only for its own values:
+compile time, so an event pays only for its own values.  The emitter
+writes these node kinds inline into the statement's function, each
+with its exact-``type()`` fast path and a call to its guarded function
+for every other value:
 
-- an operator is looked up once in ``_ARITH`` / ``_CMP`` (one guarded
-  function per operator, each with an exact-``type()`` fast path for
-  operands that provably pass its guards);
-- a literal operand is bound as a constant and validated once; a valid
-  numeric (or string) literal lets a float (or string) operand go
+- a literal: a constant of the function's namespace;
+- a bare column: a float, str or None value as it is, anything else
+  through the column's slow path;
+- an arithmetic or comparison operator: its guarded function from
+  ``_ARITH`` / ``_CMP``, looked up once; against a literal validated
+  once, a float (or, against a string literal, str) operand goes
   straight to the raw Python operator;
-- a CASE whose THEN/ELSE values are all literals checks their type
-  class once and evaluates only its conditions per event;
-- ``round(x, d)`` binds its scale once and rounds a double exactly in
-  float arithmetic (:func:`half_up_double`); only near-ties (a fraction
-  within 1e-15·|x·10^d| of .5, so every |x·10^d| >= 5e14) and negative
-  scales build a Decimal;
-- ``compile_direct``'s evaluator is the whole per-event work of a plain
-  statement: ``StreamSQL.emit_sync`` binds it once and calls it directly.
+- a searched CASE whose THEN/ELSE values are all literals: their type
+  class is checked once and only the conditions run per event;
+- ``round(x, d)`` with an int-literal scale: a finite double rounds
+  exactly in float arithmetic (:func:`half_up_double`, 0 <= d <= 22);
+  only near-ties (a fraction within 1e-15·|x·10^d| of .5, so every
+  |x·10^d| >= 5e14), other values and other scales take the Decimal
+  path (:func:`_round_to`);
+- ``cast`` and every ``_FNS`` function: one call of the function.
+
+Any other node is a closure (:func:`_compile_closure`) bound as a
+constant.  Values from the SQL text enter the namespace as constants,
+never as source text.  ``compile_direct``'s function is the whole
+per-event work of a plain statement, and the facade's analytic plan is
+emitted the same way: ``StreamSQL.emit_sync`` binds the function once
+and calls it directly.
 """
 
 from __future__ import annotations
@@ -59,11 +71,13 @@ from __future__ import annotations
 import base64 as _b64
 import calendar
 import datetime as _dt
+import itertools
 import json as _json
+import linecache
 import math
-import operator as _operator
 import re
 import time as _time
+import weakref
 from decimal import ROUND_HALF_UP, Decimal, InvalidOperation
 
 from . import nodes as N
@@ -1828,36 +1842,6 @@ _FN_ARITY: dict[str, tuple[int, int] | None] = {
 }
 
 
-def raw_col(name: str):
-    """Bare-column PASSTHROUGH for the analytic per-event path: the
-    value feeds an ``ANALYTIC_STEPS`` step (streaming/stateful.py — the
-    same steps the streaming kernel runs, which see exactly these
-    post-cleaning python types) or lands
-    in the output row verbatim — no pyeval function ever evaluates it,
-    so the container refusal in ``compile_expr``'s col() does not
-    apply.  The int64 range guard is kept: the Spark oracle encodes
-    ints as BIGINT and raises beyond the range."""
-    def col(row, name=name):
-        v = row.get(name, _ABSENT)
-        t = type(v)
-        if t is float or t is str or v is None:
-            return v
-        if v is _ABSENT:
-            raise Fallback()
-        if isinstance(v, int) and not isinstance(v, bool) \
-                and not _I64_MIN <= v <= _I64_MAX:
-            raise Fallback()
-        if isinstance(v, list):
-            # same guard element-wise: the Spark oracle encodes the
-            # list as array<bigint> and raises beyond int64
-            for x in v:
-                if isinstance(x, int) and not isinstance(x, bool) \
-                        and not _I64_MIN <= x <= _I64_MAX:
-                    raise Fallback()
-        return v
-    return col
-
-
 def _homog_class(v):
     """Spark-inference homogeneity witness for a nested value (r10
     nested-path whitelist).  The Spark fallback infers the event's
@@ -2024,26 +2008,12 @@ def _compile_json_extract(e: N.Func):
     return jx
 
 
-def _compile_round(e: N.Func):
-    """``round(x[, d])``: Spark's Round requires a foldable int scale and
-    rejects a column scale at ANALYSIS time; pyeval must not answer
-    queries the semantics oracle would error on — admit only an int
-    literal (NULL/float/column scales → Spark path)."""
-    d = e.args[1] if len(e.args) == 2 else N.Lit(0)
-    if not (isinstance(d, N.Lit) and isinstance(d.value, int)
-            and not isinstance(d.value, bool)):
-        return None
-    x = compile_expr(e.args[0])
-    if x is None:
-        return None
-    rnd = _round_to(d.value)
-    return lambda row: rnd(x(row))
-
-
 def _compile_literal_case(op_f, conds, values):
-    """CASE whose THEN/ELSE values are all literals (``values``: one per
-    WHEN, then the ELSE — None when absent): the branch-class guard runs
-    once, here, and each event evaluates only the conditions."""
+    """A simple CASE (``CASE x WHEN ...``) whose THEN/ELSE values are all
+    literals (``values``: one per WHEN, then the ELSE — None when
+    absent): the branch-class guard runs once, here, and each event
+    evaluates only the operand and the WHEN values.  The emitter writes
+    the searched form itself."""
     try:
         _same_class(values)
     except Fallback:
@@ -2052,31 +2022,23 @@ def _compile_literal_case(op_f, conds, values):
         return mixed
     whens = list(zip(conds, values))
     else_val = values[-1]
-    if op_f is not None:
-        def simple_case(row):
-            base = op_f(row)
-            for cf, bv in whens:
-                if base is not None and _eq(base, cf(row)) is True:
-                    return bv
-            return else_val
-        return simple_case
 
-    def searched_case(row):
+    def simple_case(row):
+        base = op_f(row)
         for cf, bv in whens:
-            if _bool3(cf(row)) is True:
+            if base is not None and _eq(base, cf(row)) is True:
                 return bv
         return else_val
-    return searched_case
+    return simple_case
 
 
 # operators whose operands may swap sides: a literal on the left binds
 # on the right of the mirrored operator (both guards are symmetric)
 _MIRROR = {"+": "+", "*": "*", "=": "=", "==": "==", "!=": "!=",
            "<>": "<>", "<": ">", "<=": ">=", ">": "<", ">=": "<="}
-_RAW = {"+": _operator.add, "-": _operator.sub, "*": _operator.mul,
-        "/": _operator.truediv, "=": _operator.eq, "==": _operator.eq,
-        "!=": _operator.ne, "<>": _operator.ne, "<": _operator.lt,
-        "<=": _operator.le, ">": _operator.gt, ">=": _operator.ge}
+# the Python operator the emitter writes for a fast-path operand
+_PYOP = {"+": "+", "-": "-", "*": "*", "/": "/", "=": "==", "==": "==",
+         "!=": "!=", "<>": "!=", "<": "<", "<=": "<=", ">": ">", ">=": ">="}
 
 
 # the operators Spark evaluates in DECIMAL when one side is (`^` casts
@@ -2118,101 +2080,17 @@ def _no_int_operand(fn):
     return op
 
 
-def _compile_binop(op: str, left: N.Expr, right: N.Expr):
-    """An arithmetic or comparison operator, bound at compile time: the
-    operator's function is looked up once, and a literal operand becomes
-    a constant.  A literal validated here also earns a fast path: a
-    float (or, against a string literal, str) operand goes straight to
-    the raw Python operator — exactly what the guarded function would
-    compute for those operand types."""
-    if op in ("=", "==", "!=", "<>") and (
-            isinstance(left, N.Lit) and left.value is None
-            or isinstance(right, N.Lit) and right.value is None):
-        # `x = NULL` means IS NULL in the reference, and renders so
-        # (render.render_bin) — not SQL UNKNOWN
-        side = right if isinstance(left, N.Lit) and left.value is None \
-            else left
-        return compile_expr(N.IsNull(operand=side,
-                                     negated=op in ("!=", "<>")))
-    if isinstance(left, N.Lit) and not isinstance(right, N.Lit) \
-            and op in _MIRROR:
-        left, right, op = right, left, _MIRROR[op]
-    fn = _ARITH.get(op) or _CMP[op]
-    if op in _DECIMAL_ARITH and (_spark_decimal(left)
-                                 or _spark_decimal(right)):
-        fn = _no_int_operand(fn)
-    lf, rf = compile_expr(left), compile_expr(right)
-    if lf is None or rf is None:
-        return None
-    if isinstance(left, N.Lit):
-        lv = left.value
-        if isinstance(right, N.Lit):
-            rv = right.value
-            return lambda row: fn(lv, rv)
-        return lambda row: fn(lv, rf(row))
-    if not isinstance(right, N.Lit):
-        return lambda row: fn(lf(row), rf(row))
-    lit = right.value
-    raw = _RAW.get(op)
-    if op in _CMP and type(lit) is str:
-        def cmp_str(row):
-            a = lf(row)
-            return raw(a, lit) if type(a) is str else fn(a, lit)
-        return cmp_str
-    if raw is None or not _valid_num(lit) or op == "/" and lit == 0:
-        return lambda row: fn(lf(row), lit)
-    if op in _CMP:
-        if type(lit) is int and not -_F53 <= lit <= _F53:
-            # a float operand falls back against this int (_cmp_ok)
-            return lambda row: fn(lf(row), lit)
-
-        def cmp_num(row):
-            a = lf(row)
-            if type(a) is float and _isfinite(a):
-                return raw(a, lit)
-            return fn(a, lit)
-        return cmp_num
-
-    def arith(row):
-        a = lf(row)
-        return raw(a, lit) if type(a) is float else fn(a, lit)
-    return arith
-
-
-def compile_expr(e: N.Expr):
-    """AST → ``fn(row) -> value``; None when the node kind (or any
-    child) is outside the supported subset."""
-    if isinstance(e, N.Lit):
-        v = e.value
-        return lambda row: v
+def _compile_closure(e: N.Expr):
+    """``fn(row) -> value`` for a node kind the emitter does not write:
+    a nested path, AND/OR/NOT, ``||``, unary minus, LIKE, IS NULL, IN,
+    BETWEEN, and a CASE with an operand or non-literal branches; None
+    when the node (or any child) is outside the supported subset.
+    Children compile through :func:`compile_expr`, so an inlined kind
+    under one of these runs the emitter's code."""
     if isinstance(e, N.Col):
-        if len(e.parts) != 1 or not isinstance(e.parts[0], str):
-            return _compile_nested_col(e)
-        name = e.parts[0]
-
-        def col(row, name=name):
-            v = row.get(name, _ABSENT)
-            if v is _ABSENT:
-                # Spark raises unresolved-column for a missing event
-                # field; a silent NULL would flip behavior vs fallback
-                raise Fallback()
-            t = type(v)
-            if t is float or t is str or v is None:
-                return v
-            if not isinstance(v, (int, float, str, bool)):
-                raise Fallback()  # nested/array value: Spark path
-            if isinstance(v, int) and not isinstance(v, bool) \
-                    and not _I64_MIN <= v <= _I64_MAX:
-                # the Spark oracle encodes this value as
-                # CAST(v AS BIGINT), which RAISES beyond int64 — any
-                # python-path answer here would diverge from the oracle
-                raise Fallback()
-            return v
-        return col
+        return _compile_nested_col(e)
     if isinstance(e, N.Bin):
         op = e.op.upper()
-        if op in _ARITH or op in _CMP:
-            return _compile_binop(op, e.left, e.right)
         lf, rf = compile_expr(e.left), compile_expr(e.right)
         if lf is None or rf is None:
             return None
@@ -2331,7 +2209,243 @@ def compile_expr(e: N.Expr):
                         return bv
             return else_val
         return case
-    if isinstance(e, N.Func):
+    return None
+
+
+def _bool3(v):
+    if v is None or isinstance(v, bool):
+        return v
+    raise Fallback()
+
+
+def _col_slow(v):
+    """A bare column's value past the emitted float/str/None test."""
+    if v is _ABSENT:
+        # Spark raises unresolved-column for a missing event field; a
+        # silent NULL would flip behavior vs fallback
+        raise Fallback()
+    if not isinstance(v, (int, float, str, bool)):
+        raise Fallback()  # nested/array value: Spark path
+    if isinstance(v, int) and not isinstance(v, bool) \
+            and not _I64_MIN <= v <= _I64_MAX:
+        # the Spark oracle encodes this value as CAST(v AS BIGINT),
+        # which RAISES beyond int64 — any python-path answer here would
+        # diverge from the oracle
+        raise Fallback()
+    return v
+
+
+def _raw_col_slow(v):
+    """A bare column's value past the emitted test on the analytic
+    path, where it feeds an ``ANALYTIC_STEPS`` step (streaming/
+    stateful.py — the same steps the streaming kernel runs, which see
+    exactly these post-cleaning python types) or lands in the output
+    row verbatim: no pyeval function evaluates it, so containers pass.
+    The int64 range guard is kept: the Spark oracle encodes ints as
+    BIGINT and raises beyond the range."""
+    if v is _ABSENT:
+        raise Fallback()
+    if isinstance(v, int) and not isinstance(v, bool) \
+            and not _I64_MIN <= v <= _I64_MAX:
+        raise Fallback()
+    if isinstance(v, list):
+        # same guard element-wise: the Spark oracle encodes the list as
+        # array<bigint> and raises beyond int64
+        for x in v:
+            if isinstance(x, int) and not isinstance(x, bool) \
+                    and not _I64_MIN <= x <= _I64_MAX:
+                raise Fallback()
+    return v
+
+
+def _star(row: dict, out: dict) -> None:
+    """``SELECT *``: every event field, in sorted-key order."""
+    for k in sorted(row):
+        v = row[k]
+        if v is not None and not isinstance(v, (int, float, str, bool)):
+            raise Fallback()
+        out[k] = v
+
+
+def _fallback():
+    raise Fallback()
+
+
+# what every emitted function may read besides its own constants
+_EMIT_NS = {"Fallback": Fallback, "_ABSENT": _ABSENT, "_I64_MIN": _I64_MIN,
+            "_I64_MAX": _I64_MAX, "_isfinite": _isfinite,
+            "_half_up": half_up_double, "_bool3": _bool3,
+            "_col_slow": _col_slow, "_raw_col_slow": _raw_col_slow,
+            "_star": _star, "_fallback": _fallback}
+_EMIT_SEQ = itertools.count()
+
+# functions compiled by their own closure compiler
+_FN_CLOSURES = {
+    "json_extract": _compile_json_extract, "extract": _compile_extract,
+    "date_add": lambda e: _compile_date_addsub(e, 1),
+    "date_sub": lambda e: _compile_date_addsub(e, -1),
+    "date_diff": _compile_date_diff, "date_format": _compile_date_format,
+    "date_parse": _compile_date_parse, "split": _compile_split,
+    "regexp_substring": _compile_regexp_substring, "format": _compile_format,
+    "encode": lambda e: _compile_encode_decode("encode", e),
+    "decode": lambda e: _compile_encode_decode("decode", e),
+}
+
+
+class Emitter:
+    """Writes a statement's per-event evaluator as one Python function.
+
+    :meth:`expr` turns a node into the source of one Python expression
+    over a row variable; the caller wraps its expressions in statements
+    and :meth:`build` compiles them once.  Every value taken from the
+    SQL text (column names, aliases, placeholders, literals) enters the
+    function's namespace as a constant (``_c7``), and every operator is
+    written from the emitter's own table, so the source holds only text
+    the emitter writes.
+
+    Inlined node kinds, each with its exact-type fast path and a call
+    to its guarded function for every other value: a literal; a bare
+    column; arithmetic and comparison operators (raw Python arithmetic
+    on a float, or comparison on a finite float or a string, against a
+    validated literal); a searched CASE whose branches are all literals;
+    ``round`` with an int-literal scale (:func:`half_up_double` on a
+    finite double for 0 <= d <= 22, else its Decimal path); ``cast``
+    and every ``_FNS`` call.  Any other node is its
+    :func:`_compile_closure` closure, bound as a constant and called on
+    the row."""
+
+    def __init__(self):
+        self.ns = dict(_EMIT_NS)
+        self._n = 0
+        self._closures: dict[str, object] = {}  # lone call source -> fn
+
+    def const(self, v) -> str:
+        name = f"_c{self._n}"
+        self._n += 1
+        self.ns[name] = v
+        return name
+
+    def temp(self) -> str:
+        self._n += 1
+        return f"_t{self._n}"
+
+    def define(self, name: str, v) -> str:
+        """Bind ``v`` under an emitter-chosen name (a source that reads
+        ``_states`` reads better than one that reads ``_c9``)."""
+        assert name.isidentifier() and name not in self.ns, name
+        self.ns[name] = v
+        return name
+
+    def bind(self, fn, row: str) -> str | None:
+        """A closure bound as a constant and called on ``row``."""
+        if fn is None:
+            return None
+        src = f"{self.const(fn)}({row})"
+        self._closures[src] = fn
+        return src
+
+    @staticmethod
+    def truth(e: N.Expr, src: str) -> str:
+        """``src``, the source of node ``e``, as a WHERE/WHEN/CASE
+        condition: a comparison yields True/False/None already; any
+        other value passes ``_bool3``."""
+        if isinstance(e, N.Bin) and e.op.upper() in _CMP:
+            return src
+        return f"_bool3({src})"
+
+    def expr(self, e: N.Expr, row: str = "row") -> str | None:
+        """The source of one Python expression (an atom: a name, a call
+        or a parenthesised expression) evaluating ``e`` over the dict
+        named ``row``; None when ``e`` is outside the subset."""
+        if isinstance(e, N.Lit):
+            return self.const(e.value)
+        if isinstance(e, N.Col) and len(e.parts) == 1 \
+                and isinstance(e.parts[0], str):
+            return self.col(e.parts[0], row)
+        if isinstance(e, N.Bin) and (e.op.upper() in _ARITH
+                                     or e.op.upper() in _CMP):
+            return self._binop(e.op.upper(), e.left, e.right, row)
+        if isinstance(e, N.Case) and e.operand is None and all(
+                isinstance(v, N.Lit) for _, v in e.whens) and (
+                e.else_ is None or isinstance(e.else_, N.Lit)):
+            return self._case(e, row)
+        if isinstance(e, N.Func):
+            return self._func(e, row)
+        return self.bind(_compile_closure(e), row)
+
+    def col(self, name: str, row: str, raw: bool = False) -> str:
+        """A bare column: a float, str or None value as it is, anything
+        else through the column's slow path (``raw``: the analytic
+        path's pass-through, :func:`_raw_col_slow`)."""
+        v, t = self.temp(), self.temp()
+        slow = "_raw_col_slow" if raw else "_col_slow"
+        return (f"({v} if ({t} := type({v} := {row}.get("
+                f"{self.const(name)}, _ABSENT))) is float or {t} is str "
+                f"or {v} is None else {slow}({v}))")
+
+    def _binop(self, op: str, left: N.Expr, right: N.Expr, row: str):
+        """An arithmetic or comparison operator: its guarded function
+        (``_ARITH`` / ``_CMP``) is bound once, and against a literal
+        validated here a float (or, against a string literal, str)
+        operand goes straight to the raw Python operator — exactly what
+        the guarded function computes for those operand types."""
+        if op in ("=", "==", "!=", "<>") and (
+                isinstance(left, N.Lit) and left.value is None
+                or isinstance(right, N.Lit) and right.value is None):
+            # `x = NULL` means IS NULL in the reference, and renders so
+            # (render.render_bin) — not SQL UNKNOWN
+            side = right if isinstance(left, N.Lit) and left.value is None \
+                else left
+            return self.expr(N.IsNull(operand=side,
+                                      negated=op in ("!=", "<>")), row)
+        if isinstance(left, N.Lit) and not isinstance(right, N.Lit) \
+                and op in _MIRROR:
+            left, right, op = right, left, _MIRROR[op]
+        fn = _ARITH.get(op) or _CMP[op]
+        if op in _DECIMAL_ARITH and (_spark_decimal(left)
+                                     or _spark_decimal(right)):
+            fn = _no_int_operand(fn)
+        a, b = self.expr(left, row), self.expr(right, row)
+        if a is None or b is None:
+            return None
+        f, py = self.const(fn), _PYOP.get(op)
+        if isinstance(left, N.Lit) or not isinstance(right, N.Lit) \
+                or py is None:
+            return f"{f}({a}, {b})"
+        lit, t = right.value, self.temp()
+        if op in _CMP and type(lit) is str:
+            fast = f"type({t} := {a}) is str"
+        elif not _valid_num(lit) or op == "/" and lit == 0 \
+                or op in _CMP and type(lit) is int \
+                and not -_F53 <= lit <= _F53:
+            # (an int past 2^53: a float operand falls back, _cmp_ok)
+            return f"{f}({a}, {b})"
+        elif op in _CMP:
+            fast = f"type({t} := {a}) is float and _isfinite({t})"
+        else:
+            fast = f"type({t} := {a}) is float"
+        return f"({t} {py} {b} if {fast} else {f}({t}, {b}))"
+
+    def _case(self, e: N.Case, row: str):
+        """A searched CASE whose THEN/ELSE values are all literals: the
+        branch-class guard runs once, here, and each event evaluates the
+        conditions up to the first true one."""
+        parts = []
+        for c, v in e.whens:
+            cs = self.expr(c, row)
+            if cs is None:
+                return None
+            parts.append(f"{self.const(v.value)} if "
+                         f"{self.truth(c, cs)} is True else ")
+        values = [v.value for _, v in e.whens] + [
+            None if e.else_ is None else e.else_.value]
+        try:
+            _same_class(values)
+        except Fallback:
+            return "_fallback()"  # Spark coerces mixed branches at analysis
+        return f"({''.join(parts)}{self.const(values[-1])})"
+
+    def _func(self, e: N.Func, row: str):
         if e.over is not None or e.distinct:
             return None
         lname = e.name.lower()
@@ -2345,7 +2459,7 @@ def compile_expr(e: N.Expr):
                 # which one the rendered SQL resolves to is the Spark
                 # path's business — don't guess
                 return None
-            return _compile_custom_scalar(lname, e)
+            return self.bind(_compile_custom_scalar(lname, e), row)
         if lname == "case_when":
             # the renderer pairs args WHEN/THEN with a trailing ELSE
             # (registry._render_case_when) — build the equivalent
@@ -2354,8 +2468,8 @@ def compile_expr(e: N.Expr):
                 return None
             pairs = list(zip(e.args[0::2], e.args[1::2]))
             else_ = e.args[-1] if len(e.args) % 2 == 1 else None
-            return compile_expr(
-                N.Case(operand=None, whens=pairs, else_=else_))
+            return self.expr(N.Case(operand=None, whens=pairs, else_=else_),
+                             row)
         if lname == "cast":
             # the renderer (registry._render_cast) reads the TYPE from
             # the AST literal and falls back to 'string' otherwise —
@@ -2368,116 +2482,124 @@ def compile_expr(e: N.Expr):
                      if isinstance(ta, N.Lit) and isinstance(ta.value, str)
                      else "string")
             caster = _CASTERS.get(tname)
-            if caster is None:
-                return None
-            vf = compile_expr(e.args[0])
-            if vf is None:
-                return None
-            return lambda row: caster(vf(row))
+            return None if caster is None else \
+                self._call(caster, e.args[:1], row)
         if lname in _TZ_GATED and _SESSION_TZ != "UTC":
             return None  # see _TZ_GATED — non-UTC session at compile
-        if lname == "json_extract":
-            return _compile_json_extract(e)
-        if lname == "extract":
-            return _compile_extract(e)
-        if lname == "date_add":
-            return _compile_date_addsub(e, 1)
-        if lname == "date_sub":
-            return _compile_date_addsub(e, -1)
-        if lname == "date_diff":
-            return _compile_date_diff(e)
-        if lname == "date_format":
-            return _compile_date_format(e)
-        if lname == "date_parse":
-            return _compile_date_parse(e)
-        if lname == "split":
-            return _compile_split(e)
-        if lname == "regexp_substring":
-            return _compile_regexp_substring(e)
-        if lname == "format":
-            return _compile_format(e)
-        if lname in ("encode", "decode"):
-            return _compile_encode_decode(lname, e)
+        special = _FN_CLOSURES.get(lname)
+        if special is not None:
+            return self.bind(special(e), row)
         if lname in _ARRAY_FN_NAMES:
-            return _compile_array_fn(lname, e)
+            return self.bind(_compile_array_fn(lname, e), row)
         if lname in ("len", "length"):
             arr = _compile_array_len(e)
             if arr is not None:
-                return None if arr is _NO_COMPILE else arr
+                return None if arr is _NO_COMPILE else self.bind(arr, row)
             # not the array branch: string length via _FNS below
         arity = _FN_ARITY.get(lname)
         if arity is not None and not (arity[0] <= len(e.args) <= arity[1]):
             return None
         if lname == "round":
-            return _compile_round(e)
+            return self._round(e, row)
         fn = _FNS.get(lname)
-        if fn is None:
+        return None if fn is None else self._call(fn, e.args, row)
+
+    def _call(self, fn, args, row: str):
+        srcs = [self.expr(a, row) for a in args]
+        if any(s is None for s in srcs):
             return None
-        args = [compile_expr(a) for a in e.args]
-        if any(a is None for a in args):
+        return f"{self.const(fn)}({', '.join(srcs)})"
+
+    def _round(self, e: N.Func, row: str):
+        """``round(x[, d])``: Spark's Round requires a foldable int scale
+        and rejects a column scale at ANALYSIS time; pyeval must not
+        answer queries the semantics oracle would error on — admit only
+        an int literal (NULL/float/column scales → Spark path)."""
+        d = e.args[1] if len(e.args) == 2 else N.Lit(0)
+        if not (isinstance(d, N.Lit) and isinstance(d.value, int)
+                and not isinstance(d.value, bool)):
             return None
-        if len(args) == 1:
-            a0 = args[0]
-            return lambda row: fn(a0(row))
-        if len(args) == 2:
-            a0, a1 = args
-            return lambda row: fn(a0(row), a1(row))
-        return lambda row: fn(*[a(row) for a in args])
-    return None
+        x = self.expr(e.args[0], row)
+        if x is None:
+            return None
+        rnd = self.const(_round_to(d.value))
+        if not 0 <= d.value < len(POW10_EXACT):
+            return f"{rnd}({x})"
+        t, r, p = self.temp(), self.temp(), self.const(POW10_EXACT[d.value])
+        return (f"({r} if type({t} := {x}) is float and _isfinite({t}) "
+                f"and ({r} := _half_up({t}, {p})) is not None "
+                f"else {rnd}({t}))")
+
+    def build(self, body: list[str]):
+        """Compile ``def run(row):`` over the ``body`` lines, once.  The
+        function carries its source as ``run.source``, registered with
+        linecache so a traceback out of it shows the generated line."""
+        src = "def run(row):\n" + "".join(f"    {ln}\n" for ln in body)
+        filename = f"<pyeval-{next(_EMIT_SEQ)}>"
+        exec(compile(src, filename, "exec"), self.ns)
+        run = self.ns["run"]
+        run.source = src
+        linecache.cache[filename] = (len(src), None,
+                                     src.splitlines(True), filename)
+        weakref.finalize(run, linecache.cache.pop, filename, None)
+        return run
+
+    def function(self, src: str):
+        """``row -> value`` of one expression's source: a lone closure
+        call is that closure itself."""
+        fn = self._closures.get(src)
+        return fn if fn is not None else self.build([f"return {src}"])
 
 
-def _bool3(v):
-    if v is None or isinstance(v, bool):
-        return v
-    raise Fallback()
+def compile_expr(e: N.Expr):
+    """AST → ``fn(row) -> value``; None when the node kind (or any
+    child) is outside the supported subset.  An inlined kind is a
+    function compiled from the emitter's source, any other kind its
+    closure."""
+    em = Emitter()
+    src = em.expr(e)
+    return None if src is None else em.function(src)
 
 
 def compile_direct(stmt: "N.SelectStmt"):
-    """Compile a direct-path statement into
-    ``fn(row) -> dict | None | Fallback-raise``; returns None when the
+    """Compile a direct-path statement into one emitted function
+    ``run(row) -> dict | None | Fallback-raise``; returns None when the
     statement shape is outside the subset (joins/analytics/windows/
     unnest/DISTINCT/ORDER/LIMIT are gated by the caller)."""
-    where_f = None
+    em = Emitter()
+    body = [
+        "for _v in row.values():",
+        # no Spark path ingests a field past BIGINT, so pyeval answers
+        # no such event either — also when the statement never reads
+        # that field
+        "    if type(_v) is int and not _I64_MIN <= _v <= _I64_MAX:",
+        "        raise Fallback()"]
     if stmt.where is not None:
-        where_f = compile_expr(stmt.where)
-        if where_f is None:
+        w = em.expr(stmt.where)
+        if w is None:
             return None
-    outs = []  # (name | None-for-star, fn | None)
+        body += [f"if {em.truth(stmt.where, w)} is not True:",
+                 "    return None"]
+    items = []  # (name constant, source) | None for a star
     for i, f in enumerate(stmt.fields):
         if isinstance(f.expr, N.Star):
             if f.expr.qualifier:
                 return None
-            outs.append((None, None))
+            items.append(None)
             continue
-        fn = compile_expr(f.expr)
-        if fn is None:
+        src = em.expr(f.expr)
+        if src is None:
             return None
         name = f.alias
         if name is None:
             from .planner import _default_name
             name = _default_name(f.expr, i)
-        outs.append((name, fn))
-
-    def run(row: dict):
-        for v in row.values():
-            if type(v) is int and not _I64_MIN <= v <= _I64_MAX:
-                # no Spark path ingests a field past BIGINT, so pyeval
-                # answers no such event either — also when the
-                # statement never reads that field
-                raise Fallback()
-        if where_f is not None and not _truthy(_bool3(where_f(row))):
-            return None
-        out: dict = {}
-        for name, fn in outs:
-            if name is None:  # star: all event fields, sorted-key order
-                for k in sorted(row):
-                    v = row[k]
-                    if v is not None and not isinstance(
-                            v, (int, float, str, bool)):
-                        raise Fallback()
-                    out[k] = v
-            else:
-                out[name] = fn(row)
-        return out
-
-    return run
+        items.append((em.const(name), src))
+    if None not in items:
+        body += ["return {", *(f"    {k}: {v}," for k, v in items), "}"]
+    else:
+        body.append("out = {}")
+        body += ["_star(row, out)" if it is None else f"out[{it[0]}] = {it[1]}"
+                 for it in items]
+        body.append("return out")
+    return em.build(body)

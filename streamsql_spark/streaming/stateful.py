@@ -1040,6 +1040,18 @@ def _step_lag(p, s, argv, gate):
     # last gated values (stream/analytic.go WHEN semantics).
     # 4th arg ignoreNull defaults TRUE: nil never enters the
     # history (functions_analytical.go lagState)
+    if len(argv) == 1:
+        # lag(x): the general body with n = 1, no default, ignoreNull
+        buf = s.setdefault("buf", [])
+        out = buf[-1] if buf else None
+        if gate and argv[0] is not None:
+            buf.append(argv[0])
+            cap = s.get("cap", 0)
+            if cap < _LAG_CAP:
+                cap = s["cap"] = _LAG_CAP
+            if len(buf) > cap:
+                del buf[:-cap]
+        return out
     n = int(argv[1]) if len(argv) > 1 and argv[1] is not None else 1
     default = argv[2] if len(argv) > 2 else None
     ignore_null = bool(argv[3]) if len(argv) > 3 \
@@ -1070,9 +1082,21 @@ def _step_had_changed(p, s, argv, gate):
     # hadChangedState (functions_analytical.go:170-207):
     # first row always true; ignoreNull+nil neither triggers
     # nor overwrites the per-column baseline
+    prev = s.get("prev")
+    if len(argv) == 2 and (prev is None or len(prev) == 1):
+        # had_changed(flag, x) over a one-element baseline: the general
+        # body below with one watched value, a fresh ``prev`` list
+        x = argv[1]
+        if prev is None:
+            s["prev"] = [x]
+            return True
+        if argv[0] and x is None:
+            s["prev"] = [prev[0]]
+            return False
+        s["prev"] = [x]
+        return True if prev[0] != x else False
     ignore_null = bool(argv[0]) if argv else False
     values = list(argv[1:]) if len(argv) > 1 else list(argv[:1])
-    prev = s.get("prev")
     if prev is None:
         s["prev"] = values
         return True

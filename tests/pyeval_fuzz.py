@@ -161,21 +161,24 @@ def _same(py, sp) -> bool:
     return True
 
 
-def main() -> int:
-    seed = int(sys.argv[1]) if len(sys.argv) > 1 else 20260816
+def run_fuzz(spark, seed: int, per_statement: int = 150,
+             report=print) -> tuple[int, int, int]:
+    """Draw ``per_statement`` events for each of the statements of
+    :func:`build_queries` (seeded by ``seed``) and compare the python
+    path with the Spark path on each; every divergence is passed to
+    ``report``.  Returns (compared, fell back, diverged)."""
     rng = random.Random(seed)
-    spark = get_spark(shuffle_partitions=4)
     n_py = n_fb = n_diff = 0
     for sql, gen in build_queries(rng):
         e = StreamSQL(spark)
         e.execute(sql)
-        for _ in range(150):
+        for _ in range(per_statement):
             row = gen()
             try:
                 py = e._emit_sync_python(dict(row))
             except Exception as ex:
                 n_diff += 1
-                print("PYTHON PATH RAISED:", sql[:70], row, repr(ex))
+                report("PYTHON PATH RAISED:", sql[:70], row, repr(ex))
                 continue
             if py is _NOT_APPLICABLE:
                 n_fb += 1
@@ -185,12 +188,18 @@ def main() -> int:
                 sp = e._emit_sync_fast(dict(row))
             except Exception as ex:
                 n_diff += 1
-                print("SPARK PATH RAISED:", sql[:70], row, py,
-                      type(ex).__name__)
+                report("SPARK PATH RAISED:", sql[:70], row, py,
+                       type(ex).__name__)
                 continue
             if not _same(py, sp):
                 n_diff += 1
-                print("DIVERGED:", sql[:70], row, py, sp)
+                report("DIVERGED:", sql[:70], row, py, sp)
+    return n_py, n_fb, n_diff
+
+
+def main() -> int:
+    seed = int(sys.argv[1]) if len(sys.argv) > 1 else 20260816
+    n_py, n_fb, n_diff = run_fuzz(get_spark(shuffle_partitions=4), seed)
     print(f"fuzz(seed={seed}): {n_py} compared, {n_fb} fell back, "
           f"{n_diff} diverged")
     return 1 if n_diff else 0
