@@ -6,21 +6,31 @@ Entry points:
     get_spark            — tuned SparkSession builder
     parse / plan         — dialect front-end (StreamSQL SQL → QueryPlan)
     BatchExecutor        — plan → DataFrame
+
+Every export resolves on first access: the Python worker daemon
+(``worker_daemon``) runs as ``python -m streamsql_spark.worker_daemon``,
+which imports this package before it may import pyspark.
 """
 
-from .api.facade import StreamSQL
-from .dialect.parser import parse
-from .dialect.planner import plan
-from .engine.batch import BatchExecutor
-from .session import get_spark, load_tables
+import importlib
+
+_EXPORTS = {
+    "StreamSQL": ".api.facade",
+    "StreamingExecutor": ".streaming.executor",
+    "parse": ".dialect.parser",
+    "plan": ".dialect.planner",
+    "BatchExecutor": ".engine.batch",
+    "get_spark": ".session",
+    "load_tables": ".session",
+}
 
 
 def __getattr__(name):
-    # lazy: streaming pulls in pandas/pyarrow kernels
-    if name == "StreamingExecutor":
-        from .streaming.executor import StreamingExecutor
-        return StreamingExecutor
-    raise AttributeError(name)
+    if name not in _EXPORTS:
+        raise AttributeError(name)
+    value = getattr(importlib.import_module(_EXPORTS[name], __name__), name)
+    globals()[name] = value
+    return value
 
 
 __all__ = ["StreamSQL", "StreamingExecutor", "parse", "plan", "BatchExecutor",

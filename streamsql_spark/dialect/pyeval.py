@@ -2376,12 +2376,14 @@ class Emitter:
     def col(self, name: str, row: str, raw: bool = False) -> str:
         """A bare column: a float, str or None value as it is, anything
         else through the column's slow path (``raw``: the analytic
-        path's pass-through, :func:`_raw_col_slow`)."""
+        path's pass-through, :func:`_raw_col_slow`, which passes a bool
+        as it is too, so the test admits bool without the call)."""
         v, t = self.temp(), self.temp()
         slow = "_raw_col_slow" if raw else "_col_slow"
+        also = f" or {t} is bool" if raw else ""
         return (f"({v} if ({t} := type({v} := {row}.get("
-                f"{self.const(name)}, _ABSENT))) is float or {t} is str "
-                f"or {v} is None else {slow}({v}))")
+                f"{self.const(name)}, _ABSENT))) is float or {t} is str"
+                f"{also} or {v} is None else {slow}({v}))")
 
     def _binop(self, op: str, left: N.Expr, right: N.Expr, row: str):
         """An arithmetic or comparison operator: its guarded function

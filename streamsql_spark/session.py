@@ -60,12 +60,27 @@ ROCKSDB_STATE_CONFS = {
     "spark.sql.streaming.stateStore.rocksdb.boundedMemoryUsage": "true",
 }
 
+#: How Spark starts the engine's Python workers, in every session the
+#: engine builds (``get_spark``, and the test suite's session): from the
+#: engine's daemon, ``worker_daemon``, which imports the installed,
+#: bytecode-compiled pyspark when it is the version of Spark's
+#: ``pyspark.zip`` and preloads the kernel modules before it forks.  The
+#: package's parent directory goes on the workers' PYTHONPATH, so the
+#: daemon and the kernels import wherever the driver runs from.
+WORKER_CONFS: dict[str, str] = {
+    "spark.python.daemon.module": "streamsql_spark.worker_daemon",
+    "spark.executorEnv.PYTHONPATH":
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+}
+
 
 def get_spark(app_name: str = "streamsql-spark",
               shuffle_partitions: int | None = None,
               rocksdb_state: bool | None = None) -> SparkSession:
     """Return the active session or build a local one for tests/bench.
 
+    Its Python workers fork from the engine's worker daemon,
+    ``streamsql_spark.worker_daemon`` (see ``WORKER_CONFS``).
     ``SPARK_GRAFT_CPUS`` controls local parallelism (driver contract).
     ``rocksdb_state`` (or ``SPARK_GRAFT_ROCKSDB_STATE=1``) switches the
     stateful-streaming kernels onto the RocksDB state store — the
@@ -88,6 +103,7 @@ def get_spark(app_name: str = "streamsql-spark",
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
+        .config(map=WORKER_CONFS)
     )
     for k, v in SCALE_CONFS.items():
         b = b.config(k, v)
@@ -191,11 +207,9 @@ def drop_zip_importers() -> None:
     cache entries is safe: a later import from the archive builds a new
     importer from zipimport's directory cache without reading the file.
 
-    The stateful streaming kernels call it at the entry of their
-    ``applyInPandasWithState`` function (``stateful._apply_per_key``):
-    it runs once per key group, and when there is nothing to drop it
-    costs one scan of the cache's few dozen entries (a few
-    microseconds)."""
+    The engine's worker daemon calls it once, after its preloads and
+    before it forks (``worker_daemon``), so every worker starts its first
+    task with none."""
     cache = sys.path_importer_cache
     for k in [k for k, v in cache.items() if type(v) is zipimporter]:
         cache.pop(k, None)

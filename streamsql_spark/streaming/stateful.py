@@ -46,7 +46,6 @@ from pyspark.sql.types import (ArrayType, BinaryType, BooleanType, DataType,
 from ..dialect import nodes as N
 from ..dialect.render import render
 from ..functions import registry
-from ..session import drop_zip_importers
 from .aggutil import (ALGEBRAIC_AGGS, acc_new, acc_result, acc_update,
                       py_aggregate)
 
@@ -137,14 +136,10 @@ def _apply_per_key(df: DataFrame, keys: list[str], kernel,
     group under ``applyInPandasWithState``.  Keyless input groups on a
     synthetic constant key; the output schema need not (and does not)
     include it."""
-    def per_key(key, pdfs, state):
-        drop_zip_importers()
-        return kernel(key, pdfs, state)
-
     grouped = df.groupBy(*[F.col(k) for k in keys]) if keys \
         else df.withColumn("__k__", F.lit(1)).groupBy("__k__")
     return grouped.applyInPandasWithState(
-        per_key, out_schema, _STATE_SCHEMA, mode, timeout)
+        kernel, out_schema, _STATE_SCHEMA, mode, timeout)
 
 
 def _clean(v):

@@ -10,6 +10,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def spark():
     from pyspark.sql import SparkSession
 
+    from streamsql_spark.session import WORKER_CONFS
+
     spark = (
         SparkSession.builder.master("local[4]")
         .appName("streamsql-spark-tests")
@@ -18,6 +20,7 @@ def spark():
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
+        .config(map=WORKER_CONFS)
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")

@@ -146,3 +146,43 @@ def test_pyeval_fuzz_smoke(spark):
                                   report=lambda *a: diverged.append(a))
     assert n_diff == 0, diverged[:10]
     assert n_py > 1_000, (n_py, n_fb)
+
+
+def test_analytic_bool_placeholder_takes_no_slow_call(spark, monkeypatch):
+    """The analytic gateway statement's bare columns and placeholders
+    (str, float, None and ``had_changed``'s bool) all pass the emitted
+    test: no event calls ``_raw_col_slow``, and the rows equal
+    ``query()``'s."""
+    from pyspark.sql.types import (DoubleType, LongType, StringType,
+                                   StructField, StructType)
+
+    from streamsql_spark.dialect import pyeval
+
+    calls = []
+    slow = pyeval._raw_col_slow
+
+    def counted(v):
+        calls.append(v)
+        return slow(v)
+
+    monkeypatch.setitem(pyeval._EMIT_NS, "_raw_col_slow", counted)
+    sql = """
+        SELECT deviceId, temperature,
+               lag(temperature) OVER (PARTITION BY deviceId) AS prev_t,
+               round(acc_sum(temperature) OVER (PARTITION BY deviceId), 4) AS total,
+               had_changed(true, status) OVER (PARTITION BY deviceId) AS st_changed
+        FROM stream"""
+    schema = StructType([StructField("deviceId", StringType()),
+                         StructField("temperature", DoubleType()),
+                         StructField("status", StringType()),
+                         StructField("ts", LongType())])
+    events = [{"deviceId": f"d{i % 3}", "temperature": 20.0 + (i * 7) % 11,
+               "status": ("ok", "warn", None)[(i // 2) % 3], "ts": 1000 * i}
+              for i in range(60)]
+    e = StreamSQL(spark).execute(sql)
+    got = _in_process(e, events, monkeypatch)
+    assert e._sync_py is not None
+    assert "_raw_col_slow" in e._sync_py.source
+    assert calls == []
+    assert any(type(r["st_changed"]) is bool for r in got)
+    assert _sorted(got) == _sorted(_rows_of(spark, sql, events, schema))
