@@ -230,7 +230,8 @@ class StreamSQL:
         self._results: list[list[dict]] = []
         self._stopped = False
         self._metrics = {"input": 0, "input_dropped": 0, "output": 0,
-                         "schema_dropped": 0, "stream_out_exact": 0}
+                         "output_dropped": 0, "schema_dropped": 0,
+                         "stream_out_exact": 0}
         self._queries: list = []  # StreamingQueries started by start_stream
         # emit_sync's per-statement route (_bind_sync) and the per-event
         # analytic state both of its analytic routes step, keyed
@@ -1599,27 +1600,39 @@ class StreamSQL:
     def emit_sync(self, row: dict) -> dict | None:
         """Synchronous direct-path execution (streamsql.go:262-282).
 
-        Returns the projected row, or None when filtered out.  Analytic
-        state persists across calls.  The first event binds the
-        statement's route (:meth:`_bind_sync`); from then on an event
-        with a bound evaluator goes straight to :meth:`_emit_sync_bound`,
-        and before the binding, or with no evaluator,
-        :meth:`_emit_sync_routed` checks it first.
+        Returns the projected row, or None when filtered out; a passing
+        row is also delivered to the result channel and the sinks
+        (:meth:`_deliver_sync`).  Analytic state persists across calls.
+        The first event binds the statement's route
+        (:meth:`_bind_sync`): when pyeval compiles the statement, this
+        method is replaced on the instance by one generated function
+        that counts, evaluates and delivers the event in one call, and
+        hands an event it does not answer back to the routes below.
         """
-        if self._sync_py is None or not row:
-            return self._emit_sync_routed(row)
-        # bound only with no declared schema (_bind_sync): no schema gate
-        self._metrics["input"] += 1
-        return self._emit_sync_bound(row)
+        return self._emit_sync_routed(row)
 
-    def _bind_sync(self) -> None:
+    def _bind_sync(self):
         """Bind, once per statement, what emit_sync would otherwise
-        decide per event: with a compiled pyeval route (analytic or
+        decide per event.  With a compiled pyeval route (analytic or
         direct), ``_sync_py`` is that route's evaluator — ``row -> dict
         | None``, raising Fallback for an event the Spark route must
-        answer.  Both compilers refuse a statement with a declared
-        schema (its typed CASTs and its schema gate belong to Spark), so
-        the bound route never skips a schema check."""
+        answer — and the instance's ``emit_sync`` becomes one function
+        the emitter writes around the evaluator's body, which:
+
+        - hands a None or empty event to :meth:`_emit_sync_routed`
+          (its typed error, its counting, the Spark routes);
+        - counts ``input``, runs the BIGINT guard and the evaluation,
+          and hands a Fallback event to :meth:`_emit_sync_spark`;
+        - counts ``output``, offers the single-row batch to the bounded
+          result channel (:meth:`_push_result`'s rule, inline) and calls
+          the sinks registered at that moment.
+
+        Returns that function, or None (the Spark routes answer every
+        event through :meth:`_emit_sync_routed`).  Both compilers
+        refuse a statement with a declared schema (its typed CASTs and
+        its schema gate belong to Spark), so the bound function never
+        skips a schema check.  :meth:`_disable_analytic_python` unbinds
+        it."""
         self._sync_bound = True
         if self._plan.analytics:
             if not hasattr(self, "_an_py"):
@@ -1627,10 +1640,36 @@ class StreamSQL:
             self._sync_py = self._an_py
         else:
             self._sync_py = self._direct_py()
+        run = self._sync_py
+        if run is None:
+            return None
+        body = [
+            "if not row:",
+            "    return _routed(row)",
+            "_metrics[_IN] += 1",
+            # the evaluator's body leaves a passing row in ``out``
+            "try:", *("    " + ln for ln in run.body),
+            "except Fallback:",
+            "    return _spark(row)",
+            "_metrics[_OUT] += 1",
+            "_batch = [out]",
+            "if len(_results) < _owner.max_buffer_rows:",
+            "    _results.append(_batch)",
+            "else:",
+            "    _metrics[_DROPPED] += 1",
+            "for _sink in _sinks:",
+            "    _sink(_batch)"]
+        self.emit_sync = run.emitter.build(body, "out", "emit_sync", {
+            "_routed": self._emit_sync_routed, "_spark": self._emit_sync_spark,
+            "_metrics": self._metrics, "_results": self._results,
+            "_sinks": self._sinks, "_owner": self, "_IN": "input",
+            "_OUT": "output", "_DROPPED": "output_dropped"})
+        return self.emit_sync
 
     def _emit_sync_routed(self, row: dict) -> dict | None:
-        """emit_sync before the route is bound, or for an event the
-        bound route does not take (None or empty)."""
+        """emit_sync before the route is bound, on the Spark routes, or
+        for an event the bound function does not take (None or
+        empty)."""
         if getattr(self, "_star_pending", False):
             if row is None:
                 raise ValueError("emit_sync expects a dict event, got None")
@@ -1643,6 +1682,10 @@ class StreamSQL:
             # typed error, not a schema-inference crash
             # (error_handling_test.go:273-283 "EmitSync with nil data")
             raise ValueError("emit_sync expects a dict event, got None")
+        if not self._sync_bound:
+            bound = self._bind_sync()
+            if bound is not None and row:
+                return bound(row)
         self._metrics["input"] += 1
         viol = self._schema_violation(row)
         if viol is not None:
@@ -1651,22 +1694,7 @@ class StreamSQL:
             # the row in SchemaDropped (streamsql.go:275-280)
             self._metrics["schema_dropped"] += 1
             raise ValueError(f"schema validation failed: {viol}")
-        if not self._sync_bound:
-            self._bind_sync()
-        return self._emit_sync_bound(row)
-
-    def _emit_sync_bound(self, row: dict) -> dict | None:
-        """One checked event (``input`` counted): the bound pyeval
-        evaluator, else — no evaluator, an empty event, or a Fallback —
-        the Spark routes."""
-        py = self._sync_py
-        if py is None or not row:
-            return self._emit_sync_spark(row)
-        try:
-            out = py(row)
-        except Fallback:
-            return self._emit_sync_spark(row)
-        return None if out is None else self._deliver_sync(out)
+        return self._emit_sync_spark(row)
 
     def _emit_sync_spark(self, row: dict) -> dict | None:
         """The Spark routes of an event pyeval does not answer (its
@@ -1719,11 +1747,14 @@ class StreamSQL:
         keys, WHEN gates and arguments written by the emitter — one key
         tuple per distinct PARTITION BY, each call's arguments as a list
         display — plus the final projection with analytic calls
-        substituted by placeholder lookups.  State lives in the
-        SAME ``_an_states`` store the Spark route uses, so a per-event
-        fallback keeps one continuous history.  Returns None when the
-        statement falls outside the subset — the Spark route then stays
-        in charge."""
+        substituted by placeholders.  Each stepped value is a local of
+        the function (``Emitter.locals``), which the outputs, WHERE and
+        later WHEN gates read.  Steps run on copies of the state,
+        committed only once the whole event evaluates; state lives in
+        the SAME ``_an_states`` store the Spark route uses, so a
+        per-event fallback keeps one continuous history.  Returns None
+        when the statement falls outside the subset — the Spark route
+        then stays in charge."""
         from ..dialect import nodes as N
         from ..dialect import pyeval
         from ..dialect.planner import _default_name
@@ -1770,28 +1801,25 @@ class StreamSQL:
 
         em = pyeval.Emitter()
 
-        def expr(e, row):
+        def expr(e):
             # a bare-column (or placeholder) value lands in the output,
             # or feeds a step, verbatim: container-typed analytics incl.
-            if isinstance(e, N.Col) and len(e.parts) == 1 \
-                    and isinstance(e.parts[0], str):
-                return em.col(e.parts[0], row, raw=True)
-            return em.expr(e, row)
+            name = pyeval.bare_name(e)
+            return em.col(name, "row", raw=True) if name is not None \
+                else em.expr(e)
 
-        outs = []  # (name constant, source over ext)
+        fields = []  # (output name, node with placeholders substituted)
         for i, f in enumerate(self._stmt.fields):
             if isinstance(f.expr, N.Star):
                 return None  # star + analytics: Spark path
             e2 = N.transform(f.expr, subst)
-            src = None if bad else expr(e2, "ext")
-            if src is None:
+            if bad:
                 return None
-            outs.append((em.const(f.alias or _default_name(f.expr, i)), src))
+            fields.append((f.alias or _default_name(f.expr, i), e2))
         from ..plans.plan import where_filters_first
         where_first = where_filters_first(plan)
-        where = None  # the WHERE condition's source
-        if self._stmt.where is not None:
-            w = self._stmt.where
+        w = self._stmt.where
+        if w is not None:
             from ..functions.registry import is_analytic as _is_an
             # same bare-analytic WHERE semantics the planner applies
             # (analytic_parity_test.go:356-368): a bare value-typed
@@ -1803,10 +1831,6 @@ class StreamSQL:
                 return None
             if bare_value:
                 w = N.IsNull(operand=w, negated=True)
-            src = em.expr(w, "row" if where_first else "ext")
-            if src is None:
-                return None
-            where = em.truth(w, src)
 
         from ..functions.registry import custom_analytic
         from ..streaming.stateful import (analytic_copier_for,
@@ -1818,31 +1842,43 @@ class StreamSQL:
         # the LRU cap is the only reason to visit each slot on commit
         if self.analytic_max_partitions is not None:
             em.define("_touch", self._touch_analytic_partition)
-        keys = []  # one key tuple per distinct PARTITION BY, first use
-        key_at: dict[str, str] = {}
-        steps, touches, commits = [], [], []  # statements per spec
+        inner = []  # the statements evaluated on copies of the state
+        if w is not None and where_first:
+            # standard-SQL mode: the filter sees only raw columns; a
+            # rejected row never touches state
+            src = em.expr(w)
+            if src is None:
+                return None
+            inner += em.reads()
+            inner += [f"if {em.truth(w, src)} is not True:",
+                      "    return None"]
+        key_at: dict[str, str] = {}  # one key tuple per distinct PARTITION BY
+        touches, commits = [], []  # statements per spec
         for n, s in enumerate(plan.analytics):
             over = s.func.over
             by = over.partition_by if over else []
             key = key_at.get(repr(by))
             if key is None:
-                parts = [em.expr(p, "row") for p in by]
+                parts = [em.expr(p) for p in by]
                 if None in parts:
                     return None
-                key = key_at[repr(by)] = f"_k{len(keys)}"
-                keys.append(f"{key} = ({''.join(p + ', ' for p in parts)})")
+                key = key_at[repr(by)] = f"_k{len(key_at)}"
+                inner += em.reads()
+                inner.append(f"{key} = ({''.join(p + ', ' for p in parts)})")
             gate = "True"
             if over is not None and over.when is not None:
                 # when_ast has nested analytic calls pre-lifted to
                 # placeholder refs (planner); over.when still holds the
-                # raw call, which pyeval can't evaluate.  The gate runs
-                # against ``ext`` (row + already-stepped placeholders),
-                # so an inner analytic's value is visible
-                w = s.when_ast if s.when_ast is not None else over.when
-                src = em.expr(w, "ext")
+                # raw call, which pyeval can't evaluate.  A placeholder
+                # stepped earlier in this event reads its local (a
+                # lifted WHEN had_changed(...))
+                wn = s.when_ast if s.when_ast is not None else over.when
+                src = em.expr(wn)
                 if src is None:
                     return None
-                gate = f"{em.truth(w, src)} is True"
+                gate = f"_g{n}"
+                inner += em.reads()
+                inner.append(f"{gate} = {em.truth(wn, src)} is True")
             args = []
             arg_marks = []  # the steps' has_start probe shape
             for a in s.func.args:
@@ -1853,7 +1889,7 @@ class StreamSQL:
                     args.append(em.const(a.value))
                     arg_marks.append(None)
                 else:
-                    args.append(expr(a, "row"))
+                    args.append(expr(a))
                     arg_marks.append("x")
             if None in args:
                 return None
@@ -1865,20 +1901,35 @@ class StreamSQL:
                     "acc_avg"):
                 return None  # fan-out/renderer-special fns: Spark path
             ph = em.const(p["ph"])
-            steps += [
+            inner += em.reads()
+            inner += [
                 f"_s{n} = ({ph}, {key})",
-                # ext, not row: the gate may reference an earlier
-                # spec's placeholder (lifted WHEN had_changed(...))
-                f"_g{n} = {gate}",
-                # a new list per event: a custom state may keep it
-                f"_a{n} = [{', '.join(args)}]",
                 f"_st{n} = {em.const(analytic_copier_for(p))}"
                 f"(_states.get(_s{n}) or {{}})",
-                f"ext[{ph}] = {em.const(analytic_step_for(p))}"
-                f"({em.const(p)}, _st{n}, _a{n}, _g{n})"]
+                # a new argument list per event: a custom state may keep it
+                f"_p{n} = {em.const(analytic_step_for(p))}"
+                f"({em.const(p)}, _st{n}, [{', '.join(args)}], {gate})"]
+            # later reads of the placeholder (outputs, WHERE, a later
+            # spec's WHEN) read the stepped value
+            em.locals[s.placeholder] = f"_p{n}"
             if self.analytic_max_partitions is not None:
                 touches.append(f"_touch({ph}, {key})")
             commits.append(f"_states[_s{n}] = _st{n}")
+        outs = [(em.const(name), expr(e2)) for name, e2 in fields]
+        if any(src is None for _, src in outs):
+            return None
+        out = ["out = {", *(f"    {k}: {v}," for k, v in outs), "}"]
+        if w is not None and not where_first:
+            # CDC mode (WHERE reads an analytic): state advanced BEFORE
+            # the filter, and stays advanced on rejection
+            src = em.expr(w)
+            if src is None:
+                return None
+            inner += em.reads()
+            inner += [f"if {em.truth(w, src)} is not True:", "    out = None",
+                      "else:", *("    " + ln for ln in out)]
+        else:
+            inner += em.reads() + out
         # reference omitEmpty (stream/stream.go:698-703): a SELECT of
         # solely bare change-detection fields suppresses the row when
         # none changed (state still advances, like a WHERE filter)
@@ -1886,7 +1937,6 @@ class StreamSQL:
             isinstance(f.expr, N.Func)
             and f.expr.name.lower() == "changed_col"
             for f in self._stmt.fields)
-        out = ["out = {", *(f"    {k}: {v}," for k, v in outs), "}"]
         body = [
             "for _v in row.values():",
             "    if (_k := type(_v)) is int:",
@@ -1900,33 +1950,25 @@ class StreamSQL:
             # step state on COPIES, commit only after the whole event
             # evaluates: a Fallback anywhere hands the UNTOUCHED state
             # to the Spark route, which then performs the one true step
-            "try:"]
-        if where is not None and where_first:
-            # standard-SQL mode: the filter sees only raw columns; a
-            # rejected row never touches state
-            body += [f"    if {where} is not True:", "        return None"]
-        body += ["    " + ln for ln in keys + ["ext = dict(row)"] + steps]
-        if where is not None and not where_first:
-            # CDC mode (WHERE reads an analytic): state advanced BEFORE
-            # the filter, and stays advanced on rejection
-            body += [f"    if {where} is not True:", "        out = None",
-                     "    else:", *("        " + ln for ln in out)]
-        else:
-            body += ["    " + ln for ln in out]
-        body += ["except Fallback:", "    raise", "except Exception:",
-                 "    _disable()", "    raise Fallback()", *touches,
-                 *commits]
+            "try:", *("    " + ln for ln in inner),
+            "except Fallback:", "    raise", "except Exception:",
+            "    _disable()", "    raise Fallback()", *touches, *commits]
+        if w is not None and not where_first:
+            body += ["if out is None:", "    return None"]
         if omit_empty:  # the state advanced all the same
-            body += ["if out is not None and all(v is None for v in "
-                     "out.values()):", "    return None"]
-        body.append("return out")
+            body += ["if all(v is None for v in out.values()):",
+                     "    return None"]
+        # falls through with ``out`` a dict: the bound emit_sync
+        # (_bind_sync) delivers it
         return em.build(body)
 
     def _disable_analytic_python(self) -> None:
         """After a deepcopy of an exotic custom state (or a kernel
         surprise) failed: the Spark route answers this statement's
-        events from now on."""
+        events from now on — the bound emit_sync is unbound, so the
+        class's routed one takes over."""
         self._an_py = self._sync_py = None
+        self.__dict__.pop("emit_sync", None)
 
     def _emit_sync_analytic_spark(self, row: dict) -> dict | None:
         """Per-event analytic evaluation in O(1) state (the reference's
@@ -2045,15 +2087,29 @@ class StreamSQL:
         return self._deliver_sync(row_to_dict(out[-1]))
 
     def _deliver_sync(self, row: dict) -> dict:
-        """EmitSync results also reach registered sinks — one single-row
-        batch per passing event (sink_test.go TestEmitSyncWithAddSink;
-        streamsql.go:262-282 routes sync results through the handler)."""
+        """A Spark route's EmitSync result: counted in ``output``,
+        offered to the result channel (:meth:`_push_result`) and passed
+        to the registered sinks — one single-row batch per passing
+        event (sink_test.go TestEmitSyncWithAddSink; streamsql.go:262-282
+        routes sync results through the handler).  The bound pyeval
+        emit_sync (:meth:`_bind_sync`) does the same inline."""
         batch = [row]
-        self._results.append(batch)
         self._metrics["output"] += 1
+        self._push_result(batch)
         for sink in self._sinks:
             sink(batch)
         return row
+
+    def _push_result(self, batch: list[dict]) -> None:
+        """Offer one batch to the result channel, which holds at most
+        ``max_buffer_rows`` batches: when full, the incoming batch is
+        dropped and counted in ``output_dropped`` (the data channel's
+        drop rule), and the caller is never blocked — its return value
+        and the sinks still get every row."""
+        if len(self._results) < self.max_buffer_rows:
+            self._results.append(batch)
+        else:
+            self._metrics["output_dropped"] += 1
 
     def add_sink(self, fn: Callable[[list[dict]], None]) -> None:
         self._sinks.append(fn)
@@ -2127,7 +2183,7 @@ class StreamSQL:
             # the same row twice once it reappears in a later full set
             self._delivered_replay = self._delivered_replay + batch
             self._history = replayed + new_rows
-        self._results.append(batch)
+        self._push_result(batch)
         self._metrics["output"] += len(batch)
         for sink in self._sinks:
             sink(batch)
@@ -2185,7 +2241,7 @@ class StreamSQL:
             "input_count": m["input"] + stream_in,
             "output_count": m["output"] + stream_out,
             "input_dropped_count": m["input_dropped"],
-            "output_dropped_count": 0,
+            "output_dropped_count": m["output_dropped"],
             "dropped_count": m["input_dropped"],
             "data_chan_len": len(self._buffer),
             "data_chan_cap": self.max_buffer_rows,

@@ -43,8 +43,11 @@ with its exact-``type()`` fast path and a call to its guarded function
 for every other value:
 
 - a literal: a constant of the function's namespace;
-- a bare column: a float, str or None value as it is, anything else
-  through the column's slow path;
+- a bare column: read once per statement (its ``.get`` and ``type()``
+  are statements placed before the first statement that uses it); at
+  each use a float, str or None value as it is, anything else through
+  the column's slow path, so a column read only by a later CASE branch
+  cannot raise Fallback before an earlier branch answers;
 - an arithmetic or comparison operator: its guarded function from
   ``_ARITH`` / ``_CMP``, looked up once; against a literal validated
   once, a float (or, against a string literal, str) operand goes
@@ -62,8 +65,10 @@ Any other node is a closure (:func:`_compile_closure`) bound as a
 constant.  Values from the SQL text enter the namespace as constants,
 never as source text.  ``compile_direct``'s function is the whole
 per-event work of a plain statement, and the facade's analytic plan is
-emitted the same way: ``StreamSQL.emit_sync`` binds the function once
-and calls it directly.
+emitted the same way; when ``StreamSQL`` binds a statement, the
+emitter writes one more function around the same body — counting,
+evaluation and delivery in one call — that becomes the instance's
+``emit_sync``.
 """
 
 from __future__ import annotations
@@ -2271,6 +2276,14 @@ def _fallback():
     raise Fallback()
 
 
+def bare_name(e: N.Expr) -> str | None:
+    """The name of a bare single-part column node, else None."""
+    if isinstance(e, N.Col) and len(e.parts) == 1 \
+            and isinstance(e.parts[0], str):
+        return e.parts[0]
+    return None
+
+
 # what every emitted function may read besides its own constants
 _EMIT_NS = {"Fallback": Fallback, "_ABSENT": _ABSENT, "_I64_MIN": _I64_MIN,
             "_I64_MAX": _I64_MAX, "_isfinite": _isfinite,
@@ -2305,9 +2318,10 @@ class Emitter:
 
     Inlined node kinds, each with its exact-type fast path and a call
     to its guarded function for every other value: a literal; a bare
-    column; arithmetic and comparison operators (raw Python arithmetic
-    on a float, or comparison on a finite float or a string, against a
-    validated literal); a searched CASE whose branches are all literals;
+    column (read once per statement, :meth:`reads`); arithmetic and
+    comparison operators (raw Python arithmetic on a float, or
+    comparison on a finite float or a string, against a validated
+    literal); a searched CASE whose branches are all literals;
     ``round`` with an int-literal scale (:func:`half_up_double` on a
     finite double for 0 <= d <= 22, else its Decimal path); ``cast``
     and every ``_FNS`` call.  Any other node is its
@@ -2318,6 +2332,13 @@ class Emitter:
         self.ns = dict(_EMIT_NS)
         self._n = 0
         self._closures: dict[str, object] = {}  # lone call source -> fn
+        # one read per (dict, column): (value name, type name), and the
+        # read statements not yet placed (:meth:`reads`)
+        self._read_at: dict[tuple, tuple[str, str]] = {}
+        self._pending: list[str] = []
+        #: column name -> the local holding its value (the analytic
+        #: plan's stepped placeholders), read in place of the row
+        self.locals: dict[str, str] = {}
 
     def const(self, v) -> str:
         name = f"_c{self._n}"
@@ -2336,10 +2357,18 @@ class Emitter:
         self.ns[name] = v
         return name
 
-    def bind(self, fn, row: str) -> str | None:
-        """A closure bound as a constant and called on ``row``."""
+    def bind(self, fn, row: str, e: N.Expr) -> str | None:
+        """A closure of node ``e`` bound as a constant and called on
+        ``row`` — on a copy of ``row`` that also holds the
+        :attr:`locals` ``e`` reads, since a closure reads a dict."""
         if fn is None:
             return None
+        names = sorted({n for x in N.walk(e)
+                        if (n := bare_name(x)) in self.locals}) \
+            if self.locals else []
+        if names:
+            row = "{**%s, %s}" % (row, ", ".join(
+                f"{self.const(n)}: {self.locals[n]}" for n in names))
         src = f"{self.const(fn)}({row})"
         self._closures[src] = fn
         return src
@@ -2356,12 +2385,14 @@ class Emitter:
     def expr(self, e: N.Expr, row: str = "row") -> str | None:
         """The source of one Python expression (an atom: a name, a call
         or a parenthesised expression) evaluating ``e`` over the dict
-        named ``row``; None when ``e`` is outside the subset."""
+        named ``row``; None when ``e`` is outside the subset.  The
+        columns it reads are read by the statements :meth:`reads`
+        returns next, which the caller places before its statement."""
         if isinstance(e, N.Lit):
             return self.const(e.value)
-        if isinstance(e, N.Col) and len(e.parts) == 1 \
-                and isinstance(e.parts[0], str):
-            return self.col(e.parts[0], row)
+        name = bare_name(e)
+        if name is not None:
+            return self.col(name, row)
         if isinstance(e, N.Bin) and (e.op.upper() in _ARITH
                                      or e.op.upper() in _CMP):
             return self._binop(e.op.upper(), e.left, e.right, row)
@@ -2371,19 +2402,44 @@ class Emitter:
             return self._case(e, row)
         if isinstance(e, N.Func):
             return self._func(e, row)
-        return self.bind(_compile_closure(e), row)
+        return self.bind(_compile_closure(e), row, e)
+
+    def _read(self, name: str, row: str) -> tuple[str, str]:
+        """The names holding column ``name``'s value and its ``type()``,
+        read once: the first use queues the read statement; a name in
+        :attr:`locals` is that local's value, not the row's."""
+        local = self.locals.get(name)
+        at = (None, local) if local is not None else (row, name)
+        got = self._read_at.get(at)
+        if got is None:
+            t = self.temp()
+            if local is not None:
+                v, src = local, local
+            else:
+                v = self.temp()
+                src = f"{v} := {row}.get({self.const(name)}, _ABSENT)"
+            self._pending.append(f"{t} = type({src})")
+            got = self._read_at[at] = (v, t)
+        return got
+
+    def reads(self) -> list[str]:
+        """The read statements of the columns first used since the last
+        call: a ``.get`` and a ``type()`` never raise, so they can run
+        ahead of any condition; only the use site's slow path can."""
+        out, self._pending = self._pending, []
+        return out
 
     def col(self, name: str, row: str, raw: bool = False) -> str:
-        """A bare column: a float, str or None value as it is, anything
-        else through the column's slow path (``raw``: the analytic
-        path's pass-through, :func:`_raw_col_slow`, which passes a bool
-        as it is too, so the test admits bool without the call)."""
-        v, t = self.temp(), self.temp()
+        """A use of a bare column (read once, :meth:`_read`): a float,
+        str or None value as it is, anything else through the column's
+        slow path (``raw``: the analytic path's pass-through,
+        :func:`_raw_col_slow`, which passes a bool as it is too, so the
+        test admits bool without the call)."""
+        v, t = self._read(name, row)
         slow = "_raw_col_slow" if raw else "_col_slow"
         also = f" or {t} is bool" if raw else ""
-        return (f"({v} if ({t} := type({v} := {row}.get("
-                f"{self.const(name)}, _ABSENT))) is float or {t} is str"
-                f"{also} or {v} is None else {slow}({v}))")
+        return (f"({v} if {t} is float or {t} is str{also} or {v} is None"
+                f" else {slow}({v}))")
 
     def _binop(self, op: str, left: N.Expr, right: N.Expr, row: str):
         """An arithmetic or comparison operator: its guarded function
@@ -2414,19 +2470,29 @@ class Emitter:
         if isinstance(left, N.Lit) or not isinstance(right, N.Lit) \
                 or py is None:
             return f"{f}({a}, {b})"
-        lit, t = right.value, self.temp()
-        if op in _CMP and type(lit) is str:
-            fast = f"type({t} := {a}) is str"
-        elif not _valid_num(lit) or op == "/" and lit == 0 \
-                or op in _CMP and type(lit) is int \
-                and not -_F53 <= lit <= _F53:
+        lit = right.value
+        if not (op in _CMP and type(lit) is str) and (
+                not _valid_num(lit) or op == "/" and lit == 0
+                or op in _CMP and type(lit) is int
+                and not -_F53 <= lit <= _F53):
             # (an int past 2^53: a float operand falls back, _cmp_ok)
             return f"{f}({a}, {b})"
-        elif op in _CMP:
-            fast = f"type({t} := {a}) is float and _isfinite({t})"
+        name = bare_name(left)
+        if name is not None:
+            # a column operand: its type was read with it; any other
+            # value goes through the column's use site (its slow path)
+            x, ty = self._read(name, row)
+            other = a
         else:
-            fast = f"type({t} := {a}) is float"
-        return f"({t} {py} {b} if {fast} else {f}({t}, {b}))"
+            x = other = self.temp()
+            ty = f"type({x} := {a})"
+        if op in _CMP and type(lit) is str:
+            fast = f"{ty} is str"
+        elif op in _CMP:
+            fast = f"{ty} is float and _isfinite({x})"
+        else:
+            fast = f"{ty} is float"
+        return f"({x} {py} {b} if {fast} else {f}({other}, {b}))"
 
     def _case(self, e: N.Case, row: str):
         """A searched CASE whose THEN/ELSE values are all literals: the
@@ -2461,7 +2527,7 @@ class Emitter:
                 # which one the rendered SQL resolves to is the Spark
                 # path's business — don't guess
                 return None
-            return self.bind(_compile_custom_scalar(lname, e), row)
+            return self.bind(_compile_custom_scalar(lname, e), row, e)
         if lname == "case_when":
             # the renderer pairs args WHEN/THEN with a trailing ELSE
             # (registry._render_case_when) — build the equivalent
@@ -2490,13 +2556,13 @@ class Emitter:
             return None  # see _TZ_GATED — non-UTC session at compile
         special = _FN_CLOSURES.get(lname)
         if special is not None:
-            return self.bind(special(e), row)
+            return self.bind(special(e), row, e)
         if lname in _ARRAY_FN_NAMES:
-            return self.bind(_compile_array_fn(lname, e), row)
+            return self.bind(_compile_array_fn(lname, e), row, e)
         if lname in ("len", "length"):
             arr = _compile_array_len(e)
             if arr is not None:
-                return None if arr is _NO_COMPILE else self.bind(arr, row)
+                return None if arr is _NO_COMPILE else self.bind(arr, row, e)
             # not the array branch: string length via _FNS below
         arity = _FN_ARITY.get(lname)
         if arity is not None and not (arity[0] <= len(e.args) <= arity[1]):
@@ -2532,25 +2598,33 @@ class Emitter:
                 f"and ({r} := _half_up({t}, {p})) is not None "
                 f"else {rnd}({t}))")
 
-    def build(self, body: list[str]):
-        """Compile ``def run(row):`` over the ``body`` lines, once.  The
-        function carries its source as ``run.source``, registered with
-        linecache so a traceback out of it shows the generated line."""
-        src = "def run(row):\n" + "".join(f"    {ln}\n" for ln in body)
+    def build(self, body: list[str], result: str = "out",
+              name: str = "run", ns: dict | None = None):
+        """Compile ``def <name>(row):`` over the ``body`` lines ending in
+        ``return <result>``, once, in the emitter's namespace (or in a
+        copy of it with ``ns`` added).  The function carries its source
+        as ``.source``, its body as ``.body`` and the emitter as
+        ``.emitter``, so a caller can build a second function around the
+        same body; the source is registered with linecache so a
+        traceback out of it shows the generated line."""
+        src = (f"def {name}(row):\n"
+               + "".join(f"    {ln}\n" for ln in body)
+               + f"    return {result}\n")
         filename = f"<pyeval-{next(_EMIT_SEQ)}>"
-        exec(compile(src, filename, "exec"), self.ns)
-        run = self.ns["run"]
-        run.source = src
+        g = self.ns if ns is None else {**self.ns, **ns}
+        exec(compile(src, filename, "exec"), g)
+        fn = g[name]
+        fn.source, fn.body, fn.emitter = src, body, self
         linecache.cache[filename] = (len(src), None,
                                      src.splitlines(True), filename)
-        weakref.finalize(run, linecache.cache.pop, filename, None)
-        return run
+        weakref.finalize(fn, linecache.cache.pop, filename, None)
+        return fn
 
     def function(self, src: str):
         """``row -> value`` of one expression's source: a lone closure
         call is that closure itself."""
         fn = self._closures.get(src)
-        return fn if fn is not None else self.build([f"return {src}"])
+        return fn if fn is not None else self.build(self.reads(), src)
 
 
 def compile_expr(e: N.Expr):
@@ -2580,6 +2654,7 @@ def compile_direct(stmt: "N.SelectStmt"):
         w = em.expr(stmt.where)
         if w is None:
             return None
+        body += em.reads()
         body += [f"if {em.truth(stmt.where, w)} is not True:",
                  "    return None"]
     items = []  # (name constant, source) | None for a star
@@ -2597,11 +2672,11 @@ def compile_direct(stmt: "N.SelectStmt"):
             from .planner import _default_name
             name = _default_name(f.expr, i)
         items.append((em.const(name), src))
+    body += em.reads()
     if None not in items:
-        body += ["return {", *(f"    {k}: {v}," for k, v in items), "}"]
+        body += ["out = {", *(f"    {k}: {v}," for k, v in items), "}"]
     else:
         body.append("out = {}")
         body += ["_star(row, out)" if it is None else f"out[{it[0]}] = {it[1]}"
                  for it in items]
-        body.append("return out")
     return em.build(body)

@@ -384,6 +384,24 @@ def _analytic_column(spec: AnalyticSpec, order_cols: list[Column],
             return _canon_map_cmp(c, dt)
         return c
 
+    # the change detectors' WHEN gate (a NULL gate is false): a
+    # gated-out row moves no baseline and reports no change, like an
+    # ignoreNull row with a NULL value
+    gate = (None if when_sql is None
+            else F.coalesce(F.expr(when_sql), F.lit(False)))
+
+    def changed(c: Column, cc: Column, ignore_null: bool) -> Column:
+        """Under ``gate``: whether ``cc`` (``c``'s comparison form)
+        differs from its baseline, the value on the latest earlier row
+        that moved it — a gated-in row, with a non-NULL value under
+        ``ignore_null`` — or there is none.  The baseline is wrapped in
+        a struct so a NULL baseline stays told apart from none."""
+        store = gate & c.isNotNull() if ignore_null else gate
+        base = F.last(F.when(store, F.struct(cc.alias("v"))),
+                      ignorenulls=True).over(w_prev)
+        chg = base.isNull() | ~base.getField("v").eqNullSafe(cc)
+        return c.isNotNull() & chg if ignore_null else chg
+
     if name == "lag":
         if len(f.args) > 1 and not isinstance(f.args[1], N.Lit):
             # the streaming/sync kernel evaluates a per-row offset
@@ -503,6 +521,13 @@ def _analytic_column(spec: AnalyticSpec, order_cols: list[Column],
                             if not c.startswith("__"))
             else:
                 cols.append(F.expr(render(a)))
+        if gate is not None:
+            # the first gated-in row is a change; so is any watched
+            # column's against its own baseline
+            out = F.count(F.when(gate, 1)).over(w_prev) == 0
+            for c in cols:
+                out = out | changed(c, cmp_form(c), ignore_null)
+            return F.when(gate, out).otherwise(F.lit(False))
         out = F.row_number().over(w) == 1
         for c in cols:
             # map-typed watches compare via the canonical JSON form
@@ -523,6 +548,8 @@ def _analytic_column(spec: AnalyticSpec, order_cols: list[Column],
         ignore_null = bool(lit_arg(0, False))
         val = arg(1)
         vc = cmp_form(val)  # compare canonically, return the raw value
+        if gate is not None:
+            return F.when(gate & changed(val, vc, ignore_null), val)
         if ignore_null:
             prev_eff = F.last(vc, ignorenulls=True).over(w_prev)
             return F.when(val.isNotNull() & ~prev_eff.eqNullSafe(vc), val)
@@ -536,6 +563,8 @@ def _analytic_column(spec: AnalyticSpec, order_cols: list[Column],
         # ignoreNull+nil keeps the baseline (analytic_acc.go:168-185)
         c = arg(0)
         cc = cmp_form(c)
+        if gate is not None:
+            return F.when(gate & changed(c, cc, bool(lit_arg(1, False))), c)
         if bool(lit_arg(1, False)):
             base = F.last(cc, ignorenulls=True).over(w_prev)
             return F.when(c.isNotNull() & ~base.eqNullSafe(cc), c)
@@ -564,7 +593,6 @@ def _analytic_column(spec: AnalyticSpec, order_cols: list[Column],
                                                   (NumericType, NullType)):
                 return F.lit(None).cast("double")
         x = arg(0)
-        gate = F.expr(when_sql) if when_sql is not None else None
         if gate is not None:
             x = F.when(gate, x)
         seg = None

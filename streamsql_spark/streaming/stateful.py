@@ -1007,21 +1007,6 @@ def copy_state(v):
     return copy.deepcopy(v)
 
 
-def copy_builtin_state(st: dict) -> dict:
-    """One-level copy for BUILT-IN analytic state snapshots — valid
-    because the built-in steps (lag/latest/had_changed/changed_col/
-    acc_*) only ever store scalars, flat lists of scalars (the lag
-    ring, the had_changed baseline), or the acc_avg (total, count)
-    tuple: ``list.copy()`` is a C-speed deep copy for those shapes,
-    where :func:`copy_state`'s per-element dispatch cost ~5 µs/event
-    on the direct path.  Custom ``AnalyticState`` objects must go
-    through :func:`copy_state` instead."""
-    out = {}
-    for k, x in st.items():
-        out[k] = x.copy() if type(x) is list else x
-    return out
-
-
 # ---- analytic steps: one function per analytic name, shared by every
 # route (the streaming kernel, batch custom analytics, the per-event
 # python path and its Spark route).  ``step(p, s, argv, gate) -> value`` advances the per-key
@@ -1076,7 +1061,11 @@ def _step_latest(p, s, argv, gate):
 def _step_had_changed(p, s, argv, gate):
     # hadChangedState (functions_analytical.go:170-207):
     # first row always true; ignoreNull+nil neither triggers
-    # nor overwrites the per-column baseline
+    # nor overwrites the per-column baseline.  A WHEN-gated-out row
+    # is skipped the same way: it moves no baseline and reports no
+    # change (the change detectors' stale value)
+    if not gate:
+        return False
     prev = s.get("prev")
     if len(argv) == 2 and (prev is None or len(prev) == 1):
         # had_changed(flag, x) over a one-element baseline: the general
@@ -1110,7 +1099,10 @@ def _step_had_changed(p, s, argv, gate):
 def _step_changed_col(p, s, argv, gate):
     # changedColState (functions/analytic_acc.go:125-154):
     # new value on change (first row counts), None otherwise;
-    # ignoreNull skips nulls without touching state
+    # ignoreNull skips nulls, and the WHEN gate skips its rows,
+    # without touching state
+    if not gate:
+        return None
     ignore_null = bool(argv[0]) if argv else False
     val = argv[1] if len(argv) > 1 else None
     if ignore_null and val is None:
@@ -1123,7 +1115,10 @@ def _step_changed_col(p, s, argv, gate):
 
 
 def _step_changed_value(p, s, argv, gate):
-    # ignoreNull+nil: no emit, baseline kept (analytic_acc.go:168-185)
+    # ignoreNull+nil: no emit, baseline kept (analytic_acc.go:168-185);
+    # a WHEN-gated-out row likewise
+    if not gate:
+        return None
     if len(argv) > 1 and bool(argv[1]) and argv[0] is None:
         return None
     prev = s.get("prev", ...)
@@ -1243,16 +1238,27 @@ def analytic_step_for(p):
     raise ValueError(f"unsupported streaming analytic: {p['name']}")
 
 
+def _copy_lag_state(st: dict) -> dict:
+    """lag's snapshot: the state dict and its one ring-buffer list (of
+    values no step mutates), each copied in C."""
+    out = st.copy()
+    buf = out.get("buf")
+    if buf is not None:
+        out["buf"] = buf.copy()
+    return out
+
+
 def analytic_copier_for(p):
     """The copier that snapshots spec ``p``'s state before a step on a
     copy (the per-event python path commits the copy only once the
-    whole event evaluates).  lag appends to its stored ring buffer, so
-    it needs a one-level copy; a custom state object may hold anything
-    (generic deep copy); every other built-in step only rebinds keys,
-    so a dict copy isolates it."""
+    whole event evaluates), cheapest first: every built-in step but lag
+    only rebinds keys, so a dict copy isolates it; lag also appends to
+    its stored ring buffer, so that one list is copied too
+    (:func:`_copy_lag_state`); a custom state object may hold anything
+    (:func:`copy_state`, a generic deep copy)."""
     name = p["name"]
     if name == "lag":
-        return copy_builtin_state
+        return _copy_lag_state
     if name in ANALYTIC_STEPS:
         return dict.copy
     return copy_state

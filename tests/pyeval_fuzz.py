@@ -30,7 +30,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from streamsql_spark.api.facade import _NOT_APPLICABLE, StreamSQL  # noqa: E402
+from streamsql_spark.api.facade import StreamSQL  # noqa: E402
 from streamsql_spark.session import get_spark  # noqa: E402
 
 
@@ -161,26 +161,36 @@ def _same(py, sp) -> bool:
     return True
 
 
+# what the fuzzer's stand-in for the Spark route answers: an event the
+# bound emit_sync hands on is counted, not evaluated twice
+_HANDED_ON = object()
+
+
 def run_fuzz(spark, seed: int, per_statement: int = 150,
              report=print) -> tuple[int, int, int]:
     """Draw ``per_statement`` events for each of the statements of
-    :func:`build_queries` (seeded by ``seed``) and compare the python
-    path with the Spark path on each; every divergence is passed to
-    ``report``.  Returns (compared, fell back, diverged)."""
+    :func:`build_queries` (seeded by ``seed``) and send each through the
+    public ``emit_sync`` — the function the first event binds — then
+    compare every event the python path answered with the Spark path's
+    answer; every divergence is passed to ``report``.  An event the
+    bound function hands to the Spark route (``_emit_sync_spark``, here
+    a stand-in that only marks it) fell back.  Returns (compared, fell
+    back, diverged)."""
     rng = random.Random(seed)
     n_py = n_fb = n_diff = 0
     for sql, gen in build_queries(rng):
         e = StreamSQL(spark)
         e.execute(sql)
+        e._emit_sync_spark = lambda row: _HANDED_ON
         for _ in range(per_statement):
             row = gen()
             try:
-                py = e._emit_sync_python(dict(row))
+                py = e.emit_sync(dict(row))
             except Exception as ex:
                 n_diff += 1
                 report("PYTHON PATH RAISED:", sql[:70], row, repr(ex))
                 continue
-            if py is _NOT_APPLICABLE:
+            if py is _HANDED_ON:
                 n_fb += 1
                 continue
             n_py += 1

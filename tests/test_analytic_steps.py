@@ -40,6 +40,8 @@ def _ref_lag(p, s, argv, gate):
 
 
 def _ref_had_changed(p, s, argv, gate):
+    if not gate:
+        return False  # a gated-out row: no baseline moves, no change
     ignore_null = bool(argv[0]) if argv else False
     values = list(argv[1:]) if len(argv) > 1 else list(argv[:1])
     prev = s.get("prev")

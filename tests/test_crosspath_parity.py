@@ -276,6 +276,66 @@ def test_gated_lag_offset2_matches_kernel(spark):
     assert got_py == want
 
 
+# the change detectors under a WHEN gate: a gated-out row moves no
+# baseline and reports no change (had_changed false, changed_col and the
+# changed_cols members NULL), like an ignoreNull row with a NULL value.
+# changed_cols fans out to one spec per member, which pyeval does not
+# plan: that statement's schemaless emit_sync takes the Spark route too
+CDC_GATED = [
+    ("hc", "had_changed(true, status)"),
+    ("hcn", "had_changed(false, temperature)"),
+    ("hc2", "had_changed(true, temperature, status)"),
+    ("cc", "changed_col(false, status)"),
+    ("ccn", "changed_col(true, temperature)"),
+]
+CDC_GATED_COLS = ["changed_cols('c_', false, status, temperature)",
+                  "changed_cols('n_', true, temperature, status)"]
+
+
+@pytest.mark.parametrize("gate", [
+    "nullgate", pytest.param("strgate", marks=pytest.mark.slow)])
+def test_gated_change_detectors_four_paths(spark, gate):
+    import zlib
+
+    over = f" OVER (PARTITION BY deviceId {GATES[gate]})"
+    sql = ("SELECT deviceId, ts, "
+           + ", ".join(f"{e}{over} AS {a}" for a, e in CDC_GATED)
+           + " FROM stream WITH (TIMESTAMP='ts', TIMEUNIT='ms')")
+    sql_cols = ("SELECT deviceId, ts, "
+                + ", ".join(f"{e}{over}" for e in CDC_GATED_COLS)
+                + " FROM stream WITH (TIMESTAMP='ts', TIMEUNIT='ms')")
+    seed = zlib.crc32(f"cdc|{gate}".encode()) % 1000
+    rows, rng = _mk_rows(seed, n=40)
+
+    want = _keyed(_run_batch(spark, sql, rows))
+    assert _keyed(_run_pyeval(spark, sql, rows)) == want
+    assert _keyed(_run_emit_spark(spark, sql, rows, EVT)) == want
+    assert _keyed(_run_stream(spark, sql, rows, rng)) == want
+
+    want_cols = _keyed(_run_batch(spark, sql_cols, rows))
+    s = StreamSQL(spark).execute(sql_cols)
+    got = [s.emit_sync(dict(r)) for r in rows]
+    assert "emit_sync" not in vars(s)  # pyeval declines the fan-out
+    assert _keyed(got) == want_cols
+    assert _keyed(_run_emit_spark(spark, sql_cols, rows, EVT)) == want_cols
+    assert _keyed(_run_stream(spark, sql_cols, rows, rng)) == want_cols
+
+    # gated-out rows report no change; gated-in rows do report some
+    gated_in = {(r["deviceId"], r["ts"]) for r in rows
+                if (r["status"] == "ok" if gate == "strgate"
+                    else r["temperature"] is not None
+                    and r["temperature"] > 10)}
+    for k, r in want.items():
+        if k not in gated_in:
+            assert [r[a][1] for a in ("hc", "hcn", "hc2", "cc", "ccn")] \
+                == [False, False, False, None, None], k
+            assert all(v[1] is None for c, v in want_cols[k].items()
+                       if c.startswith(("c_", "n_"))), k
+    assert any(want[k]["hc2"][1] for k in gated_in)
+    assert any(want_cols[k]["c_temperature"][1] is not None
+               for k in gated_in)
+
+
 @pytest.mark.slow
 def test_cdc_state_duration_idiom_three_paths(spark):
     """The lifted OVER (WHEN had_changed(...)) CDC idiom — an analytic

@@ -119,15 +119,38 @@ def test_cep_golden_checkpoint_resumes(spark, tmp_path):
         ("d1", 2, 5000), ("d2", 1, 1500), ("d3", 1, 5500)}
 
 
+# rows the checkpoint's writer delivered with a gate-blind had_changed,
+# keyed (deviceId, ts): the chg it delivered
+_GATE_BLIND_CHG = {("d1", 5000): True, ("d2", 3500): True,
+                   ("d2", 4500): False}
+
+
 def test_analytic_golden_checkpoint_resumes(spark, tmp_path):
     """The checkpoint holds, per key, a lag history, a running
     ``acc_sum`` and a WHEN-gated ``had_changed`` baseline (pickled
     ``{placeholder: state}`` per key).  Resumed with the current code and
     fed one more file, the rows delivered before and after the restart
     must together equal ``query()`` over all the input: the resumed rows
-    read the saved state, not a fresh one."""
+    read the saved state, not a fresh one.
+
+    The checkpoint was written before ``had_changed`` honoured its WHEN
+    gate.  Its delivered rows are history the resumed query does not
+    deliver again, so three of them keep that revision's answer: d1 at
+    5000 and d2 at 3500 are gated out (no change now), and d2 at 4500
+    compared against the baseline the gated-out 3500 row had moved (a
+    change now).  The test checks exactly those three against the old
+    answer and every other value against ``query()``.  The saved
+    baselines continue as they are: d1's was moved by its gated-out row
+    at 5000, but d1's resumed rows are gated out too and read none, and
+    d2's equals the one the current rule keeps."""
     before, resumed, want = _resume(spark, tmp_path,
                                     GOLDEN / "analytic_checkpoint")
+    stale = {(r["deviceId"], r["ts"]): r["chg"] for r in before
+             if (r["deviceId"], r["ts"]) in _GATE_BLIND_CHG}
+    assert stale == _GATE_BLIND_CHG
+    before = [{**r, "chg": not r["chg"]}
+              if (r["deviceId"], r["ts"]) in _GATE_BLIND_CHG else r
+              for r in before]
     got = _multiset(before + resumed)
     assert got == want, (sorted(got.elements()), sorted(want.elements()))
     assert len(resumed) == 5

@@ -86,6 +86,7 @@ def test_generated_source_holds_no_sql_text(spark, monkeypatch):
         assert e._sync_py is not None, sql
         assert _sorted(got) == _sorted(_rows_of(spark, sql, events, schema))
         _assert_clean(e._sync_py.source, _NASTY_COLS + [lit1, lit2])
+        _assert_clean(vars(e)["emit_sync"].source, _NASTY_COLS + [lit1, lit2])
 
 
 def test_traceback_shows_the_generated_line(spark):
@@ -186,3 +187,228 @@ def test_analytic_bool_placeholder_takes_no_slow_call(spark, monkeypatch):
     assert calls == []
     assert any(type(r["st_changed"]) is bool for r in got)
     assert _sorted(got) == _sorted(_rows_of(spark, sql, events, schema))
+
+
+# ---- the bound call: one generated emit_sync per statement
+
+_MIX_SQL = ("SELECT deviceId, temperature * 2 AS t FROM stream "
+            "WHERE temperature > 21")
+
+
+def _mix_events():
+    """Passing, filtered, Fallback (a string temperature: pyeval does
+    not compare it with a number) and past-BIGINT events."""
+    evs = []
+    for i in range(24):
+        k = i % 6
+        ev = {"deviceId": f"d{i % 3}", "temperature": 20.0 + i}
+        if k == 1:
+            ev["temperature"] = 5.0                  # filtered
+        elif k == 3:
+            ev["temperature"] = "30"                 # Fallback
+        elif k == 5:
+            ev["big"] = 2 ** 64 + i                  # past BIGINT
+        evs.append(ev)
+    return evs
+
+
+def _drive(e, events):
+    out = []
+    for ev in events:
+        try:
+            out.append(e.emit_sync(dict(ev)))
+        except ValueError as ex:
+            out.append(("ValueError", "BIGINT" in str(ex)))
+    return out
+
+
+def test_bound_call_counts_and_delivers_as_the_spark_route(spark):
+    """The bound function's answers, ``input``/``output`` counters and
+    result channel equal those of a twin whose every event takes the
+    Spark route, over passing, filtered, Fallback and past-BIGINT
+    events (the last get the same typed ValueError)."""
+    from streamsql_spark.api.facade import _NOT_APPLICABLE
+    from streamsql_spark.dialect.pyeval import Fallback
+
+    events = _mix_events()
+    e = StreamSQL(spark).execute(_MIX_SQL)
+    got = _drive(e, events)
+    assert "emit_sync" in vars(e), "the statement's emit_sync was not bound"
+    # the mix really holds Fallback events the bound call handed on
+    assert any(e._emit_sync_python(dict(ev)) is _NOT_APPLICABLE
+               and "big" not in ev for ev in events)
+
+    twin = StreamSQL(spark).execute(_MIX_SQL)
+    twin._pyeval_ready = (None, Fallback)  # every event: the Spark route
+    want = _drive(twin, events)
+    assert "emit_sync" not in vars(twin)
+    assert got == want
+    assert ("ValueError", True) in got
+    stats, twin_stats = e.get_stats(), twin.get_stats()
+    for k in ("input_count", "output_count", "output_dropped_count",
+              "result_chan_len"):
+        assert stats[k] == twin_stats[k], k
+    assert stats["input_count"] == len(events)
+    assert e.results() == twin.results()
+    assert [b for b in e.results()] == [[r] for r in got
+                                        if isinstance(r, dict)]
+
+
+def test_bound_call_sinks_none_event_and_empty_event(spark):
+    """A sink added after the first event sees every later row; a None
+    event still gets its typed error and an empty one the Spark route,
+    both counted."""
+    e = StreamSQL(spark).execute(_MIX_SQL)
+    assert e.emit_sync({"deviceId": "a", "temperature": 30.0}) == \
+        {"deviceId": "a", "t": 60.0}
+    assert "emit_sync" in vars(e)
+    seen = []
+    e.add_sink(seen.extend)
+    assert e.emit_sync({"deviceId": "b", "temperature": 5.0}) is None
+    assert e.emit_sync({"deviceId": "c", "temperature": 40.0}) == \
+        {"deviceId": "c", "t": 80.0}
+    assert seen == [{"deviceId": "c", "t": 80.0}]
+    with pytest.raises(ValueError, match="got None"):
+        e.emit_sync(None)
+    with pytest.raises(Exception):
+        e.emit_sync({})  # no columns: the Spark route's own error
+    assert e.get_stats()["input_count"] == 4  # None raises before counting
+    assert len(e.results()) == 2
+
+
+@pytest.mark.parametrize("route", ["bound", "spark"])
+def test_result_channel_is_bounded(spark, route):
+    """The result channel keeps at most ``max_buffer_rows`` batches: the
+    incoming batch is dropped and counted, the caller and the sinks
+    still get every row, and usage stops at 100%."""
+    from streamsql_spark.dialect.pyeval import Fallback
+
+    e = StreamSQL(spark, max_buffer_rows=5).execute(_MIX_SQL)
+    if route == "spark":
+        e._pyeval_ready = (None, Fallback)
+    seen = []
+    e.add_sink(seen.extend)
+    outs = [e.emit_sync({"deviceId": "d", "temperature": 22.0 + i})
+            for i in range(12)]
+    assert all(o is not None for o in outs)
+    assert ("emit_sync" in vars(e)) == (route == "bound")
+    assert len(e.results()) == 5
+    assert [b[0]["t"] for b in e.results()] == [44.0 + 2 * i
+                                                for i in range(5)]
+    stats = e.get_detailed_stats()
+    assert stats["basic_stats"]["output_dropped_count"] == 7
+    assert stats["basic_stats"]["output_count"] == 12
+    assert stats["result_chan_usage"] == 100.0
+    assert len(seen) == 12
+
+
+class _LockedCount:
+    """A custom analytic state no deepcopy can copy (it holds a lock)."""
+
+    def __init__(self):
+        import threading
+        self.lock = threading.Lock()
+        self.n = 0
+
+    def apply(self, args):
+        self.n += 1
+        return float(self.n)
+
+
+def test_uncopyable_custom_state_disables_the_route(spark):
+    """When a custom analytic's state cannot be copied, the bound route
+    is disabled (its emit_sync unbound) and every event, that one
+    included, is answered by the Spark route, equal to a twin that took
+    the Spark route from the start."""
+    from streamsql_spark.functions.registry import (
+        _CUSTOM_ANALYTICS, register_analytic_function)
+
+    register_analytic_function("locked_count", _LockedCount, "double")
+    try:
+        sql = ("SELECT deviceId, locked_count(temperature) OVER "
+               "(PARTITION BY deviceId) AS n, lag(temperature) OVER "
+               "(PARTITION BY deviceId) AS prev FROM stream")
+        events = [{"deviceId": f"d{i % 2}", "temperature": float(i)}
+                  for i in range(8)]
+        e = StreamSQL(spark).execute(sql)
+        got = [e.emit_sync(dict(ev)) for ev in events]
+        assert e._an_py is None and "emit_sync" not in vars(e)
+        twin = StreamSQL(spark).execute(sql)
+        twin._an_py = None  # the Spark route from the start
+        want = [twin.emit_sync(dict(ev)) for ev in events]
+        assert got == want
+        assert [r["n"] for r in got] == [1.0, 1.0, 2.0, 2.0, 3.0, 3.0,
+                                         4.0, 4.0]
+        assert e.get_stats()["output_count"] == len(events)
+    finally:
+        _CUSTOM_ANALYTICS.pop("locked_count", None)
+
+
+# ---- read-once
+
+_TRANSFORM_SQL = """
+    SELECT deviceId,
+           round(temperature * 1.8 + 32, 2) AS temp_f,
+           CASE WHEN temperature > 30 THEN 'HOT'
+                WHEN temperature > 25 THEN 'WARM' ELSE 'OK' END AS level,
+           upper(status) AS st,
+           round(humidity / 100.0, 3) AS hum
+    FROM stream"""
+
+
+def test_transform_reads_each_column_once(spark):
+    """The transform statement uses ``temperature`` three times and
+    fetches it once."""
+    e = StreamSQL(spark).execute(_TRANSFORM_SQL)
+    ev = {"deviceId": "d", "temperature": 26.5, "humidity": 40.0,
+          "status": "ok"}
+    assert e.emit_sync(dict(ev)) == {"deviceId": "d", "temp_f": 79.7,
+                                     "level": "WARM", "st": "OK",
+                                     "hum": 0.4}
+    run = e._sync_py
+    for col in ("temperature", "deviceId", "humidity", "status"):
+        # (the column's name, and an output's of the same spelling)
+        names = [k for k, v in run.__globals__.items() if v == col]
+        assert sum(run.source.count(f"row.get({n},") for n in names) \
+            == 1, col
+    assert vars(e)["emit_sync"].source.count("row.get(") == 4
+
+
+def test_case_stays_lazy_after_read_once(spark):
+    """A column read only by a later CASE branch is fetched ahead of the
+    CASE, but its value is only tested there: an earlier branch that
+    answers leaves it alone, as the Spark route does."""
+    from streamsql_spark.api.facade import _NOT_APPLICABLE
+
+    sql = ("SELECT CASE WHEN a > 1 THEN 'x' WHEN b > 1 THEN 'y' "
+           "ELSE 'z' END AS c FROM stream")
+    e = StreamSQL(spark).execute(sql)
+    # ``b`` a string: pyeval does not compare it with a number
+    assert e._emit_sync_python({"a": 0.0, "b": "7"}) is _NOT_APPLICABLE
+    for ev in ({"a": 5.0, "b": "7"}, {"a": 5.0, "b": [1, 2]}):
+        got = e._emit_sync_python(dict(ev))
+        assert got == {"c": "x"}, ev
+    assert e._emit_sync_python({"a": 5.0, "b": "7"}) == \
+        e._emit_sync_fast({"a": 5.0, "b": "7"})
+    assert e.emit_sync({"a": 5.0, "b": "7"}) == {"c": "x"}
+    assert "emit_sync" in vars(e)
+
+
+def test_closure_nodes_read_stepped_placeholders(spark):
+    """Stepped analytic values are locals of the generated function; a
+    node compiled as a closure (IS NULL, BETWEEN) that reads one is
+    handed the row with those locals added, in the outputs and in a
+    CDC-mode WHERE, and answers as the Spark route does."""
+    sql = ("SELECT deviceId, lag(t) OVER (PARTITION BY deviceId) IS NULL "
+           "AS first, lag(t) OVER (PARTITION BY deviceId) BETWEEN 1 AND 2 "
+           "AS mid FROM stream WHERE changed_col(true, t) OVER "
+           "(PARTITION BY deviceId) IS NOT NULL")
+    events = [{"deviceId": f"d{i % 2}", "t": float(i % 4)}
+              for i in range(12)]
+    e = StreamSQL(spark).execute(sql)
+    got = [e.emit_sync(dict(ev)) for ev in events]
+    assert e._an_py is not None and "{**row, " in e._an_py.source
+    twin = StreamSQL(spark).execute(sql)
+    twin._an_py = None
+    assert got == [twin.emit_sync(dict(ev)) for ev in events]
+    assert {r["mid"] for r in got if r} == {None, True, False}
