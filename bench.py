@@ -7,6 +7,11 @@ line: {"metric": ..., "value": N, "unit": "sec", "queries": {...},
 
 Each query is forced to full execution with a noop write (no driver
 collect — measures the distributed pipeline, not result transfer).
+
+    python3 bench.py [--entries name,name,...]
+
+``--entries`` times only the named catalog entries, in that order; the
+payload line keeps its shape.
 """
 
 from __future__ import annotations
@@ -166,13 +171,34 @@ def time_entries(spark, sf_dir: str, catalog) -> tuple[dict, dict, float]:
     return timings, repeats, total
 
 
-def main() -> None:
+def select_entries(catalog, argv: list[str]) -> dict:
+    """The catalog entries to time: all of them, or the ones
+    ``--entries a,b`` names, in that order; an unknown or missing name
+    exits with a usage error (on stderr, stdout untouched)."""
+    import argparse
+
+    parser = argparse.ArgumentParser(prog="bench.py")
+    parser.add_argument("--entries", help="comma-separated catalog entries")
+    args = parser.parse_args(argv)
+    if args.entries is None:
+        return dict(catalog)
+    names = [n for n in args.entries.split(",") if n]
+    unknown = [n for n in names if n not in catalog]
+    if unknown or not names:
+        parser.error(f"--entries: unknown catalog entries {unknown}"
+                     if unknown else "--entries: no entry named")
+    return {n: catalog[n] for n in names}
+
+
+def main(argv: list[str] | None = None) -> None:
+    from streamsql_spark.catalog import CATALOG
+
+    entries = select_entries(CATALOG, sys.argv[1:] if argv is None else argv)
     _wait_for_idle()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else 0.0
 
-    from streamsql_spark.catalog import CATALOG
     from streamsql_spark.session import get_spark, load_tables
 
     spark = get_spark("streamsql-bench")
@@ -226,7 +252,7 @@ def main() -> None:
                                       if cal_stream else None}}),
           file=sys.stderr)
 
-    timings, repeats, total = time_entries(spark, sf_dir, CATALOG)
+    timings, repeats, total = time_entries(spark, sf_dir, entries)
 
     # Repeat counts go to stderr: the driver parses the single stdout
     # JSON line from a bounded tail buffer, so that line must stay

@@ -73,29 +73,6 @@ _NOT_APPLICABLE = object()
 import datetime as _dt_mod  # noqa: E402 — hot-path: imported once
 
 
-def _an_value_ok(v) -> bool:
-    """Event-value whitelist for the in-process analytic path.  Its
-    ANALYTIC_STEPS steps are the SAME functions the streaming kernel runs
-    (which, post-cleaning, sees exactly these python types: scalars,
-    datetime, list-of-scalars), so parity holds by construction —
-    differentially fuzzed by tests/test_crosspath_parity.py's rich-type
-    grid.  Lists containing None fall back to the Spark route: python
-    ``==`` says [None]==[None] where Spark array equality is
-    three-valued.  Tz-AWARE datetimes also fall back: the Spark route
-    normalizes them to session-timezone-naive values, so passing them
-    through verbatim would buffer a different representation than the
-    fallback stores.  Both fallbacks keep Spark as the semantics
-    oracle."""
-    if v is None or isinstance(v, (int, float, str, bool)):
-        return True
-    if isinstance(v, _dt_mod.datetime):
-        return v.tzinfo is None
-    if isinstance(v, list):
-        return all(x is not None and isinstance(x, (int, float, str, bool))
-                   for x in v)
-    return False
-
-
 def _merged_type(types):
     """One type, StringType for 'indeterminate' (no non-null evidence),
     or None for a genuine disagreement."""
@@ -146,8 +123,9 @@ def _fits(dt, v) -> bool:
     return cls is None or isinstance(dt, cls)
 
 
-# exact types _an_value_ok admits without a closer look
-_AN_SCALARS = frozenset((str, float, int, bool, type(None)))
+# the bound emit_sync's counter cells and the ``_metrics`` entries they
+# fold into
+_CELL_METRICS = {"_in": "input", "_out": "output"}
 
 
 class StreamSQL:
@@ -238,6 +216,7 @@ class StreamSQL:
         # (placeholder, partition key)
         self._sync_bound = False
         self._sync_py = None
+        self._sync_counted = None  # the bound emit_sync whose cells count
         self._an_states: dict = {}
 
     # ------------------------------------------------------------ compile
@@ -1627,6 +1606,11 @@ class StreamSQL:
           result channel (:meth:`_push_result`'s rule, inline) and calls
           the sinks registered at that moment.
 
+        The ``input`` and ``output`` counts are closure cells of that
+        function (``_in``, ``_out``), not ``_metrics`` entries:
+        :meth:`_fold_sync_counters` adds them to ``_metrics``, and every
+        stats reader and every unbind calls it.
+
         Returns that function, or None (the Spark routes answer every
         event through :meth:`_emit_sync_routed`).  Both compilers
         refuse a statement with a declared schema (its typed CASTs and
@@ -1646,12 +1630,12 @@ class StreamSQL:
         body = [
             "if not row:",
             "    return _routed(row)",
-            "_metrics[_IN] += 1",
+            "_in += 1",
             # the evaluator's body leaves a passing row in ``out``
             "try:", *("    " + ln for ln in run.body),
             "except Fallback:",
             "    return _spark(row)",
-            "_metrics[_OUT] += 1",
+            "_out += 1",
             "_batch = [out]",
             "if len(_results) < _owner.max_buffer_rows:",
             "    _results.append(_batch)",
@@ -1659,12 +1643,28 @@ class StreamSQL:
             "    _metrics[_DROPPED] += 1",
             "for _sink in _sinks:",
             "    _sink(_batch)"]
-        self.emit_sync = run.emitter.build(body, "out", "emit_sync", {
-            "_routed": self._emit_sync_routed, "_spark": self._emit_sync_spark,
-            "_metrics": self._metrics, "_results": self._results,
-            "_sinks": self._sinks, "_owner": self, "_IN": "input",
-            "_OUT": "output", "_DROPPED": "output_dropped"})
+        # kept after an unbind: a call running at that moment may still
+        # count into the cells, and the next fold collects it
+        self._sync_counted = self.emit_sync = run.emitter.build(
+            body, "out", "emit_sync", {
+                "_routed": self._emit_sync_routed,
+                "_spark": self._emit_sync_spark, "_metrics": self._metrics,
+                "_results": self._results, "_sinks": self._sinks,
+                "_owner": self, "_DROPPED": "output_dropped"},
+            cells=tuple(_CELL_METRICS))
         return self.emit_sync
+
+    def _fold_sync_counters(self) -> None:
+        """Add the bound emit_sync's counter cells (:meth:`_bind_sync`)
+        to ``_metrics`` and zero them."""
+        fn = self._sync_counted
+        if fn is None:
+            return
+        for name, cell in zip(fn.__code__.co_freevars, fn.__closure__):
+            key = _CELL_METRICS.get(name)
+            if key is not None and cell.cell_contents:
+                self._metrics[key] += cell.cell_contents
+                cell.cell_contents = 0
 
     def _emit_sync_routed(self, row: dict) -> dict | None:
         """emit_sync before the route is bound, on the Spark routes, or
@@ -1741,23 +1741,46 @@ class StreamSQL:
 
     def _compile_analytic_python(self):
         """One-time compilation of the analytic direct path into one
-        function emitted by ``pyeval.Emitter``, ``row -> dict | None``,
-        raising Fallback for an event outside the proven subset: the
-        SAME analytic steps (streaming/stateful.ANALYTIC_STEPS) over
+        function emitted by ``pyeval.Emitter``, ``row -> dict | None``:
+        the SAME analytic steps (streaming/stateful.ANALYTIC_STEPS) over
         keys, WHEN gates and arguments written by the emitter — one key
-        tuple per distinct PARTITION BY, each call's arguments as a list
-        display — plus the final projection with analytic calls
-        substituted by placeholders.  Each stepped value is a local of
-        the function (``Emitter.locals``), which the outputs, WHERE and
-        later WHEN gates read.  Steps run on copies of the state,
-        committed only once the whole event evaluates; state lives in
-        the SAME ``_an_states`` store the Spark route uses, so a
-        per-event fallback keeps one continuous history.  Returns None
-        when the statement falls outside the subset — the Spark route
-        then stays in charge."""
+        tuple per distinct PARTITION BY — then the projection with each
+        analytic call read from the local its step returned
+        (``Emitter.locals``).  Each spec steps its live ``_an_states``
+        entry exactly once, with no copy: the store the Spark route
+        steps too, so an event handed over keeps one continuous history.
+        The function runs in three phases:
+
+        1. Before any state moves, everything that can raise Fallback:
+           the BIGINT guard, a WHERE that reads no analytic, and each
+           spec's key, arguments and WHEN gate.  A Fallback here hands
+           the event to the Spark route (:meth:`_emit_sync_analytic_spark`).
+        2. The steps.  A WHEN that is an earlier spec's placeholder (a
+           lifted ``WHEN had_changed(...)``) takes ``step_analytic_rows``'s
+           raw ``bool()`` test, so nothing here raises Fallback.  A step
+           that raises disables the route
+           (:meth:`_disable_analytic_python`): the event goes to the
+           Spark route when it was the first step, as no state has moved
+           yet; otherwise the step's own exception propagates — the
+           Spark route would raise it from the same step on the same
+           values, and leave the same state.
+        3. The outputs, a WHERE that reads an analytic (CDC mode: the
+           state stays advanced when it rejects the row) and the
+           omitEmpty rule, over the stepped locals.  A Fallback here
+           hands the stepped values to :meth:`_project_analytic_pyeval`,
+           the Spark route's projection, so no state steps twice.
+
+        A ``changed_cols(...)`` field reads the ``__changed_value__``
+        specs it fans out to.  Returns None when the statement falls
+        outside the subset — the Spark route then answers every
+        event."""
         from ..dialect import nodes as N
         from ..dialect import pyeval
         from ..dialect.planner import _default_name
+        from ..engine.batch import omit_empty_specs
+        from ..functions.registry import custom_analytic, is_analytic
+        from ..plans.plan import where_filters_first
+        from ..streaming.stateful import ANALYTIC_STEPS, analytic_step_for
 
         # every pyeval compile entry point must see the real session
         # zone BEFORE compiling: the _TZ_GATED gate and the _strict_ts
@@ -1782,22 +1805,26 @@ class StreamSQL:
         ph_by_repr: dict[str, str] = {}
         for s in plan.analytics:
             ph_by_repr.setdefault(repr(s.func), s.placeholder)
-
+        phs = {s.placeholder for s in plan.analytics}
         bad = False
-        from ..functions.registry import is_analytic as _is_analytic
 
         def subst(node):
             nonlocal bad
             # analytics appear with OR without an OVER clause (the CDC
             # family is bare: changed_col(true, v)) — both substitute
             if isinstance(node, N.Func) and (node.over is not None
-                                             or _is_analytic(node.name)):
+                                             or is_analytic(node.name)):
                 ph = ph_by_repr.get(repr(node))
                 if ph is None:
                     bad = True
                     return node
                 return N.Col((ph,))
             return node
+
+        def reads_ph(e) -> bool:
+            # a key, argument or WHEN reading a stepped value cannot run
+            # before the steps
+            return any(pyeval.bare_name(x) in phs for x in N.walk(e))
 
         em = pyeval.Emitter()
 
@@ -1808,23 +1835,32 @@ class StreamSQL:
             return em.col(name, "row", raw=True) if name is not None \
                 else em.expr(e)
 
+        # each changed_cols member is one __changed_value__ spec, in plan
+        # order, and one output the plan names
+        fanout = iter([s.placeholder for s in plan.analytics
+                       if s.func.name == "__changed_value__"])
+        name_of = {o.sql: o.name for o in plan.outputs if not o.star}
         fields = []  # (output name, node with placeholders substituted)
         for i, f in enumerate(self._stmt.fields):
             if isinstance(f.expr, N.Star):
                 return None  # star + analytics: Spark path
+            if isinstance(f.expr, N.Func) \
+                    and f.expr.name.lower() == "changed_cols":
+                for _ in f.expr.args[2:]:
+                    ph = next(fanout)
+                    fields.append((name_of[ph], N.Col((ph,))))
+                continue
             e2 = N.transform(f.expr, subst)
             if bad:
                 return None
             fields.append((f.alias or _default_name(f.expr, i), e2))
-        from ..plans.plan import where_filters_first
         where_first = where_filters_first(plan)
         w = self._stmt.where
         if w is not None:
-            from ..functions.registry import is_analytic as _is_an
             # same bare-analytic WHERE semantics the planner applies
             # (analytic_parity_test.go:356-368): a bare value-typed
             # analytic predicate means "returned non-nil"
-            bare_value = (isinstance(w, N.Func) and _is_an(w.name)
+            bare_value = (isinstance(w, N.Func) and is_analytic(w.name)
                           and w.name.lower() != "had_changed")
             w = N.transform(w, subst)
             if bad:
@@ -1832,53 +1868,57 @@ class StreamSQL:
             if bare_value:
                 w = N.IsNull(operand=w, negated=True)
 
-        from ..functions.registry import custom_analytic
-        from ..streaming.stateful import (analytic_copier_for,
-                                          analytic_step_for)
         em.define("_states", self._an_states)
-        em.define("_an_value_ok", _an_value_ok)
-        em.define("_AN_SCALARS", _AN_SCALARS)
         em.define("_disable", self._disable_analytic_python)
-        # the LRU cap is the only reason to visit each slot on commit
+        em.define("_project", self._project_analytic_pyeval)
         if self.analytic_max_partitions is not None:
             em.define("_touch", self._touch_analytic_partition)
-        inner = []  # the statements evaluated on copies of the state
+        reads = []  # phase 1: keys, gates, arguments
         if w is not None and where_first:
             # standard-SQL mode: the filter sees only raw columns; a
             # rejected row never touches state
             src = em.expr(w)
             if src is None:
                 return None
-            inner += em.reads()
-            inner += [f"if {em.truth(w, src)} is not True:",
+            reads += em.reads()
+            reads += [f"if {em.truth(w, src)} is not True:",
                       "    return None"]
-        key_at: dict[str, str] = {}  # one key tuple per distinct PARTITION BY
-        touches, commits = [], []  # statements per spec
+        # one key tuple per distinct PARTITION BY, one gate per WHEN
+        key_at: dict[str, str] = {}
+        gate_at: dict[str, str] = {}
+        slots, steps = [], []  # phase 2: each spec's live state, its step
+        stepped: dict[str, str] = {}  # placeholder -> the local it steps
         for n, s in enumerate(plan.analytics):
             over = s.func.over
             by = over.partition_by if over else []
             key = key_at.get(repr(by))
             if key is None:
-                parts = [em.expr(p) for p in by]
+                parts = [None if reads_ph(p) else em.expr(p) for p in by]
                 if None in parts:
                     return None
                 key = key_at[repr(by)] = f"_k{len(key_at)}"
-                inner += em.reads()
-                inner.append(f"{key} = ({''.join(p + ', ' for p in parts)})")
+                reads += em.reads()
+                reads.append(f"{key} = ({''.join(p + ', ' for p in parts)})")
             gate = "True"
             if over is not None and over.when is not None:
                 # when_ast has nested analytic calls pre-lifted to
                 # placeholder refs (planner); over.when still holds the
-                # raw call, which pyeval can't evaluate.  A placeholder
-                # stepped earlier in this event reads its local (a
-                # lifted WHEN had_changed(...))
+                # raw call, which pyeval can't evaluate
                 wn = s.when_ast if s.when_ast is not None else over.when
-                src = em.expr(wn)
-                if src is None:
+                lifted = stepped.get(pyeval.bare_name(wn))
+                if lifted is not None:
+                    gate = f"bool({lifted})"
+                elif reads_ph(wn):
                     return None
-                gate = f"_g{n}"
-                inner += em.reads()
-                inner.append(f"{gate} = {em.truth(wn, src)} is True")
+                elif repr(wn) in gate_at:  # (a changed_cols fan-out's)
+                    gate = gate_at[repr(wn)]
+                else:
+                    src = em.expr(wn)
+                    if src is None:
+                        return None
+                    gate = gate_at[repr(wn)] = f"_g{n}"
+                    reads += em.reads()
+                    reads.append(f"{gate} = {em.truth(wn, src)} is True")
             args = []
             arg_marks = []  # the steps' has_start probe shape
             for a in s.func.args:
@@ -1889,84 +1929,88 @@ class StreamSQL:
                     args.append(em.const(a.value))
                     arg_marks.append(None)
                 else:
-                    args.append(expr(a))
+                    args.append(None if reads_ph(a) else expr(a))
                     arg_marks.append("x")
             if None in args:
                 return None
-            p = {"name": s.func.name.lower(), "ph": s.placeholder,
-                 "args": arg_marks, "custom": custom_analytic(s.func.name)}
-            if p["custom"] is None and p["name"] not in (
-                    "lag", "latest", "had_changed", "changed_col",
-                    "acc_sum", "acc_count", "acc_min", "acc_max",
-                    "acc_avg"):
-                return None  # fan-out/renderer-special fns: Spark path
-            ph = em.const(p["ph"])
-            inner += em.reads()
-            inner += [
-                f"_s{n} = ({ph}, {key})",
-                f"_st{n} = {em.const(analytic_copier_for(p))}"
-                f"(_states.get(_s{n}) or {{}})",
-                # a new argument list per event: a custom state may keep it
-                f"_p{n} = {em.const(analytic_step_for(p))}"
-                f"({em.const(p)}, _st{n}, [{', '.join(args)}], {gate})"]
-            # later reads of the placeholder (outputs, WHERE, a later
-            # spec's WHEN) read the stepped value
-            em.locals[s.placeholder] = f"_p{n}"
+            name = s.func.name.lower()
+            # a built-in name wins over a custom registration
+            p = {"name": name, "ph": s.placeholder, "args": arg_marks,
+                 "custom": None if name in ANALYTIC_STEPS
+                 else custom_analytic(name)}
+            if p["custom"] is None and name not in ANALYTIC_STEPS:
+                return None  # renderer-special fns: Spark path
+            ph = em.const(s.placeholder)
+            reads += em.reads()
+            # a new argument list per event: a custom state may keep it
+            reads.append(f"_a{n} = [{', '.join(args)}]")
+            # the Spark route's order: every spec's partition is touched
+            # and its state created before the first step
             if self.analytic_max_partitions is not None:
-                touches.append(f"_touch({ph}, {key})")
-            commits.append(f"_states[_s{n}] = _st{n}")
+                slots.append(f"_touch({ph}, {key})")
+            slots += [f"if (_st{n} := _states.get(_s{n} := ({ph}, {key})))"
+                      " is None:", f"    _st{n} = _states[_s{n}] = {{}}"]
+            steps.append(f"_p{n} = {em.const(analytic_step_for(p))}"
+                         f"({em.const(p)}, _st{n}, _a{n}, {gate})")
+            stepped[s.placeholder] = f"_p{n}"
+        # later reads of a placeholder (outputs, a CDC WHERE) read the
+        # stepped value
+        em.locals.update(stepped)
         outs = [(em.const(name), expr(e2)) for name, e2 in fields]
         if any(src is None for _, src in outs):
             return None
-        out = ["out = {", *(f"    {k}: {v}," for k, v in outs), "}"]
-        if w is not None and not where_first:
-            # CDC mode (WHERE reads an analytic): state advanced BEFORE
-            # the filter, and stays advanced on rejection
+        project = ["out = {", *(f"    {k}: {v}," for k, v in outs), "}"]
+        cdc = w is not None and not where_first
+        if cdc:
             src = em.expr(w)
             if src is None:
                 return None
-            inner += em.reads()
-            inner += [f"if {em.truth(w, src)} is not True:", "    out = None",
-                      "else:", *("    " + ln for ln in out)]
+            project = [*em.reads(), f"if {em.truth(w, src)} is not True:",
+                       "    out = None", "else:",
+                       *("    " + ln for ln in project)]
         else:
-            inner += em.reads() + out
-        # reference omitEmpty (stream/stream.go:698-703): a SELECT of
-        # solely bare change-detection fields suppresses the row when
-        # none changed (state still advances, like a WHERE filter)
-        omit_empty = bool(self._stmt.fields) and all(
-            isinstance(f.expr, N.Func)
-            and f.expr.name.lower() == "changed_col"
-            for f in self._stmt.fields)
-        body = [
-            "for _v in row.values():",
-            "    if (_k := type(_v)) is int:",
-            # no Spark route ingests a field past BIGINT: such an
-            # event goes to the Spark route's typed error, also when
-            # the statement never reads that field
-            "        if not _I64_MIN <= _v <= _I64_MAX:",
-            "            raise Fallback()",
-            "    elif _k not in _AN_SCALARS and not _an_value_ok(_v):",
-            "        raise Fallback()",
-            # step state on COPIES, commit only after the whole event
-            # evaluates: a Fallback anywhere hands the UNTOUCHED state
-            # to the Spark route, which then performs the one true step
-            "try:", *("    " + ln for ln in inner),
-            "except Fallback:", "    raise", "except Exception:",
-            "    _disable()", "    raise Fallback()", *touches, *commits]
-        if w is not None and not where_first:
+            project = em.reads() + project
+        values = ", ".join(f"{em.const(ph)}: {local}"
+                           for ph, local in stepped.items())
+        on_spark = [f"if (out := _project(row, {{{values}}})) is None:",
+                    "    return None"]
+
+        def block(lines):
+            return ["    " + ln for ln in lines]
+
+        body = [*pyeval.BIGINT_GUARD,
+                "try:", *block(reads),
+                "except Fallback:", "    raise",
+                "except Exception:", "    _disable()", "    raise Fallback()",
+                *slots,
+                "try:", *block(steps[:1]),
+                "except Exception:", "    _disable()", "    raise Fallback()"]
+        if len(steps) > 1:
+            body += ["try:", *block(steps[1:]),
+                     "except Exception:", "    _disable()", "    raise"]
+        body += ["try:", *block(project),
+                 "except Fallback:", *block(on_spark),
+                 "except Exception:", "    _disable()", *block(on_spark)]
+        if cdc:
             body += ["if out is None:", "    return None"]
-        if omit_empty:  # the state advanced all the same
-            body += ["if all(v is None for v in out.values()):",
+        omit = omit_empty_specs(plan, False)
+        if omit is not None:
+            # reference omitEmpty (stream/stream.go:698-703): no change
+            # detected, no row — the state advanced all the same
+            body += ["if " + " and ".join(f"{stepped[s.placeholder]} is None"
+                                          for s in omit) + ":",
                      "    return None"]
         # falls through with ``out`` a dict: the bound emit_sync
         # (_bind_sync) delivers it
         return em.build(body)
 
     def _disable_analytic_python(self) -> None:
-        """After a deepcopy of an exotic custom state (or a kernel
-        surprise) failed: the Spark route answers this statement's
-        events from now on — the bound emit_sync is unbound, so the
+        """After a step, or the emitted code, raised an exception other
+        than Fallback (a custom state's or a kernel surprise): the Spark
+        route answers this statement's events from now on — the bound
+        emit_sync is unbound, its counter cells folded first, so the
         class's routed one takes over."""
+        self._fold_sync_counters()
         self._an_py = self._sync_py = None
         self.__dict__.pop("emit_sync", None)
 
@@ -1977,15 +2021,50 @@ class StreamSQL:
         (``analytic_inputs`` + ``step_analytic_rows``) run locally —
         Spark evaluates the single row's keys, gates and arguments, the
         SAME steps advance the state kept per (placeholder,
-        OVER(PARTITION BY ...) values)."""
-        from dataclasses import replace
+        OVER(PARTITION BY ...) values) — then :meth:`_project_analytic`
+        projects the stepped row."""
+        from ..streaming.stateful import step_analytic_rows
 
+        ex, df, where_first = self._analytic_frame(row)
+        prep = self._analytic_prep(df)
+        collected = (df.withColumns(self._an_inject) if self._an_inject
+                     else df).collect()
+        if not collected:
+            # the join dropped the event (no dim match): it never
+            # reaches the analytics — state untouched, no output
+            # (processor order join → analytic,
+            # stream/processor_data.go:84-110)
+            return None
+
+        # one state step per surviving (possibly join-fanned-out) row,
+        # over the collected python values
+        rows2 = [row_to_dict(r) for r in collected]
+        states = []
+        for d in rows2:
+            st = {}
+            for p in prep:
+                key = tuple(d[c] for c in p["keys"])
+                self._touch_analytic_partition(p["ph"], key)
+                st[p["ph"]] = self._an_states.setdefault((p["ph"], key), {})
+            states.append(st)
+        outs = step_analytic_rows(
+            prep, {c: [d[c] for d in rows2] for c in self._an_read}, states)
+        for d in rows2:
+            for c in self._an_inject:
+                del d[c]
+        out = self._project_analytic(ex, df, prep, where_first, rows2, outs)
+        return None if out is None else self._deliver_sync(out)
+
+    def _analytic_frame(self, row: dict):
+        """The Spark route's frame for one event: the single row as a
+        VALUES literal (or a created DataFrame), its lookup sources
+        probed and its joins applied, alias-qualified refs flattened,
+        and a WHERE that reads no analytic applied.  Returns
+        ``(executor, frame, where_first)``."""
         from pyspark.sql import functions as F
-        from pyspark.sql.types import StructField, StructType
 
-        from ..streaming.stateful import (_dedupe_columns, analytic_inputs,
-                                          flatten_join_refs,
-                                          step_analytic_rows)
+        from ..plans.plan import where_filters_first
+        from ..streaming.stateful import _dedupe_columns, flatten_join_refs
 
         src = self._local_row_df(row)
         if src is None:
@@ -2013,52 +2092,48 @@ class StreamSQL:
         # WHERE vs analytics ordering (stream.go:659-671): a WHERE that
         # references no analytic placeholder filters BEFORE the state
         # step — a rejected row must not advance analytic state; the
-        # post-step executor then skips the (already-applied) filter
-        from ..plans.plan import where_filters_first
+        # projection then skips the (already-applied) filter
         where_first = where_filters_first(plan_flat)
         if where_first:
             df = df.filter(F.expr(plan_flat.where_sql))
+        return ex, df, where_first
 
-        # the kernel inputs (injected columns, specs) are built against
-        # THIS row's column set; undeclared-schema streams may widen or
-        # shrink the key set between events, so they are keyed on
-        # df.columns and rebuilt on change (analytic STATE persists
-        # across rebuilds — only the compiled expressions refresh)
+    def _analytic_prep(self, df: DataFrame) -> list:
+        """``analytic_inputs``'s per-spec dicts for ``df``.  They are
+        built against that frame's column set; undeclared-schema streams
+        may widen or shrink the key set between events, so they are
+        keyed on ``df.columns`` and rebuilt on change (analytic STATE
+        persists across rebuilds — only the compiled expressions
+        refresh), with the injected columns (``_an_inject``) and the
+        columns the steps read (``_an_read``)."""
+        from ..streaming.stateful import analytic_inputs
+
         prep_key = tuple(df.columns)
         if getattr(self, "_an_prep_key", None) != prep_key:
             _, self._an_prep, self._an_inject, clean = analytic_inputs(
-                df, plan_flat.analytics, plan_flat)
-            self._an_read = list(clean)  # the columns the steps read
+                df, self._an_plan_flat.analytics, self._an_plan_flat)
+            self._an_read = list(clean)
             self._an_prep_key = prep_key
-        prep = self._an_prep
-        collected = (df.withColumns(self._an_inject) if self._an_inject
-                     else df).collect()
-        if not collected:
-            # the join dropped the event (no dim match): it never
-            # reaches the analytics — state untouched, no output
-            # (processor order join → analytic,
-            # stream/processor_data.go:84-110)
-            return None
+        return self._an_prep
 
-        # one state step per surviving (possibly join-fanned-out) row,
-        # over the collected python values
-        rows2 = [row_to_dict(r) for r in collected]
-        states = []
-        for d in rows2:
-            st = {}
-            for p in prep:
-                key = tuple(d[c] for c in p["keys"])
-                self._touch_analytic_partition(p["ph"], key)
-                st[p["ph"]] = self._an_states.setdefault((p["ph"], key), {})
-            states.append(st)
-        outs = step_analytic_rows(
-            prep, {c: [d[c] for d in rows2] for c in self._an_read}, states)
-        for i, d in enumerate(rows2):
-            for c in self._an_inject:
-                del d[c]
+    def _project_analytic(self, ex, df, prep, where_first: bool,
+                          rows: list[dict], outs: dict) -> dict | None:
+        """The projection half of the analytic Spark route, shared with
+        pyeval's (:meth:`_project_analytic_pyeval`): each of ``rows``
+        (values of ``df``'s columns) takes its stepped value per
+        placeholder from ``outs`` (placeholder -> value per row), the
+        rows become a VALUES literal typed by ``df``'s schema plus each
+        placeholder's type, and the statement's outputs, a WHERE that
+        reads an analytic and the omitEmpty rule run over it.  Steps
+        nothing.  Returns the last output row, or None when none
+        passes."""
+        from dataclasses import replace
+
+        from pyspark.sql.types import StructField, StructType
+
+        for i, d in enumerate(rows):
             for ph, vals in outs.items():
                 d[ph] = vals[i]
-
         ph_fields = []
         for p in prep:
             dt = p["type"]
@@ -2075,16 +2150,23 @@ class StreamSQL:
         # VALUES-literal rebuild keeps the whole sync hop foldable
         # (zero Spark jobs) whenever the row is scalar-encodable
         df2 = self._local_values_df(
-            rows2, [(f.name, f.dataType.simpleString()) for f in schema2.fields])
+            rows, [(f.name, f.dataType.simpleString()) for f in schema2.fields])
         if df2 is None:
-            df2 = self.spark.createDataFrame(rows2, schema2)
+            df2 = self.spark.createDataFrame(rows, schema2)
         plan2 = replace(self._an_plan_flat, joins=[],
                         where_sql=(None if where_first
                                    else self._an_plan_flat.where_sql))
         out = ex.execute(plan2, df2).collect()
-        if not out:
-            return None
-        return self._deliver_sync(row_to_dict(out[-1]))
+        return row_to_dict(out[-1]) if out else None
+
+    def _project_analytic_pyeval(self, row: dict, values: dict) -> dict | None:
+        """:meth:`_project_analytic` for an event pyeval stepped and
+        whose projection raised Fallback: ``values`` holds the stepped
+        value per placeholder, so no state steps twice."""
+        ex, df, where_first = self._analytic_frame(row)
+        return self._project_analytic(
+            ex, df, self._analytic_prep(df), where_first, [dict(row)],
+            {ph: [v] for ph, v in values.items()})
 
     def _deliver_sync(self, row: dict) -> dict:
         """A Spark route's EmitSync result: counted in ``output``,
@@ -2228,6 +2310,7 @@ class StreamSQL:
         # stage and can exceed rows actually written when the plan has a
         # post-stage LIMIT/DISTINCT.
         from ..streaming.progress import ingest, totals
+        self._fold_sync_counters()
         stream_in = stream_out = 0
         for q in self._queries:
             for p in (q.recentProgress or []):

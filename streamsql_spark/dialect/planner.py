@@ -147,7 +147,17 @@ class Planner:
                     # analytic_parity_test.go:168) — lift the inner
                     # analytic into its OWN spec first (appended before
                     # this one, so every execution path computes it
-                    # first) and gate on its placeholder
+                    # first) and gate on its placeholder.  A gate call
+                    # with no OVER of its own steps per partition of the
+                    # call it gates (stream/analytic.go's per-partition
+                    # WHEN, SURVEY §2.6)
+                    if over.partition_by:
+                        gate_over = N.OverSpec(
+                            partition_by=list(over.partition_by))
+                        when_ast = N.transform(when_ast, lambda x: N.Func(
+                            x.name, x.args, x.distinct, gate_over)
+                            if isinstance(x, N.Func) and x.over is None
+                            and registry.is_analytic(x.name) else x)
                     when_ast = self._lift_analytics(when_ast, window_mode)
                 when_sql = render(when_ast) if when_ast is not None else None
                 ph = f"__analytic_{len(self.analytics)}__"
@@ -490,7 +500,10 @@ class Planner:
             arg = self._lift_aggregates(a) if window_mode else a
             # thread the ignoreNull flag through (analytic_acc.go:168-185:
             # nil is skipped entirely — no emit, baseline kept)
-            synth = N.Func(name="__changed_value__", args=[arg, call.args[1]])
+            # the call's OVER rides along for emit_sync's in-process
+            # plan, which reads PARTITION BY and WHEN as nodes
+            synth = N.Func(name="__changed_value__", args=[arg, call.args[1]],
+                           over=call.over)
             self.analytics.append(AnalyticSpec(
                 ph, synth, part_sql, when_sql, window_output=window_mode))
             used_names.add(f"{prefix}{colname}")

@@ -2240,26 +2240,38 @@ def _col_slow(v):
     return v
 
 
+def _an_value_ok(v) -> bool:
+    """The values the analytic path reads from an event (or a stepped
+    placeholder) as they are.  Its ``ANALYTIC_STEPS`` steps are the
+    SAME functions the streaming kernel runs, which, post-cleaning, see
+    exactly these python types: scalars, naive datetimes and lists of
+    non-NULL scalars.  An int past BIGINT is out, in a list too: the
+    Spark oracle encodes it as BIGINT and raises.  A list holding None
+    is out: python ``==`` says [None]==[None] where Spark array equality
+    is three-valued.  A tz-AWARE datetime is out: the Spark route
+    normalizes it to a session-timezone-naive value, so passing it
+    through verbatim would buffer a different representation."""
+    if v is None or isinstance(v, (float, str, bool)):
+        return True
+    if isinstance(v, int):
+        return _I64_MIN <= v <= _I64_MAX
+    if isinstance(v, _dt.datetime):
+        return v.tzinfo is None
+    if isinstance(v, list):
+        return all(isinstance(x, (float, str, bool)) or isinstance(x, int)
+                   and _I64_MIN <= x <= _I64_MAX for x in v)
+    return False
+
+
 def _raw_col_slow(v):
     """A bare column's value past the emitted test on the analytic
-    path, where it feeds an ``ANALYTIC_STEPS`` step (streaming/
-    stateful.py — the same steps the streaming kernel runs, which see
-    exactly these post-cleaning python types) or lands in the output
-    row verbatim: no pyeval function evaluates it, so containers pass.
-    The int64 range guard is kept: the Spark oracle encodes ints as
-    BIGINT and raises beyond the range."""
-    if v is _ABSENT:
+    path, where it feeds an ``ANALYTIC_STEPS`` step or lands in the
+    output row verbatim: no pyeval function evaluates it, so the
+    containers :func:`_an_value_ok` admits pass; any other value (and a
+    missing field) is the Spark route's.  Only the fields the statement
+    reads pass this test."""
+    if v is _ABSENT or not _an_value_ok(v):
         raise Fallback()
-    if isinstance(v, int) and not isinstance(v, bool) \
-            and not _I64_MIN <= v <= _I64_MAX:
-        raise Fallback()
-    if isinstance(v, list):
-        # same guard element-wise: the Spark oracle encodes the list as
-        # array<bigint> and raises beyond int64
-        for x in v:
-            if isinstance(x, int) and not isinstance(x, bool) \
-                    and not _I64_MIN <= x <= _I64_MAX:
-                raise Fallback()
     return v
 
 
@@ -2599,21 +2611,29 @@ class Emitter:
                 f"else {rnd}({t}))")
 
     def build(self, body: list[str], result: str = "out",
-              name: str = "run", ns: dict | None = None):
+              name: str = "run", ns: dict | None = None, cells=()):
         """Compile ``def <name>(row):`` over the ``body`` lines ending in
         ``return <result>``, once, in the emitter's namespace (or in a
-        copy of it with ``ns`` added).  The function carries its source
+        copy of it with ``ns`` added).  Each name in ``cells`` is a
+        counter the body updates with ``+=``: a closure cell starting at
+        0, read and reset through ``fn.__closure__`` (a cell costs the
+        body less than a dict entry).  The function carries its source
         as ``.source``, its body as ``.body`` and the emitter as
         ``.emitter``, so a caller can build a second function around the
         same body; the source is registered with linecache so a
         traceback out of it shows the generated line."""
-        src = (f"def {name}(row):\n"
-               + "".join(f"    {ln}\n" for ln in body)
-               + f"    return {result}\n")
+        lines = [f"def {name}(row):"]
+        if cells:
+            lines.append(f"    nonlocal {', '.join(cells)}")
+        lines += [f"    {ln}" for ln in body] + [f"    return {result}"]
+        if cells:
+            lines = ["def _with_cells():", f"    {' = '.join(cells)} = 0",
+                     *(f"    {ln}" for ln in lines), f"    return {name}"]
+        src = "".join(f"{ln}\n" for ln in lines)
         filename = f"<pyeval-{next(_EMIT_SEQ)}>"
         g = self.ns if ns is None else {**self.ns, **ns}
         exec(compile(src, filename, "exec"), g)
-        fn = g[name]
+        fn = g["_with_cells"]() if cells else g[name]
         fn.source, fn.body, fn.emitter = src, body, self
         linecache.cache[filename] = (len(src), None,
                                      src.splitlines(True), filename)
@@ -2637,19 +2657,23 @@ def compile_expr(e: N.Expr):
     return None if src is None else em.function(src)
 
 
+# the first lines of every statement's evaluator: no Spark route ingests
+# a field past BIGINT, so pyeval answers no such event either (the Spark
+# route raises its typed error) — also when the statement never reads
+# that field
+BIGINT_GUARD = (
+    "for _v in row.values():",
+    "    if type(_v) is int and not _I64_MIN <= _v <= _I64_MAX:",
+    "        raise Fallback()")
+
+
 def compile_direct(stmt: "N.SelectStmt"):
     """Compile a direct-path statement into one emitted function
     ``run(row) -> dict | None | Fallback-raise``; returns None when the
     statement shape is outside the subset (joins/analytics/windows/
     unnest/DISTINCT/ORDER/LIMIT are gated by the caller)."""
     em = Emitter()
-    body = [
-        "for _v in row.values():",
-        # no Spark path ingests a field past BIGINT, so pyeval answers
-        # no such event either — also when the statement never reads
-        # that field
-        "    if type(_v) is int and not _I64_MIN <= _v <= _I64_MAX:",
-        "        raise Fallback()"]
+    body = list(BIGINT_GUARD)
     if stmt.where is not None:
         w = em.expr(stmt.where)
         if w is None:

@@ -724,9 +724,11 @@ def _apply_custom_analytics(df: DataFrame, specs: list, plan: QueryPlan,
 _CHANGE_FNS = ("changed_col", "__changed_value__")
 
 
-def _omit_empty_filter(df: DataFrame, plan, window_mode: bool) -> DataFrame:
-    """Reference omitEmpty row suppression (stream/stream.go:610-612,
-    :698-703): when change detection fired nothing, the row is dropped —
+def omit_empty_specs(plan, window_mode: bool) -> list | None:
+    """The specs of the reference's omitEmpty row suppression
+    (stream/stream.go:610-612, :698-703): when change detection fired
+    nothing — all of them NULL — the row is dropped; None when the rule
+    does not apply:
 
     - direct mode: only when the SELECT consists solely of BARE
       change-detection fields (any other selected field keeps the row,
@@ -734,20 +736,25 @@ def _omit_empty_filter(df: DataFrame, plan, window_mode: bool) -> DataFrame:
     - window mode: whenever the query's analytic fields are all
       change-detection and none produced a value (``changedAny``) —
       other selected aggregates do not keep the row.
-    """
-    if not plan.analytics:
-        return df
+
+    Shared by the batch executor and emit_sync's in-process plan."""
     specs = [a for a in plan.analytics
              if a.window_output == window_mode] if window_mode else plan.analytics
     if not specs or any(a.func.name.lower() not in _CHANGE_FNS
                         for a in specs):
-        return df
+        return None
     if not window_mode:
         phs = {a.placeholder for a in specs}
-        if any((o.sql not in phs) and not o.star for o in plan.outputs):
-            return df
-        if any(o.star for o in plan.outputs):
-            return df
+        if any(o.star or o.sql not in phs for o in plan.outputs):
+            return None
+    return specs
+
+
+def _omit_empty_filter(df: DataFrame, plan, window_mode: bool) -> DataFrame:
+    """:func:`omit_empty_specs`'s row suppression as a filter."""
+    specs = omit_empty_specs(plan, window_mode)
+    if specs is None:
+        return df
     cond = " OR ".join(f"`{a.placeholder}` IS NOT NULL" for a in specs)
     return df.filter(F.expr(cond))
 

@@ -978,42 +978,11 @@ _LAG_CAP = 64  # ring buffer bound per lag() call
 
 from decimal import Decimal as _Decimal  # noqa: E402 — hot-path import
 
-_SCALARS = frozenset((int, float, str, bool, bytes, type(None)))
-
-
-def copy_state(v):
-    """Fast deep copy for analytic state snapshots.
-
-    Built-in analytic states are small dicts/lists of scalars;
-    ``copy.deepcopy``'s generic dispatch + memo dominated the per-event
-    direct path (~70% of its time).  This specialized copier handles
-    the container shapes directly — scalar elements are copied without
-    a recursive call (the lag ring buffer is a 64-scalar list) — and
-    defers to deepcopy only for exotic values a custom
-    ``AnalyticState`` might hold."""
-    t = type(v)
-    if t in _SCALARS:
-        return v
-    if t is dict:
-        return {k: (x if type(x) in _SCALARS else copy_state(x))
-                for k, x in v.items()}
-    if t is list:
-        return [x if type(x) in _SCALARS else copy_state(x) for x in v]
-    if t is tuple:
-        return tuple(x if type(x) in _SCALARS else copy_state(x)
-                     for x in v)
-    import copy
-
-    return copy.deepcopy(v)
-
-
 # ---- analytic steps: one function per analytic name, shared by every
 # route (the streaming kernel, batch custom analytics, the per-event
 # python path and its Spark route).  ``step(p, s, argv, gate) -> value`` advances the per-key
 # state dict ``s`` in place; ``argv`` holds one value per ``p["args"]``
-# entry.  Only lag mutates a container it stored earlier (its ring
-# buffer) — every other step rebinds its state keys, which is what
-# analytic_copier_for relies on: keep the two in step.
+# entry.
 
 def _step_lag(p, s, argv, gate):
     # WHEN-gated rows don't update state; every row reads the
@@ -1236,32 +1205,6 @@ def analytic_step_for(p):
     if p.get("custom") is not None:
         return _step_custom
     raise ValueError(f"unsupported streaming analytic: {p['name']}")
-
-
-def _copy_lag_state(st: dict) -> dict:
-    """lag's snapshot: the state dict and its one ring-buffer list (of
-    values no step mutates), each copied in C."""
-    out = st.copy()
-    buf = out.get("buf")
-    if buf is not None:
-        out["buf"] = buf.copy()
-    return out
-
-
-def analytic_copier_for(p):
-    """The copier that snapshots spec ``p``'s state before a step on a
-    copy (the per-event python path commits the copy only once the
-    whole event evaluates), cheapest first: every built-in step but lag
-    only rebinds keys, so a dict copy isolates it; lag also appends to
-    its stored ring buffer, so that one list is copied too
-    (:func:`_copy_lag_state`); a custom state object may hold anything
-    (:func:`copy_state`, a generic deep copy)."""
-    name = p["name"]
-    if name == "lag":
-        return _copy_lag_state
-    if name in ANALYTIC_STEPS:
-        return dict.copy
-    return copy_state
 
 
 def analytic_inputs(df: DataFrame, specs, plan) -> tuple:

@@ -13,10 +13,17 @@ whitelist or pyeval changes; the bar is ZERO divergences — a fallback
 an answer where the Spark path raises, or an exception out of the
 python path is a divergence.
 
+A second leg draws analytic statements (``lag``, ``latest``,
+``had_changed``, ``changed_col`` and ``acc_*`` under random PARTITION BY
+keys and WHEN gates, read through ``round``, ``CAST`` and arithmetic) and
+drives each through the public ``emit_sync`` and through a twin forced
+onto the Spark route, comparing the answers and ``_an_states`` after
+every event.
+
     python3 tests/pyeval_fuzz.py [seed]
 
-Baseline: ~1,500 comparisons per seed, 0 divergences (seeds 20260816
-and 7).
+Baseline: ~1,500 comparisons per seed on the direct leg and 320 events
+on the analytic leg, 0 divergences (seeds 20260816 and 7).
 """
 
 from __future__ import annotations
@@ -142,6 +149,125 @@ def build_queries(rng: random.Random):
     ]
 
 
+# the analytic leg: one call each, over x or y (the numeric family) or s
+_AN_CALLS = [
+    "lag({c})", "lag({c}, 2)", "lag({c}, 1, 0.5)", "lag({c}, 1, {c}, false)",
+    "latest({c})", "latest({c}, -1)", "had_changed(true, {c})",
+    "had_changed(false, {c}, s)", "changed_col(true, {c})",
+    "changed_col(false, {c})", "acc_sum({c})", "acc_count({c})",
+    "acc_min({c})", "acc_max({c})", "acc_avg({c})",
+    "acc_sum({c}, s = 'a', s = 'b')",
+]
+_AN_PARTS = ["", "PARTITION BY k1", "PARTITION BY k1, k2"]
+_AN_GATES = ["", "", "WHEN x > 0", "WHEN s = 'a'", "WHEN had_changed(true, s)"]
+# what a placeholder is read through: as it is, rounded, cast, computed
+_AN_WRAPS = ["{a}", "{a}", "round({a}, 2)", "CAST({a} AS DOUBLE)",
+             "CAST({a} AS STRING)", "({a}) * 2", "({a}) + 1.5",
+             "round(({a}) - 1, 1)"]
+
+
+def build_analytic_queries(rng: random.Random, n: int = 8):
+    """``n`` random analytic statements: one to three calls of
+    ``_AN_CALLS`` with a random PARTITION BY (none, one or two keys) and
+    WHEN gate (a lifted ``had_changed`` among them), each read through a
+    random wrapper, and an event generator over the numeric family
+    (BIGINT edges, NULL, NaN, strings against numbers)."""
+    extremes = [None, True, 0, 1, -1, 2 ** 63 - 1, -(2 ** 63), 2 ** 53 + 1,
+                1.5, 2.0 ** 63, float("nan"), float("inf"), 1e27, -1e27,
+                "a", "7"]
+
+    def rnd_num():
+        r = rng.random()
+        if r < 0.25:
+            return rng.choice(extremes)
+        if r < 0.6:
+            return rng.randint(-5, 5)
+        return rng.choice([0.25, 1.5, -2.75, 12.0, 3.125])
+
+    def gen():
+        return {"k1": rng.choice(["a", "b"]), "k2": rng.choice([1, 2]),
+                "s": rng.choice(["a", "b", None]), "x": rnd_num(),
+                "y": rng.choice([None, 1.5, 2.5, -4.0, 3])}
+
+    out = []
+    for _ in range(n):
+        over = " ".join(x for x in (rng.choice(_AN_PARTS),
+                                    rng.choice(_AN_GATES)) if x)
+        cols = []
+        for j in range(rng.randint(1, 3)):
+            call = rng.choice(_AN_CALLS).format(c=rng.choice("xxy"))
+            a = f"{call} OVER ({over})" if over else call
+            cols.append(f"{rng.choice(_AN_WRAPS).format(a=a)} AS a{j}")
+        out.append((f"SELECT k1, {', '.join(cols)} FROM stream", gen))
+    return out
+
+
+def _state_key(v):
+    """A comparable form of analytic state: type-tagged, NaN equal to
+    NaN, a list told apart from a tuple."""
+    if isinstance(v, float) and math.isnan(v):
+        return ("nan",)
+    if isinstance(v, dict):
+        return ("dict", sorted((repr(k), _state_key(x)) for k, x in v.items()))
+    if isinstance(v, (list, tuple)):
+        return (type(v).__name__, [_state_key(x) for x in v])
+    return (type(v).__name__, v)
+
+
+def _answer(e, row):
+    """``e.emit_sync(row)``, or the type of the exception it raised."""
+    try:
+        return e.emit_sync(dict(row))
+    except Exception as ex:  # noqa: BLE001 — both routes must raise alike
+        return type(ex)
+
+
+def run_analytic_fuzz(spark, seed: int, statements: int = 8,
+                      per_statement: int = 40,
+                      report=print) -> tuple[int, int, int]:
+    """The analytic leg: each statement of :func:`build_analytic_queries`
+    runs on the public ``emit_sync`` and on a twin forced onto the Spark
+    route (``_an_py = None``); after every event the answers (a row,
+    None or the exception type) and the ``_an_states`` of the two must
+    be equal.  An event the bound function hands to the Spark route, or
+    whose projection goes to Spark, fell back.  Returns (compared, fell
+    back, diverged)."""
+    rng = random.Random(seed)
+    n_py = n_fb = n_diff = 0
+    for sql, gen in build_analytic_queries(rng, statements):
+        e, twin = StreamSQL(spark), StreamSQL(spark)
+        e.execute(sql)
+        twin.execute(sql)
+        twin._an_py = None
+        handed = []
+        for name in ("_emit_sync_spark", "_project_analytic_pyeval"):
+            real = getattr(e, name)
+            setattr(e, name, lambda *a, _real=real: handed.append(1)
+                    or _real(*a))
+        for _ in range(per_statement):
+            row = gen()
+            before = len(handed)
+            py, sp = _answer(e, row), _answer(twin, row)
+            if e._an_py is None:
+                n_diff += 1
+                report("ROUTE DISABLED:", sql, row, py)
+                break
+            if len(handed) > before:
+                n_fb += 1
+            else:
+                n_py += 1
+            same = py is sp if isinstance(py, type) or isinstance(sp, type) \
+                else _same(py, sp)
+            if not same:
+                n_diff += 1
+                report("DIVERGED:", sql, row, py, sp)
+            elif _state_key(e._an_states) != _state_key(twin._an_states):
+                n_diff += 1
+                report("STATE DIVERGED:", sql, row, e._an_states,
+                       twin._an_states)
+    return n_py, n_fb, n_diff
+
+
 def _same(py, sp) -> bool:
     """python-path row vs Spark-path row, value by value and exactly (a
     python float equals a Spark DECIMAL only at the same exact value) —
@@ -209,10 +335,14 @@ def run_fuzz(spark, seed: int, per_statement: int = 150,
 
 def main() -> int:
     seed = int(sys.argv[1]) if len(sys.argv) > 1 else 20260816
-    n_py, n_fb, n_diff = run_fuzz(get_spark(shuffle_partitions=4), seed)
+    spark = get_spark(shuffle_partitions=4)
+    n_py, n_fb, n_diff = run_fuzz(spark, seed)
     print(f"fuzz(seed={seed}): {n_py} compared, {n_fb} fell back, "
           f"{n_diff} diverged")
-    return 1 if n_diff else 0
+    a_py, a_fb, a_diff = run_analytic_fuzz(spark, seed)
+    print(f"analytic fuzz(seed={seed}): {a_py} compared, {a_fb} fell "
+          f"back, {a_diff} diverged")
+    return 1 if n_diff or a_diff else 0
 
 
 if __name__ == "__main__":

@@ -8,20 +8,17 @@ are the general bodies as they were before the branches existed.  Random
 step sequences mix both shapes, so a state written by the general body is
 continued by the branch and the other way round, and after every step the
 output (value and type) and the state must equal the reference's.  Each
-step runs the way the per-event path runs it, on the copy
-``analytic_copier_for`` makes: the state it copied must come out
-untouched, or a Fallback would commit half a step.  No Spark.
+step runs the way every route runs it, once, on the live state.  No
+Spark.
 """
 
 from __future__ import annotations
 
-import copy
 import math
 import random
 
 from streamsql_spark.streaming.stateful import (_LAG_CAP, _step_had_changed,
-                                                _step_lag,
-                                                analytic_copier_for)
+                                                _step_lag)
 
 
 def _ref_lag(p, s, argv, gate):
@@ -104,23 +101,17 @@ def _had_changed_argv(rng):
 
 def _run(step, ref, p, argv_of, seed: int, sequences: int, length: int):
     rng = random.Random(seed)
-    copier = analytic_copier_for(p)
     branch_steps = 0
     for n in range(sequences):
         state, ref_state = {}, {}
         for i in range(length):
             argv = argv_of(rng)
             gate = rng.random() < 0.8
-            before = copy.deepcopy(state)
-            st = copier(state)
-            got = step(p, st, list(argv), gate)
+            got = step(p, state, list(argv), gate)
             want = ref(p, ref_state, list(argv), gate)
             where = (n, i, argv, gate)
             assert _norm(got) == _norm(want), where
-            assert _norm(st) == _norm(ref_state), where
-            # the step ran on a copy: the committed state is untouched
-            assert _norm(state) == _norm(before), where
-            state = st
+            assert _norm(state) == _norm(ref_state), where
             branch_steps += len(argv) == (1 if p["name"] == "lag" else 2)
     return branch_steps
 

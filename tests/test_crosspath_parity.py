@@ -279,8 +279,8 @@ def test_gated_lag_offset2_matches_kernel(spark):
 # the change detectors under a WHEN gate: a gated-out row moves no
 # baseline and reports no change (had_changed false, changed_col and the
 # changed_cols members NULL), like an ignoreNull row with a NULL value.
-# changed_cols fans out to one spec per member, which pyeval does not
-# plan: that statement's schemaless emit_sync takes the Spark route too
+# changed_cols fans out to one spec per member, which pyeval steps like
+# any other spec
 CDC_GATED = [
     ("hc", "had_changed(true, status)"),
     ("hcn", "had_changed(false, temperature)"),
@@ -315,7 +315,7 @@ def test_gated_change_detectors_four_paths(spark, gate):
     want_cols = _keyed(_run_batch(spark, sql_cols, rows))
     s = StreamSQL(spark).execute(sql_cols)
     got = [s.emit_sync(dict(r)) for r in rows]
-    assert "emit_sync" not in vars(s)  # pyeval declines the fan-out
+    assert "emit_sync" in vars(s) and s._an_py is not None  # pyeval bound
     assert _keyed(got) == want_cols
     assert _keyed(_run_emit_spark(spark, sql_cols, rows, EVT)) == want_cols
     assert _keyed(_run_stream(spark, sql_cols, rows, rng)) == want_cols
@@ -334,6 +334,26 @@ def test_gated_change_detectors_four_paths(spark, gate):
     assert any(want[k]["hc2"][1] for k in gated_in)
     assert any(want_cols[k]["c_temperature"][1] is not None
                for k in gated_in)
+
+
+def test_lifted_when_gate_steps_per_partition_four_paths(spark):
+    """A lifted ``WHEN had_changed(...)`` under PARTITION BY gates per
+    partition (SURVEY §2.6) on all four paths: device b's status never
+    changes after its first event, so its last row is gated out and
+    reads b's own stored ts, not the default a global gate would give."""
+    sql = ("SELECT deviceId, ts, lag(ts, 1, ts) OVER (PARTITION BY deviceId"
+           " WHEN had_changed(true, status)) AS prev FROM stream "
+           "WITH (TIMESTAMP='ts', TIMEUNIT='ms')")
+    rows = [{"deviceId": d, "temperature": 1.0, "humidity": 0.0, "ts": ts,
+             "status": st}
+            for d, ts, st in (("a", 1, "x"), ("b", 2, "x"), ("a", 3, "y"),
+                              ("b", 4, "x"))]
+    want = _keyed(_run_batch(spark, sql, rows))
+    assert {k: v["prev"][1] for k, v in want.items()} == \
+        {("a", 1): 1, ("b", 2): 2, ("a", 3): 1, ("b", 4): 2}
+    assert _keyed(_run_pyeval(spark, sql, rows)) == want
+    assert _keyed(_run_emit_spark(spark, sql, rows, EVT)) == want
+    assert _keyed(_run_stream(spark, sql, rows, random.Random(5))) == want
 
 
 @pytest.mark.slow

@@ -2759,30 +2759,6 @@ def test_pyeval_bigint_guard_on_huge_int_inputs(spark):
     assert e._emit_sync_python({"a": huge - 1}) == {"n": True}
 
 
-def test_copy_state_isolates_all_shapes():
-    """copy_state (the deepcopy replacement on the per-event analytic
-    hot path) must fully isolate every state shape the kernels store:
-    nested dicts, scalar ring buffers, tuples, and exotic objects."""
-    from streamsql_spark.streaming.stateful import copy_state
-
-    class Exotic:
-        def __init__(self):
-            self.xs = [1, 2]
-
-    src = {"n": 3, "buf": [1.5, None, "x"], "nest": {"a": [1, [2, 3]]},
-           "tup": (1, [4]), "obj": Exotic()}
-    cp = copy_state(src)
-    cp["buf"].append(9)
-    cp["nest"]["a"][1].append(99)
-    cp["tup"][1].append(8)
-    cp["obj"].xs.append(7)
-    assert src["buf"] == [1.5, None, "x"]
-    assert src["nest"]["a"][1] == [2, 3]
-    assert src["tup"][1] == [4]
-    assert src["obj"].xs == [1, 2]
-    assert cp["n"] == 3
-
-
 def test_pyeval_bitops_match_spark_twos_complement(spark):
     """Bit ops on negative ints must reproduce Java's int64
     two's-complement results exactly — pinned against Spark itself on

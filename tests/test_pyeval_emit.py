@@ -149,6 +149,21 @@ def test_pyeval_fuzz_smoke(spark):
     assert n_py > 1_000, (n_py, n_fb)
 
 
+def test_pyeval_fuzz_analytic_smoke(spark):
+    """A short run of tests/pyeval_fuzz.py's analytic leg (its script
+    runs 8 statements x 40 events per seed): after every event the bound
+    ``emit_sync`` answers and leaves ``_an_states`` as a twin forced onto
+    the Spark route does."""
+    from pyeval_fuzz import run_analytic_fuzz
+
+    diverged = []
+    n_py, n_fb, n_diff = run_analytic_fuzz(
+        spark, 20260816, statements=4, per_statement=25,
+        report=lambda *a: diverged.append(a))
+    assert n_diff == 0, diverged[:5]
+    assert n_py > 40, (n_py, n_fb)
+
+
 def test_analytic_bool_placeholder_takes_no_slow_call(spark, monkeypatch):
     """The analytic gateway statement's bare columns and placeholders
     (str, float, None and ``had_changed``'s bool) all pass the emitted
@@ -315,11 +330,11 @@ class _LockedCount:
         return float(self.n)
 
 
-def test_uncopyable_custom_state_disables_the_route(spark):
-    """When a custom analytic's state cannot be copied, the bound route
-    is disabled (its emit_sync unbound) and every event, that one
-    included, is answered by the Spark route, equal to a twin that took
-    the Spark route from the start."""
+def test_uncopyable_custom_state_stays_on_pyeval(spark):
+    """The analytic route steps each state once, in place, and never
+    copies it: a custom analytic whose state no deepcopy can copy stays
+    on the bound route, equal to a twin that took the Spark route from
+    the start."""
     from streamsql_spark.functions.registry import (
         _CUSTOM_ANALYTICS, register_analytic_function)
 
@@ -332,7 +347,7 @@ def test_uncopyable_custom_state_disables_the_route(spark):
                   for i in range(8)]
         e = StreamSQL(spark).execute(sql)
         got = [e.emit_sync(dict(ev)) for ev in events]
-        assert e._an_py is None and "emit_sync" not in vars(e)
+        assert e._an_py is not None and "emit_sync" in vars(e)
         twin = StreamSQL(spark).execute(sql)
         twin._an_py = None  # the Spark route from the start
         want = [twin.emit_sync(dict(ev)) for ev in events]
@@ -412,3 +427,178 @@ def test_closure_nodes_read_stepped_placeholders(spark):
     twin._an_py = None
     assert got == [twin.emit_sync(dict(ev)) for ev in events]
     assert {r["mid"] for r in got if r} == {None, True, False}
+
+
+# ---- step once: each spec steps its live state exactly once
+
+def _routed_twin(spark, sql):
+    """A twin whose every event takes the analytic Spark route."""
+    twin = StreamSQL(spark).execute(sql)
+    twin._an_py = None
+    return twin
+
+
+def _count_calls(e, name):
+    """Count ``e``'s calls of method ``name`` (patched on the instance
+    before the first event, so the bound function binds the wrapper)."""
+    calls = []
+    real = getattr(e, name)
+
+    def counted(*args):
+        calls.append(args)
+        return real(*args)
+
+    setattr(e, name, counted)
+    return calls
+
+
+def test_post_step_fallback_projects_through_spark(spark):
+    """A projection that raises Fallback after the steps (pyeval's round
+    hands a sum past 1e26 to Spark) goes to the Spark route's
+    projection with pyeval's stepped values: the event answers like the
+    forced Spark route, the whole Spark route is never taken, and the
+    next events' ``lag`` and ``acc_sum`` equal ``query()``'s."""
+    from pyspark.sql.types import (DoubleType, LongType, StringType,
+                                   StructField, StructType)
+
+    sql = ("SELECT deviceId, ts, lag(n) OVER (PARTITION BY deviceId) AS prev,"
+           " round(acc_sum(n) OVER (PARTITION BY deviceId), 2) AS total "
+           "FROM stream")
+    events = [{"deviceId": d, "n": n, "ts": i}
+              for i, (d, n) in enumerate([("a", 1.5), ("b", 2.25),
+                                          ("a", 1e27), ("a", 2.0),
+                                          ("b", 0.5), ("a", -1e27),
+                                          ("a", 4.125)])]
+    e = StreamSQL(spark).execute(sql)
+    whole = _count_calls(e, "_emit_sync_spark")
+    projected = _count_calls(e, "_project_analytic_pyeval")
+    got = [e.emit_sync(dict(ev)) for ev in events]
+    assert "emit_sync" in vars(e) and whole == []
+    assert len(projected) == 2  # the two events past 1e26
+    twin = _routed_twin(spark, sql)
+    assert got == [twin.emit_sync(dict(ev)) for ev in events]
+    schema = StructType([StructField("deviceId", StringType()),
+                         StructField("n", DoubleType()),
+                         StructField("ts", LongType())])
+    want = sorted(_rows_of(spark, sql, events, schema), key=lambda r: r["ts"])
+    assert got == want
+    assert e._an_states == twin._an_states
+
+
+class _Boom:
+    """A custom analytic that raises on 13.0, before its state moves."""
+
+    def __init__(self):
+        self.seen = []
+
+    def apply(self, args):
+        if args[0] == 13.0:
+            raise ZeroDivisionError("boom")
+        self.seen.append(args[0])
+        return float(len(self.seen))
+
+
+def _states_norm(states):
+    return {k: {sk: (vars(sv) if hasattr(sv, "__dict__") else sv)
+                for sk, sv in v.items()} for k, v in states.items()}
+
+
+@pytest.mark.parametrize("first", [False, True])
+def test_raising_step_answers_like_the_spark_route(spark, first):
+    """A custom step that raises: as the second spec, its own exception
+    propagates (the first spec has stepped); as the first, the event goes
+    to the Spark route, whose same step raises the same exception.  Both
+    leave ``_an_states`` equal to the forced Spark route's, the route is
+    disabled, and later events still agree."""
+    from streamsql_spark.functions.registry import (
+        _CUSTOM_ANALYTICS, register_analytic_function)
+
+    register_analytic_function("boom_at_13", _Boom, "double")
+    try:
+        specs = ["lag(t) OVER (PARTITION BY deviceId) AS p",
+                 "boom_at_13(t) OVER (PARTITION BY deviceId) AS b"]
+        if first:
+            specs.reverse()
+        sql = f"SELECT deviceId, {', '.join(specs)} FROM stream"
+        events = [{"deviceId": "d", "t": t} for t in (1.0, 2.0, 13.0, 4.0)]
+        e, twin = StreamSQL(spark).execute(sql), _routed_twin(spark, sql)
+        for ev in events[:2]:
+            assert e.emit_sync(dict(ev)) == twin.emit_sync(dict(ev))
+        assert "emit_sync" in vars(e)
+        with pytest.raises(ZeroDivisionError):
+            e.emit_sync(dict(events[2]))
+        with pytest.raises(ZeroDivisionError):
+            twin.emit_sync(dict(events[2]))
+        assert "emit_sync" not in vars(e) and e._an_py is None
+        assert _states_norm(e._an_states) == _states_norm(twin._an_states)
+        assert e.emit_sync(dict(events[3])) == twin.emit_sync(dict(events[3]))
+        assert _states_norm(e._an_states) == _states_norm(twin._an_states)
+    finally:
+        _CUSTOM_ANALYTICS.pop("boom_at_13", None)
+
+
+def test_whitelist_covers_only_the_fields_read(spark):
+    """A list holding None or a tz-aware datetime in a field the
+    statement never reads stays on pyeval; the same value in a field it
+    reads goes to the Spark route.  Every event answers like the forced
+    Spark route.  (``y``, never read, is ``[None]`` throughout; a read
+    ``[None]`` alone would type the Spark route's column from that
+    event, as string, where a twin with earlier Spark-route events
+    reuses their inferred type.)"""
+    from datetime import datetime, timezone
+
+    events = [{"deviceId": "d", "t": float(i), "y": [None],
+               "x": [i, None] if i == 2 else [i],
+               "u": datetime(2024, 1, 1, i,
+                             tzinfo=timezone.utc if i == 3 else None)}
+              for i in range(6)]
+    for col, handed_on_at in (("t", []), ("x", [2]), ("u", [3])):
+        sql = (f"SELECT deviceId, lag({col}) OVER (PARTITION BY deviceId)"
+               f" AS p FROM stream")
+        e = StreamSQL(spark).execute(sql)
+        handed_on = _count_calls(e, "_emit_sync_spark")
+        got = [e.emit_sync(dict(ev)) for ev in events]
+        assert "emit_sync" in vars(e)
+        assert [events.index(a[0]) for a in handed_on] == handed_on_at, col
+        twin = _routed_twin(spark, sql)
+        assert got == [twin.emit_sync(dict(ev)) for ev in events], col
+
+
+def test_counter_cells_fold_across_bind_fallback_and_disable(spark):
+    """The bound call's ``input``/``output`` cells, folded by every
+    stats read and by the unbind, give the counts of the routed path
+    after every event: bound, handed on (a datetime key), filtered by a
+    CDC WHERE, and after a raising step disabled the route."""
+    from datetime import datetime
+
+    from streamsql_spark.functions.registry import (
+        _CUSTOM_ANALYTICS, register_analytic_function)
+
+    register_analytic_function("boom_at_13", _Boom, "double")
+    try:
+        sql = ("SELECT deviceId, boom_at_13(t) OVER (PARTITION BY deviceId)"
+               " AS b FROM stream WHERE changed_col(true, t) OVER "
+               "(PARTITION BY deviceId) IS NOT NULL")
+        events = [{"deviceId": "d", "t": 1.0}, {"deviceId": "d", "t": 1.0},
+                  {"deviceId": datetime(2024, 1, 1), "t": 2.0}, {"deviceId": "d", "t": 3.0},
+                  {"deviceId": "d", "t": 13.0}, {"deviceId": "d", "t": 5.0}]
+        e, twin = StreamSQL(spark).execute(sql), _routed_twin(spark, sql)
+        keys = ("input_count", "output_count")
+        for i, ev in enumerate(events):
+            outs = []
+            for x in (e, twin):
+                try:
+                    outs.append(x.emit_sync(dict(ev)))
+                except ZeroDivisionError as ex:
+                    outs.append(type(ex))
+            assert outs[0] == outs[1], i
+            if i == 0:
+                assert "emit_sync" in vars(e)
+            got, want = e.get_stats(), twin.get_stats()
+            assert [got[k] for k in keys] == [want[k] for k in keys], i
+        assert "emit_sync" not in vars(e)
+        assert e._metrics["input"] == len(events)
+        assert e.get_detailed_stats()["basic_stats"]["output_count"] == \
+            twin.get_stats()["output_count"]
+    finally:
+        _CUSTOM_ANALYTICS.pop("boom_at_13", None)
